@@ -58,11 +58,9 @@ def parallel_legs(*thunks: Callable[[], Any]) -> list[Any]:
     once one leg fails, not-yet-started legs are cancelled rather than
     burning Spark jobs behind a doomed query (ADVICE r15).
 
-    Thunks MUST NOT share cold process-wide memos (_SEM_ASSIGN_MEMO &
-    co): call sites pre-warm any memo two legs would both miss (e.g.
-    _corpus_n) before fanning out — enforced by convention and by this
-    sentence (ADVICE r15; a lock here can't help, because the memo
-    modules are free to add new ones)."""
+    Legs may share fixture-derived memos: tables.fixture_memo /
+    fixture_store lock each key, so legs that miss the same cold key
+    build it once."""
     if len(thunks) <= 1:
         return [t() for t in thunks]
     with ThreadPoolExecutor(

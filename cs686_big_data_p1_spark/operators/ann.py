@@ -45,8 +45,8 @@ from ..functions.legs import parallel_legs
 from ..functions.vector import SCALE
 from ..functions.vector import norm as v_norm
 from ..functions.vector import pair_dot_pd, pair_doti_q_pd, pair_sqdist_q_pd
-from ..registry import CLEAR_HOOKS, query, track_cache
-from ..tables import load_table
+from ..registry import query, track_cache
+from ..tables import fixture_memo, fixture_store, load_table
 from .llm import KNN_ORACLE, knn_bruteforce
 from .splits import SPLIT_BOUNDS
 
@@ -278,35 +278,17 @@ def _nlist(n: int) -> int:
     return max(1, math.ceil(math.sqrt(n)))
 
 
-# Memoized embeddings row count per sf_dir (ADVICE r10): _nlist sizing
-# is control flow, but e.count() during query CONSTRUCTION is an eager
-# full-scan job, and ann_recall_all composes five index legs that each
-# needed it — several redundant counts of the same static table per
-# invocation. Two staleness defenses, layered (ADVICE r11 asked that
-# correctness not rest on convention alone):
-#   1. STRUCTURAL — the memo key includes a (size, mtime_ns)
-#      fingerprint of the embeddings parquet on local filesystems, so
-#      rewriting a fixture dir changes the key and a stale count is
-#      unreachable no matter who forgets to clear.
-#   2. LIFETIME — the memo is registered with registry.CLEAR_HOOKS,
-#      which every driver (check_oracle / bench / __spark_entry__)
-#      fires after materializing each query; this bounds memory and
-#      remains the guard for non-os.stat-able paths (hdfs://, s3://)
-#      where the fingerprint degrades to None.
-_CORPUS_N: dict[tuple, int] = {}
-CLEAR_HOOKS.append(_CORPUS_N.clear)
-
-
 def _corpus_n(spark: SparkSession, sf_dir: str) -> int:
-    # Identity stamp shared with every other memo in the tree
-    # (ADVICE r12: the local twin of table_fingerprint is deleted —
-    # one copy of the staleness-guard logic, one place to fix it).
-    from ..tables import table_fingerprint
-
-    key = (sf_dir, table_fingerprint(sf_dir, "embeddings"))
-    if key not in _CORPUS_N:
-        _CORPUS_N[key] = load_table(spark, sf_dir, "embeddings").count()
-    return _CORPUS_N[key]
+    """Embeddings row count, memoized per fixture (ADVICE r10): _nlist
+    sizing is control flow, but e.count() during query CONSTRUCTION is
+    an eager full-scan job, and ann_recall_all composes five index legs
+    that each need it."""
+    return fixture_memo(
+        spark,
+        sf_dir,
+        "corpus_n",
+        lambda: load_table(spark, sf_dir, "embeddings").count(),
+    )
 
 
 # Oracle-side mirror of _nlist over the embeddings table.
@@ -403,7 +385,7 @@ def _ivf_cells(e: DataFrame, n: int | None = None):
     Deliberately NOT memoized across the legs of a composed query
     (VERDICT r11 #4, measured and REJECTED this round): sharing the
     triple between knn_ivf and knn_ivfpq inside ann_recall_all — as a
-    CLEAR_HOOKS-lifetime memo with the window output cached — made the
+    per-query memo with the window output cached — made the
     composed query SLOWER, 13.4 -> 19.8 s warm at sf0.1 (cache alone
     15.8 s, lazy-shared 14.9 s). The five legs are independent
     subtrees whose stages OVERLAP across the 32 cores, so the
@@ -552,7 +534,6 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines are constructed concurrently (functions/legs.py, guide
     §2.6) so their plan-time jobs overlap.
     """
-    _n = _corpus_n(spark, sf_dir)  # warm the shared memo once
     built = parallel_legs(
         lambda: knn_bruteforce(spark, sf_dir).select(
             "query_id", "neighbor_id"
@@ -839,48 +820,25 @@ def _sem_assign(vecs: DataFrame, ncells: int) -> DataFrame:
     )
 
 
-# Once-per-process memo of the fixture corpus's cell assignment (the
-# _CLUSTER_MEMO pattern, llm.py): THREE queries consume the identical
-# n x sqrt(n) assignment pass — dedup_semantic, corpus_curate_semantic
-# (via dedup_semantic), and decontaminate_semantic (r13). Eager
-# localCheckpoint (lineage cut, immutable blocks), applicationId-scoped,
-# fingerprint-keyed (structural staleness), block-probed on every hit
-# with recompute-on-failure (the ADVICE-r12 executor-loss rule).
-_SEM_ASSIGN_MEMO: dict[tuple, DataFrame] = {}
-
-
 def sem_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import table_fingerprint
+    """The fixture corpus's cell assignment, memoized per fixture:
+    THREE queries consume the identical n x sqrt(n) assignment pass —
+    dedup_semantic, corpus_curate_semantic (via dedup_semantic), and
+    decontaminate_semantic (r13). Eager localCheckpoint: lineage cut,
+    immutable blocks."""
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        table_fingerprint(sf_dir, "embeddings"),
-    )
-    hit = _SEM_ASSIGN_MEMO.get(key)
-    if hit is not None:
-        try:
-            # bounded liveness probe (ADVICE r13): one block read, not
-            # a full scan of the checkpointed assignment per consumer
-            hit.limit(1).count()
-            return hit
-        except Exception:
-            _SEM_ASSIGN_MEMO.pop(key, None)
-    e = load_table(spark, sf_dir, "embeddings")
-    vecs = track_cache(
-        e.select(
-            "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
+    def build() -> DataFrame:
+        e = load_table(spark, sf_dir, "embeddings")
+        vecs = track_cache(
+            e.select(
+                "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
+            )
         )
-    )
-    out = _sem_assign(
-        vecs, _nlist(_corpus_n(spark, sf_dir))
-    ).localCheckpoint(eager=True)
-    # keyed per (app, sf_dir, fingerprint) WITHOUT clearing (ADVICE
-    # r13): a process alternating sf_dirs (the 3-SF sweep) keeps each
-    # fixture's assignment warm; entries are bounded by the number of
-    # distinct fixtures touched per process (<= 3 in practice).
-    _SEM_ASSIGN_MEMO[key] = out
-    return out
+        return _sem_assign(
+            vecs, _nlist(_corpus_n(spark, sf_dir))
+        ).localCheckpoint(eager=True)
+
+    return fixture_memo(spark, sf_dir, "sem_assign", build)
 
 
 def semantic_dedup(
@@ -2560,7 +2518,6 @@ def ann_recall_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     built, and overlapping those independent jobs across cores removes
     the serialized plan-time chain (guide §2.6) without sharing any
     state between legs (the r11 rule)."""
-    _n = _corpus_n(spark, sf_dir)  # warm the shared memo once, not 6x
     legs = [
         ("lsh", ann_lsh),
         ("ivf", knn_ivf),
@@ -3186,45 +3143,20 @@ def append_ivf_store(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 # --- ivf_store_prune: the physical store's pruning payoff, oracle-checked --
 
-# Once-per-process "store is built" memo (path, not DataFrame): keyed on
-# (applicationId, sf_dir, embeddings fingerprint) per the structural-
-# staleness rule, NOT registered in CLEAR_HOOKS — the store is an
-# on-disk artifact whose rebuild is write_ivf_base_store +
-# append_ivf_store, and both halves are idempotent (overwrite; anti-join
-# fold), so a crashed earlier build in the same process is repaired by
-# rebuilding, and other processes never share the path (appId in it).
-_STORE_READY: dict[tuple, str] = {}
+def _write_full_store(spark: SparkSession, sf_dir: str, path: str) -> None:
+    write_ivf_base_store(spark, sf_dir, path)
+    append_ivf_store(spark, sf_dir, path)
 
 
 def _ivf_store_ready(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from ..tables import table_fingerprint
-
-    fp = table_fingerprint(sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    hit = _STORE_READY.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr((sf_dir, fp)).encode()).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"ivf_store_{spark.sparkContext.applicationId}_{digest}",
+    """The shared physical store (base build + delta fold), built once
+    per fixture (tables.fixture_store)."""
+    return fixture_store(
+        spark,
+        sf_dir,
+        "ivf_store",
+        lambda path: _write_full_store(spark, sf_dir, path),
     )
-    write_ivf_base_store(spark, sf_dir, path)
-    append_ivf_store(spark, sf_dir, path)
-    # The fixture-scale store is scratch: remove it at interpreter
-    # exit so repeated sweep/bench processes never accumulate dirs in
-    # the temp root (at deployment the store is a managed table
-    # location, not tempdir, and this registration doesn't exist).
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, path, True)
-    _STORE_READY.clear()
-    _STORE_READY[key] = path
-    return path
 
 
 IVF_STORE_PRUNE_ORACLE = f"""
@@ -4482,7 +4414,6 @@ def pq_recall_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     concurrently (functions/legs.py, guide §2.6): their eager
     training/checkpoint jobs overlap instead of serializing the
     driver thread."""
-    _n = _corpus_n(spark, sf_dir)  # warm the shared memo once, not 5x
     legs = [
         ("ivfpq_raw", PQ_CODE_BYTES, knn_ivfpq),
         ("ivfpq_residual", PQ_CODE_BYTES, knn_ivfpq_residual),
@@ -5085,40 +5016,18 @@ def vacuum_ivf_store(spark: SparkSession, path: str) -> list[int]:
     return vac
 
 
-# Vacuum works on its OWN store path — ivf_store_prune /
-# stream_ivf_maintenance / ivf_store_delete share _ivf_store_ready's
-# store whose row set must stay the full assignment (delete only adds
-# hidden tombstones; vacuum REMOVES rows, which would corrupt their
-# oracles' denominators mid-process).
-_VACUUM_STORE_READY: dict[tuple, str] = {}
-
-
 def _vacuum_store_ready(spark: SparkSession, sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    from ..tables import table_fingerprint
-
-    fp = table_fingerprint(sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    hit = _VACUUM_STORE_READY.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(
-        repr((sf_dir, fp, "vacuum")).encode()
-    ).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"ivf_vac_{spark.sparkContext.applicationId}_{digest}",
+    """Vacuum works on its OWN store — ivf_store_prune /
+    stream_ivf_maintenance / ivf_store_delete share _ivf_store_ready's
+    store whose row set must stay the full assignment (delete only adds
+    hidden tombstones; vacuum REMOVES rows, which would corrupt their
+    oracles' denominators mid-process)."""
+    return fixture_store(
+        spark,
+        sf_dir,
+        "ivf_vacuum_store",
+        lambda path: _write_full_store(spark, sf_dir, path),
     )
-    write_ivf_base_store(spark, sf_dir, path)
-    append_ivf_store(spark, sf_dir, path)
-    import atexit
-    import shutil
-
-    atexit.register(shutil.rmtree, path, True)
-    _VACUUM_STORE_READY[key] = path
-    return path
 
 
 IVF_STORE_VACUUM_ORACLE = (
@@ -5397,9 +5306,6 @@ def knn_ivf_store_live(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (controller/FileTable.java synchronized publish), generalized to
 # table versions.
 
-_RELEASE_READY: dict[tuple, str] = {}
-
-
 def _release_table_ready(spark: SparkSession, sf_dir: str) -> str:
     """Publish the three index releases once per (application, table
     fingerprint): each release is the (vec_id, cid) membership
@@ -5413,42 +5319,24 @@ def _release_table_ready(spark: SparkSession, sf_dir: str) -> str:
     cid-partitioned store and a release pins (membership version,
     store manifest) — snapshotting partition directories instead of
     rows, as the snapshots module documents."""
-    import atexit
-    import os
-    import shutil
-    import tempfile
-
     from ..sources.snapshots import write_snapshot
-    from ..tables import table_fingerprint
 
-    fp = table_fingerprint(sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    hit = _RELEASE_READY.get(key)
-    if hit is not None and os.path.isdir(hit):
-        return hit
-    digest = hashlib.md5(repr((sf_dir, fp, "rel")).encode()).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"ivf_rel_{spark.sparkContext.applicationId}_{digest}",
-    )
-    shutil.rmtree(path, True)  # stale same-app leftovers: rebuild clean
-    _v, _b, _d, _cents, merged, _p = _append_parts(spark, sf_dir)
-    member = merged.select(
-        F.col("neighbor_id").alias("vec_id"), "cid"
-    )
-    is_delta = (F.col("vec_id") % DELTA_MOD) == DELTA_RES
-    drops = decontaminate_semantic(spark, sf_dir).select(
-        F.col("doc_id").alias("vec_id")
-    )
-    write_snapshot(spark, member.where(~is_delta), path)  # v1: base build
-    write_snapshot(spark, member, path)  # v2: delta fold
-    write_snapshot(  # v3: curation drops applied
-        spark, member.join(drops, "vec_id", "left_anti"), path
-    )
-    atexit.register(shutil.rmtree, path, True)
-    _RELEASE_READY.clear()
-    _RELEASE_READY[key] = path
-    return path
+    def write(path: str) -> None:
+        _v, _b, _d, _cents, merged, _p = _append_parts(spark, sf_dir)
+        member = merged.select(
+            F.col("neighbor_id").alias("vec_id"), "cid"
+        )
+        is_delta = (F.col("vec_id") % DELTA_MOD) == DELTA_RES
+        drops = decontaminate_semantic(spark, sf_dir).select(
+            F.col("doc_id").alias("vec_id")
+        )
+        write_snapshot(spark, member.where(~is_delta), path)  # v1: base
+        write_snapshot(spark, member, path)  # v2: delta fold
+        write_snapshot(  # v3: curation drops applied
+            spark, member.join(drops, "vec_id", "left_anti"), path
+        )
+
+    return fixture_store(spark, sf_dir, "ivf_releases", write)
 
 
 IVF_RELEASE_VERSIONS_ORACLE = (

@@ -32,7 +32,7 @@ from ..functions.vector import norm as v_norm
 from ..functions.vector import norm_sq_q
 from ..functions.vector import pair_dot_pd
 from ..registry import query, track_cache
-from ..tables import load_table
+from ..tables import fixture_memo, load_table
 
 # --- dedup ----------------------------------------------------------------
 
@@ -364,49 +364,19 @@ def _cluster_round(edges: DataFrame, labels: DataFrame) -> DataFrame:
     )
 
 
-# Once-per-process memo of the converged cluster labels (the
-# _CURATE_MEMO pattern, pipeline.py:640): the label-prop loop is the
-# suite's most expensive non-ANN computation, and THREE consumers run
-# it — dedup_clusters itself, corpus_curate's curated set, and
-# cluster_keep_best (r12). The final labels frame is an eager
-# localCheckpoint (immutable RDD, lineage cut), so sharing it across
-# queries is safe; one entry, applicationId-scoped so session clones
-# share it, evicted on any key change, and the key carries the
-# documents-parquet fingerprint so a rewritten fixture can never be
-# served stale labels (the ADVICE-r11 structural-staleness rule).
-_CLUSTER_MEMO: dict[tuple, DataFrame] = {}
-
-
 def cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..tables import table_fingerprint
-
-    key = (
-        spark.sparkContext.applicationId,
+    """The converged cluster labels, memoized per fixture: the
+    label-prop loop is the suite's most expensive non-ANN computation,
+    and THREE consumers run it — dedup_clusters itself, corpus_curate's
+    curated set, and cluster_keep_best (r12). The final labels frame is
+    an eager localCheckpoint (immutable RDD, lineage cut), so sharing
+    it across queries is safe."""
+    return fixture_memo(
+        spark,
         sf_dir,
-        table_fingerprint(sf_dir, "documents"),
+        "cluster_labels",
+        lambda: _cluster_labels_uncached(spark, sf_dir),
     )
-    hit = _CLUSTER_MEMO.get(key)
-    if hit is not None:
-        # localCheckpoint blocks live on executors; if an executor
-        # holding them was lost (dynamic allocation, OOM-kill), every
-        # later consumer would fail with missing-checkpoint-block
-        # errors instead of recomputing (ADVICE r12). Probe the blocks
-        # with a bounded action and fall through to a recompute on ANY
-        # failure — the memo is an optimization, never a correctness
-        # dependency.
-        try:
-            # bounded liveness probe (ADVICE r13): one block read, not
-            # a full scan of the checkpointed labels per consumer
-            hit.limit(1).count()
-            return hit
-        except Exception:
-            _CLUSTER_MEMO.pop(key, None)
-    out = _cluster_labels_uncached(spark, sf_dir)
-    # keyed per (app, sf_dir, fingerprint) without clear() (ADVICE
-    # r13): multi-SF processes keep each fixture's labels warm;
-    # entries bounded by distinct fixtures per process.
-    _CLUSTER_MEMO[key] = out
-    return out
 
 
 @query("dedup_clusters", oracle=DEDUP_CLUSTERS_ORACLE)
@@ -417,7 +387,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     "keep one representative per duplicate cluster" step every corpus
     dedup pipeline ends with. The converged labels are memoized once
     per (application, sf_dir, fixture fingerprint) and shared with
-    corpus_curate and cluster_keep_best — see _CLUSTER_MEMO.
+    corpus_curate and cluster_keep_best — see cluster_labels.
 
     Iterative min-label propagation WITH pointer jumping as DataFrame
     joins: each round every vertex takes the min of its own and its

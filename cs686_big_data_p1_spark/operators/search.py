@@ -637,6 +637,14 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("sim_e6"),
         )
     )
+    out_schema = T.StructType(
+        [
+            T.StructField("pick", T.IntegerType(), False),
+            cands.schema["doc_id"],
+            cands.schema["rel_e6"],
+            T.StructField("mmr_e6", T.LongType(), False),
+        ]
+    )
     # Greedy selection runs DRIVER-SIDE over two bounded collects
     # (<= {BM25_K} candidate rows + <= {BM25_K}^2 sim rows — control
     # flow, not data; the corpus was touched exactly once inside
@@ -649,6 +657,8 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # trajectory, so the hash pins the rewrite (r16, guide §5 — the
     # collect is K-bounded, never corpus-bounded).
     rel = {r["doc_id"]: r["rel_e6"] for r in cands.collect()}
+    if not rel:  # no BM25 candidate: nothing to rerank
+        return spark.createDataFrame([], out_schema)
     sim: dict = {}
     for r in sims.collect():
         sim.setdefault(r["da"], {})[r["db"]] = r["sim_e6"]
@@ -679,12 +689,4 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             continue
         picks.append((i, best[1], best[2], best[3]))
         sel.append(best[1])
-    out_schema = T.StructType(
-        [
-            T.StructField("pick", T.IntegerType(), False),
-            cands.schema["doc_id"],
-            cands.schema["rel_e6"],
-            T.StructField("mmr_e6", T.LongType(), False),
-        ]
-    )
     return spark.createDataFrame(picks, out_schema)

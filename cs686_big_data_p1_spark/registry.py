@@ -52,14 +52,6 @@ def track_cache(df: DataFrame, eager: bool = False) -> DataFrame:
     return df
 
 
-# Per-query scratch state beyond DataFrame caches (e.g. ann.py's
-# memoized corpus count, ADVICE r10): modules append zero-arg callables
-# here and clear_caches() invokes them, so scalar memos share exactly
-# the lifetime of the tracked caches — valid across the legs of one
-# composed query, never across queries or fixture rewrites.
-CLEAR_HOOKS: list[Callable[[], None]] = []
-
-
 def clear_caches() -> None:
     while TRACKED_CACHES:
         df = TRACKED_CACHES.pop()
@@ -67,8 +59,6 @@ def clear_caches() -> None:
             df.unpersist()
         except Exception:  # noqa: BLE001 — session may already be gone
             pass
-    for hook in CLEAR_HOOKS:
-        hook()
 
 
 def query(name: str, oracle: Optional[str] = None) -> Callable[[QueryFn], QueryFn]:
@@ -113,7 +103,11 @@ PRIORITY_ORDER = [
     # (l_diversity, referential_integrity, table_profile,
     # nation_reconcile, lm_quality_band, customer_rfm), and the two
     # streaming rows this round's width change touches most
-    # (stream_hb_session, stream_replication_orders).
+    # (stream_hb_session, stream_replication_orders). Since then
+    # mmr_rerank (r16 driver-side rewrite, zero-candidate guard) and
+    # stream_dedup_near (r16 fresh-store path) have replaced
+    # customer_rfm and stream_replication_orders, so the driver checks
+    # the r16 rewrites directly.
     "ivf_range_search",
     "sq_reconstruct_error",
     "knn_ivf_binary",
@@ -137,12 +131,14 @@ PRIORITY_ORDER = [
     "table_profile",
     "nation_reconcile",
     "lm_quality_band",
-    "customer_rfm",
     "stream_hb_session",
-    "stream_replication_orders",
+    "mmr_rerank",
+    "stream_dedup_near",
     # Post-window (judge self-checks these via the committed full-sweep
     # artifacts); displaced former window occupants lead the list, in
     # their prior order.
+    "customer_rfm",
+    "stream_replication_orders",
     "knn_ivf_sq",
     "ivf_release_versions",
     "stream_knn_store",
@@ -181,13 +177,13 @@ PRIORITY_ORDER = [
     "knn_ivfpq_residual", "ivf_retrain",
     "ivf_store_delete", "stream_decontaminate_semantic",
     "ivf_store_vacuum", "knn_ivf_store_live", "knn_ivfpq",
-    "kmeans_lloyd", "ann_recall", "dedup_incremental", "stream_dedup_near",
+    "kmeans_lloyd", "ann_recall", "dedup_incremental",
     "decontaminate", "dedup_clusters", "kmeans_cells", "tpch_q9_profit",
     "order_date_cube", "asof_join", "hll_distinct",
     "scd2_user_state", "knn_ivf_append",
     "ivf_imbalance", "stream_ivf_assign", "cluster_keep_best",
     "embedding_drift", "stream_embedding_drift", "embedding_covariance",
-    "retention_cohorts", "gram_power_topvec", "t_closeness", "mmr_rerank",
+    "retention_cohorts", "gram_power_topvec", "t_closeness",
     "dsir_sample", "substring_scrub", "knn_ivf_trained",
     "bpe_merges", "knn_pq_adc", "substring_dedup",
     "kll_quantiles", "stream_attribution_outer", "bfs_distances", "heavy_hitters", "dedup_semantic", "hybrid_search", "corpus_curate_semantic",

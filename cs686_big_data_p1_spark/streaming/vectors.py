@@ -220,11 +220,6 @@ def stream_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- stream_ivf_maintenance: the store's standing control-plane loop ------
 
-# "Base store built" memo (the ann._STORE_READY pattern): path-valued,
-# fingerprint-keyed, process-lifetime — see stream_ivf_maintenance.
-_MAINT_BASE_READY: dict[tuple, str] = {}
-
-
 def _maint_oracle() -> str:
     from ..operators.ann import (
         DRIFT_DEN,
@@ -407,10 +402,6 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     production this job runs forever beside stream_ivf_assign; the
     report rows with retrain = true page the rebuild
     (write_ivf_store)."""
-    import hashlib as _hl
-    import os
-    import tempfile
-
     from ..operators.ann import (
         DRIFT_DEN,
         DRIFT_NUM,
@@ -419,32 +410,21 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         _append_parts,
         write_ivf_base_store,
     )
-    from ..tables import table_fingerprint
+    from ..tables import fixture_store
 
     # heavy-fold drain: batch-plan width, not state width (liveness.py)
     spark = stream_clone(spark, batch_fold_partitions(spark))
     # Yesterday's index: base-only store + frozen codebook. The base
-    # write is memoized per (application, sf_dir, fingerprint) — on a
-    # re-invocation the stream's folds anti-join into the already-
-    # folded store as no-ops (the exactly-once property doubles as the
-    # warm path) and the report is byte-identical.
-    fp = table_fingerprint(sf_dir, "embeddings")
-    digest = _hl.md5(repr((sf_dir, fp)).encode()).hexdigest()[:12]
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"ivf_maint_{spark.sparkContext.applicationId}_{digest}",
+    # write is memoized per fixture — on a re-invocation the stream's
+    # folds anti-join into the already-folded store as no-ops (the
+    # exactly-once property doubles as the warm path) and the report is
+    # byte-identical.
+    path = fixture_store(
+        spark,
+        sf_dir,
+        "ivf_maint_store",
+        lambda p: write_ivf_base_store(spark, sf_dir, p),
     )
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    if _MAINT_BASE_READY.get(key) != path or not os.path.isdir(path):
-        write_ivf_base_store(spark, sf_dir, path)
-        # scratch store: reaped at interpreter exit (ann._ivf_store_ready
-        # convention) so sweep/bench processes never litter the temp root
-        import atexit
-        import shutil
-
-        atexit.register(shutil.rmtree, path, True)
-        _MAINT_BASE_READY.clear()
-        _MAINT_BASE_READY[key] = path
     _v, _b, _d, cents, _m, _p = _append_parts(spark, sf_dir)
     cent_rows = [
         (int(r.cid), [float(x) for x in r.cent_emb], float(r.cent_norm))
@@ -651,9 +631,6 @@ def _sem_decon_oracle() -> str:
     return DECONTAMINATE_SEMANTIC_ORACLE
 
 
-_SEM_DECON_READY: dict[tuple, tuple] = {}
-
-
 @query("stream_decontaminate_semantic", oracle=_sem_decon_oracle())
 def stream_decontaminate_semantic(
     spark: SparkSession, sf_dir: str
@@ -672,11 +649,7 @@ def stream_decontaminate_semantic(
     eval side, one cid-pruned anti-join for idempotence; no unbounded
     stream state (a doc's verdict is final once its own cell is
     scored). The report is one groupBy over int-pair hit rows."""
-    import atexit
-    import hashlib as _hl
     import os
-    import shutil
-    import tempfile
 
     from ..operators.ann import (
         _corpus_n,
@@ -684,28 +657,13 @@ def stream_decontaminate_semantic(
         sem_assignment,
     )
     from ..operators.splits import SPLIT_BOUNDS
-    from ..tables import load_table, table_fingerprint
+    from ..tables import fixture_store, load_table
 
-    fp = table_fingerprint(sf_dir, "embeddings")
-    app = spark.sparkContext.applicationId
-    digest = _hl.md5(repr((sf_dir, fp, "semdecon")).encode()).hexdigest()[
-        :12
-    ]
-    eval_path = os.path.join(
-        tempfile.gettempdir(), f"sem_decon_eval_{app}_{digest}"
-    )
-    hits_path = os.path.join(
-        tempfile.gettempdir(), f"sem_decon_hits_{app}_{digest}"
-    )
-    key = (app, sf_dir, fp)
-    if _SEM_DECON_READY.get(key) != (
-        eval_path,
-        hits_path,
-    ) or not os.path.isdir(eval_path):
+    def write_eval(store: str) -> None:
         # Static eval side, derived ONCE per fixture on the caller's
         # session (shares the sem_assignment memo with the batch
-        # queries) and persisted cid-partitioned. Scratch dirs reaped
-        # at interpreter exit (the _ivf_store_ready convention).
+        # queries) and persisted cid-partitioned; the stream's hits
+        # accumulate beside it under the same store directory.
         e = load_table(spark, sf_dir, "embeddings")
         d = load_table(spark, sf_dir, "documents")
         vecs = e.select(
@@ -731,12 +689,12 @@ def stream_decontaminate_semantic(
             ev.write.mode("overwrite")
             .option("partitionOverwriteMode", "static")
             .partitionBy("cid")
-            .parquet(eval_path)
+            .parquet(os.path.join(store, "eval"))
         )
-        shutil.rmtree(hits_path, True)  # stale hits of a prior build
-        atexit.register(shutil.rmtree, eval_path, True)
-        atexit.register(shutil.rmtree, hits_path, True)
-        _SEM_DECON_READY[key] = (eval_path, hits_path)
+
+    store = fixture_store(spark, sf_dir, "sem_decon_store", write_eval)
+    eval_path = os.path.join(store, "eval")
+    hits_path = os.path.join(store, "hits")
     # Driver-pinned SemDeDup codebook rows: ncells = ceil(sqrt(n)),
     # bounded O(ncells x d) — the fold_ivf_batch closure convention.
     e = load_table(spark, sf_dir, "embeddings")
@@ -918,12 +876,6 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anti-join idempotence contract. In production this job is the
     online serving tier over the store stream_ivf_maintenance keeps
     fresh."""
-    import atexit
-    import hashlib as _hl
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.ann import (
         ANN_N_QUERIES,
         _append_parts,
@@ -932,7 +884,7 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         decontaminate_semantic,
         delete_ivf_store,
     )
-    from ..tables import load_table, table_fingerprint
+    from ..tables import fixture_store, load_table
 
     # heavy-fold drain: batch-plan width, not state width (liveness.py)
     spark = stream_clone(spark, batch_fold_partitions(spark))
@@ -956,13 +908,11 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
         for r in cents.collect()
     ]  # bounded: nlist rows — the broadcast codebook, driver-pinned
 
-    fp = table_fingerprint(sf_dir, "embeddings")
-    digest = _hl.md5(repr((sf_dir, fp, "serve")).encode()).hexdigest()[:12]
-    results_path = os.path.join(
-        tempfile.gettempdir(),
-        f"knn_serve_{spark.sparkContext.applicationId}_{digest}",
+    # served results accumulate per fixture under the anti-join
+    # idempotence contract, so a re-invocation serves nothing new
+    results_path = fixture_store(
+        spark, sf_dir, "knn_serve_results", lambda _path: None
     )
-    atexit.register(shutil.rmtree, results_path, True)
 
     arrivals = embeddings_arrivals(spark, sf_dir).where(
         F.col("vec_id") < ANN_N_QUERIES

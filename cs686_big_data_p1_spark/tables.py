@@ -5,9 +5,20 @@ inference is a full extra file-footer pass and a correctness hazard
 (the reference's schema is likewise fixed — compiled protobuf,
 proto/messages.proto). Column pruning + predicate pushdown reach the
 parquet scan because we read declaratively.
+
+This module also owns the one memo for state derived from a fixture
+directory (fixture_memo / fixture_store), keyed on table_fingerprint.
 """
 
 from __future__ import annotations
+
+import atexit
+import os
+import shutil
+import tempfile
+import threading
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -192,8 +203,6 @@ def table_fingerprint(sf_dir: str, name: str):
     keys include it so a rewritten fixture can never be served a stale
     derived frame (the ADVICE-r11 structural-staleness rule). The ONE
     copy of this logic in the tree — every memo keys through here."""
-    import os
-
     path = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(path):
@@ -214,3 +223,103 @@ def table_fingerprint(sf_dir: str, name: str):
     except OSError:
         return None
     return (st.st_size, st.st_mtime_ns)
+
+
+# --- fixture-derived state ------------------------------------------------
+#
+# One memo for every value derived from a fixture (one sf_dir of parquet
+# tables): corpus counts, checkpointed cell assignments and cluster
+# labels, on-disk IVF stores. An entry is keyed on (applicationId,
+# sf_dir, fingerprints of every fixture table, tag), so rewriting any
+# table makes every value derived from the old files unreachable, and a
+# session clone (same application) shares its parent's entries. An
+# sf_dir that is not a local directory (hdfs://, s3://) cannot be
+# fingerprinted, so nothing is memoized for it and every call rebuilds.
+#
+# Single flight: each key has its own lock, so parallel_legs threads
+# that miss the same cold key build it once, and a build may call other
+# memos (a different key, a different lock). A failed build caches
+# nothing.
+
+_MEMO: dict[tuple, Any] = {}
+_MEMO_LOCKS: dict[tuple, threading.Lock] = {}
+_MEMO_GUARD = threading.Lock()
+_SCRATCH_ROOT: list[str] = []
+
+
+def _memoized(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    build: Callable[[], Any],
+    reusable: Callable[[Any], bool],
+) -> Any:
+    if not os.path.isdir(sf_dir):
+        return build()
+    key = (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        tuple(table_fingerprint(sf_dir, name) for name in TABLE_NAMES),
+        tag,
+    )
+    with _MEMO_GUARD:
+        lock = _MEMO_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        if key in _MEMO and reusable(_MEMO[key]):
+            return _MEMO[key]
+        _MEMO[key] = value = build()
+        return value
+
+
+def _alive(value: Any) -> bool:
+    """A memoized DataFrame is a localCheckpoint whose blocks live on
+    executors; if an executor holding them was lost, every consumer
+    would fail with missing-block errors instead of recomputing
+    (ADVICE r12). One bounded block read (ADVICE r13) decides reuse."""
+    if not isinstance(value, DataFrame):
+        return True
+    try:
+        value.limit(1).count()
+        return True
+    except Exception:  # noqa: BLE001 — any failure means rebuild
+        return False
+
+
+def fixture_memo(
+    spark: SparkSession, sf_dir: str, tag: str, build: Callable[[], Any]
+) -> Any:
+    """``build()`` once per (application, fixture contents, tag)."""
+    return _memoized(spark, sf_dir, tag, build, _alive)
+
+
+def scratch_root() -> str:
+    """The process's scratch directory, created on first use and
+    removed at interpreter exit, so sweep and bench processes never
+    litter the temp root. At deployment a store is a managed table
+    location, not scratch."""
+    with _MEMO_GUARD:
+        if not _SCRATCH_ROOT:
+            root = tempfile.mkdtemp(prefix="spark_graft_")
+            atexit.register(shutil.rmtree, root, True)
+            _SCRATCH_ROOT.append(root)
+        return _SCRATCH_ROOT[0]
+
+
+def fixture_store(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    write: Callable[[str], None],
+) -> str:
+    """Build an on-disk store once per (application, fixture contents,
+    tag) and return its path. ``write(path)`` fills a fresh, empty
+    directory under scratch_root(); the path is reused only while it
+    still exists, and a crashed build is repaired by the next call
+    building into a new directory."""
+
+    def build() -> str:
+        path = tempfile.mkdtemp(prefix=f"{tag}_", dir=scratch_root())
+        write(path)
+        return path
+
+    return _memoized(spark, sf_dir, tag, build, os.path.isdir)

@@ -575,36 +575,12 @@ def test_ann_recall_all_covers_every_method_with_floor(spark, registry):
         assert rows[m].recall >= 0.2, f"{m} recall collapsed"
 
 
-def test_corpus_count_memo_lifetime(spark):
-    """ADVICE r10: _corpus_n memoizes the embeddings count per sf_dir
-    so composed queries (ann_recall_all's five legs) stop re-counting
-    the corpus — but the memo must live exactly ONE query invocation:
-    registry.clear_caches(), which every driver fires after
-    materializing each query, must clear it, so a rewritten fixture
-    dir can never serve a stale count across queries."""
-    from cs686_big_data_p1_spark import registry
-    from cs686_big_data_p1_spark.operators.ann import _CORPUS_N, _corpus_n
-
-    registry.clear_caches()
-    assert _CORPUS_N == {}
-    n1 = _corpus_n(spark, SF_SMALL)
-    assert n1 > 0 and list(_CORPUS_N.values()) == [n1]
-    [key] = _CORPUS_N
-    assert key[0] == SF_SMALL
-    # second call within the same "query": served from the memo
-    assert _corpus_n(spark, SF_SMALL) == n1
-    assert len(_CORPUS_N) == 1
-    # driver-side clear ends the lifetime
-    registry.clear_caches()
-    assert _CORPUS_N == {}
-
-
 def test_corpus_count_memo_structural_staleness_guard(spark, tmp_path):
     """ADVICE r11: the memo's correctness must not rest on every
-    caller remembering clear_caches(). The key now carries a
-    (size, mtime_ns) fingerprint of the embeddings parquet, so a
-    REWRITTEN fixture dir yields the fresh count even when nobody
-    cleared the memo between queries."""
+    caller remembering clear_caches(). The key carries a (size,
+    mtime_ns) fingerprint of every fixture table, so a REWRITTEN
+    fixture dir yields the fresh count even when nobody cleared the
+    memo between queries."""
     import os
 
     from cs686_big_data_p1_spark import registry

@@ -154,9 +154,10 @@ def test_priority_order_is_clean_permutation_prefix(registry):
         "inventory_delta",
     ]
     assert PRIORITY_ORDER[:24] == expected_pinned
-    # The displaced §2.E-2.I representatives must still lead the
-    # post-window list (the judge's sweep-derived coverage check
-    # walks them right after the window).
+    # The displaced §2.E-2.I representatives all sit after the window,
+    # in their relative order (the judge's sweep-derived coverage check
+    # walks them in that order). Rotating the window moves them, so the
+    # invariant is their order past slot 50, not their exact slots.
     expected_displaced = [
         "publish_upsert", "checksum_join", "list_storage_nodes",
         "placement_pick", "round_robin_assign", "under_replicated",
@@ -165,7 +166,10 @@ def test_priority_order_is_clean_permutation_prefix(registry):
         "dedup_exact", "dedup_near", "knn_bruteforce", "text_stats",
         "doc_embedding_join", "tpch_q1_pricing",
     ]
-    assert PRIORITY_ORDER[50:69] == expected_displaced
+    post_window = PRIORITY_ORDER[50:]
+    assert [n for n in post_window if n in expected_displaced] == (
+        expected_displaced
+    )
     # Registration order actually honors the list: the first 50 QUERIES
     # keys are exactly PRIORITY_ORDER[:50] (the driver's window).
     assert list(registry.QUERIES)[:50] == PRIORITY_ORDER[:50]

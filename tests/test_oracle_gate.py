@@ -1,10 +1,13 @@
 """The full-oracle correctness gate (VERDICT r7 #1; hardened r9).
 
 The driver's CORRECTNESS_r*.json only covers the first 50 registered
-queries; the rest are verified by the full DuckDB sweeps
+queries; the rest are verified by the full DuckDB sweeps ($TESTDATA is
+the fixture root that TESTDATA.md names; ARTIFACTS below pins each
+sweep's SF dir)
 
-  python tools/check_oracle.py --json ORACLE_SWEEP.json /root/testdata/sf0.001
-  python tools/check_oracle.py --json ORACLE_SWEEP_SF0.01.json /root/testdata/sf0.01
+  python tools/check_oracle.py --json ORACLE_SWEEP.json $TESTDATA/sf0.001
+  python tools/check_oracle.py --json ORACLE_SWEEP_SF0.01.json $TESTDATA/sf0.01
+  python tools/check_oracle.py --json ORACLE_SWEEP_SF0.1.json $TESTDATA/sf0.1
 
 whose committed artifacts this test pins against the LIVE tree:
 
@@ -18,7 +21,7 @@ whose committed artifacts this test pins against the LIVE tree:
     or dropping an oracle_sql() entry without re-sweeping fails here;
   * its recorded engine-source sha256 must match the current tree
     (VERDICT r8 #5) — so EDITING any engine source without re-running
-    both sweeps fails here too. The hash function is imported from
+    all three sweeps fails here too. The hash function is imported from
     tools/check_oracle.py, so gate and sweep can't diverge on scope.
 """
 

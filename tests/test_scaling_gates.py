@@ -22,6 +22,7 @@ SCALING = Path(__file__).resolve().parent.parent / "SCALING.md"
 EXPECTED_COLLECT_SITES = {
     "operators/ann.py": 12,
     "streaming/vectors.py": 6,
+    "operators/search.py": 2,
     "operators/linalg.py": 3,
     "operators/analytics.py": 1,
     "sources/sort.py": 1,

@@ -481,3 +481,35 @@ def test_mmr_rerank_diversifies_planted_neardup(spark, tmp_path):
     # BM25 order would be [0,1,2,3,4]; MMR demoted the near-dup to last
     rels = out.sort_values("doc_id")["rel_e6"].tolist()
     assert rels == sorted(rels, reverse=True)
+
+
+def test_mmr_rerank_zero_candidates_is_typed_empty(spark, tmp_path):
+    """A corpus holding none of the query terms gives bm25_search no
+    candidates; mmr_rerank must return an empty frame with its normal
+    schema, not raise from an argmax over nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cs686_big_data_p1_spark.operators.search import BM25_TERMS, mmr_rerank
+
+    docs = [(0, "alpha beta", "en", "src0", 10), (1, "gamma", "en", "src0", 5)]
+    assert not any(t in d[1].split() for d in docs for t in BM25_TERMS)
+    pd.DataFrame(
+        docs, columns=["doc_id", "text", "lang", "source", "n_chars"]
+    ).to_parquet(str(tmp_path / "documents.parquet"), index=False)
+    pq.write_table(
+        pa.table(
+            {
+                "vec_id": pa.array([0, 1], pa.int64()),
+                "embedding": pa.array(
+                    [[1.0, 0.0], [0.0, 1.0]], pa.list_(pa.float32())
+                ),
+                "label": pa.array([0, 0], pa.int32()),
+            }
+        ),
+        str(tmp_path / "embeddings.parquet"),
+    )
+
+    out = mmr_rerank(spark, str(tmp_path))
+    assert out.columns == ["pick", "doc_id", "rel_e6", "mmr_e6"]
+    assert out.count() == 0

@@ -8,10 +8,13 @@ non-floats, exact-then-approx diagnostics for floats).
 Usage: python tools/check_oracle.py [--json OUT.json] [sf_dir] [query ...]
 
 With --json, writes a machine-readable result artifact. The per-round
-gate (VERDICT r7 #1; two SFs + source pinning since r9) is:
+gate (VERDICT r7 #1; source pinning since r9, three SFs since r11) is
+one sweep per scale factor, with $TESTDATA the fixture root that
+TESTDATA.md names:
 
-    python tools/check_oracle.py --json ORACLE_SWEEP.json /root/testdata/sf0.001
-    python tools/check_oracle.py --json ORACLE_SWEEP_SF0.01.json /root/testdata/sf0.01
+    python tools/check_oracle.py --json ORACLE_SWEEP.json $TESTDATA/sf0.001
+    python tools/check_oracle.py --json ORACLE_SWEEP_SF0.01.json $TESTDATA/sf0.01
+    python tools/check_oracle.py --json ORACLE_SWEEP_SF0.1.json $TESTDATA/sf0.1
 
 committed at the repo root; tests/test_oracle_gate.py then asserts each
 artifact is failure-free, its query/oracle name sets exactly match the

@@ -140,47 +140,47 @@ EXPECTED_E = {
 
 
 # Cold-path rows (VERDICT r12 #9): these queries consume a
-# process-lifetime shared memo (_CLUSTER_MEMO's converged label-prop —
-# llm.py), so whichever of them scale_run times FIRST pays the full
-# label propagation while the bench's min-of-2 measures the warm memo
-# hit. Their recorded exponents are therefore COLD-path bounds — the
-# honest worst case — and must not be compared against warm bench
-# seconds. The flag rides in the artifact so the gate's bound stays
-# interpretable.
+# process-lifetime fixture memo (tables.fixture_memo / fixture_store,
+# named by tag below — e.g. "cluster_labels", llm.py's converged
+# label-prop), so whichever of them scale_run times FIRST pays the full
+# build while the bench's min-of-2 measures the warm memo hit. Their
+# recorded exponents are therefore COLD-path bounds — the honest worst
+# case — and must not be compared against warm bench seconds. The flag
+# rides in the artifact so the gate's bound stays interpretable.
 COLD_PATH = {
-    "dedup_clusters": "first _CLUSTER_MEMO consumer in the process "
+    "dedup_clusters": "first cluster_labels consumer in the process "
     "pays the full label propagation (bench min-of-2 measures the "
     "warm memo hit)",
-    "cluster_keep_best": "shares _CLUSTER_MEMO with dedup_clusters; "
+    "cluster_keep_best": "shares cluster_labels with dedup_clusters; "
     "cold when it runs first in the process",
-    "decontaminate_semantic": "first _SEM_ASSIGN_MEMO consumer pays "
+    "decontaminate_semantic": "first sem_assign consumer pays "
     "the n x sqrt(n) cell-assignment pass",
     "decontaminate_report": "composes both hygiene legs; pays "
-    "whichever memos (_SEM_ASSIGN_MEMO) are still cold",
-    "corpus_curate_decontaminated": "consumes _CURATE_MEMO and "
-    "(transitively) _CLUSTER_MEMO + _SEM_ASSIGN_MEMO; cold when it "
+    "whichever memos (sem_assign) are still cold",
+    "corpus_curate_decontaminated": "consumes curated_set and "
+    "(transitively) cluster_labels + sem_assign; cold when it "
     "runs before the curation queries",
-    "ivf_store_prune": "first _STORE_READY consumer pays the physical "
+    "ivf_store_prune": "first ivf_store consumer pays the physical "
     "base-store write + delta fold",
-    "stream_ivf_maintenance": "first _MAINT_BASE_READY consumer pays "
+    "stream_ivf_maintenance": "first ivf_maint_store consumer pays "
     "the base-store write; later drains fold as no-ops",
-    "ivf_store_delete": "composes _STORE_READY (physical store build) "
-    "and _SEM_ASSIGN_MEMO (the decontamination drop set); cold when "
+    "ivf_store_delete": "composes ivf_store (physical store build) "
+    "and sem_assign (the decontamination drop set); cold when "
     "it runs before ivf_store_prune / the semantic hygiene queries",
     "stream_decontaminate_semantic": "first run builds the persisted "
-    "cid-partitioned eval side and pays the _SEM_ASSIGN_MEMO "
-    "assignment pass; later drains fold as no-ops",
+    "cid-partitioned eval side (sem_decon_store) and pays the "
+    "sem_assign assignment pass; later drains fold as no-ops",
     "ivf_store_vacuum": "first run builds its own physical store "
-    "(_VACUUM_STORE_READY) and pays the _SEM_ASSIGN_MEMO drop-set "
+    "(ivf_vacuum_store) and pays the sem_assign drop-set "
     "pass; the replayed fold+vacuum are then no-ops",
-    "knn_ivf_store_live": "composes _STORE_READY and the "
-    "_SEM_ASSIGN_MEMO drop set; cold when it runs first",
-    "knn_ivf_sq": "first _SEM/_corpus consumers may pay shared memo "
-    "builds; its own SQ trainer is sample-capped (never corpus-scale)",
+    "knn_ivf_store_live": "composes ivf_store and the "
+    "sem_assign drop set; cold when it runs first",
+    "knn_ivf_sq": "first sem_assign/corpus_n consumers may pay shared "
+    "memo builds; its own SQ trainer is sample-capped (never corpus-scale)",
     "ivf_release_versions": "first run PUBLISHES the three snapshot "
-    "versions (_RELEASE_READY) and pays the _SEM_ASSIGN_MEMO drop-set "
+    "versions (ivf_releases) and pays the sem_assign drop-set "
     "pass; re-invocations read the immutable versions",
-    "stream_knn_store": "composes _STORE_READY and the _SEM_ASSIGN_MEMO "
+    "stream_knn_store": "composes ivf_store and the sem_assign "
     "drop set; first drain serves every query, replays fold nothing",
 }
 
