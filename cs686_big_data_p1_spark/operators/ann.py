@@ -373,67 +373,98 @@ WHERE rank <= {ANN_K}
 """
 
 
-def _ivf_cells(e: DataFrame, n: int | None = None):
-    """Coarse-quantizer assignment shared by knn_ivf and its tests:
-    returns (vecs, probes, assigned) where probes = the IVF_NPROBE
-    nearest cells per query vector and assigned = each candidate
-    vector's single nearest cell. `n` = corpus row count if the caller
-    already knows it (query wrappers pass _corpus_n; ADVICE r10),
-    else counted here — off the cached frame, warming the cache the
-    pipeline reuses anyway.
+_COS_CB = ("vec_id AS cid", "embedding AS cent_emb", "norm AS cent_norm")
 
-    Deliberately NOT memoized across the legs of a composed query
-    (VERDICT r11 #4, measured and REJECTED this round): sharing the
-    triple between knn_ivf and knn_ivfpq inside ann_recall_all — as a
-    per-query memo with the window output cached — made the
-    composed query SLOWER, 13.4 -> 19.8 s warm at sf0.1 (cache alone
-    15.8 s, lazy-shared 14.9 s). The five legs are independent
-    subtrees whose stages OVERLAP across the 32 cores, so the
-    "redundant" second derivation is nearly free wall-clock, while a
-    shared cached stage serializes the critical path and the
-    InMemoryRelation blocks pipelining the window straight into its
-    consumers. Re-derivation is not the dominant cost; scheduler
-    overlap is the dominant saving."""
-    vecs = track_cache(
-        e.select("vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"))
-    )
-    # Adaptive nlist (VERDICT r9 #3): one aggregated long to the driver,
-    # control flow only — it sizes the centroid filter, never data.
-    nlist = _nlist(vecs.count() if n is None else n)
-    cents = vecs.where(
+
+def _seed_cells(frame: DataFrame, k: int) -> DataFrame:
+    """The first k candidate vectors, vec_id in [ANN_N_QUERIES,
+    ANN_N_QUERIES + k): the seeds of every codebook the oracles can
+    replay. `.selectExpr(*_COS_CB)` turns a (vec_id, embedding, norm)
+    slice into a cosine codebook with cid = vec_id."""
+    return frame.where(
         (F.col("vec_id") >= ANN_N_QUERIES)
-        & (F.col("vec_id") < ANN_N_QUERIES + nlist)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cent_emb"),
-        F.col("norm").alias("cent_norm"),
+        & (F.col("vec_id") < ANN_N_QUERIES + k)
     )
+
+
+def _cos_rank(
+    vecs: DataFrame, cents: DataFrame, k: int, keep: tuple = ()
+) -> DataFrame:
+    """(vec_id, *keep, cid, cscore, rk) for each (vec_id, embedding,
+    norm) row's k best cells of the broadcast codebook (cid, cent_emb,
+    cent_norm) by fixed-point cosine, ties on ascending cid. Assignment
+    depends only on (row, codebook), never on other rows — the reason
+    a frozen-codebook append is mergeable.
+
+    The result stays lazy even where two consumers read it (r16,
+    VERDICT r15 #6 follow-up): a 3-variant alternating A/B over the six
+    seeded-cell consumers (none/lazy/eager, 3 reps, warm session, sf0.1
+    floors) scored 22.35 / 22.18 / 23.56 s — the duplicate overlaps
+    across cores while a cache serializes materialization and blocks
+    pipelining the window into its consumers."""
     cscore = (
         pair_dot_pd(F.col("embedding"), F.col("cent_emb"))
         / (F.col("norm") * F.col("cent_norm"))
     ).alias("cscore")
-    scores = vecs.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", cscore
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cid"))
+    return (
+        vecs.crossJoin(F.broadcast(cents))
+        .select("vec_id", *keep, "cid", cscore)
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
     )
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cscore"), F.asc("cid")
+
+
+def _coarse_cells(e: DataFrame, n: int | None = None, trained: bool = False):
+    """The IVF coarse quantizer: returns (vecs, probes, assigned, nlist)
+    — vecs = (vec_id, embedding, norm) cached, probes = each query's
+    IVF_NPROBE nearest cells (query_id, cid), assigned = each candidate
+    vector's nearest cell (neighbor_id, cid), nlist = the cell count
+    used. `n` = corpus row count if the caller already knows it (query
+    wrappers pass _corpus_n; ADVICE r10), else counted off the cache.
+
+    trained=False: nlist seeded cells (cid = vec_id) ranked by cosine.
+    trained=True: kmeans_cells' quantizer — CELLS_ITERS sample-capped
+    Lloyd rounds (cid = sample rank - 1), probes and assignments by
+    exact integer squared distance, ties on cid.
+
+    Deliberately NOT memoized across the legs of a composed query
+    (VERDICT r11 #4, measured and REJECTED): sharing the triple between
+    knn_ivf and knn_ivfpq inside ann_recall_all made the composed query
+    SLOWER, 13.4 -> 19.8 s warm at sf0.1 (cache alone 15.8 s,
+    lazy-shared 14.9 s). The legs are independent subtrees whose stages
+    OVERLAP across cores, so the second derivation is nearly free
+    wall-clock, while a shared cached stage serializes the critical
+    path."""
+    vecs = track_cache(
+        e.select("vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"))
     )
-    ranked = scores.withColumn("rk", F.row_number().over(w_assign))
-    # `ranked` IS computed twice per consumer pair (once inside the
-    # broadcast(probes) job, once in the main plan for `assigned`) —
-    # measured and left UNCACHED (r16, VERDICT r15 #6 follow-up): a
-    # 3-variant alternating A/B over the six _ivf_cells consumers
-    # (none/lazy/eager, 3 reps, warm session, sf0.1 floors) scored
-    # 22.35 / 22.18 / 23.56 s — the duplicate overlaps across cores
-    # while a cache serializes materialization and blocks pipelining
-    # the window into its consumers (the r11 cross-leg rule, intra-leg).
-    assigned = ranked.where(
-        (F.col("rk") == 1) & (F.col("vec_id") >= ANN_N_QUERIES)
-    ).select(F.col("vec_id").alias("neighbor_id"), "cid")
-    probes = ranked.where(
-        (F.col("rk") <= IVF_NPROBE) & (F.col("vec_id") < ANN_N_QUERIES)
-    ).select(F.col("vec_id").alias("query_id"), "cid")
-    return vecs, probes, assigned
+    # Adaptive nlist (VERDICT r9 #3): one aggregated long to the driver,
+    # control flow only — it sizes the codebook, never data.
+    nlist = _nlist(vecs.count() if n is None else n)
+    if trained:
+        qv = track_cache(_quant_vecs(e))
+        assigned, cb = _lloyd(
+            qv,
+            nlist,
+            CELLS_ITERS + 1,
+            samp=_md5_sample(e, "ivftrain", IVF_TRAIN_CAP),
+        )
+        probes = _sq_rank(qv, cb, IVF_NPROBE)
+    else:
+        assigned = probes = _cos_rank(
+            vecs, _seed_cells(vecs, nlist).selectExpr(*_COS_CB), IVF_NPROBE
+        )
+    return (
+        vecs,
+        probes.where(F.col("vec_id") < ANN_N_QUERIES).select(
+            F.col("vec_id").alias("query_id"), "cid"
+        ),
+        assigned.where(
+            (F.col("rk") == 1) & (F.col("vec_id") >= ANN_N_QUERIES)
+        ).select(F.col("vec_id").alias("neighbor_id"), "cid"),
+        nlist,
+    )
 
 
 @query("knn_ivf", oracle=KNN_IVF_ORACLE)
@@ -453,7 +484,7 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     on ascending id everywhere so ranks are deterministic.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    vecs, probes, assigned = _ivf_cells(e, n=_corpus_n(spark, sf_dir))
+    vecs, probes, assigned, _ = _coarse_cells(e, n=_corpus_n(spark, sf_dir))
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id"
     )
@@ -678,7 +709,7 @@ def write_ivf_store(spark: SparkSession, sf_dir: str, path: str) -> None:
     100 TB — probing IVF_NPROBE cells becomes a partition-pruned scan
     that never touches the other nlist - nprobe directories."""
     e = load_table(spark, sf_dir, "embeddings")
-    _, _, assigned = _ivf_cells(e, n=_corpus_n(spark, sf_dir))
+    _, _, assigned, _ = _coarse_cells(e, n=_corpus_n(spark, sf_dir))
     (
         e.join(assigned, e.vec_id == assigned.neighbor_id)
         .select("vec_id", "embedding", "cid")
@@ -792,34 +823,6 @@ FROM ranked r LEFT JOIN drops dr ON dr.vec_id = r.vec_id
 """
 
 
-def _sem_assign(vecs: DataFrame, ncells: int) -> DataFrame:
-    """(vec_id, cid, cent_cosine): every vector's nearest seeded cell
-    by fixed-point cosine — the SemDeDup assignment pass shared by
-    dedup_semantic, corpus_curate_semantic (transitively), and
-    decontaminate_semantic."""
-    cents = vecs.where(
-        (F.col("vec_id") >= ANN_N_QUERIES)
-        & (F.col("vec_id") < ANN_N_QUERIES + ncells)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    cscore = (
-        pair_dot_pd(F.col("embedding"), F.col("c_emb"))
-        / (F.col("norm") * F.col("c_norm"))
-    ).alias("cscore")
-    scores = vecs.crossJoin(F.broadcast(cents)).select("vec_id", "cid", cscore)
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cscore"), F.asc("cid")
-    )
-    return (
-        scores.withColumn("rk", F.row_number().over(w_assign))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid", F.col("cscore").alias("cent_cosine"))
-    )
-
-
 def sem_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The fixture corpus's cell assignment, memoized per fixture:
     THREE queries consume the identical n x sqrt(n) assignment pass —
@@ -828,15 +831,14 @@ def sem_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     immutable blocks."""
 
     def build() -> DataFrame:
-        e = load_table(spark, sf_dir, "embeddings")
-        vecs = track_cache(
-            e.select(
-                "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-            )
+        vecs, _, _, nlist = _coarse_cells(
+            load_table(spark, sf_dir, "embeddings"), n=_corpus_n(spark, sf_dir)
         )
-        return _sem_assign(
-            vecs, _nlist(_corpus_n(spark, sf_dir))
-        ).localCheckpoint(eager=True)
+        return (
+            _cos_rank(vecs, _seed_cells(vecs, nlist).selectExpr(*_COS_CB), 1)
+            .selectExpr("vec_id", "cid", "cscore AS cent_cosine")
+            .localCheckpoint(eager=True)
+        )
 
     return fixture_memo(spark, sf_dir, "sem_assign", build)
 
@@ -849,17 +851,15 @@ def semantic_dedup(
     """Core of dedup_semantic over any (vec_id, embedding) frame.
     `n` = known corpus count (ADVICE r10), else counted off the cache;
     `assigned` = a prebuilt (vec_id, cid, cent_cosine) assignment
-    (sem_assignment's memo for the fixture corpus), else derived."""
-    vecs = track_cache(
-        e.select(
-            "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-        )
-    )
+    (sem_assignment's memo for the fixture corpus), else every
+    vector's nearest seeded cell by fixed-point cosine. Cells =
+    ceil(sqrt(n)) (VERDICT r9 #3), so assignment (n * ncells) and
+    within-cell all-pairs (n * occupancy) are both O(n^1.5)."""
+    vecs, _, _, nlist = _coarse_cells(e, n=n)
     if assigned is None:
-        # Corpus-adaptive cell count (VERDICT r9 #3): cells =
-        # ceil(sqrt(n)), so assignment (n * ncells) and within-cell
-        # all-pairs (n * occupancy) are both O(n^1.5) — see _nlist.
-        assigned = _sem_assign(vecs, _nlist(vecs.count() if n is None else n))
+        assigned = _cos_rank(
+            vecs, _seed_cells(vecs, nlist).selectExpr(*_COS_CB), 1
+        ).selectExpr("vec_id", "cid", "cscore AS cent_cosine")
     w_cell = Window.partitionBy("cid").orderBy(
         F.desc("cent_cosine"), F.asc("vec_id")
     )
@@ -1011,100 +1011,146 @@ FROM a{LLOYD_ITERS}
     )
 
 
-def _quant_arr(col) -> F.Column:
-    """array<float> -> array<bigint>: the engine-standard fixed-point
-    quantization floor(x * 1e6) applied per component (one interpreted
+def _quant_vecs(e: DataFrame) -> DataFrame:
+    """(vec_id, sub_q): each whole embedding as ONE quantized subspace,
+    the engine-standard floor(x * 1e6) per component (one interpreted
     HOF pass per ROW — never per candidate pair; the pair work runs in
     the Arrow kernel pair_sqdist_q_pd)."""
-    return F.transform(
-        col.cast("array<double>"),
-        lambda x: F.floor(x * _LQ).cast("bigint"),
-    )
-
-
-def _cents_to_arr(cents: DataFrame, keys: list) -> DataFrame:
-    """(…keys, i/j, cq) long-form centroids -> (…keys, cq_arr) with
-    components ordered by index — the broadcastable k-row form the
-    Arrow assignment kernel consumes. Input is k x d rows, output k."""
-    idx = "i" if "i" in cents.columns else "j"
-    return cents.groupBy(*keys).agg(
+    return e.select(
+        "vec_id",
         F.transform(
-            F.array_sort(F.collect_list(F.struct(idx, "cq"))),
-            lambda s: s["cq"],
-        ).alias("cq_arr")
+            F.col("embedding").cast("array<double>"),
+            lambda x: F.floor(x * _LQ).cast("bigint"),
+        ).alias("sub_q"),
     )
 
 
-def _lloyd_train(e: DataFrame, iters: int, n: int | None = None):
-    """Distributed fixed-point Lloyd shared by kmeans_lloyd,
-    kmeans_cells and knn_ivf_trained: returns (ex, assigned, cents,
-    dists) after `iters` rounds — ex = the quantized component explode
-    (recentering input), assigned = (vec_id, cid, dist) final
-    assignments (checkpointed), cents = (cid, cq_arr) the codebook the
-    final assignment used, dists = the final round's full
-    (vec_id, cid, dist) table (lazy, over checkpoint-cut inputs) for
-    nprobe-style probing.
-
-    Scale: centroids are k rows BROADCAST into an n x k crossJoin
-    whose distance column is ONE Arrow int64 kernel call per pair
-    (pair_sqdist_q_pd) — the same shape _ivf_cells scores cosine with.
-    (The first cut computed distances relationally via the component
-    explode and paid an n x k x d join fan-out per round — measured
-    2-4x slower at sf0.1.) Per-round shuffles are the argmin window on
-    vec_id and the (cid, i) recenter rollup (map-side combinable); the
-    corpus is never shuffled on a data key. One localCheckpoint per
-    round cuts lineage exactly like dedup_clusters' loop. The integers
-    are bit-identical to the oracle's exploded fold: quantize once,
-    subtract, square, sum."""
-    ex = track_cache(
-        e.select(
+def _sq_rank(
+    pts: DataFrame, cents: DataFrame, k: int, by: tuple = ()
+) -> DataFrame:
+    """(vec_id, *by, cid, dist, rk) for each (vec_id, *by, sub_q) point's
+    k nearest codewords of the broadcast codebook (*by, cid, cq_arr) by
+    exact int64 squared distance, ties on ascending cid. by = ("s",)
+    scores every PQ subspace at once (an equi-join on s instead of a
+    crossJoin). The distance is ONE Arrow kernel call per pair
+    (pair_sqdist_q_pd); the relational form — component explode, join
+    on the index, rollup — paid an n x k x d fan-out, measured 2-4x
+    slower at sf0.1."""
+    cb = F.broadcast(cents)
+    pairs = pts.join(cb, list(by)) if by else pts.crossJoin(cb)
+    w = Window.partitionBy("vec_id", *by).orderBy(F.asc("dist"), F.asc("cid"))
+    return (
+        pairs.select(
             "vec_id",
-            F.posexplode(F.col("embedding").cast("array<double>")).alias(
-                "i0", "x"
-            ),
-        ).select(
-            "vec_id",
-            (F.col("i0") + 1).alias("i"),
-            F.floor(F.col("x") * _LQ).cast("bigint").alias("q"),
-        )
-    )
-    qv = track_cache(
-        e.select("vec_id", _quant_arr(F.col("embedding")).alias("qarr"))
-    )
-    # adaptive k (VERDICT r9 #3); count off the cached frame unless the
-    # wrapper already knows the corpus size (ADVICE r10)
-    nlist = _nlist(qv.count() if n is None else n)
-    cents = qv.where(
-        (F.col("vec_id") >= ANN_N_QUERIES)
-        & (F.col("vec_id") < ANN_N_QUERIES + nlist)
-    ).select(
-        (F.col("vec_id") - ANN_N_QUERIES).alias("cid"),
-        F.col("qarr").alias("cq_arr"),
-    )
-    assigned = dists = None
-    for it in range(1, iters + 1):
-        if it > 1:
-            cents = _cents_to_arr(
-                assigned.join(ex, "vec_id")
-                .groupBy("cid", "i")
-                .agg(F.expr("sum(q) div count(*)").alias("cq")),
-                ["cid"],
-            ).localCheckpoint(eager=True)
-        dists = qv.crossJoin(F.broadcast(cents)).select(
-            "vec_id",
+            *by,
             "cid",
-            pair_sqdist_q_pd(F.col("qarr"), F.col("cq_arr")).alias("dist"),
+            pair_sqdist_q_pd(F.col("sub_q"), F.col("cq_arr")).alias("dist"),
         )
-        w = Window.partitionBy("vec_id").orderBy(
-            F.asc("dist"), F.asc("cid")
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+    )
+
+
+def _md5_sample(e: DataFrame, salt: str, cap: int) -> DataFrame:
+    """(vec_id, rk): the `cap` vectors with the smallest
+    md5('<salt>|'||vec_id), ranked in that order (rk 1..cap) — a
+    deterministic, engine/run-stable bottom-k training sample.
+    orderBy+limit is a distributed TakeOrdered — never a full sort —
+    and the row_number window runs over the already-capped frame."""
+    h = F.md5(F.format_string(f"{salt}|%d", F.col("vec_id")))
+    capped = (
+        e.select("vec_id", h.alias("h")).orderBy("h", "vec_id").limit(cap)
+    )
+    w = Window.orderBy("h", "vec_id")
+    return capped.withColumn("rk", F.row_number().over(w)).select(
+        "vec_id", "rk"
+    )
+
+
+def _lloyd(
+    pts: DataFrame,
+    k: int,
+    iters: int,
+    by: tuple = (),
+    samp: DataFrame | None = None,
+):
+    """Fixed-point Lloyd k-means over the points (vec_id, *by, sub_q):
+    `iters` rounds, each an assignment (dist ASC, cid ASC) followed —
+    except in the last — by a recenter to each cell's componentwise
+    truncating integer mean (SQL `div`); a memberless cell DROPS, as a
+    groupBy recenter emits only occupied cells. Returns (assigned,
+    codebook): the last round's _sq_rank assignment of every point and
+    the (*by, cid, cq_arr) codebook it used. by = ("s",) trains every
+    PQ subspace at once.
+
+    samp=None, distributed (kmeans_lloyd, pq_encode_lloyd): seeds are
+    the first k candidates (cid = vec_id - ANN_N_QUERIES); each round
+    is one corpus pass with the codebook broadcast, shuffling only the
+    argmin window and the recenter rollup, and a localCheckpoint per
+    assignment and per recentered codebook cuts lineage.
+
+    samp = an _md5_sample (vec_id, rk) frame, sampled (the FAISS
+    train() convention, VERDICT r12 #3): seeds are the first k sample
+    vectors (cid = rk - 1); the first iters - 1 rounds run DRIVER-SIDE
+    in numpy int64 over ONE cap-bounded collect, so training cost never
+    scales with the corpus, and only the last assignment is a corpus
+    pass. The argmin is over |c|^2 - 2 x.c: the row-constant |x|^2
+    cannot move an integer argmin or its ties, and q <= ~2e6 with
+    d <= 64 keeps every term far below 2^63. numpy's first-min over
+    sorted cids is the cid ASC tie rule, so both forms give identical
+    codebooks and assignments on the same points and seeds
+    (tests/test_ann.py pins this)."""
+    if samp is None:
+        cents = _seed_cells(pts, k).select(
+            *by,
+            (F.col("vec_id") - ANN_N_QUERIES).alias("cid"),
+            F.col("sub_q").alias("cq_arr"),
         )
-        assigned = (
-            dists.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .select("vec_id", "cid", "dist")
-            .localCheckpoint(eager=True)
-        )
-    return ex, assigned, cents, dists
+        for it in range(iters):
+            if it:
+                cents = (
+                    assigned.join(pts, ["vec_id", *by])
+                    .select(*by, "cid", F.posexplode("sub_q").alias("j", "q"))
+                    .groupBy(*by, "cid", "j")
+                    .agg(F.expr("sum(q) div count(*)").alias("cq"))
+                    .groupBy(*by, "cid")
+                    .agg(
+                        F.transform(
+                            F.array_sort(F.collect_list(F.struct("j", "cq"))),
+                            lambda c: c["cq"],
+                        ).alias("cq_arr")
+                    )
+                    .localCheckpoint(eager=True)
+                )
+            assigned = _sq_rank(pts, cents, 1, by).localCheckpoint(eager=True)
+        return assigned, cents
+    rows = (
+        pts.join(F.broadcast(samp), "vec_id")
+        .select(*by, "rk", "sub_q")
+        .collect()
+    )  # bounded: <= cap rows per subspace — driver-side by design
+    groups: dict[tuple, list] = {}
+    for r in rows:
+        groups.setdefault(tuple(r[: len(by)]), []).append((r.rk, r.sub_q))
+    cb = []
+    for g, grp in sorted(groups.items()):
+        grp.sort()
+        x = np.array([q for _, q in grp], dtype=np.int64)
+        cents = {rk - 1: x[i] for i, (rk, _) in enumerate(grp) if rk <= k}
+        for _ in range(iters - 1):
+            cids = sorted(cents)
+            cm = np.stack([cents[cid] for cid in cids])
+            amin = ((cm * cm).sum(axis=1) - 2 * (x @ cm.T)).argmin(axis=1)
+            cents = {}
+            for i, cid in enumerate(cids):
+                if len(members := x[amin == i]):
+                    tot = members.sum(axis=0)
+                    cents[cid] = np.sign(tot) * (np.abs(tot) // len(members))
+        cb += [(*g, c, [int(v) for v in cents[c]]) for c in sorted(cents)]
+    codebook = pts.sparkSession.createDataFrame(
+        cb, "".join(f"{b} int, " for b in by) + "cid int, cq_arr array<bigint>"
+    )
+    return _sq_rank(pts, codebook, 1, by), codebook
 
 
 @query("kmeans_lloyd", oracle=_lloyd_oracle())
@@ -1119,19 +1165,15 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     idiom applied to clustering). Seeds are the IVF data-vector
     centroids, so the whole trajectory is deterministic.
 
-    Scale (the distributed Lloyd shape): centroids are k x d rows
-    BROADCAST into the assignment join; per-round shuffles are the
-    (vec, cid) distance rollup and the (cid, i) recenter rollup — both
-    map-side combinable; the corpus is never shuffled on a data key.
-    One localCheckpoint per round cuts lineage exactly like
-    dedup_clusters' loop. Quantization is the determinism price: at
+    Scale: see _lloyd's distributed form — the k-row codebook is
+    BROADCAST into each round's assignment; the corpus is never
+    shuffled on a data key. Quantization is the determinism price: at
     1e-6 resolution the assignment differs from float Lloyd only for
     points near-equidistant at that scale — and in exchange retries,
     partitionings, and engines can never disagree."""
     e = load_table(spark, sf_dir, "embeddings")
-    _, assigned, _, _ = _lloyd_train(
-        e, LLOYD_ITERS, n=_corpus_n(spark, sf_dir)
-    )
+    nlist = _nlist(_corpus_n(spark, sf_dir))
+    assigned, _ = _lloyd(track_cache(_quant_vecs(e)), nlist, LLOYD_ITERS)
     return assigned.select(
         "vec_id",
         F.col("cid").cast("int").alias("cell"),
@@ -1159,110 +1201,16 @@ CELLS_ITERS = 4
 # vectors in that same md5 order, CELLS_ITERS fixed-point
 # assign+recenter rounds run DRIVER-SIDE in numpy int64 over the
 # cap-bounded sample (bit-identical to the distributed rounds — see
-# _pq_lloyd_sampled for the argmin/tdiv/drop-empty contract), and the
+# _lloyd for the argmin/tdiv/drop-empty contract), and the
 # ONE remaining corpus-scale pass is the final broadcast-codebook
 # assignment. The oracle replays sample, training, and assignment
 # unchanged, so both queries stay hash-exact.
 IVF_TRAIN_CAP = 4096
 
 
-def _ivf_train_sample(e: DataFrame) -> DataFrame:
-    """(vec_id, rk): the IVF_TRAIN_CAP corpus vectors with the smallest
-    md5('ivftrain|'||vec_id), ranked in that order (rk 1..cap; the
-    first nlist are the codebook seeds). orderBy+limit is a distributed
-    TakeOrdered; the row_number window runs over the already-capped
-    frame."""
-    h = F.md5(F.format_string("ivftrain|%d", F.col("vec_id")))
-    capped = (
-        e.select("vec_id", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(IVF_TRAIN_CAP)
-    )
-    w = Window.orderBy("h", "vec_id")
-    return capped.withColumn("rk", F.row_number().over(w)).select(
-        "vec_id", "rk"
-    )
-
-
-def _lloyd_train_sampled(e: DataFrame, iters: int, n: int | None = None):
-    """_lloyd_train's production form: driver-side numpy training over
-    the md5 bottom-IVF_TRAIN_CAP sample, one corpus-scale broadcast
-    assignment pass. Returns (qv, assigned, cents, dists) with the
-    same shapes _lloyd_train returns (ex omitted — recentering never
-    touches the corpus here).
-
-    Bit-exactness contract vs the oracle's unrolled CTEs (the
-    _pq_lloyd_sampled rules): argmin on int64 squared distance with
-    numpy's first-min = smallest cid among ties (ORDER BY dist ASC,
-    cid ASC); recenter = sign * (abs // count) truncating division
-    (SQL `div`); memberless cells DROP exactly as a groupBy recenter
-    emits only occupied cells. Distances use the matmul identity
-    |x-c|^2 = |x|^2 + |c|^2 - 2 x.c in int64 (q <= 1e6, d = 64 keeps
-    every term under ~2.6e14 — no overflow).
-
-    Scale: training work is O(IVF_TRAIN_CAP x nlist x d) driver ints
-    per round — bounded by the cap, not the corpus (the cap also
-    bounds a sane nlist: FAISS wants >= ~39 training points per cell,
-    so a cap-trained quantizer never has a corpus-scale k). The
-    corpus-scale work is ONE broadcast-codebook crossJoin with the
-    Arrow int64 kernel + the per-vector argmin window — knn_ivf's
-    exact assignment shape, run once instead of CELLS_ITERS + 1
-    times."""
-    import numpy as np
-
-    spark = e.sparkSession
-    qv = track_cache(
-        e.select("vec_id", _quant_arr(F.col("embedding")).alias("qarr"))
-    )
-    nlist = _nlist(qv.count() if n is None else n)
-    samp = _ivf_train_sample(e)
-    srows = (
-        qv.join(F.broadcast(samp), "vec_id").select("rk", "qarr").collect()
-    )  # bounded: <= IVF_TRAIN_CAP rows — driver-side by design
-    rows = sorted((r.rk, r.qarr) for r in srows)
-    x = np.array([q for _, q in rows], dtype=np.int64)
-    cents = {rk - 1: x[i] for i, (rk, _) in enumerate(rows) if rk <= nlist}
-
-    def tdiv(a, b):
-        return np.sign(a) * (np.abs(a) // b)
-
-    xx = (x * x).sum(axis=1)
-    for _ in range(iters):
-        cids = sorted(cents)
-        cmat = np.stack([cents[c] for c in cids])
-        d2 = (
-            xx[:, None]
-            + (cmat * cmat).sum(axis=1)[None, :]
-            - 2 * (x @ cmat.T)
-        )
-        amin = d2.argmin(axis=1)
-        nxt = {}
-        for k, cid in enumerate(cids):
-            members = x[amin == k]
-            if len(members):
-                nxt[cid] = tdiv(members.sum(axis=0), len(members))
-        cents = nxt
-    cb = spark.createDataFrame(
-        [(int(c), [int(v) for v in cents[c]]) for c in sorted(cents)],
-        "cid int, cq_arr array<bigint>",
-    )
-    dists = qv.crossJoin(F.broadcast(cb)).select(
-        "vec_id",
-        "cid",
-        pair_sqdist_q_pd(F.col("qarr"), F.col("cq_arr")).alias("dist"),
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.asc("dist"), F.asc("cid"))
-    assigned = (
-        dists.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid", "dist")
-    )
-    return qv, assigned, cb, dists
-
-
 def _ivf_sampled_ctes(iters: int) -> str:
-    """Oracle CTE chain mirroring _ivf_train_sample +
-    _lloyd_train_sampled: quantized explode `ex`, md5 bottom-k sample
+    """Oracle CTE chain mirroring _lloyd's sampled form as
+    kmeans_cells runs it: quantized explode `ex`, md5 bottom-k sample
     `samp`, sample slice `sx`, seeds `ic0` (first nlist sample vectors,
     cid = rk - 1), `iters` unrolled assign/recenter rounds over the
     sample, then the full-corpus final assignment — fd = the complete
@@ -1357,13 +1305,16 @@ def kmeans_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     as unrolled CTEs, so this stays hash-exact. The pytest additionally
     pins that the trained cells beat the raw seed cells on inertia.
 
-    Scale: see _lloyd_train_sampled — training cost is bounded by the
+    Scale: see _lloyd's sampled form — training cost is bounded by the
     cap, never the corpus; the one corpus pass is the knn_ivf
     assignment shape (broadcast k-row codebook, Arrow int64 kernel,
     map-side-combinable argmin)."""
     e = load_table(spark, sf_dir, "embeddings")
-    _, assigned, _, _ = _lloyd_train_sampled(
-        e, CELLS_ITERS, n=_corpus_n(spark, sf_dir)
+    assigned, _ = _lloyd(
+        track_cache(_quant_vecs(e)),
+        _nlist(_corpus_n(spark, sf_dir)),
+        CELLS_ITERS + 1,
+        samp=_md5_sample(e, "ivftrain", IVF_TRAIN_CAP),
     )
     return assigned.select(
         "vec_id", F.col("cid").cast("int").alias("cell")
@@ -1396,105 +1347,8 @@ PQ_SUB = EMB_DIM // PQ_M  # dims per subspace (64 -> 4 x 16)
 PQ_TRAIN_CAP = 4096  # codebook-training sample size (FAISS convention)
 
 
-def _pq_sample(e: DataFrame) -> DataFrame:
-    """(vec_id, rk): the PQ_TRAIN_CAP corpus vectors with the smallest
-    md5('pqtrain|'||vec_id), ranked in that order (rk 1..cap; the first
-    PQ_K are the codebook seeds). orderBy+limit is a distributed
-    TakeOrdered — never a full sort — and the row_number window runs
-    over the already-capped frame (bounded by the cap, not the
-    corpus)."""
-    h = F.md5(F.format_string("pqtrain|%d", F.col("vec_id")))
-    capped = (
-        e.select("vec_id", h.alias("h"))
-        .orderBy("h", "vec_id")
-        .limit(PQ_TRAIN_CAP)
-    )
-    w = Window.orderBy("h", "vec_id")
-    return capped.withColumn("rk", F.row_number().over(w)).select(
-        "vec_id", "rk"
-    )
-
-
-def _pq_lloyd_sampled(sq: DataFrame, samp: DataFrame):
-    """Fixed-point PQ codebook train on the SAMPLE slice of the
-    subspace-array frame `sq` ((vec_id, s, sub_q) for all PQ_M
-    subspaces — _pq_subspaces), then a full-corpus encode: returns
-    (encoded, codebook) where encoded = (vec_id, s, cid, dist) every
-    vector's nearest trained codeword per subspace and codebook =
-    (s, cid, cq_arr) after LLOYD_ITERS full assign+recenter rounds.
-
-    Scale: the training input is cap-BOUNDED by construction
-    (PQ_TRAIN_CAP x PQ_M rows of PQ_SUB ints, ~1 MB at the FAISS-
-    convention cap), so since r12 the Lloyd rounds run DRIVER-SIDE in
-    numpy int64 (the gram_power_topvec / PCA-moments control-flow
-    class) — bit-identical to the old distributed rounds: argmin on
-    int64 squared distance with numpy's first-min = the smallest cid
-    among ties (the ORDER BY dist ASC, cid ASC contract), recenter =
-    sign * (abs // count) truncating division (`div` semantics), and
-    memberless codewords DROP from the codebook exactly as the
-    groupBy-recenter emitted only occupied cells. The distributed
-    form spent ~2 localCheckpoint barriers + per-round shuffles on a
-    4096-row problem. The one corpus-scale pass is the final encode —
-    a broadcast-codebook equi-join on s with the Arrow int64 distance
-    kernel per pair (the _pq_lloyd shape), never a component fan-out;
-    the oracle replays training + encode unchanged, so the sweeps
-    pin the replay bit for bit."""
-    import numpy as np
-
-    spark = sq.sparkSession
-    srows = (
-        sq.join(F.broadcast(samp), "vec_id")
-        .select("s", "rk", "sub_q")
-        .collect()
-    )  # bounded: <= PQ_TRAIN_CAP * PQ_M rows — driver-side by design
-
-    def tdiv(a, b):
-        return np.sign(a) * (np.abs(a) // b)
-
-    cb_rows = []
-    for s in sorted({r.s for r in srows}):
-        rows = sorted((r.rk, r.sub_q) for r in srows if r.s == s)
-        x = np.array([q for _, q in rows], dtype=np.int64)
-        cents = {
-            rk - 1: x[i] for i, (rk, _) in enumerate(rows) if rk <= PQ_K
-        }
-        for _ in range(LLOYD_ITERS):
-            cids = sorted(cents)
-            cmat = np.stack([cents[c] for c in cids])
-            d2 = ((x[:, None, :] - cmat[None, :, :]) ** 2).sum(axis=2)
-            amin = d2.argmin(axis=1)
-            nxt = {}
-            for k, cid in enumerate(cids):
-                members = x[amin == k]
-                if len(members):
-                    nxt[cid] = tdiv(members.sum(axis=0), len(members))
-            cents = nxt
-        cb_rows += [
-            (int(s), int(cid), [int(v) for v in cents[cid]])
-            for cid in sorted(cents)
-        ]
-    codebook = spark.createDataFrame(
-        cb_rows, "s int, cid int, cq_arr array<bigint>"
-    )
-    ed = sq.join(F.broadcast(codebook), "s").select(
-        "vec_id",
-        "s",
-        "cid",
-        pair_sqdist_q_pd(F.col("sub_q"), F.col("cq_arr")).alias("dist"),
-    )
-    w_enc = Window.partitionBy("vec_id", "s").orderBy(
-        F.asc("dist"), F.asc("cid")
-    )
-    encoded = (
-        ed.withColumn("rk", F.row_number().over(w_enc))
-        .where(F.col("rk") == 1)
-        .select("vec_id", "s", "cid", "dist")
-    )
-    return encoded, codebook
-
-
 def _pq_sampled_ctes(exname: str) -> str:
-    """Oracle CTE chain mirroring _pq_sample + _pq_lloyd_sampled over
+    """Oracle CTE chain mirroring _lloyd's sampled PQ form over
     the subspace-explode CTE named `exname`: samp (md5 bottom-k with
     rank), sc0 (md5-rank seeds), LLOYD_ITERS full assign+recenter
     rounds on the sample, scb = trained codebook, enc = full-corpus
@@ -1599,8 +1453,8 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle as PQ_M small ints (16x compression of a 64-dim vector)."""
     e = load_table(spark, sf_dir, "embeddings")
     sq = track_cache(_pq_subspaces(e))
-    samp = track_cache(_pq_sample(e))
-    encoded, _ = _pq_lloyd_sampled(sq, samp)
+    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
+    encoded, _ = _lloyd(sq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
     return encoded.groupBy("vec_id").agg(
         *[
             F.max(F.when(F.col("s") == m, F.col("cid")))
@@ -1749,70 +1603,6 @@ def _pq_subspaces(e: DataFrame, unit: bool = False) -> DataFrame:
     )
 
 
-def _pq_long(sq: DataFrame) -> DataFrame:
-    """Subspace-array form -> long (vec_id, s, j, q) component form
-    (map-side posexplode; recenter rollups consume this)."""
-    return sq.select(
-        "vec_id",
-        "s",
-        F.posexplode(F.col("sub_q")).alias("j0", "q"),
-    ).select("vec_id", "s", (F.col("j0") + 1).alias("j"), "q")
-
-
-def _pq_lloyd(e: DataFrame):
-    """Distributed fixed-point PQ train shared by pq_encode_lloyd and
-    knn_pq_adc: returns (assigned, codebook) after LLOYD_ITERS rounds —
-    assigned = (vec_id, s, cid, dist) final subspace assignments,
-    codebook = (s, cid, cq_arr) the centroids that produced them.
-
-    Scale: all PQ_M subspaces train in ONE job per round (subspace id
-    s is just another key); the codebook is PQ_M x PQ_K rows BROADCAST
-    into an (n x PQ_M) x PQ_K equi-join on s whose distance column is
-    one Arrow int64 kernel call per pair (pair_sqdist_q_pd — the
-    _lloyd_train shape, replacing the component-join fan-out); the
-    recenter rollup consumes the map-side component view. The raw
-    embedding column is never shuffled. localCheckpoint per round cuts
-    lineage as in kmeans_lloyd."""
-    sq = track_cache(_pq_subspaces(e))
-    ex = _pq_long(sq)  # map-side component view for recentering
-    cents = sq.where(
-        (F.col("vec_id") >= ANN_N_QUERIES)
-        & (F.col("vec_id") < ANN_N_QUERIES + PQ_K)
-    ).select(
-        "s",
-        (F.col("vec_id") - ANN_N_QUERIES).alias("cid"),
-        F.col("sub_q").alias("cq_arr"),
-    )
-    assigned = None
-    for it in range(1, LLOYD_ITERS + 1):
-        dists = sq.join(F.broadcast(cents), "s").select(
-            "vec_id",
-            "s",
-            "cid",
-            pair_sqdist_q_pd(F.col("sub_q"), F.col("cq_arr")).alias(
-                "dist"
-            ),
-        )
-        w = Window.partitionBy("vec_id", "s").orderBy(
-            F.asc("dist"), F.asc("cid")
-        )
-        assigned = (
-            dists.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .select("vec_id", "s", "cid", "dist")
-            .localCheckpoint(eager=True)
-        )
-        if it < LLOYD_ITERS:
-            cents = _cents_to_arr(
-                assigned.join(ex, ["vec_id", "s"])
-                .groupBy("s", "cid", "j")
-                .agg(F.expr("sum(q) div count(*)").alias("cq")),
-                ["s", "cid"],
-            )
-    codebook = cents.localCheckpoint(eager=True)
-    return assigned, codebook
-
-
 @query("pq_encode_lloyd", oracle=_pq_encode_lloyd_oracle())
 def pq_encode_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization encode with ORACLE-EXACT training: the
@@ -1823,12 +1613,13 @@ def pq_encode_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-match bit for bit — the FAISS train()->encode() contract with
     a provable answer instead of a seeded-run determinism pytest.
 
-    Scale: see _pq_lloyd — one job per Lloyd round for all subspaces,
+    Scale: see _lloyd — one job per Lloyd round for all subspaces,
     broadcast codebooks, bigint-only shuffles; the encode output
     shuffles PQ_M small ints per vector (16x compression of a 64-dim
     float vector into 4 codes)."""
     e = load_table(spark, sf_dir, "embeddings")
-    assigned, _ = _pq_lloyd(e)
+    sq = track_cache(_pq_subspaces(e))
+    assigned, _ = _lloyd(sq, PQ_K, LLOYD_ITERS, ("s",))
     return assigned.groupBy("vec_id").agg(
         *[
             F.max(F.when(F.col("s") == m, F.col("cid")))
@@ -1855,7 +1646,8 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring join + rollup shuffles only code-width data. The final
     top-k window partitions by query_id."""
     e = load_table(spark, sf_dir, "embeddings")
-    assigned, codebook = _pq_lloyd(e)
+    sq = track_cache(_pq_subspaces(e))
+    assigned, codebook = _lloyd(sq, PQ_K, LLOYD_ITERS, ("s",))
     qex = (
         _pq_subspaces(e.where(F.col("vec_id") < ANN_N_QUERIES))
         .withColumnRenamed("vec_id", "query_id")
@@ -1882,36 +1674,6 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("rank") <= ANN_K)
         .select("query_id", "neighbor_id", "adc_q", "rank")
     )
-
-
-def _trained_cells(e: DataFrame, n: int | None = None):
-    """Trained-quantizer analog of _ivf_cells: train the fixed-point
-    Lloyd coarse quantizer (kmeans_cells' exact configuration —
-    CELLS_ITERS sample-capped driver-side rounds, VERDICT r12 #3),
-    then derive (vecs, probes, assigned) — each candidate's nearest
-    trained cell and each query's IVF_NPROBE nearest cells by exact
-    integer squared euclidean (the metric Lloyd assigns by), ties
-    broken on cid. Every distance is a bigint, so probes and
-    assignments replay bit-identically in the oracle."""
-    vecs = track_cache(
-        e.select(
-            "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-        )
-    )
-    _, assigned_all, _, dists = _lloyd_train_sampled(e, CELLS_ITERS, n=n)
-    assigned = assigned_all.where(
-        F.col("vec_id") >= ANN_N_QUERIES
-    ).select(F.col("vec_id").alias("neighbor_id"), "cid")
-    w_probe = Window.partitionBy("vec_id").orderBy(
-        F.asc("dist"), F.asc("cid")
-    )
-    probes = (
-        dists.where(F.col("vec_id") < ANN_N_QUERIES)
-        .withColumn("rk", F.row_number().over(w_probe))
-        .where(F.col("rk") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
-    return vecs, probes, assigned
 
 
 KNN_IVF_TRAINED_ORACLE = (
@@ -1989,7 +1751,9 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     a probe is a partition-pruned scan.
     """
     e = load_table(spark, sf_dir, "embeddings")
-    vecs, probes, assigned = _trained_cells(e, n=_corpus_n(spark, sf_dir))
+    vecs, probes, assigned, _ = _coarse_cells(
+        e, n=_corpus_n(spark, sf_dir), trained=True
+    )
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id"
     )
@@ -2193,14 +1957,14 @@ def ivfpq_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     """Core of knn_ivfpq over any (vec_id, embedding) frame (the query
     wrapper binds it to the fixture table; tests feed synthetic corpora
     with planted exact duplicates). `n` = known corpus count
-    (ADVICE r10), else counted inside _ivf_cells off its cache."""
+    (ADVICE r10), else counted inside _coarse_cells off its cache."""
     # Unit-normalized quantization is oracle-replayable without a
     # float UDF: norm is the shared fixed-point fold and
     # q = floor(x / norm * 1e6) is two exactly-rounded IEEE ops.
     usq = track_cache(_pq_subspaces(e, unit=True))
-    samp = track_cache(_pq_sample(e))
-    encoded, codebook = _pq_lloyd_sampled(usq, samp)
-    _, probes, assigned = _ivf_cells(e, n=n)
+    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
+    encoded, codebook = _lloyd(usq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
+    _, probes, assigned, _ = _coarse_cells(e, n=n)
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id"
     )
@@ -2580,23 +2344,6 @@ DELTA_MOD = 10
 DELTA_RES = 7
 
 
-def _assign_frozen(part: DataFrame, cents: DataFrame) -> DataFrame:
-    """Rank a (vec_id, embedding, norm) slice against a FROZEN
-    broadcast codebook by fixed-point cosine: the one kernel all three
-    knn_ivf_append passes (stored base, appended delta, query probes)
-    share — and the reason an append is mergeable: assignment depends
-    only on (row, codebook), never on other rows."""
-    cscore = (
-        pair_dot_pd(F.col("embedding"), F.col("cent_emb"))
-        / (F.col("norm") * F.col("cent_norm"))
-    ).alias("cscore")
-    scores = part.crossJoin(F.broadcast(cents)).select(
-        "vec_id", "cid", cscore
-    )
-    w = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cid"))
-    return scores.withColumn("rk", F.row_number().over(w))
-
-
 def _append_parts(spark: SparkSession, sf_dir: str):
     """Build the frozen-index pieces knn_ivf_append searches over:
     (vecs, base, delta, cents, merged_assignment, probes). Split out so
@@ -2619,32 +2366,22 @@ def _append_parts(spark: SparkSession, sf_dir: str):
         base.where(F.col("vec_id") < ANN_N_QUERIES + span)
         .withColumn("rk", F.row_number().over(w_seed))
         .where(F.col("rk") <= nlist)
-        .select(
-            F.col("vec_id").alias("cid"),
-            F.col("embedding").alias("cent_emb"),
-            F.col("norm").alias("cent_norm"),
-        )
+        .selectExpr(*_COS_CB)
     )
     cents = cents.localCheckpoint(eager=True)  # freeze the codebook
 
     # Stored base lists, appended delta lists, query probes — three
     # independent passes against the same broadcast frozen codebook.
-    assigned_base = (
-        _assign_frozen(base, cents)
-        .where(F.col("rk") == 1)
-        .select(F.col("vec_id").alias("neighbor_id"), "cid")
+    assigned_base = _cos_rank(base, cents, 1).select(
+        F.col("vec_id").alias("neighbor_id"), "cid"
     )
-    assigned_delta = (
-        _assign_frozen(delta, cents)
-        .where(F.col("rk") == 1)
-        .select(F.col("vec_id").alias("neighbor_id"), "cid")
+    assigned_delta = _cos_rank(delta, cents, 1).select(
+        F.col("vec_id").alias("neighbor_id"), "cid"
     )
     merged = assigned_base.unionByName(assigned_delta)
-    probes = (
-        _assign_frozen(vecs.where(F.col("vec_id") < ANN_N_QUERIES), cents)
-        .where(F.col("rk") <= IVF_NPROBE)
-        .select(F.col("vec_id").alias("query_id"), "cid")
-    )
+    probes = _cos_rank(
+        vecs.where(F.col("vec_id") < ANN_N_QUERIES), cents, IVF_NPROBE
+    ).select(F.col("vec_id").alias("query_id"), "cid")
     return vecs, base, delta, cents, merged, probes
 
 KNN_IVF_APPEND_ORACLE = f"""
@@ -2756,7 +2493,7 @@ def knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment is the stored partitionBy(cid) layout (write_ivf_store).
     The seed window sorts a BOUNDED O(nlist) id-slice, not the corpus;
     n_base is one column-pruned count off the cached vecs frame
-    (control flow, the _ivf_cells convention). tests/test_ann.py pins
+    (control flow, the _coarse_cells convention). tests/test_ann.py pins
     merged == single-pass batch assignment over base ∪ delta against
     the same frozen codebook (an append loses nothing vs a rebuild),
     a recall floor vs brute force, and that delta vectors are
@@ -3074,8 +2811,7 @@ def write_ivf_base_store(spark: SparkSession, sf_dir: str, path: str) -> None:
         spark, sf_dir
     )
     assigned_base = (
-        _assign_frozen(base, cents)
-        .where(F.col("rk") == 1)
+        _cos_rank(base, cents, 1)
         .select(F.col("vec_id").alias("bv"), "cid")
     )
     (
@@ -3106,8 +2842,7 @@ def append_ivf_store(spark: SparkSession, sf_dir: str, path: str) -> None:
         spark, sf_dir
     )
     assigned_delta = (
-        _assign_frozen(delta, cents)
-        .where(F.col("rk") == 1)
+        _cos_rank(delta, cents, 1)
         .select(F.col("vec_id").alias("dv"), "cid")
     )
     # Idempotence guard: a RETRIED fold (driver restart between the
@@ -3633,37 +3368,15 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nlist = _nlist(_corpus_n(spark, sf_dir))
-    cents = vecs.where(
-        (F.col("vec_id") >= ANN_N_QUERIES)
-        & (F.col("vec_id") < ANN_N_QUERIES + nlist)
-    ).select(
-        F.col("vec_id").alias("cid"),
-        F.col("embedding").alias("cent_emb"),
-        F.col("norm").alias("cent_norm"),
-    )
-    cscore = (
-        pair_dot_pd(F.col("embedding"), F.col("cent_emb"))
-        / (F.col("norm") * F.col("cent_norm"))
-    ).alias("cscore")
-    w_assign = Window.partitionBy("vec_id").orderBy(
-        F.desc("cscore"), F.asc("cid")
-    )
-    ranked = (
-        vecs.crossJoin(F.broadcast(cents))
-        .select("vec_id", "cid", cscore)
-        .withColumn("rk", F.row_number().over(w_assign))
-    )
-    # eager bound: n x nlist(=ceil sqrt n) scored rows — the one
-    # SUPERLINEAR eager cache (n^1.5); MEMORY_AND_DISK spills to disk
-    # past memory, and at deployment scale the sweep should rank from
-    # the stored cell layout instead of re-scoring (write_ivf_store).
-    ranked = track_cache(ranked, eager=True)
+    cents = _seed_cells(vecs, nlist).selectExpr(*_COS_CB)
+    # eager bound: n x IVF_NPROBE ranked rows, computed from n x nlist
+    # (=ceil sqrt n) scores — at deployment scale the sweep should rank
+    # from the stored cell layout instead of re-scoring (write_ivf_store).
+    ranked = track_cache(_cos_rank(vecs, cents, IVF_NPROBE), eager=True)
     assigned = ranked.where(
         (F.col("rk") == 1) & (F.col("vec_id") >= ANN_N_QUERIES)
     ).select(F.col("vec_id").alias("neighbor_id"), "cid")
-    probes = ranked.where(
-        (F.col("rk") <= IVF_NPROBE) & (F.col("vec_id") < ANN_N_QUERIES)
-    ).select(
+    probes = ranked.where(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("query_id"), "cid", F.col("rk").alias("prk")
     )
     cand = F.broadcast(probes).join(assigned, "cid").select(
@@ -3748,9 +3461,8 @@ def ivfpq_residual_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     only the PQ training/encode input (residuals, not raw unit
     vectors) and the ADC tables (per probed cell) differ."""
     usq = track_cache(_pq_subspaces(e, unit=True))
-    samp = track_cache(_pq_sample(e))
-    vecs, probes, assigned = _ivf_cells(e, n=n)
-    nlist = _nlist(vecs.count() if n is None else n)
+    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
+    _, probes, assigned, nlist = _coarse_cells(e, n=n)
     # Coarse-centroid sub-vectors: bounded nlist x PQ_M rows, broadcast
     # everywhere below (the codebook-closure shape). Derived from a
     # FILTERED scan, not the shared `usq` cache: this subtree runs as a
@@ -3758,13 +3470,7 @@ def ivfpq_residual_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     # it recomputed the full corpus projection (r16 probe — the
     # ivfpq_topk dt rationale); the vec_id range pushes down to
     # parquet and _pq_subspaces is per-row, so rows are bit-identical.
-    cent_sq = _pq_subspaces(
-        e.where(
-            (F.col("vec_id") >= ANN_N_QUERIES)
-            & (F.col("vec_id") < ANN_N_QUERIES + nlist)
-        ),
-        unit=True,
-    ).select(
+    cent_sq = _pq_subspaces(_seed_cells(e, nlist), unit=True).select(
         F.col("vec_id").alias("cid"),
         "s",
         F.col("sub_q").alias("cent_sub_q"),
@@ -3789,7 +3495,7 @@ def ivfpq_residual_topk(e: DataFrame, n: int | None = None) -> DataFrame:
             ).alias("sub_q"),
         )
     )
-    encoded, codebook = _pq_lloyd_sampled(rsq, samp)
+    encoded, codebook = _lloyd(rsq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
     cb = codebook.select("s", F.col("cid").alias("kcid"), "cq_arr")
     # Per-probed-cell query ADC tables: residual of the QUERY against
     # each probed cell's centroid, scored against every codeword —
@@ -3976,7 +3682,7 @@ def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 # FAISS parity notes: codes follow Codec8bit (encode = floor(255 *
 # clamp01(x_scaled)), decode = (code + 0.5) / 255), the train sample
 # is the engine-standard md5 bottom-k cap (the FAISS train()
-# convention _pq_sample encodes), and the decode stays scaled by
+# convention the pqtrain _md5_sample encodes), and the decode stays scaled by
 # 2*255 so the ADC never divides: with q the quantized unit component
 # (|q| <= ~1e6) and span = vmax - vmin, the scaled decode is
 # xhat2 = 510*vmin + (2*code + 1)*span and rank order under
@@ -4171,12 +3877,12 @@ def sq_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     """Core of knn_ivf_sq over any (vec_id, embedding) frame (the
     query wrapper binds it to the fixture table; tests feed synthetic
     corpora with planted exact duplicates). `n` = known corpus count,
-    else counted inside _ivf_cells off its cache."""
+    else counted inside _coarse_cells off its cache."""
     uq = track_cache(_unit_q(e))
-    vmins, vmaxs = _sq_train(uq, _pq_sample(e))
+    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
     vmin_c = F.array(*[F.lit(v) for v in vmins])
     vmax_c = F.array(*[F.lit(v) for v in vmaxs])
-    _, probes, assigned = _ivf_cells(e, n=n)
+    _, probes, assigned, _ = _coarse_cells(e, n=n)
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id"
     )
@@ -4317,7 +4023,7 @@ def knn_ivf_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def binary_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     """Core of knn_ivf_binary over any (vec_id, embedding) frame."""
     uq = track_cache(_unit_q(e))
-    _, probes, assigned = _ivf_cells(e, n=n)
+    _, probes, assigned, _ = _coarse_cells(e, n=n)
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id"
     )
@@ -4634,17 +4340,14 @@ def ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "neighbor_id"
         ),
         lambda: _append_parts(spark, sf_dir),
-        lambda: _lloyd_train_sampled(e, CELLS_ITERS, n=n),
+        lambda: _coarse_cells(e, n=n, trained=True),
     )
     truth = track_cache(built[0])
     b_top = built[1]
     a_top = built[2]
     _v, _b, _d, _c, merged, _p = built[3]
     b_assign = merged.select(F.col("neighbor_id").alias("vec_id"), "cid")
-    _, assigned_all, _, _ = built[4]
-    a_assign = assigned_all.where(
-        F.col("vec_id") >= ANN_N_QUERIES
-    ).select("vec_id", "cid")
+    a_assign = built[4][2].select(F.col("neighbor_id").alias("vec_id"), "cid")
     tc = truth.agg(F.count(F.lit(1)).cast("long").alias("n_true"))
 
     def phase_row(assign: DataFrame, topk: DataFrame, phase: str):
@@ -4744,7 +4447,7 @@ def delete_ivf_store(
     """Fold a batch of (vec_id, cid) deletions into the store's
     tombstone set. `drops` carries each dropped vector's cell (the
     frozen codebook makes that deterministic — callers use
-    _assign_frozen, never a store scan); the existing-tombstone guard
+    _cos_rank, never a store scan); the existing-tombstone guard
     read and the append are both pruned to the batch's cells, so a
     delete costs O(affected cells), not O(store)."""
     import os
@@ -4853,11 +4556,7 @@ def ivf_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    drops = (
-        _assign_frozen(drop_vecs, cents)
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
+    drops = _cos_rank(drop_vecs, cents, 1).select("vec_id", "cid")
     delete_ivf_store(spark, path, drops)
     store = spark.read.parquet(path).select("vec_id", "cid")
     tomb_path = os.path.join(path, "_tombstones")
@@ -5092,8 +4791,7 @@ def ivf_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
     drops = (
-        _assign_frozen(drop_vecs, cents)
-        .where(F.col("rk") == 1)
+        _cos_rank(drop_vecs, cents, 1)
         .select("vec_id", "cid")
         .localCheckpoint(eager=True)
     )
@@ -5238,11 +4936,7 @@ def knn_ivf_store_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    drops = (
-        _assign_frozen(drop_vecs, cents)
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
+    drops = _cos_rank(drop_vecs, cents, 1).select("vec_id", "cid")
     delete_ivf_store(spark, path, drops)
     probes = track_cache(probes)
     # Bounded control flow: <= n_queries x nprobe probed cells.
@@ -5522,7 +5216,7 @@ def ivf_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ivf_range(e: DataFrame, n: int | None = None) -> DataFrame:
     """Core of ivf_range_search over any (vec_id, embedding) frame
     (tests feed planted-neighbor corpora)."""
-    vecs, probes, assigned = _ivf_cells(e, n=n)
+    vecs, probes, assigned, _ = _coarse_cells(e, n=n)
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id"
     )
@@ -5631,7 +5325,7 @@ def sq_reconstruct_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     n = _corpus_n(spark, sf_dir)
     uq = track_cache(_unit_q(e))
-    vmins, vmaxs = _sq_train(uq, _pq_sample(e))
+    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
     vmin_c = F.array(*[F.lit(v) for v in vmins])
     vmax_c = F.array(*[F.lit(v) for v in vmaxs])
     two = F.lit(2 * SQ_CODE_MAX)
@@ -5645,7 +5339,7 @@ def sq_reconstruct_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             err_arr, F.lit(0).cast("long"), lambda acc, x: acc + x
         ).alias("err2"),
     )
-    _, _, assigned = _ivf_cells(e, n=n)
+    _, _, assigned, _ = _coarse_cells(e, n=n)
     return (
         verr.join(
             assigned.select(

@@ -337,23 +337,19 @@ def fold_ivf_batch(batch: DataFrame, store_path: str, cent_rows) -> None:
     dynamic-partition-append only the fresh rows. At-least-once
     delivery + this idempotent fold = exactly-once store contents: a
     replayed batch's rows are all "existing" and append nothing."""
-    from ..operators.ann import _assign_frozen
+    from ..operators.ann import _cos_rank
 
     if batch.isEmpty():
         return
     spark_b = batch.sparkSession
-    cents = F.broadcast(
-        spark_b.createDataFrame(
-            cent_rows,
-            "cid bigint, cent_emb array<float>, cent_norm double",
-        )
+    cents = spark_b.createDataFrame(
+        cent_rows, "cid bigint, cent_emb array<float>, cent_norm double"
     )
     b = batch.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
     assigned = (
-        _assign_frozen(b, cents)
-        .where(F.col("rk") == 1)
+        _cos_rank(b, cents, 1)
         .select(F.col("vec_id").alias("dv"), "cid")
         .localCheckpoint(eager=True)
     )
@@ -549,9 +545,7 @@ def fold_sem_decon_batch(
     driver-pinned codebook rows, cosine vs the persisted eval side of
     the batch's cells only, anti-join against already-recorded pairs
     (pruned to the same cells), append only the fresh hits."""
-    from pyspark.sql.window import Window
-
-    from ..operators.ann import DECON_SEM_TAU
+    from ..operators.ann import DECON_SEM_TAU, _cos_rank
 
     if batch.isEmpty():
         return
@@ -562,25 +556,11 @@ def fold_sem_decon_batch(
     tr = batch.where(b_tag < train_bound).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    cents = F.broadcast(
-        sb.createDataFrame(
-            cent_rows,
-            "cid bigint, cent_emb array<float>, cent_norm double",
-        )
-    )
-    cscore = (
-        pair_dot_pd(F.col("embedding"), F.col("cent_emb"))
-        / (F.col("norm") * F.col("cent_norm"))
-    ).alias("cscore")
-    scores = tr.crossJoin(cents).select(
-        "vec_id", "embedding", "norm", "cid", cscore
-    )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc("cscore"), F.asc("cid")
+    cents = sb.createDataFrame(
+        cent_rows, "cid bigint, cent_emb array<float>, cent_norm double"
     )
     assigned = (
-        scores.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
+        _cos_rank(tr, cents, 1, keep=("embedding", "norm"))
         .select(
             F.col("vec_id").alias("train_doc"),
             F.col("embedding").alias("a_emb"),
@@ -654,6 +634,7 @@ def stream_decontaminate_semantic(
     from ..operators.ann import (
         _corpus_n,
         _nlist,
+        _seed_cells,
         sem_assignment,
     )
     from ..operators.splits import SPLIT_BOUNDS
@@ -701,14 +682,12 @@ def stream_decontaminate_semantic(
     ncells = _nlist(_corpus_n(spark, sf_dir))
     cent_rows = [
         (int(r.vec_id), [float(x) for x in r.embedding], float(r.norm))
-        for r in e.select(
-            "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-        )
-        .where(
-            (F.col("vec_id") >= ANN_N_QUERIES)
-            & (F.col("vec_id") < ANN_N_QUERIES + ncells)
-        )
-        .collect()
+        for r in _seed_cells(
+            e.select(
+                "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
+            ),
+            ncells,
+        ).collect()
     ]
     # heavy-fold drain: batch-plan width, not state width (liveness.py)
     spark = stream_clone(spark, batch_fold_partitions(spark))
@@ -774,7 +753,7 @@ def serve_knn_batch(
     from ..operators.ann import (
         ANN_K,
         IVF_NPROBE,
-        _assign_frozen,
+        _cos_rank,
         _tombstones_present,
         probe_ivf_store_live,
     )
@@ -784,11 +763,8 @@ def serve_knn_batch(
     if batch.isEmpty():
         return
     spark_b = batch.sparkSession
-    cents = F.broadcast(
-        spark_b.createDataFrame(
-            cent_rows,
-            "cid bigint, cent_emb array<float>, cent_norm double",
-        )
+    cents = spark_b.createDataFrame(
+        cent_rows, "cid bigint, cent_emb array<float>, cent_norm double"
     )
     qb = batch.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
@@ -809,8 +785,7 @@ def serve_knn_batch(
     if qb.isEmpty():
         return
     probes = (
-        _assign_frozen(qb, cents)
-        .where(F.col("rk") <= IVF_NPROBE)
+        _cos_rank(qb, cents, IVF_NPROBE)
         .select(F.col("vec_id").alias("query_id"), "cid")
         .localCheckpoint(eager=True)
     )
@@ -879,7 +854,7 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import (
         ANN_N_QUERIES,
         _append_parts,
-        _assign_frozen,
+        _cos_rank,
         _ivf_store_ready,
         decontaminate_semantic,
         delete_ivf_store,
@@ -897,11 +872,7 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop_vecs = e.join(dropped, e.vec_id == dropped.doc_id).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    drops = (
-        _assign_frozen(drop_vecs, cents)
-        .where(F.col("rk") == 1)
-        .select("vec_id", "cid")
-    )
+    drops = _cos_rank(drop_vecs, cents, 1).select("vec_id", "cid")
     delete_ivf_store(spark, path, drops)
     cent_rows = [
         (int(r.cid), [float(x) for x in r.cent_emb], float(r.cent_norm))

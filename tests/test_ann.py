@@ -64,18 +64,18 @@ def test_ivf_probes_bound_work(spark):
     """Every reported neighbor must come from a probed cell — i.e. the
     candidate set really is restricted to nprobe inverted lists.
     Probed cells and per-vector assignments are recomputed through the
-    operator's own _ivf_cells helper, so the assertion checks the
+    operator's own _coarse_cells helper, so the assertion checks the
     actual cell membership, not just rank shape."""
     from cs686_big_data_p1_spark.operators.ann import (
         ANN_N_QUERIES,
         IVF_NPROBE,
-        _ivf_cells,
+        _coarse_cells,
     )
     from cs686_big_data_p1_spark import registry as reg
 
     reg.load_all()
     e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    _, probes, assigned = _ivf_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e)
     probed = {}
     for r in probes.collect():
         probed.setdefault(r.query_id, set()).add(r.cid)
@@ -211,7 +211,7 @@ def test_kmeans_cells_deterministic_and_better_than_seed(spark, registry):
     seed-vector assignment's."""
     import numpy as np
 
-    from cs686_big_data_p1_spark.operators.ann import _ivf_cells
+    from cs686_big_data_p1_spark.operators.ann import _coarse_cells
 
     q = registry.QUERIES["kmeans_cells"]
     a = {r.vec_id: r.cell for r in q(spark, SF_SMALL).collect()}
@@ -228,7 +228,7 @@ def test_kmeans_cells_deterministic_and_better_than_seed(spark, registry):
     }
     assert set(a) == set(emb)  # every vector got a cell
 
-    _, _, assigned = _ivf_cells(
+    _, _, assigned, _ = _coarse_cells(
         spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     )
     seed = {r.neighbor_id: r.cid for r in assigned.collect()}
@@ -253,7 +253,7 @@ def test_ivf_trained_recall_determinism_and_cell_bound(spark, registry):
     runs (seeded k-means||), (b) keep recall vs brute force above the
     same floor as the seeded-centroid variants, and (c) only report
     neighbors from probed cells — the nprobe/nlist work bound."""
-    from cs686_big_data_p1_spark.operators.ann import _trained_cells
+    from cs686_big_data_p1_spark.operators.ann import _coarse_cells
 
     t1 = _pairs(registry.QUERIES["knn_ivf_trained"](spark, SF_SMALL))
     t2 = _pairs(registry.QUERIES["knn_ivf_trained"](spark, SF_SMALL))
@@ -264,7 +264,7 @@ def test_ivf_trained_recall_determinism_and_cell_bound(spark, registry):
     assert recall >= 0.2, f"trained-IVF recall {recall} collapsed"
 
     e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    _, probes, assigned = _trained_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e, trained=True)
     probed: dict[int, set[int]] = {}
     for r in probes.collect():
         probed.setdefault(r.query_id, set()).add(r.cid)
@@ -278,7 +278,7 @@ def test_ivfpq_recall_determinism_and_cell_bound(spark, registry):
     across runs, (b) keep recall vs brute force above the suite's
     floor, and (c) only report neighbors from probed cells — PQ
     scoring prunes WITHIN the IVF candidate set, never adds to it."""
-    from cs686_big_data_p1_spark.operators.ann import _ivf_cells
+    from cs686_big_data_p1_spark.operators.ann import _coarse_cells
 
     p1 = _pairs(registry.QUERIES["knn_ivfpq"](spark, SF_SMALL))
     p2 = _pairs(registry.QUERIES["knn_ivfpq"](spark, SF_SMALL))
@@ -289,7 +289,7 @@ def test_ivfpq_recall_determinism_and_cell_bound(spark, registry):
     assert recall >= 0.2, f"IVFPQ recall {recall} collapsed"
 
     e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    _, probes, assigned = _ivf_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e)
     probed: dict[int, set[int]] = {}
     for r in probes.collect():
         probed.setdefault(r.query_id, set()).add(r.cid)
@@ -551,6 +551,83 @@ def test_pq_lloyd_matches_numpy_recurrence(spark, registry):
     assert got_topk == want_topk
 
 
+def test_lloyd_sampled_rounds_equal_distributed_rounds(spark):
+    """_lloyd's driver-side numpy rounds (sampled form) and its
+    distributed rounds must compute the same recurrence: fed the same
+    quantized points and the same seeds — a "sample" holding every
+    point, ranked so its first k are the distributed form's seed
+    vectors — both return identical codebooks and assignments. The
+    data plant an exact distance tie (the point (5, 0) is 25 from all
+    three seeds and must go to cid 0), a memberless cell (seed cid 2
+    duplicates seed cid 0, loses every tie, and must drop from the
+    codebook), and a negative member sum that truncating division
+    rounds toward zero (floor would give -1). Checked unkeyed (the IVF
+    quantizer) and keyed on the PQ subspace s."""
+    from cs686_big_data_p1_spark.operators.ann import ANN_N_QUERIES as NQ
+    from cs686_big_data_p1_spark.operators.ann import _lloyd
+
+    s0 = {
+        0: [3, 3],  # a query row: trained on like any other point
+        NQ: [0, 0],
+        NQ + 1: [10, 0],
+        NQ + 2: [0, 0],
+        NQ + 3: [5, 0],
+        NQ + 4: [11, 2],
+        NQ + 5: [-1, 1],
+        NQ + 6: [9, -3],
+    }
+    s1 = {
+        0: [1, 1],
+        NQ: [0, 5],
+        NQ + 1: [4, 4],
+        NQ + 2: [8, 0],
+        NQ + 3: [2, 2],
+        NQ + 4: [7, 1],
+        NQ + 5: [4, 5],
+        NQ + 6: [0, -7],
+    }
+    # sample rank: the candidates in id order, then the query row
+    samp = spark.createDataFrame(
+        [(v, v - NQ + 1 if v >= NQ else 100 + v) for v in s0],
+        "vec_id long, rk int",
+    )
+
+    def both_forms(pts, by):
+        out = []
+        for sample in (None, samp):
+            assigned, cb = _lloyd(pts, 3, 3, by, sample)
+            out.append((
+                sorted(
+                    (r.vec_id, *[r[b] for b in by], int(r.cid), r.dist)
+                    for r in assigned.collect()
+                ),
+                sorted(
+                    (*[r[b] for b in by], int(r.cid), tuple(r.cq_arr))
+                    for r in cb.collect()
+                ),
+            ))
+        assert out[0] == out[1]
+        return out[0]
+
+    flat = spark.createDataFrame(
+        list(s0.items()), "vec_id long, sub_q array<bigint>"
+    )
+    assigned, codebook = both_forms(flat, ())
+    assert codebook == [(0, (1, 0)), (1, (10, 0))]
+    assert (NQ + 3, 0, 16) in assigned
+
+    keyed = spark.createDataFrame(
+        [(v, s, q) for s, pts in enumerate((s0, s1)) for v, q in pts.items()],
+        "vec_id long, s int, sub_q array<bigint>",
+    )
+    assigned_k, codebook_k = both_forms(keyed, ("s",))
+    assert [c[1:] for c in codebook_k if c[0] == 0] == codebook
+    assert [
+        (v, c, d) for v, s, c, d in assigned_k if s == 0
+    ] == assigned
+    assert len([c for c in codebook_k if c[0] == 1]) == 3
+
+
 def test_ann_recall_all_covers_every_method_with_floor(spark, registry):
     """The five-method recall report must carry one row per index
     (lsh, seeded ivf, Lloyd-trained ivf, ivfpq, raw pq_adc), each with
@@ -630,7 +707,7 @@ def test_ivf_append_merge_equals_batch_and_is_searchable(spark):
         DELTA_MOD,
         DELTA_RES,
         _append_parts,
-        _assign_frozen,
+        _cos_rank,
         knn_ivf_append,
     )
     from cs686_big_data_p1_spark.operators.llm import knn_bruteforce
@@ -640,10 +717,7 @@ def test_ivf_append_merge_equals_batch_and_is_searchable(spark):
     )
     assert delta.count() > 0  # the residue class is populated
     batch = (
-        _assign_frozen(
-            vecs.where(F.col("vec_id") >= ANN_N_QUERIES), cents
-        )
-        .where(F.col("rk") == 1)
+        _cos_rank(vecs.where(F.col("vec_id") >= ANN_N_QUERIES), cents, 1)
         .select(F.col("vec_id").alias("neighbor_id"), "cid")
     )
     m = {(r.neighbor_id, r.cid) for r in merged.collect()}

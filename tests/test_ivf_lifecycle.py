@@ -30,11 +30,11 @@ def test_ivfpq_residual_shape_determinism_recall(spark, registry):
     # every neighbor comes from a probed cell (same candidate set as
     # the raw form): candidates are IVF cells, so the residual variant
     # can never return an unprobed vector
-    from cs686_big_data_p1_spark.operators.ann import _ivf_cells
+    from cs686_big_data_p1_spark.operators.ann import _coarse_cells
     from cs686_big_data_p1_spark.tables import load_table
 
     e = load_table(spark, SF_SMALL, "embeddings")
-    _, probes, assigned = _ivf_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e)
     cand = {
         (r.query_id, r.neighbor_id)
         for r in probes.join(assigned, "cid").collect()
@@ -220,10 +220,13 @@ def test_residual_encoding_cuts_distortion_on_clustered_corpus(spark):
 
     from cs686_big_data_p1_spark.operators.ann import (
         ANN_N_QUERIES,
-        _ivf_cells,
+        LLOYD_ITERS,
+        PQ_K,
+        PQ_TRAIN_CAP,
+        _coarse_cells,
+        _lloyd,
+        _md5_sample,
         _nlist,
-        _pq_lloyd_sampled,
-        _pq_sample,
         _pq_subspaces,
         ivfpq_residual_topk,
         ivfpq_topk,
@@ -231,14 +234,14 @@ def test_residual_encoding_cuts_distortion_on_clustered_corpus(spark):
 
     df = _clustered_corpus(spark)
     usq = _pq_subspaces(df, unit=True).cache()
-    samp = _pq_sample(df)
-    enc_raw, _ = _pq_lloyd_sampled(usq, samp)
+    samp = _md5_sample(df, "pqtrain", PQ_TRAIN_CAP)
+    enc_raw, _ = _lloyd(usq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
     raw_err = (
         enc_raw.where(F.col("vec_id") >= ANN_N_QUERIES)
         .agg(F.sum("dist"))
         .collect()[0][0]
     )
-    vecs, _probes, assigned = _ivf_cells(df)
+    vecs, _probes, assigned, _ = _coarse_cells(df)
     nlist = _nlist(df.count())
     cent_sq = usq.where(
         (F.col("vec_id") >= ANN_N_QUERIES)
@@ -261,7 +264,7 @@ def test_residual_encoding_cuts_distortion_on_clustered_corpus(spark):
             ),
         )
     )
-    enc_res, _ = _pq_lloyd_sampled(rsq, samp)
+    enc_res, _ = _lloyd(rsq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
     res_err = enc_res.agg(F.sum("dist")).collect()[0][0]
     assert res_err * 2 < raw_err, (
         f"residual distortion {res_err} not well below raw {raw_err}"

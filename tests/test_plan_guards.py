@@ -261,7 +261,7 @@ def test_unsorted_collector_checker_catches_probe(spark):
     )
     assert unsorted_collector_violations(analyzed(ok2)) == []
 
-    # array_sort over struct-collect (the _cents_to_arr idiom).
+    # array_sort over struct-collect (the _lloyd recenter idiom).
     ok3 = base.groupBy("g").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("x"))), lambda s: s["x"]

@@ -26,11 +26,11 @@ def test_sq_determinism_shape_and_probed_candidates(spark, registry):
     assert len(a) == 25  # 5 queries x k=5
     # every neighbor comes from a probed cell (same candidate set as
     # the PQ family — the SQ codes only reorder within it)
-    from cs686_big_data_p1_spark.operators.ann import _ivf_cells
+    from cs686_big_data_p1_spark.operators.ann import _coarse_cells
     from cs686_big_data_p1_spark.tables import load_table
 
     e = load_table(spark, SF_SMALL, "embeddings")
-    _, probes, assigned = _ivf_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e)
     cand = {
         (r.query_id, r.neighbor_id)
         for r in probes.join(assigned, "cid").collect()
@@ -73,11 +73,12 @@ def test_sq_codes_respect_8bit_bounds(spark):
     integer arithmetic: recompute codes from the Spark-side transform
     and check bounds + the constant-dim guard path."""
     from cs686_big_data_p1_spark.operators.ann import (
+        PQ_TRAIN_CAP,
         SQ_CODE_MAX,
+        _md5_sample,
         _sq_train,
         _sq_xhat2,
         _unit_q,
-        _pq_sample,
     )
 
     rows = [
@@ -88,7 +89,7 @@ def test_sq_codes_respect_8bit_bounds(spark):
     #    only if it stays constant post-norm; bounds hold regardless)
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     uq = _unit_q(e)
-    vmins, vmaxs = _sq_train(uq, _pq_sample(e))
+    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
     vmin_c = F.array(*[F.lit(v) for v in vmins])
     vmax_c = F.array(*[F.lit(v) for v in vmaxs])
     xh = uq.select(
@@ -241,7 +242,7 @@ def test_range_search_is_radius_filtered_probed_exact(spark, registry):
     determinism across invocations."""
     from cs686_big_data_p1_spark.operators.ann import (
         RANGE_COS_RADIUS,
-        _ivf_cells,
+        _coarse_cells,
     )
     from cs686_big_data_p1_spark.tables import load_table
 
@@ -253,7 +254,7 @@ def test_range_search_is_radius_filtered_probed_exact(spark, registry):
     assert got, "radius produced an empty result on the fixture"
     assert all(c >= RANGE_COS_RADIUS for c in got.values())
     e = load_table(spark, SF_SMALL, "embeddings")
-    _, probes, assigned = _ivf_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e)
     cand = {
         (r.query_id, r.neighbor_id)
         for r in probes.join(assigned, "cid").collect()
@@ -290,7 +291,7 @@ def test_sq_reconstruct_error_covers_cells_and_bounds(spark, registry):
     from cs686_big_data_p1_spark.operators.ann import (
         ANN_N_QUERIES,
         _corpus_n,
-        _ivf_cells,
+        _coarse_cells,
     )
     from cs686_big_data_p1_spark.tables import load_table
 
@@ -300,7 +301,7 @@ def test_sq_reconstruct_error_covers_cells_and_bounds(spark, registry):
     e = load_table(spark, SF_SMALL, "embeddings")
     n = _corpus_n(spark, SF_SMALL)
     assert sum(r.n_vecs for r in rep) == n - ANN_N_QUERIES
-    _, _, assigned = _ivf_cells(e, n=n)
+    _, _, assigned, _ = _coarse_cells(e, n=n)
     occupied = {r.cid for r in assigned.select("cid").distinct().collect()}
     assert set(cells) == occupied
     assert all(r.sum_err2 >= 0 and r.max_err2 <= r.sum_err2 for r in rep)
@@ -334,8 +335,8 @@ def test_sq_reconstruct_error_zero_for_two_point_dims(spark):
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
     from cs686_big_data_p1_spark.operators.ann import (
-        _ivf_cells,
-        _pq_sample,
+        PQ_TRAIN_CAP,
+        _md5_sample,
         _sq_train,
         _sq_xhat2,
         _unit_q,
@@ -344,7 +345,7 @@ def test_sq_reconstruct_error_zero_for_two_point_dims(spark):
     from cs686_big_data_p1_spark.registry import track_cache
 
     uq = track_cache(_unit_q(e))
-    vmins, vmaxs = _sq_train(uq, _pq_sample(e))
+    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
     vmin_c = F2.array(*[F2.lit(v) for v in vmins])
     vmax_c = F2.array(*[F2.lit(v) for v in vmaxs])
     two = F2.lit(510)
@@ -379,7 +380,7 @@ def test_binary_planted_duplicate_and_probed_candidates(spark, registry):
     from cs686_big_data_p1_spark.operators.ann import (
         EMB_DIM,
         binary_topk,
-        _ivf_cells,
+        _coarse_cells,
     )
     from cs686_big_data_p1_spark.tables import load_table
 
@@ -389,7 +390,7 @@ def test_binary_planted_duplicate_and_probed_candidates(spark, registry):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
     assert len(a) == 25
     e = load_table(spark, SF_SMALL, "embeddings")
-    _, probes, assigned = _ivf_cells(e)
+    _, probes, assigned, _ = _coarse_cells(e)
     cand = {
         (r.query_id, r.neighbor_id)
         for r in probes.join(assigned, "cid").collect()
