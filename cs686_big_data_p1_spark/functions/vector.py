@@ -16,9 +16,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
+from pyspark.sql.window import Window
 
 SCALE = 1e12
 
@@ -137,3 +138,69 @@ def pair_doti_q_pd(a: pd.Series, b: pd.Series) -> pd.Series:
         bv = np.stack(b.iloc[lo:hi].to_numpy()).astype(np.int64)
         out[lo:hi] = (av * bv).sum(axis=1)
     return pd.Series(out)
+
+
+# --- Search layer: the exact-cosine scorer and the top-k rule --------------
+#
+# Every exact top-k in the ANN family (operators/llm.py, operators/ann.py,
+# streaming/vectors.py) scores with these two functions, so the cosine
+# expression and the tie rule the oracles replay are written once.
+
+
+def _side(frame: DataFrame, id_col: str, prefix: str) -> DataFrame:
+    extra = [c for c in frame.columns if c not in ("vec_id", "embedding", "norm")]
+    return frame.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").alias(f"{prefix}_emb"),
+        F.col("norm").alias(f"{prefix}_norm"),
+        *extra,
+    )
+
+
+def exact_cosine(
+    q: DataFrame,
+    c: DataFrame,
+    cand: DataFrame | None = None,
+    on: str = "neighbor_id",
+    keep: tuple = (),
+) -> DataFrame:
+    """(query_id, neighbor_id, *keep, cosine) by the fixed-point cosine
+    pair_dot_pd(q_emb, c_emb) / (q_norm * c_norm).
+
+    `q` and `c` are (vec_id, embedding, norm, *extra) frames, aliased to
+    the query side (query_id, q_emb, q_norm, *extra) and the candidate
+    side (neighbor_id, c_emb, c_norm, *extra). With no `cand`, every
+    pair is scored: c x broadcast(q). Otherwise `cand` (query_id plus
+    `on`) joins c on `on`, then broadcast(q) on query_id."""
+    qs = _side(q, "query_id", "q")
+    cs = _side(c, "neighbor_id", "c")
+    if cand is None:
+        pairs = cs.crossJoin(F.broadcast(qs))
+    else:
+        pairs = cand.join(cs, on).join(F.broadcast(qs), "query_id")
+    return pairs.select(
+        "query_id",
+        "neighbor_id",
+        *keep,
+        (
+            pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
+            / (F.col("q_norm") * F.col("c_norm"))
+        ).alias("cosine"),
+    )
+
+
+def top_k(
+    scored: DataFrame,
+    score: str,
+    k: int,
+    asc: bool = False,
+    by: tuple = ("query_id",),
+) -> DataFrame:
+    """The one ranking rule: within each `by` partition, order by
+    `score` (descending, or ascending for a distance), break ties on
+    ascending neighbor_id, and keep row_number() <= k as `rank`."""
+    order = F.asc(score) if asc else F.desc(score)
+    w = Window.partitionBy(*by).orderBy(order, F.asc("neighbor_id"))
+    return scored.withColumn("rank", F.row_number().over(w)).where(
+        F.col("rank") <= k
+    )

@@ -33,6 +33,7 @@ in expectation and AQE skew-join covers pathological keys.
 from __future__ import annotations
 
 import hashlib
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -44,17 +45,25 @@ from pyspark.sql.window import Window
 from ..functions.legs import parallel_legs
 from ..functions.vector import SCALE
 from ..functions.vector import norm as v_norm
-from ..functions.vector import pair_dot_pd, pair_doti_q_pd, pair_sqdist_q_pd
+from ..functions.vector import (
+    exact_cosine,
+    pair_dot_pd,
+    pair_doti_q_pd,
+    pair_sqdist_q_pd,
+    top_k,
+)
 from ..registry import query, track_cache
 from ..tables import fixture_memo, fixture_store, load_table
-from .llm import KNN_ORACLE, knn_bruteforce
+from .llm import KNN_K, KNN_N_QUERIES, KNN_ORACLE, knn_bruteforce
 from .splits import SPLIT_BOUNDS
 
 EMB_DIM = 64
 N_TABLES = 8
 N_BITS = 6
-ANN_K = 5
-ANN_N_QUERIES = 5  # same query split as knn_bruteforce
+# The query split and k of knn_bruteforce, the truth every recall
+# report grades against: bound, not restated, so the two cannot drift.
+ANN_K = KNN_K
+ANN_N_QUERIES = KNN_N_QUERIES
 DEDUP_COS_THRESHOLD = 0.35
 # Cap on (t, bucket) occupancy for dedup candidate generation. A fixed
 # N_BITS key gives expected occupancy n / 2^N_BITS, so an uncapped
@@ -225,34 +234,7 @@ def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     vecs = e.select("vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"))
-    qv = vecs.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(exact_cosine(vecs, vecs, cand), "cosine", ANN_K)
 
 
 IVF_NPROBE = 4  # cells probed per query
@@ -296,6 +278,43 @@ _NLIST_SQL = (
     "(SELECT greatest(1, CAST(ceil(sqrt(CAST(count(*) AS DOUBLE)))"
     " AS BIGINT)) FROM embeddings)"
 )
+
+# Oracle CTEs: the per-component explode `exd` and the fixed-point norms.
+_EXD_NORMS = """exd AS (
+  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
+  FROM (SELECT vec_id, unnest(embedding) AS x,
+               unnest(generate_series(1, len(embedding))) AS i
+        FROM embeddings)
+),
+norms AS (
+  SELECT vec_id,
+         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
+             AS norm
+  FROM exd GROUP BY vec_id
+)"""
+
+# Oracle tail: exact fixed-point cosine refine of a (query_id,
+# neighbor_id) `short` list to the final top-ANN_K, over `exd`/`norms`.
+_REFINE_TAIL = f"""dots AS (
+  SELECT sh.query_id, sh.neighbor_id,
+         CAST(sum(CAST(floor(q.x * c.x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
+             AS dot
+  FROM short sh
+  JOIN exd q ON q.vec_id = sh.query_id
+  JOIN exd c ON c.vec_id = sh.neighbor_id AND c.i = q.i
+  GROUP BY sh.query_id, sh.neighbor_id
+)
+SELECT query_id, neighbor_id, cosine, rank FROM (
+  SELECT d.query_id, d.neighbor_id,
+         d.dot / (nq.norm * nc.norm) AS cosine,
+         row_number() OVER (PARTITION BY d.query_id
+                            ORDER BY d.dot / (nq.norm * nc.norm) DESC,
+                                     d.neighbor_id ASC) AS rank
+  FROM dots d
+  JOIN norms nq ON nq.vec_id = d.query_id
+  JOIN norms nc ON nc.vec_id = d.neighbor_id)
+WHERE rank <= {ANN_K}
+"""
 
 # Deterministic "trained" centroids: the embeddings of the first
 # nlist candidate vectors (vec_id in [ANN_N_QUERIES,
@@ -415,6 +434,18 @@ def _cos_rank(
     )
 
 
+def _probed(probes: DataFrame, assigned: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id): every vector assigned to one of the
+    query's probed cells, the probe table broadcast."""
+    return F.broadcast(probes).join(assigned, "cid").select(
+        "query_id", "neighbor_id"
+    )
+
+
+def _queries(vecs: DataFrame) -> DataFrame:
+    return vecs.where(F.col("vec_id") < ANN_N_QUERIES)
+
+
 def _coarse_cells(e: DataFrame, n: int | None = None, trained: bool = False):
     """The IVF coarse quantizer: returns (vecs, probes, assigned, nlist)
     — vecs = (vec_id, embedding, norm) cached, probes = each query's
@@ -485,39 +516,58 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     vecs, probes, assigned, _ = _coarse_cells(e, n=_corpus_n(spark, sf_dir))
-    cand = F.broadcast(probes).join(assigned, "cid").select(
-        "query_id", "neighbor_id"
+    scored = exact_cosine(_queries(vecs), vecs, _probed(probes, assigned))
+    return top_k(scored, "cosine", ANN_K)
+
+
+def recall_report(
+    truth: DataFrame, approx: DataFrame, methods: DataFrame
+) -> DataFrame:
+    """Micro-averaged recall of each approximate method against the
+    (query_id, neighbor_id) truth. `approx` is a union of (key,
+    query_id, neighbor_id) rows; `methods` has one row per key value.
+    Returns methods' columns plus n_hits (0 for a method with no hit),
+    n_true and recall = n_hits / n_true: exact integer counts and one
+    IEEE division, so the double is bit-identical across engines."""
+    key = approx.columns[0]
+    hits = (
+        approx.join(truth, ["query_id", "neighbor_id"])
+        .groupBy(key)
+        .agg(F.count(F.lit(1)).alias("n_hits"))
     )
-    qv = vecs.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
+    tc = truth.agg(F.count(F.lit(1)).alias("n_true"))
+    n_hits = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
+    return (
+        methods.join(hits, key, "left")
+        .crossJoin(F.broadcast(tc))
         .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
+            *methods.columns,
+            n_hits.alias("n_hits"),
+            F.col("n_true").cast("long").alias("n_true"),
+            (n_hits.cast("double") / F.col("n_true")).alias("recall"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
+
+
+def _graded_legs(spark: SparkSession, sf_dir: str, legs: list):
+    """(truth, approx) for a recall report: knn_bruteforce's top-k
+    (cached; every leg joins it) and the union of each (tag, fn) leg's
+    (method, query_id, neighbor_id) rows, fn(spark, sf_dir) built
+    concurrently with the truth (functions/legs.py, guide §2.6)."""
+    built = parallel_legs(
+        lambda: knn_bruteforce(spark, sf_dir).select(
+            "query_id", "neighbor_id"
+        ),
+        *[lambda fn=fn: fn(spark, sf_dir) for _, fn in legs],
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    approx = reduce(
+        DataFrame.unionByName,
+        [
+            df.select(F.lit(tag).alias("method"), "query_id", "neighbor_id")
+            for (tag, _), df in zip(legs, built[1:])
+        ],
     )
+    return track_cache(built[0]), approx
 
 
 ANN_RECALL_ORACLE = f"""
@@ -565,41 +615,10 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipelines are constructed concurrently (functions/legs.py, guide
     §2.6) so their plan-time jobs overlap.
     """
-    built = parallel_legs(
-        lambda: knn_bruteforce(spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        ),
-        lambda: ann_lsh(spark, sf_dir),
-        lambda: knn_ivf(spark, sf_dir),
-    )
-    truth = track_cache(built[0])
-    approx = (
-        built[1]
-        .select(F.lit("lsh").alias("method"), "query_id", "neighbor_id")
-        .unionByName(
-            built[2].select(
-                F.lit("ivf").alias("method"), "query_id", "neighbor_id"
-            )
-        )
-    )
-    hits = (
-        approx.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("method")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    methods = spark.createDataFrame([("lsh",), ("ivf",)], "method string")
-    tc = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_hits = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-    return (
-        methods.join(hits, "method", "left")
-        .crossJoin(F.broadcast(tc))
-        .select(
-            "method",
-            n_hits.alias("n_hits"),
-            F.col("n_true").cast("long").alias("n_true"),
-            (n_hits.cast("double") / F.col("n_true")).alias("recall"),
-        )
-    )
+    legs = [("lsh", ann_lsh), ("ivf", knn_ivf)]
+    truth, approx = _graded_legs(spark, sf_dir, legs)
+    methods = spark.createDataFrame([(t,) for t, _ in legs], "method string")
+    return recall_report(truth, approx, methods)
 
 
 DEDUP_EMBEDDING_ORACLE = f"""
@@ -1666,32 +1685,14 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adc_q"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_q"), F.asc("neighbor_id")
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "adc_q", "rank")
-    )
+    return top_k(adc, "adc_q", ANN_K, asc=True)
 
 
 KNN_IVF_TRAINED_ORACLE = (
     "WITH "
     + _ivf_sampled_ctes(CELLS_ITERS)
     + f""",
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+{_EXD_NORMS},
 probes AS (
   SELECT vec_id AS query_id, cid FROM (
     SELECT vec_id, cid,
@@ -1754,39 +1755,8 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs, probes, assigned, _ = _coarse_cells(
         e, n=_corpus_n(spark, sf_dir), trained=True
     )
-    cand = F.broadcast(probes).join(assigned, "cid").select(
-        "query_id", "neighbor_id"
-    )
-    qv = vecs.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored = exact_cosine(_queries(vecs), vecs, _probed(probes, assigned))
+    return top_k(scored, "cosine", ANN_K)
 
 
 # --- IVFPQ: IVF candidate generation + PQ asymmetric-distance scoring ----
@@ -1849,18 +1819,7 @@ cand AS (
 KNN_IVFPQ_ORACLE = (
     "WITH "
     + f"""
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+{_EXD_NORMS},
 uex AS (
   SELECT e.vec_id, (e.i - 1) // {PQ_SUB} AS s, (e.i - 1) % {PQ_SUB} + 1 AS j,
          CAST(floor(e.x / n.norm * {_LQ}) AS BIGINT) AS q
@@ -1897,26 +1856,7 @@ short AS (
     FROM adc)
   WHERE rk <= {IVFPQ_SHORTLIST}
 ),
-dots AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         CAST(sum(CAST(floor(q.x * c.x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-             AS dot
-  FROM short sh
-  JOIN exd q ON q.vec_id = sh.query_id
-  JOIN exd c ON c.vec_id = sh.neighbor_id AND c.i = q.i
-  GROUP BY sh.query_id, sh.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT d.query_id, d.neighbor_id,
-         d.dot / (nq.norm * nc.norm) AS cosine,
-         row_number() OVER (PARTITION BY d.query_id
-                            ORDER BY d.dot / (nq.norm * nc.norm) DESC,
-                                     d.neighbor_id ASC) AS rank
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms nc ON nc.vec_id = d.neighbor_id)
-WHERE rank <= {ANN_K}
-"""
+{_REFINE_TAIL}"""
 )
 
 
@@ -1965,9 +1905,7 @@ def ivfpq_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
     encoded, codebook = _lloyd(usq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
     _, probes, assigned, _ = _coarse_cells(e, n=n)
-    cand = F.broadcast(probes).join(assigned, "cid").select(
-        "query_id", "neighbor_id"
-    )
+    cand = _probed(probes, assigned)
     # The ADC-table subtree lives inside broadcast(dt), and Spark runs
     # broadcast exchanges as concurrent jobs at action start — derived
     # from the shared lazily-cached `usq`, that job recomputed the FULL
@@ -1998,55 +1936,19 @@ def ivfpq_topk(e: DataFrame, n: int | None = None) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adc_q"))
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_q"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine(e, shortlist)
+    return _exact_refine(e, top_k(adc, "adc_q", IVFPQ_SHORTLIST, asc=True))
 
 
 def _exact_refine(e: DataFrame, shortlist: DataFrame) -> DataFrame:
-    """Exact cosine re-rank of a (query_id, neighbor_id) shortlist
-    against the raw vectors — the IndexRefineFlat tail shared by
-    ivfpq_topk and ivfpq_residual_topk. Raw floats are read for
+    """Exact cosine re-rank of a (query_id, neighbor_id, ...) shortlist
+    against the raw vectors — the IndexRefineFlat tail shared by every
+    shortlisting codec (PQ, residual PQ, SQ8, binary, MRL prefix); the
+    shortlist's other columns are dropped. Raw floats are read for
     SHORTLIST rows per query only."""
     vecs = e.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    qv = vecs.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    refined = (
-        shortlist.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(exact_cosine(_queries(vecs), vecs, shortlist), "cosine", ANN_K)
 
 
 EMB_STATS_ORACLE = """
@@ -2289,39 +2191,9 @@ def ann_recall_all(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ivfpq", knn_ivfpq),
         ("pq_adc", knn_pq_adc),
     ]
-    built = parallel_legs(
-        lambda: knn_bruteforce(spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        ),
-        *[lambda fn=fn: fn(spark, sf_dir) for _, fn in legs],
-    )
-    truth = track_cache(built[0])
-    approx = None
-    for (tag, _fn), leg_df in zip(legs, built[1:]):
-        leg = leg_df.select(
-            F.lit(tag).alias("method"), "query_id", "neighbor_id"
-        )
-        approx = leg if approx is None else approx.unionByName(leg)
-    hits = (
-        approx.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("method")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
-    methods = spark.createDataFrame(
-        [(t,) for t, _ in legs], "method string"
-    )
-    tc = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_hits = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-    return (
-        methods.join(hits, "method", "left")
-        .crossJoin(F.broadcast(tc))
-        .select(
-            "method",
-            n_hits.alias("n_hits"),
-            F.col("n_true").cast("long").alias("n_true"),
-            (n_hits.cast("double") / F.col("n_true")).alias("recall"),
-        )
-    )
+    truth, approx = _graded_legs(spark, sf_dir, legs)
+    methods = spark.createDataFrame([(t,) for t, _ in legs], "method string")
+    return recall_report(truth, approx, methods)
 
 
 # --- knn_ivf_append: incremental index maintenance (VERDICT r11 #8) -------
@@ -2501,46 +2373,9 @@ def knn_ivf_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs, _base, _delta, cents, merged, probes = _append_parts(
         spark, sf_dir
     )
-    cand = F.broadcast(probes).join(merged, "cid").select(
-        "query_id", "neighbor_id"
-    )
-    qv = vecs.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w_rank = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w_rank))
-        .where(F.col("rank") <= ANN_K)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            "rank",
-            ((F.col("neighbor_id") % DELTA_MOD) == DELTA_RES).alias(
-                "from_delta"
-            ),
-        )
+    scored = exact_cosine(_queries(vecs), vecs, _probed(probes, merged))
+    return top_k(scored, "cosine", ANN_K).withColumn(
+        "from_delta", (F.col("neighbor_id") % DELTA_MOD) == DELTA_RES
     )
 
 
@@ -3007,8 +2842,6 @@ def ivf_store_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead). The denominator pass reads the vec_id column only
     (column-pruned footprint; at deployment row counts come from
     partition metadata). Report is O(n_queries) rows."""
-    import os
-
     path = _ivf_store_ready(spark, sf_dir)
     _v, _b, _d, cents, _m, probes = _append_parts(spark, sf_dir)
     probes = track_cache(probes)
@@ -3382,58 +3215,21 @@ def ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = F.broadcast(probes).join(assigned, "cid").select(
         "query_id", "neighbor_id", "prk"
     )
-    qv = vecs.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    pcos = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            "prk",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
+    pcos = exact_cosine(_queries(vecs), vecs, cand, keep=("prk",))
     levels = spark.range(1, IVF_NPROBE + 1).select(
         F.col("id").cast("int").alias("p")
     )
-    w_topk = Window.partitionBy("p", "query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    topk = (
-        pcos.join(F.broadcast(levels), F.col("prk") <= F.col("p"))
-        .withColumn("rank", F.row_number().over(w_topk))
-        .where(F.col("rank") <= ANN_K)
-        .select("p", "query_id", "neighbor_id")
-    )
+    topk = top_k(
+        pcos.join(F.broadcast(levels), F.col("prk") <= F.col("p")),
+        "cosine",
+        ANN_K,
+        by=("p", "query_id"),
+    ).select("p", "query_id", "neighbor_id")
     truth = track_cache(
         knn_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
     )
-    hits = topk.join(truth, ["query_id", "neighbor_id"]).groupBy("p").agg(
-        F.count(F.lit(1)).alias("n_hits")
-    )
-    tc = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_hits = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-    return (
-        levels.join(hits, "p", "left")
-        .crossJoin(F.broadcast(tc))
-        .select(
-            F.col("p").alias("nprobe"),
-            n_hits.alias("n_hits"),
-            F.col("n_true").cast("long").alias("n_true"),
-            (n_hits.cast("double") / F.col("n_true")).alias("recall"),
-        )
+    return recall_report(truth, topk, levels).withColumnRenamed(
+        "p", "nprobe"
     )
 
 
@@ -3542,32 +3338,13 @@ def ivfpq_residual_topk(e: DataFrame, n: int | None = None) -> DataFrame:
         .groupBy("query_id", "neighbor_id")
         .agg(F.sum("d").alias("adc_q"))
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.asc("adc_q"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("adc_rank", F.row_number().over(w_adc))
-        .where(F.col("adc_rank") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine(e, shortlist)
+    return _exact_refine(e, top_k(adc, "adc_q", IVFPQ_SHORTLIST, asc=True))
 
 
 KNN_IVFPQ_RESIDUAL_ORACLE = (
     "WITH "
     + f"""
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+{_EXD_NORMS},
 uex AS (
   SELECT e.vec_id, (e.i - 1) // {PQ_SUB} AS s, (e.i - 1) % {PQ_SUB} + 1 AS j,
          CAST(floor(e.x / n.norm * {_LQ}) AS BIGINT) AS q
@@ -3616,26 +3393,7 @@ short AS (
     FROM adc)
   WHERE rk <= {IVFPQ_SHORTLIST}
 ),
-dots AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         CAST(sum(CAST(floor(q.x * c.x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-             AS dot
-  FROM short sh
-  JOIN exd q ON q.vec_id = sh.query_id
-  JOIN exd c ON c.vec_id = sh.neighbor_id AND c.i = q.i
-  GROUP BY sh.query_id, sh.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT d.query_id, d.neighbor_id,
-         d.dot / (nq.norm * nc.norm) AS cosine,
-         row_number() OVER (PARTITION BY d.query_id
-                            ORDER BY d.dot / (nq.norm * nc.norm) DESC,
-                                     d.neighbor_id ASC) AS rank
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms nc ON nc.vec_id = d.neighbor_id)
-WHERE rank <= {ANN_K}
-"""
+{_REFINE_TAIL}"""
 )
 
 
@@ -3763,18 +3521,7 @@ def _sq_xhat2(uqcol, vmin_c, vmax_c):
 KNN_IVF_SQ_ORACLE = (
     "WITH "
     + f"""
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+{_EXD_NORMS},
 uqd AS (
   SELECT e.vec_id, e.i,
          CAST(floor(e.x / n.norm * {_LQ}) AS BIGINT) AS q
@@ -3821,26 +3568,7 @@ short AS (
     FROM sqadc)
   WHERE rk <= {IVFPQ_SHORTLIST}
 ),
-dots AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         CAST(sum(CAST(floor(q.x * c.x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-             AS dot
-  FROM short sh
-  JOIN exd q ON q.vec_id = sh.query_id
-  JOIN exd c ON c.vec_id = sh.neighbor_id AND c.i = q.i
-  GROUP BY sh.query_id, sh.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT d.query_id, d.neighbor_id,
-         d.dot / (nq.norm * nc.norm) AS cosine,
-         row_number() OVER (PARTITION BY d.query_id
-                            ORDER BY d.dot / (nq.norm * nc.norm) DESC,
-                                     d.neighbor_id ASC) AS rank
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms nc ON nc.vec_id = d.neighbor_id)
-WHERE rank <= {ANN_K}
-"""
+{_REFINE_TAIL}"""
 )
 
 
@@ -3883,9 +3611,7 @@ def sq_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     vmin_c = F.array(*[F.lit(v) for v in vmins])
     vmax_c = F.array(*[F.lit(v) for v in vmaxs])
     _, probes, assigned, _ = _coarse_cells(e, n=n)
-    cand = F.broadcast(probes).join(assigned, "cid").select(
-        "query_id", "neighbor_id"
-    )
+    cand = _probed(probes, assigned)
     nside = uq.where(F.col("vec_id") >= ANN_N_QUERIES).select(
         F.col("vec_id").alias("neighbor_id"),
         _sq_xhat2(F.col("uq"), vmin_c, vmax_c).alias("xh"),
@@ -3902,15 +3628,7 @@ def sq_topk(e: DataFrame, n: int | None = None) -> DataFrame:
             pair_doti_q_pd(F.col("q_arr"), F.col("xh")).alias("dot2"),
         )
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("dot2"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine(e, shortlist)
+    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
 
 
 # PQ stores PQ_M codes of log2(PQ_K) bits; SQ8 stores one byte per
@@ -3946,43 +3664,13 @@ short AS (
     FROM badc)
   WHERE rk <= {IVFPQ_SHORTLIST}
 ),
-dots AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         CAST(sum(CAST(floor(q.x * c.x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-             AS dot
-  FROM short sh
-  JOIN exd q ON q.vec_id = sh.query_id
-  JOIN exd c ON c.vec_id = sh.neighbor_id AND c.i = q.i
-  GROUP BY sh.query_id, sh.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT d.query_id, d.neighbor_id,
-         d.dot / (nq.norm * nc.norm) AS cosine,
-         row_number() OVER (PARTITION BY d.query_id
-                            ORDER BY d.dot / (nq.norm * nc.norm) DESC,
-                                     d.neighbor_id ASC) AS rank
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms nc ON nc.vec_id = d.neighbor_id)
-WHERE rank <= {ANN_K}
-"""
+{_REFINE_TAIL}"""
 
 
 KNN_IVF_BINARY_ORACLE = (
     "WITH "
     + f"""
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+{_EXD_NORMS},
 uqd AS (
   SELECT e.vec_id, e.i,
          CAST(floor(e.x / n.norm * {_LQ}) AS BIGINT) AS q
@@ -4024,9 +3712,7 @@ def binary_topk(e: DataFrame, n: int | None = None) -> DataFrame:
     """Core of knn_ivf_binary over any (vec_id, embedding) frame."""
     uq = track_cache(_unit_q(e))
     _, probes, assigned, _ = _coarse_cells(e, n=n)
-    cand = F.broadcast(probes).join(assigned, "cid").select(
-        "query_id", "neighbor_id"
-    )
+    cand = _probed(probes, assigned)
     nside = uq.where(F.col("vec_id") >= ANN_N_QUERIES).select(
         F.col("vec_id").alias("neighbor_id"),
         F.transform(
@@ -4048,15 +3734,7 @@ def binary_topk(e: DataFrame, n: int | None = None) -> DataFrame:
             pair_doti_q_pd(F.col("q_arr"), F.col("s")).alias("dot2"),
         )
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.desc("dot2"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(w_adc))
-        .where(F.col("rk") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine(e, shortlist)
+    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
 
 
 PQ_RECALL_COMPARE_ORACLE = f"""
@@ -4126,40 +3804,11 @@ def pq_recall_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("ivf_sq8", SQ_CODE_BYTES, knn_ivf_sq),
         ("ivf_binary", BIN_CODE_BYTES, knn_ivf_binary),
     ]
-    built = parallel_legs(
-        lambda: knn_bruteforce(spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        ),
-        *[lambda fn=fn: fn(spark, sf_dir) for _, _b, fn in legs],
-    )
-    truth = track_cache(built[0])
-    approx = None
-    for (tag, _bytes, _fn), leg_df in zip(legs, built[1:]):
-        leg = leg_df.select(
-            F.lit(tag).alias("method"), "query_id", "neighbor_id"
-        )
-        approx = leg if approx is None else approx.unionByName(leg)
-    hits = (
-        approx.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("method")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
-    )
+    truth, approx = _graded_legs(spark, sf_dir, [(t, fn) for t, _, fn in legs])
     methods = spark.createDataFrame(
         [(t, b) for t, b, _ in legs], "method string, code_bytes int"
     )
-    tc = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_hits = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-    return (
-        methods.join(hits, "method", "left")
-        .crossJoin(F.broadcast(tc))
-        .select(
-            "method",
-            "code_bytes",
-            n_hits.alias("n_hits"),
-            F.col("n_true").cast("long").alias("n_true"),
-            (n_hits.cast("double") / F.col("n_true")).alias("recall"),
-        )
-    )
+    return recall_report(truth, approx, methods)
 
 
 # --- ivf_retrain: the retrain trigger's ACTUATOR (VERDICT r13 #4) ---------
@@ -4925,8 +4574,6 @@ def knn_ivf_store_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ivf_store_prune pin) and one pruned tombstone anti-join; the
     query side is a broadcast O(n_queries) slice; scoring touches only
     probed-cell rows (the knn_ivf bound)."""
-    import os as _os
-
     path = _ivf_store_ready(spark, sf_dir)
     _v, _b, _d, cents, _m, probes = _append_parts(spark, sf_dir)
     e = load_table(spark, sf_dir, "embeddings")
@@ -4944,36 +4591,13 @@ def knn_ivf_store_live(spark: SparkSession, sf_dir: str) -> DataFrame:
         r[0] for r in probes.select("cid").distinct().collect()
     )
     live = probe_ivf_store_live(spark, path, probed).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        v_norm(F.col("embedding")).alias("c_norm"),
-        "cid",
+        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"), "cid"
     )
-    qv = e.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        v_norm(F.col("embedding")).alias("q_norm"),
+    qv = _queries(e).select(
+        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    scored = (
-        F.broadcast(probes).join(live, "cid")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    scored = exact_cosine(qv, live, F.broadcast(probes), on="cid")
+    return top_k(scored, "cosine", ANN_K)
 
 
 # --- ivf_release_versions: versioned index releases (VERDICT r14 #3) ------
@@ -5156,18 +4780,7 @@ RANGE_COS_RADIUS = 0.25  # cosine radius; ~2% of random-pair mass at d=64
 IVF_RANGE_SEARCH_ORACLE = (
     "WITH "
     + f"""
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),"""
+{_EXD_NORMS},"""
     + _ivf_cand_ctes()
     + f""",
 dots AS (
@@ -5217,30 +4830,10 @@ def ivf_range(e: DataFrame, n: int | None = None) -> DataFrame:
     """Core of ivf_range_search over any (vec_id, embedding) frame
     (tests feed planted-neighbor corpora)."""
     vecs, probes, assigned, _ = _coarse_cells(e, n=n)
-    cand = F.broadcast(probes).join(assigned, "cid").select(
-        "query_id", "neighbor_id"
-    )
-    qv = vecs.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cv = vecs.where(F.col("vec_id") >= ANN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored = (
-        cand.join(cv, "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
+    scored = exact_cosine(
+        _queries(vecs),
+        vecs.where(F.col("vec_id") >= ANN_N_QUERIES),
+        _probed(probes, assigned),
     )
     return scored.where(F.col("cosine") >= F.lit(RANGE_COS_RADIUS))
 
@@ -5248,18 +4841,7 @@ def ivf_range(e: DataFrame, n: int | None = None) -> DataFrame:
 SQ_RECONSTRUCT_ORACLE = (
     "WITH "
     + f"""
-exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+{_EXD_NORMS},
 uqd AS (
   SELECT e.vec_id, e.i,
          CAST(floor(e.x / n.norm * {_LQ}) AS BIGINT) AS q
@@ -5381,18 +4963,7 @@ def _mrl_oracle(dims: int) -> str:
     the exact integer dot of PREFIX-renormalized quantized units, then
     exact full-dim refine."""
     return f"""
-WITH exd AS (
-  SELECT vec_id, CAST(x AS DOUBLE) AS x, i
-  FROM (SELECT vec_id, unnest(embedding) AS x,
-               unnest(generate_series(1, len(embedding))) AS i
-        FROM embeddings)
-),
-norms AS (
-  SELECT vec_id,
-         sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
-             AS norm
-  FROM exd GROUP BY vec_id
-),
+WITH {_EXD_NORMS},
 pnorm AS (
   SELECT vec_id,
          sqrt(CAST(sum(CAST(floor(x * x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12)
@@ -5420,32 +4991,13 @@ short AS (
     FROM padc)
   WHERE rk <= {IVFPQ_SHORTLIST}
 ),
-dots AS (
-  SELECT sh.query_id, sh.neighbor_id,
-         CAST(sum(CAST(floor(q.x * c.x * 1e12) AS BIGINT)) AS DOUBLE) / 1e12
-             AS dot
-  FROM short sh
-  JOIN exd q ON q.vec_id = sh.query_id
-  JOIN exd c ON c.vec_id = sh.neighbor_id AND c.i = q.i
-  GROUP BY sh.query_id, sh.neighbor_id
-)
-SELECT query_id, neighbor_id, cosine, rank FROM (
-  SELECT d.query_id, d.neighbor_id,
-         d.dot / (nq.norm * nc.norm) AS cosine,
-         row_number() OVER (PARTITION BY d.query_id
-                            ORDER BY d.dot / (nq.norm * nc.norm) DESC,
-                                     d.neighbor_id ASC) AS rank
-  FROM dots d
-  JOIN norms nq ON nq.vec_id = d.query_id
-  JOIN norms nc ON nc.vec_id = d.neighbor_id)
-WHERE rank <= {ANN_K}
-"""
+{_REFINE_TAIL}"""
 
 
 KNN_MRL_ORACLE = _mrl_oracle(MRL_DIM)
 
 
-def mrl_topk(e: DataFrame, dims: int, n: int | None = None) -> DataFrame:
+def mrl_topk(e: DataFrame, dims: int) -> DataFrame:
     """Core of knn_mrl at any prefix width: prefix-renormalized
     integer shortlist, exact full-dim refine."""
     pre = e.select(
@@ -5474,15 +5026,7 @@ def mrl_topk(e: DataFrame, dims: int, n: int | None = None) -> DataFrame:
         "neighbor_id",
         pair_doti_q_pd(F.col("q_arr"), F.col("c_arr")).alias("dot2"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("dot2"), F.asc("neighbor_id")
-    )
-    shortlist = (
-        adc.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= IVFPQ_SHORTLIST)
-        .select("query_id", "neighbor_id")
-    )
-    return _exact_refine(e, shortlist)
+    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
 
 
 @query("knn_mrl", oracle=KNN_MRL_ORACLE)
@@ -5503,11 +5047,7 @@ def knn_mrl(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the prefix tier lives beside the binary/SQ8 tiers as the
     progressive-refinement ladder. The report sibling
     (mrl_recall_compare) grades recall per prefix budget."""
-    return mrl_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        MRL_DIM,
-        n=_corpus_n(spark, sf_dir),
-    )
+    return mrl_topk(load_table(spark, sf_dir, "embeddings"), MRL_DIM)
 
 
 MRL_RECALL_COMPARE_ORACLE = f"""
@@ -5552,43 +5092,13 @@ def mrl_recall_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; each funnel's first stage reads only its prefix. Legs
     are constructed concurrently (functions/legs.py, guide §2.6)."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = _corpus_n(spark, sf_dir)
-    built = parallel_legs(
-        lambda: knn_bruteforce(spark, sf_dir).select(
-            "query_id", "neighbor_id"
-        ),
-        *[lambda d=dims: mrl_topk(e, d, n=n) for dims in MRL_DIMS],
-    )
-    truth = track_cache(built[0])
-    approx = None
-    for dims, leg_df in zip(MRL_DIMS, built[1:]):
-        leg = leg_df.select(
-            F.lit(f"mrl{dims}").alias("method"),
-            F.lit(dims).alias("dims"),
-            "query_id",
-            "neighbor_id",
-        )
-        approx = leg if approx is None else approx.unionByName(leg)
-    hits = (
-        approx.join(truth, ["query_id", "neighbor_id"])
-        .groupBy("method")
-        .agg(F.count(F.lit(1)).alias("n_hits"))
+    truth, approx = _graded_legs(
+        spark,
+        sf_dir,
+        [(f"mrl{d}", lambda *_, d=d: mrl_topk(e, d)) for d in MRL_DIMS],
     )
     methods = spark.createDataFrame(
         [(f"mrl{d}", d, d * 4) for d in MRL_DIMS],
         "method string, dims int, scan_bytes int",
     )
-    tc = truth.agg(F.count(F.lit(1)).alias("n_true"))
-    n_hits = F.coalesce(F.col("n_hits"), F.lit(0)).cast("long")
-    return (
-        methods.join(hits, "method", "left")
-        .crossJoin(F.broadcast(tc))
-        .select(
-            "method",
-            "dims",
-            "scan_bytes",
-            n_hits.alias("n_hits"),
-            F.col("n_true").cast("long").alias("n_true"),
-            (n_hits.cast("double") / F.col("n_true")).alias("recall"),
-        )
-    )
+    return recall_report(truth, approx, methods)

@@ -30,7 +30,7 @@ from pyspark.sql.window import Window
 
 from ..functions.vector import norm as v_norm
 from ..functions.vector import norm_sq_q
-from ..functions.vector import pair_dot_pd
+from ..functions.vector import exact_cosine, top_k
 from ..registry import query, track_cache
 from ..tables import fixture_memo, load_table
 
@@ -1117,30 +1117,11 @@ def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"))
-    q = vecs.where(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
+    pairs = exact_cosine(
+        vecs.where(F.col("vec_id") < KNN_N_QUERIES),
+        vecs.where(F.col("vec_id") >= KNN_N_QUERIES),
     )
-    c = vecs.where(F.col("vec_id") >= KNN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    dot = pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-    pairs = c.crossJoin(F.broadcast(q)).select(
-        "query_id",
-        "neighbor_id",
-        (dot / (F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= KNN_K)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return top_k(pairs, "cosine", KNN_K)
 
 
 # Incremental-dedup batch boundary: fixture docs below this id play the
@@ -1636,36 +1617,17 @@ def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = e.select(
         "vec_id", "embedding", "label", v_norm(F.col("embedding")).alias("norm")
     )
-    q = vecs.where(F.col("vec_id") < KNN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("label").alias("q_label"),
-        F.col("norm").alias("q_norm"),
-    )
-    c = vecs.where(F.col("vec_id") >= KNN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        F.col("label").alias("neg_label"),
-        F.col("norm").alias("c_norm"),
-    )
-    dot = pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-    pairs = (
-        c.crossJoin(F.broadcast(q))
-        .where(F.col("neg_label") != F.col("q_label"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            "neg_label",
-            (dot / (F.col("q_norm") * F.col("c_norm"))).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= HARDNEG_K)
-        .select("query_id", "neighbor_id", "neg_label", "cosine", "rank")
+    pairs = exact_cosine(
+        vecs.where(F.col("vec_id") < KNN_N_QUERIES).withColumnRenamed(
+            "label", "q_label"
+        ),
+        vecs.where(F.col("vec_id") >= KNN_N_QUERIES).withColumnRenamed(
+            "label", "neg_label"
+        ),
+        keep=("neg_label", "q_label"),
+    ).where(F.col("neg_label") != F.col("q_label"))
+    return top_k(pairs, "cosine", HARDNEG_K).select(
+        "query_id", "neighbor_id", "neg_label", "cosine", "rank"
     )
 
 

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import norm as v_norm
-from ..functions.vector import pair_dot_pd
+from ..functions.vector import exact_cosine, pair_dot_pd, top_k
 from ..operators.ann import (
     ANN_N_QUERIES,
     DELTA_MOD,
@@ -226,7 +226,6 @@ def _maint_oracle() -> str:
         DRIFT_NUM,
         IMBALANCE_DEN,
         IMBALANCE_NUM,
-        _NLIST_SQL,
     )
 
     return f"""
@@ -399,8 +398,6 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     report rows with retrain = true page the rebuild
     (write_ivf_store)."""
     from ..operators.ann import (
-        DRIFT_DEN,
-        DRIFT_NUM,
         IMBALANCE_DEN,
         IMBALANCE_NUM,
         _append_parts,
@@ -757,8 +754,6 @@ def serve_knn_batch(
         _tombstones_present,
         probe_ivf_store_live,
     )
-    from ..functions.vector import pair_dot_pd
-    from pyspark.sql.window import Window
 
     if batch.isEmpty():
         return
@@ -792,37 +787,10 @@ def serve_knn_batch(
     # Bounded control flow: <= batch_queries x nprobe cells, <= nlist.
     cids = sorted({r.cid for r in probes.select("cid").distinct().collect()})
     live = probe_ivf_store_live(spark_b, store_path, cids).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("c_emb"),
-        v_norm(F.col("embedding")).alias("c_norm"),
-        "cid",
+        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"), "cid"
     )
-    qv = qb.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    scored = (
-        F.broadcast(probes).join(live, "cid")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            (
-                pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
-                / (F.col("q_norm") * F.col("c_norm"))
-            ).alias("cosine"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= ANN_K)
-        .write.mode("append")
-        .parquet(results_path)
-    )
+    scored = exact_cosine(qb, live, F.broadcast(probes), on="cid")
+    top_k(scored, "cosine", ANN_K).write.mode("append").parquet(results_path)
 
 
 def _knn_serve_oracle() -> str:

@@ -326,3 +326,25 @@ def test_registry_wide_nested_order_rule_is_wired():
     ).read_text()
     assert "unsorted_collector_violations(" in src
     assert "NESTED_ORDER_WAIVERS" in src
+
+
+def _ann_family_audits() -> list[str]:
+    from cs686_big_data_p1_spark import registry
+    from tools.plan_audit import AUDITS
+
+    registry.load_all()
+    mods = ("operators.ann", "operators.llm", "streaming.vectors")
+    return [n for n in AUDITS if registry.QUERIES[n].__module__.endswith(mods)]
+
+
+@pytest.mark.parametrize("name", _ann_family_audits())
+def test_ann_family_plan_audit(spark, registry, no_auto_broadcast, name):
+    """tools/plan_audit.py's AUDITS assertions for every ANN-family
+    query (operators/ann.py, operators/llm.py, streaming/vectors.py),
+    through the same per-query check the tool's main() runs: scan
+    pruning, broadcast joins, no fact-table broadcast outside a bounded
+    waiver, a WholeStageCodegen span and no CartesianProduct."""
+    from tools.plan_audit import AUDITS, audit_query
+
+    _plan, problems, _notes = audit_query(spark, name, AUDITS[name], SF_SMALL)
+    assert not problems, f"{name}: {problems}"

@@ -434,7 +434,7 @@ def test_mrl_funnel_planted_duplicate_and_full_dim_refine(spark):
     ]
     rows[110] = (110, decoy)
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    got = mrl_topk(e, MRL_DIM, n=140).collect()
+    got = mrl_topk(e, MRL_DIM).collect()
     by_rank = {
         (r.query_id, r.rank): (r.neighbor_id, r.cosine) for r in got
     }

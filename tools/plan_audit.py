@@ -830,10 +830,106 @@ def audit_cluster_round(spark) -> list[str]:
     return problems
 
 
+def audit_query(spark, name: str, want: dict, sf_dir: str = SF_DIR):
+    """Check one AUDITS entry against its query's physical plan at
+    sf_dir. Returns (formatted plan, problems, notes): an empty
+    problems list means every assertion in `want` holds; notes record
+    the waived bounded broadcasts. The session should run with
+    spark.sql.autoBroadcastJoinThreshold=-1 (see main)."""
+    from cs686_big_data_p1_spark import registry
+    from cs686_big_data_p1_spark.tables import SCHEMAS
+
+    # audit each query's standalone plan: a prior query's live
+    # track_cache would otherwise splice its own (already-executed)
+    # InMemoryRelation subtree into this plan and shift the
+    # exchange census with audit ORDER, not query shape
+    registry.clear_caches()
+    df = registry.QUERIES[name](spark, sf_dir)
+    plan = formatted_plan(df)
+    nodes = parse_tree(plan)
+    tables = scan_tables(plan)
+    reads = scan_read_counts(plan)
+    problems: list[str] = []
+    notes: list[str] = []
+    pruned = want.get("pruned")
+    if pruned:
+        if not reads:
+            problems.append("no parquet ReadSchema found")
+        must_prune = FACT_TABLES if pruned is True else set(pruned)
+        for sid, ncols in reads.items():
+            tbl = tables.get(sid)
+            if tbl in must_prune and tbl in SCHEMAS:
+                total = len(SCHEMAS[tbl].fields)
+                if ncols >= total:
+                    problems.append(
+                        f"scan ({sid}) reads all {total} columns of {tbl}"
+                    )
+    if want.get("broadcast") and "Broadcast" not in plan:
+        problems.append("no broadcast join in plan")
+    waiver = want.get("bounded_broadcast")
+    # The waiver is exchange-scoped, not query-scoped: each waived
+    # BroadcastExchange must visibly bound its own cardinality (an
+    # Aggregate / Limit / TakeOrdered between the exchange and the
+    # fact scan), and at most max_waived exchanges may claim it —
+    # so an unintended second fact broadcast regressing into a
+    # waived query still fails the audit.
+    max_waived = want.get("max_waived", 1)
+    n_waived = 0
+    for n in nodes:
+        if "BroadcastExchange" in n.name:
+            bad = sorted(
+                tables[sid]
+                for sid in descendant_scan_ids(n)
+                if tables.get(sid) in FACT_TABLES
+            )
+            if not bad:
+                continue
+            bound_nodes = want.get("waiver_bound_nodes", BOUNDING_NODES)
+            if waiver and not subtree_bounds_cardinality(n, bound_nodes):
+                problems.append(
+                    f"BroadcastExchange ({n.id}) over {bad} claims "
+                    "waiver but has no Aggregate/Limit bounding node "
+                    "in its subtree"
+                )
+            elif waiver and n_waived >= max_waived:
+                problems.append(
+                    f"BroadcastExchange ({n.id}) over {bad} exceeds "
+                    f"max_waived={max_waived} bounded-broadcast "
+                    "exchanges for this query"
+                )
+            elif waiver:
+                n_waived += 1
+                notes.append(
+                    f"note: {name} BroadcastExchange ({n.id}) over "
+                    f"{bad} waived — {waiver}"
+                )
+            else:
+                problems.append(
+                    f"BroadcastExchange ({n.id}) broadcasts fact "
+                    f"table(s) {bad} — OOM at scale"
+                )
+    if want.get("codegen"):
+        # under AQE the un-executed plan exposes no codegen
+        # subtrees; compile with AQE off (each AQE stage compiles
+        # the same spans at runtime)
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            cg = formatted_plan(
+                registry.QUERIES[name](spark, sf_dir), mode="codegen"
+            )
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", "true")
+        m = re.search(r"Found (\d+) WholeStageCodegen subtrees", cg)
+        if not m or int(m.group(1)) < 1:
+            problems.append("no WholeStageCodegen span")
+    if "CartesianProduct" in plan:
+        problems.append("CartesianProduct in plan")
+    return plan, problems, notes
+
+
 def main() -> int:
     from cs686_big_data_p1_spark import registry
     from cs686_big_data_p1_spark.session import get_spark
-    from cs686_big_data_p1_spark.tables import SCHEMAS
 
     registry.load_all()
     spark = get_spark("plan-audit")
@@ -850,90 +946,9 @@ def main() -> int:
     print("# Physical plan audit\n")
     print(f"sf_dir: `{SF_DIR}`\n")
     for name, want in AUDITS.items():
-        # audit each query's standalone plan: a prior query's live
-        # track_cache would otherwise splice its own (already-executed)
-        # InMemoryRelation subtree into this plan and shift the
-        # exchange census with audit ORDER, not query shape
-        registry.clear_caches()
-        df = registry.QUERIES[name](spark, SF_DIR)
-        plan = formatted_plan(df)
-        nodes = parse_tree(plan)
-        tables = scan_tables(plan)
-        reads = scan_read_counts(plan)
-        problems = []
-        pruned = want.get("pruned")
-        if pruned:
-            if not reads:
-                problems.append("no parquet ReadSchema found")
-            must_prune = FACT_TABLES if pruned is True else set(pruned)
-            for sid, ncols in reads.items():
-                tbl = tables.get(sid)
-                if tbl in must_prune and tbl in SCHEMAS:
-                    total = len(SCHEMAS[tbl].fields)
-                    if ncols >= total:
-                        problems.append(
-                            f"scan ({sid}) reads all {total} columns of {tbl}"
-                        )
-        if want.get("broadcast") and "Broadcast" not in plan:
-            problems.append("no broadcast join in plan")
-        waiver = want.get("bounded_broadcast")
-        # The waiver is exchange-scoped, not query-scoped: each waived
-        # BroadcastExchange must visibly bound its own cardinality (an
-        # Aggregate / Limit / TakeOrdered between the exchange and the
-        # fact scan), and at most max_waived exchanges may claim it —
-        # so an unintended second fact broadcast regressing into a
-        # waived query still fails the audit.
-        max_waived = want.get("max_waived", 1)
-        n_waived = 0
-        for n in nodes:
-            if "BroadcastExchange" in n.name:
-                bad = sorted(
-                    tables[sid]
-                    for sid in descendant_scan_ids(n)
-                    if tables.get(sid) in FACT_TABLES
-                )
-                if not bad:
-                    continue
-                bound_nodes = want.get("waiver_bound_nodes", BOUNDING_NODES)
-                if waiver and not subtree_bounds_cardinality(n, bound_nodes):
-                    problems.append(
-                        f"BroadcastExchange ({n.id}) over {bad} claims "
-                        "waiver but has no Aggregate/Limit bounding node "
-                        "in its subtree"
-                    )
-                elif waiver and n_waived >= max_waived:
-                    problems.append(
-                        f"BroadcastExchange ({n.id}) over {bad} exceeds "
-                        f"max_waived={max_waived} bounded-broadcast "
-                        "exchanges for this query"
-                    )
-                elif waiver:
-                    n_waived += 1
-                    print(
-                        f"note: {name} BroadcastExchange ({n.id}) over "
-                        f"{bad} waived — {waiver}\n"
-                    )
-                else:
-                    problems.append(
-                        f"BroadcastExchange ({n.id}) broadcasts fact "
-                        f"table(s) {bad} — OOM at scale"
-                    )
-        if want.get("codegen"):
-            # under AQE the un-executed plan exposes no codegen
-            # subtrees; compile with AQE off (each AQE stage compiles
-            # the same spans at runtime)
-            spark.conf.set("spark.sql.adaptive.enabled", "false")
-            try:
-                cg = formatted_plan(
-                    registry.QUERIES[name](spark, SF_DIR), mode="codegen"
-                )
-            finally:
-                spark.conf.set("spark.sql.adaptive.enabled", "true")
-            m = re.search(r"Found (\d+) WholeStageCodegen subtrees", cg)
-            if not m or int(m.group(1)) < 1:
-                problems.append("no WholeStageCodegen span")
-        if "CartesianProduct" in plan:
-            problems.append("CartesianProduct in plan")
+        plan, problems, notes = audit_query(spark, name, want, SF_DIR)
+        for note in notes:
+            print(note + "\n")
         status = "FAIL: " + "; ".join(problems) if problems else "ok"
         print(f"## {name} — {status}\n")
         print("```")
