@@ -140,11 +140,13 @@ def pair_doti_q_pd(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
-# --- Search layer: the exact-cosine scorer and the top-k rule --------------
+# --- Search layer: the exact-cosine scorers and the top-k rule -------------
 #
 # Every exact top-k in the ANN family (operators/llm.py, operators/ann.py,
-# streaming/vectors.py) scores with these two functions, so the cosine
-# expression and the tie rule the oracles replay are written once.
+# streaming/vectors.py) scores with exact_cosine and ranks with top_k, and
+# every corpus-pair cosine of the dedup family scores with pair_cosine, so
+# the cosine expression and the tie rule the oracles replay are written
+# once.
 
 
 def _side(frame: DataFrame, id_col: str, prefix: str) -> DataFrame:
@@ -186,6 +188,27 @@ def exact_cosine(
             pair_dot_pd(F.col("q_emb"), F.col("c_emb"))
             / (F.col("q_norm") * F.col("c_norm"))
         ).alias("cosine"),
+    )
+
+
+def pair_cos() -> Column:
+    """The fixed-point cosine of one (a_emb, a_norm, b_emb, b_norm) row,
+    as `cosine`: the corpus-pair form of exact_cosine's expression."""
+    return (
+        pair_dot_pd(F.col("a_emb"), F.col("b_emb"))
+        / (F.col("a_norm") * F.col("b_norm"))
+    ).alias("cosine")
+
+
+def pair_cosine(pairs: DataFrame, vecs: DataFrame, a: str, b: str) -> DataFrame:
+    """(a, b, cosine) for each id pair of `pairs`, both ids drawn from
+    the (vec_id, embedding, norm) frame `vecs`. Both sides are
+    corpus-scale, so `vecs` joins on `a` and then on `b` by shuffle,
+    never by broadcast."""
+    return (
+        pairs.join(_side(vecs, a, "a"), a)
+        .join(_side(vecs, b, "b"), b)
+        .select(a, b, pair_cos())
     )
 
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..functions.pairs import bucket_pairs, jaccard, set_overlap
 from ..functions.vector import norm as v_norm
 from ..functions.vector import norm_sq_q
 from ..functions.vector import exact_cosine, top_k
@@ -79,14 +80,19 @@ def _rep_shingles_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         distinct, so the dedup shuffle moves 8-byte keys, never the
         3-word shingle strings.
     """
-    d = load_table(spark, sf_dir, "documents")
+    return shingles_of(_rep_docs(load_table(spark, sf_dir, "documents")))
+
+
+def _rep_docs(d: DataFrame) -> DataFrame:
+    """The exact-duplicate prefilter: the rows of `d` whose doc_id is
+    the smallest of its md5(text) class."""
     reps = (
         d.select("doc_id", F.md5(F.col("text").cast("binary")).alias("th"))
         .groupBy("th")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    return shingles_of(d.join(reps, "doc_id", "left_semi"))
+    return d.join(reps, "doc_id", "left_semi")
 
 
 def shingles_of(d: DataFrame) -> DataFrame:
@@ -255,49 +261,10 @@ def near_pairs(sh: DataFrame) -> DataFrame:
     """Core of dedup_near over a cached (doc_id, h) shingle frame —
     split out so minhash_estimate_error can share one shingle
     materialization with the candidate/Jaccard stages."""
-    sigs = band_signatures(sh)
-    bucket_key = ["k", "m0", "m1"]
-    ok_buckets = (
-        sigs.groupBy(*bucket_key)
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") <= MAX_BUCKET_DOCS)
-        .select(*bucket_key)
+    cand = bucket_pairs(
+        band_signatures(sh), "doc_id", ["k", "m0", "m1"], MAX_BUCKET_DOCS
     )
-    capped = sigs.join(ok_buckets, bucket_key, "left_semi")
-    a = capped.select(F.col("doc_id").alias("doc_a"), *bucket_key)
-    b = capped.select(F.col("doc_id").alias("doc_b"), *bucket_key)
-    cand = (
-        a.join(b, bucket_key)
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    sa = sh.select(F.col("doc_id").alias("doc_a"), "h")
-    sb = sh.select(F.col("doc_id").alias("doc_b"), "h")
-    inter = (
-        cand.join(sa, "doc_a")
-        .join(sb, ["doc_b", "h"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            "n_a",
-            "n_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
+    return set_overlap(cand, sh, "h").select("*", jaccard())
 
 
 CLUSTER_JACCARD = 0.5  # standard near-dup cut over candidate pairs
@@ -512,18 +479,11 @@ def dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     long, so candidate pairs per gram are <= df^2/2 — bounded fan-out,
     no quadratic path. The Jaccard join touches candidates only.
     """
-    d = load_table(spark, sf_dir, "documents")
-    reps = (
-        d.select("doc_id", F.md5(F.col("text").cast("binary")).alias("th"))
-        .groupBy("th")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
     # Guard: Spark's sequence(1, n) is DESCENDING for n < 1 (it would
     # fabricate grams for sub-NGRAM_N texts), DuckDB's generate_series
     # is empty — filter short texts so both engines agree they have no
     # grams.
-    d = d.join(reps, "doc_id", "left_semi").where(
+    d = _rep_docs(load_table(spark, sf_dir, "documents")).where(
         F.length("text") >= NGRAM_N
     )
     idx = F.explode(
@@ -540,47 +500,8 @@ def dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager bound: distinct (doc_id, gram) digests = O(corpus tokens)
     # rows of two longs; MEMORY_AND_DISK cache spills, never OOMs (§5).
     grams = track_cache(grams, eager=True)
-    rare = (
-        grams.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df").between(NGRAM_DF_MIN, NGRAM_DF_MAX))
-        .select("g")
-    )
-    posts = grams.join(rare, "g", "left_semi")
-    a = posts.select(F.col("doc_id").alias("doc_a"), "g")
-    b = posts.select(F.col("doc_id").alias("doc_b"), "g")
-    cand = (
-        a.join(b, "g")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sizes = grams.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ga = grams.select(F.col("doc_id").alias("doc_a"), "g")
-    gb = grams.select(F.col("doc_id").alias("doc_b"), "g")
-    inter = (
-        cand.join(ga, "doc_a")
-        .join(gb, ["doc_b", "g"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
-    return (
-        inter.join(za, "doc_a")
-        .join(zb, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            "n_inter",
-            "n_a",
-            "n_b",
-            (
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-            ).alias("jaccard"),
-        )
-    )
+    cand = bucket_pairs(grams, "doc_id", "g", NGRAM_DF_MAX)
+    return set_overlap(cand, grams, "g").select("*", jaccard())
 
 
 SIMHASH_ORACLE = """
@@ -722,17 +643,11 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (int, int8); buckets above MAX_BUCKET_DOCS are skipped; the exact
     xor/bit_count runs on candidate pairs only, JVM-side.
     """
-    d = load_table(spark, sf_dir, "documents")
-    reps = (
-        d.select("doc_id", F.md5(F.col("text").cast("binary")).alias("th"))
-        .groupBy("th")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
     # eager bound: ONE signature row per representative doc (per-doc
     # bounded — the smallest frame in the query); no spill exposure.
     sim = track_cache(
-        simhash_frame(d.join(reps, "doc_id", "left_semi")), eager=True
+        simhash_frame(_rep_docs(load_table(spark, sf_dir, "documents"))),
+        eager=True,
     )
     band_k = F.explode(
         F.array(*[F.lit(k) for k in range(SIMHASH_N_BANDS)])
@@ -742,21 +657,7 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "k",
         F.expr("shiftright(simhash, k * 8) % 256").alias("bval"),
     )
-    ok = (
-        bands.groupBy("k", "bval")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .where(F.col("n_docs") <= MAX_BUCKET_DOCS)
-        .select("k", "bval")
-    )
-    capped = bands.join(ok, ["k", "bval"], "left_semi")
-    a = capped.select(F.col("doc_id").alias("doc_a"), "k", "bval")
-    b = capped.select(F.col("doc_id").alias("doc_b"), "k", "bval")
-    cand = (
-        a.join(b, ["k", "bval"])
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    cand = bucket_pairs(bands, "doc_id", ["k", "bval"], MAX_BUCKET_DOCS)
     sa = sim.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
     sb = sim.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
     hamming = F.bit_count(
@@ -1524,19 +1425,9 @@ def allpairs_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_a", "doc_b")
         .distinct()
     )
-    ta = terms.select(F.col("doc_id").alias("doc_a"), "term")
-    tb = terms.select(F.col("doc_id").alias("doc_b"), "term")
-    inter = (
-        cand.join(ta, "doc_a")
-        .join(tb, ["doc_b", "term"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        set_overlap(cand, terms, "term")
+        .withColumnRenamed("n_inter", "n_shared")
         .where(
             F.lit(APC_DEN) * F.col("n_shared") * F.col("n_shared")
             >= F.lit(APC_NUM) * F.col("n_a") * F.col("n_b")

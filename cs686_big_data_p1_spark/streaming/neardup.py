@@ -47,6 +47,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.pairs import capped, jaccard, set_overlap
 from ..operators.llm import MAX_BUCKET_DOCS, band_signatures, shingles_of
 from ..registry import query
 from ..tables import SCHEMAS, load_table
@@ -450,14 +451,8 @@ def neardup_stream_pairs(
         for name in ("hashes", "shingles", "sigs"):
             fresh[name] = False
         # Bucket cap on ACCUMULATED occupancy (see module docstring).
-        ok = (
-            all_sigs.groupBy(*_BUCKET_KEY)
-            .agg(F.count(F.lit(1)).alias("n_docs"))
-            .where(F.col("n_docs") <= MAX_BUCKET_DOCS)
-            .select(*_BUCKET_KEY)
-        )
-        capped_all = all_sigs.join(ok, _BUCKET_KEY, "left_semi")
-        capped_new = sigs_new.join(ok, _BUCKET_KEY, "left_semi")
+        capped_all = capped(all_sigs, _BUCKET_KEY, MAX_BUCKET_DOCS)
+        capped_new = capped_all.join(sigs_new, sigs_new.columns, "left_semi")
         # New-vs-all candidates only: a pair of two already-ingested
         # docs was matched when its second member arrived, so each
         # pair is generated in exactly one batch (no re-emission).
@@ -476,30 +471,9 @@ def neardup_stream_pairs(
         )
         # Exact Jaccard over the accumulated shingle store, candidate
         # pairs only — identical math to batch dedup_near.
-        sizes = store["shingles"].groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("n")
-        )
-        sa = store["shingles"].select(F.col("doc_id").alias("doc_a"), "h")
-        sb = store["shingles"].select(F.col("doc_id").alias("doc_b"), "h")
-        inter = (
-            cand.join(sa, "doc_a")
-            .join(sb, ["doc_b", "h"])
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_inter"))
-        )
-        za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("n_a"))
-        zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("n_b"))
         pairs_new = (
-            inter.join(za, "doc_a")
-            .join(zb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                (
-                    F.col("n_inter").cast("double")
-                    / (F.col("n_a") + F.col("n_b") - F.col("n_inter"))
-                ).alias("jaccard"),
-            )
+            set_overlap(cand, store["shingles"], "h")
+            .select("doc_a", "doc_b", jaccard())
             .where(F.col("jaccard") >= STREAM_NEARDUP_MIN_JACCARD)
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
         )

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import norm as v_norm
-from ..functions.vector import exact_cosine, pair_dot_pd, top_k
+from ..functions.vector import exact_cosine, pair_cos, pair_dot_pd, top_k
 from ..operators.ann import (
     ANN_N_QUERIES,
     DELTA_MOD,
@@ -571,15 +571,7 @@ def fold_sem_decon_batch(
     ev = sb.read.parquet(eval_path).where(F.col("cid").isin(cids))
     hits = (
         assigned.join(ev, "cid")
-        .select(
-            "train_doc",
-            "eval_doc",
-            "cid",
-            (
-                pair_dot_pd(F.col("a_emb"), F.col("b_emb"))
-                / (F.col("a_norm") * F.col("b_norm"))
-            ).alias("cosine"),
-        )
+        .select("train_doc", "eval_doc", "cid", pair_cos())
         .where(F.col("cosine") >= DECON_SEM_TAU)
     )
     try:

@@ -142,6 +142,68 @@ def test_dedup_embedding_caps_degenerate_bucket(spark):
     assert skipped_buckets(small).count() == 0
 
 
+def test_knn_graph_edges_symmetric_tied_and_capped(spark):
+    """knn_graph's frame core on a planted corpus: a near-duplicate
+    pair (0, 1); a source (10) with one nearest mate (11) and then
+    three identical copies (14, 12, 13) tied on cosine; a pile-up of
+    MAX_BUCKET_VECS + 1 identical vectors whose buckets are all over
+    the cap; and random filler. Edges run both ways with bit-equal
+    cosines, ties break on ascending dst_id, no source exceeds
+    KNN_GRAPH_K edges, and the pile-up gets none."""
+    from cs686_big_data_p1_spark.operators.ann import (
+        EMB_DIM,
+        KNN_GRAPH_K,
+        MAX_BUCKET_VECS,
+        knn_graph_edges,
+    )
+
+    rng = random.Random(2015)
+
+    def rnd():
+        return [rng.uniform(-0.5, 0.5) for _ in range(EMB_DIM)]
+
+    base, hub, pile = rnd(), rnd(), rnd()
+    tied = [x + 3e-3 * ((i % 5) - 2) for i, x in enumerate(hub)]
+    rows = [(0, base), (1, [x + 1e-4 for x in base])]
+    rows += [(10, hub), (11, [x + 1e-4 for x in hub])]
+    rows += [(14, tied), (12, tied), (13, tied)]
+    piled = range(100, 100 + MAX_BUCKET_VECS + 1)
+    rows += [(i, pile) for i in piled]
+    rows += [(200 + i, rnd()) for i in range(12)]
+    schema = "vec_id long, embedding array<float>"
+    out = knn_graph_edges(spark.createDataFrame(rows, schema))
+    assert out.dtypes == [
+        ("src_id", "bigint"), ("dst_id", "bigint"),
+        ("cosine", "double"), ("rank", "int"),
+    ]
+    edges = {(r.src_id, r.dst_id): r for r in out.collect()}
+
+    by_src = {}
+    for (s, d), r in edges.items():
+        by_src.setdefault(s, []).append(r)
+    for s, rs in by_src.items():
+        rs.sort(key=lambda r: r.rank)
+        assert len(rs) <= KNN_GRAPH_K
+        assert [r.rank for r in rs] == list(range(1, len(rs) + 1))
+        assert [(r.cosine, r.dst_id) for r in rs] == sorted(
+            ((r.cosine, r.dst_id) for r in rs), key=lambda t: (-t[0], t[1])
+        )
+    for (s, d), r in edges.items():
+        if (d, s) in edges:
+            assert edges[(d, s)].cosine == r.cosine  # bit-equal both ways
+    assert edges[(0, 1)].rank == edges[(1, 0)].rank == 1
+    assert edges[(0, 1)].cosine == edges[(1, 0)].cosine
+    assert [r.dst_id for r in by_src[10]] == [11, 12, 13, 14][:KNN_GRAPH_K]
+    assert not [k for k in edges if k[0] in piled or k[1] in piled]
+
+    # every vector's buckets over the cap: no edges, same typed frame
+    only_pile = knn_graph_edges(
+        spark.createDataFrame([(i, pile) for i in piled], schema)
+    )
+    assert only_pile.dtypes == out.dtypes
+    assert only_pile.count() == 0
+
+
 def test_dedup_embedding_contract(spark, registry):
     from cs686_big_data_p1_spark.operators.ann import DEDUP_COS_THRESHOLD
 

@@ -246,6 +246,15 @@ AUDITS: dict[str, dict] = {
     # join at all, so only pruning/codegen to assert.
     "embedding_drift": {"pruned": ["embeddings"], "codegen": True},
     "dedup_embedding": {"codegen": True},
+    # SemDeDup family: the cell assignment is a checkpointed memo, so
+    # the visible scans are the norms/pair sides (vec_id, embedding)
+    # and decontaminate's split tags (doc_id only); every pair join
+    # is a shuffle join on cid / vec_id, never a broadcast.
+    "dedup_semantic": {"pruned": ["embeddings"], "codegen": True},
+    "decontaminate_semantic": {
+        "pruned": ["documents", "embeddings"],
+        "codegen": True,
+    },
     # embeddings is 3 columns, all genuinely needed (id, label, vector)
     "doc_embedding_join": {"pruned": ["documents"], "codegen": True},
     "hb_tumbling": {"codegen": True},
