@@ -686,12 +686,9 @@ def _bucket_mates(e: DataFrame, directed: bool = False) -> DataFrame:
     (vec_id, embedding) frame `e`, buckets above MAX_BUCKET_VECS
     skipped: dedup_embedding's candidates (a < b) and knn_graph's
     (`directed`, both orientations)."""
-    # self-joined in bucket_pairs; without the cache both sides recompute
-    # eager bound: <= N_TABLES x 3-int rows per vector (per-vec bounded).
-    bk = track_cache(
-        _bucketed(e.select("vec_id", "embedding")).select("vec_id", "t", "bucket"),
-        eager=True,
-    )
+    # No cache: bucket_pairs' self-join reuses one (t, bucket) exchange
+    # for both sides, so the bucketing UDF runs once per execution.
+    bk = _bucketed(e.select("vec_id", "embedding")).select("vec_id", "t", "bucket")
     cand = bucket_pairs(bk, "vec_id", ["t", "bucket"], MAX_BUCKET_VECS, directed)
     vecs = e.select("vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"))
     return pair_cosine(cand, vecs, "vec_a", "vec_b")

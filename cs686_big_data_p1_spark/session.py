@@ -31,6 +31,14 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def default_driver_memory() -> str:
+    """Driver heap when ``SPARK_DRIVER_MEM`` is unset: half the host's
+    physical memory, capped at 16g, so a second Spark process beside
+    this one (a test run during a sweep) cannot exhaust the host."""
+    half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    return f"{min(half >> 20, 16 << 10)}m"
+
+
 def get_spark(app_name: str = "cs686-spark-engine") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -42,7 +50,10 @@ def get_spark(app_name: str = "cs686-spark-engine") -> SparkSession:
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")

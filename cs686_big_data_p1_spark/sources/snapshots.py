@@ -9,7 +9,9 @@ atomic filesystem rename per commit — no table-format dependency:
   * every commit writes a full snapshot under ``<table>/v=NNNNNNNN/``,
     staged in a hidden temp dir and RENAMED into place (rename is the
     atomic primitive on HDFS-compatible stores and POSIX alike), so a
-    reader can never observe a half-written version;
+    reader can never observe a half-written version. A version may hold
+    several tables, one subdirectory each (the near-dup stream store,
+    streaming/neardup.py); they publish together in that one rename;
   * the current version is simply the highest published directory —
     no manifest file to corrupt. Hadoop's ``FileSystem.rename`` is NOT
     a CAS when the destination directory exists (it moves the source
@@ -19,6 +21,9 @@ atomic filesystem rename per commit — no table-format dependency:
     under the final path. A loser finds its whole stage dir nested
     inside the winner's version, pulls it back out, and retries with
     the next number — no commit is ever silently dropped;
+  * an EXPECTED-VERSION commit publishes as exactly the number after
+    the version its writer read, or raises and publishes nothing, so a
+    read-modify-write never shadows a concurrent writer's commit;
   * readers pin a version (time travel) or take the latest; a reader
     holding version N is unaffected by later commits or by vacuum of
     OTHER versions (immutable snapshot isolation).
@@ -34,6 +39,7 @@ instead; this module keeps whole-table semantics deliberately simple.
 from __future__ import annotations
 
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -46,6 +52,10 @@ def _fs(spark: SparkSession, path: str):
     return p.getFileSystem(
         spark.sparkContext._jsc.hadoopConfiguration()
     ), p, jvm
+
+
+def _version_dir(table_path: str, v: int) -> str:
+    return f"{table_path}/v={v:0{_WIDTH}d}"
 
 
 def snapshot_versions(spark: SparkSession, table_path: str) -> list[int]:
@@ -63,12 +73,23 @@ def snapshot_versions(spark: SparkSession, table_path: str) -> list[int]:
 
 
 def _publish_stage(
-    spark: SparkSession, table_path: str, token: str
+    spark: SparkSession, table_path: str, token: str, version: int | None = None
 ) -> int:
     """The verified-CAS loop: rename ``<table>/.stage-<token>`` (which
-    must already contain its ``_commit-<token>`` marker) onto the next
-    free version number until the marker is observed directly under the
-    final path. Shared by write_snapshot and recover_stranded_stages.
+    must already contain its ``_commit-<token>`` marker) onto a version
+    number until the marker is observed directly under the final path.
+    Shared by recover_stranded_stages and, through _commit, by
+    write_snapshot and the near-dup stream store.
+
+    ``version=None`` takes the next free number, retrying past any
+    committer that wins it. An int is an EXPECTED-VERSION commit: the
+    stage publishes as exactly that number or not at all — if it is
+    taken, the stage is deleted and IOError raised, because the staged
+    state was derived from an older version and publishing it under a
+    later number would shadow the winner's commit. A rename that fails
+    (returns false or throws) while the stage stays put and the version
+    stays absent — permissions, quota — raises IOError naming the
+    stage: retrying cannot change that outcome.
 
     CRASH WINDOW (ADVICE r7): if this process dies after losing a race
     (its stage renamed INTO the winner's version) but before the
@@ -93,8 +114,7 @@ def _publish_stage(
             # instead of an error, or the caller would retry
             # write_snapshot and commit the same data twice (review r8).
             for pv in snapshot_versions(spark, table_path):
-                pdir = f"{table_path}/v={pv:0{_WIDTH}d}"
-                if fs.exists(jpath(f"{pdir}/{marker}")):
+                if fs.exists(jpath(f"{_version_dir(table_path, pv)}/{marker}")):
                     return pv
             # Not yet published — but maybe not deleted either
             # (ADVICE r8): a janitor that ADOPTED this stage can
@@ -121,15 +141,24 @@ def _publish_stage(
                 "version nor any nested stage — the stage was "
                 "deleted, not adopted"
             )
-        vs = snapshot_versions(spark, table_path)
-        v = (vs[-1] if vs else 0) + 1
-        final = f"{table_path}/v={v:0{_WIDTH}d}"
+        if version is None:
+            vs = snapshot_versions(spark, table_path)
+            v = (vs[-1] if vs else 0) + 1
+        else:
+            v = version
+        final = _version_dir(table_path, v)
         if fs.exists(jpath(final)):
-            continue  # published between listing and here; re-list
+            if version is None:
+                continue  # published between listing and here; re-list
+            fs.delete(jpath(stage), True)
+            raise IOError(
+                f"snapshot commit: version {v} of {table_path} is already "
+                f"published; expected-version stage {stage} dropped"
+            )
         try:
-            renamed = fs.rename(jpath(stage), jpath(final))
-        except Exception:  # noqa: BLE001 — source vanished in the race
-            continue  # loop re-enters the stage-existence branch
+            renamed, err = fs.rename(jpath(stage), jpath(final)), None
+        except Exception as e:  # noqa: BLE001 — e.g. source vanished in the race
+            renamed, err = False, e
         if renamed and fs.exists(jpath(f"{final}/{marker}")):
             return v  # marker directly under final ⇒ we own this version
         if renamed:
@@ -141,8 +170,31 @@ def _publish_stage(
                     f"snapshot commit race: could not recover stage "
                     f"dir from {nested}"
                 )
-        # renamed == False with the stage intact (e.g. dst appeared
-        # with rename semantics that do fail on existing dst): retry.
+        elif fs.exists(jpath(stage)) and not fs.exists(jpath(final)):
+            raise IOError(
+                f"snapshot commit: renaming stage {stage} onto {final} "
+                "failed and changed neither; the stage is kept"
+            ) from err
+        # Otherwise the stage vanished (a janitor adopted it) or the
+        # version appeared (a rename that fails on an existing dst):
+        # the loop re-checks both.
+
+
+def _commit(
+    spark: SparkSession,
+    table_path: str,
+    write_stage: Callable[[str], object],
+    version: int | None = None,
+) -> int:
+    """Stage one version through ``write_stage(stage_dir)``, add its
+    commit marker (written last, so a marker proves the data complete)
+    and publish it with _publish_stage; return the version number."""
+    token = uuid.uuid4().hex
+    stage = f"{table_path}/.stage-{token}"
+    write_stage(stage)
+    fs, _, jvm = _fs(spark, table_path)
+    fs.create(jvm.org.apache.hadoop.fs.Path(f"{stage}/_commit-{token}")).close()
+    return _publish_stage(spark, table_path, token, version)
 
 
 def write_snapshot(spark: SparkSession, df: DataFrame, table_path: str) -> int:
@@ -159,14 +211,7 @@ def write_snapshot(spark: SparkSession, df: DataFrame, table_path: str) -> int:
     stage dir from inside the winner's version and retries with the
     next number, so no LIVE concurrent commit is ever silently lost
     (for the crash window, see _publish_stage / recover_stranded_stages)."""
-    token = uuid.uuid4().hex
-    stage = f"{table_path}/.stage-{token}"
-    fs, _, jvm = _fs(spark, table_path)
-    df.write.mode("overwrite").parquet(stage)
-    fs.create(
-        jvm.org.apache.hadoop.fs.Path(f"{stage}/_commit-{token}")
-    ).close()
-    return _publish_stage(spark, table_path, token)
+    return _commit(spark, table_path, df.write.mode("overwrite").parquet)
 
 
 def find_stranded_stages(
@@ -239,7 +284,7 @@ def find_stranded_stages(
 
     scan(table_path, None)
     for v in snapshot_versions(spark, table_path):
-        scan(f"{table_path}/v={v:0{_WIDTH}d}", v)
+        scan(_version_dir(table_path, v), v)
     return sorted(found, key=lambda d: d["mtime_ms"])
 
 
@@ -288,7 +333,7 @@ def read_snapshot(
         version = vs[-1]
     if version not in vs:
         raise FileNotFoundError(f"version {version} not in {vs}")
-    return spark.read.parquet(f"{table_path}/v={version:0{_WIDTH}d}")
+    return spark.read.parquet(_version_dir(table_path, version))
 
 
 def vacuum_snapshots(
@@ -319,10 +364,7 @@ def vacuum_snapshots(
             "recover_stranded_stages() first"
         )
     for v in drop:
-        fs.delete(
-            jvm.org.apache.hadoop.fs.Path(f"{table_path}/v={v:0{_WIDTH}d}"),
-            True,
-        )
+        fs.delete(jvm.org.apache.hadoop.fs.Path(_version_dir(table_path, v)), True)
     return drop
 
 

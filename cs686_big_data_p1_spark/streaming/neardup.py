@@ -50,6 +50,12 @@ from pyspark.sql import functions as F
 from ..functions.pairs import capped, jaccard, set_overlap
 from ..operators.llm import MAX_BUCKET_DOCS, band_signatures, shingles_of
 from ..registry import query
+from ..sources.snapshots import (
+    _commit,
+    _version_dir,
+    snapshot_versions,
+    vacuum_snapshots,
+)
 from ..tables import SCHEMAS, load_table
 from .liveness import _run_to_memory, batch_fold_partitions, stream_clone
 
@@ -68,310 +74,55 @@ _STORE_SCHEMAS = {
 
 def load_neardup_store(
     spark: SparkSession, path: str | None
-) -> dict[str, DataFrame]:
-    """Load a persisted near-dup store (or fresh empties): one parquet
-    directory per state table. Only a MISSING table reads as "fresh"
-    (review r8: the old catch-everything branch turned a transient
-    read failure — permissions, partial previous write — into a silent
-    reset of the whole dedup history, which the end-of-drain write
-    then made permanent); any other error propagates to the caller.
+) -> tuple[dict[str, DataFrame], int]:
+    """The latest published version of the store at `path` and its
+    number, or typed empties and 0 when no version is published (or no
+    path is given). The store is a snapshot table (sources/snapshots.py)
+    whose every version holds all four state tables, so a load never
+    sees a half-written store and a crashed write's hidden stage is
+    invisible. A version that cannot be read raises (review r8: reading
+    a transient failure as "fresh" silently reset the dedup history).
     At 100 TB the shingle store would be written bucketed on doc_id
     (sources/bucketing.py) so the per-batch candidate joins co-locate;
     plain parquet keeps the test-scale round-trip dependency-free
     while the layout stays the same."""
-    from ..sources.snapshots import _fs
-
-    if path is not None:
-        _recover_orphan_store(spark, path)
+    versions = snapshot_versions(spark, path) if path else []
+    if not versions:
+        empty = {n: spark.createDataFrame([], s) for n, s in _STORE_SCHEMAS.items()}
+        return empty, 0
+    root = _version_dir(path, versions[-1])
     store = {}
     for name, schema in _STORE_SCHEMAS.items():
-        sub = f"{path}/{name}" if path else None
-        if sub is None:
-            store[name] = spark.createDataFrame([], schema)
-            continue
-        fs, p, _ = _fs(spark, sub)
-        if not fs.exists(p):
-            store[name] = spark.createDataFrame([], schema)
-            continue
-        store[name] = spark.read.schema(schema).parquet(sub)
+        store[name] = spark.read.schema(schema).parquet(f"{root}/{name}")
         store[name].first()  # surface read errors now, not mid-batch
-    return store
+    return store, versions[-1]
 
 
-def _recover_orphan_store(spark: SparkSession, path: str) -> None:
-    """Guard the stage-and-swap crash window at LOAD time (ADVICE r8):
-    a crash between write_neardup_store's two renames leaves the live
-    store MISSING while the entire previous state sits at
-    ``<path>.old-<tag>`` — and the old load path would silently treat
-    that as a fresh store, permanently resetting the dedup history the
-    moment the next drain writes. Detect the orphan and ROLL BACK:
-    rename the single ``.old-*`` sibling into place (completing the
-    interrupted swap in the safe direction — the staging data was never
-    published, so the pre-swap state is the last consistent one).
-    Multiple ``.old-*`` siblings mean two interleaved writers crashed;
-    no automatic choice is safe, so raise for the operator. Orphan
-    ``.staging-*`` siblings with the store missing and no ``.old-*``
-    mean the crash happened before the first rename of a FIRST-ever
-    write — the prior state was empty, so a fresh store is correct
-    (and a live concurrent first write looks identical; raising would
-    break it)."""
-    from ..sources.snapshots import _fs
-
-    fs, p, jvm = _fs(spark, path)
-    if fs.exists(p):
-        return
-    jpath = jvm.org.apache.hadoop.fs.Path
-    parent = p.getParent()
-    if parent is None or not fs.exists(parent):
-        return
-    base = p.getName()
-    olds = []
-    for st in fs.listStatus(parent):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith(f"{base}.old-"):
-            olds.append(name)
-    if not olds:
-        return
-    if len(olds) > 1:
-        raise IOError(
-            f"neardup store {path} is missing but multiple crash "
-            f"leftovers exist: {sorted(olds)} — interleaved writers; "
-            "recover the correct .old-* directory manually"
-        )
-    old = f"{path}.old-{olds[0].split('.old-', 1)[1]}"
-    if not fs.rename(jpath(old), p):
-        raise IOError(
-            f"neardup store {path} is missing; rollback rename of "
-            f"crash leftover {old} failed"
-        )
-
-
-def _stage_tables(
-    store: dict[str, DataFrame], staging: str, tag: str
-) -> None:
-    """Write all four state tables plus this write's IDENTITY TOKEN
-    (``_swap-<tag>``, an empty file at the staging root) to the staging
-    sibling. The token is what makes the post-swap verification
-    race-proof (ADVICE r9): checking only for a 'hashes' child cannot
-    distinguish OUR staging dir from a DIFFERENT store that landed at
-    the live path while we were mid-swap."""
-    from ..sources.snapshots import _fs
-
+def write_neardup_store(
+    store: dict[str, DataFrame], path: str, loaded: int
+) -> int:
+    """Commit the four state tables as version ``loaded + 1`` of the
+    store at `path`, where ``loaded`` is the version they were derived
+    from (0 for none), and return that version. All four tables are
+    staged and published together by one verified rename
+    (snapshots._commit), so a crash leaves the previous version serving
+    and a version never holds 'hashes' without its 'sigs'/'shingles'
+    (review r8: a doc marked seen whose signatures are gone can never
+    match a future near-duplicate). If another writer already published
+    ``loaded + 1`` the commit raises IOError and publishes nothing, so
+    its state is never shadowed. Superseded versions are then vacuumed.
+    Safe to call after a drain: every store frame has been
+    localCheckpoint-materialized by the last micro-batch, so none
+    still reads the version the vacuum deletes."""
     spark = next(iter(store.values())).sparkSession
-    for name in _STORE_SCHEMAS:
-        store[name].write.mode("overwrite").parquet(f"{staging}/{name}")
-    fs, _, jvm = _fs(spark, staging)
-    jpath = jvm.org.apache.hadoop.fs.Path
-    fs.create(jpath(f"{staging}/_swap-{tag}")).close()
 
+    def stage_tables(stage: str) -> None:
+        for name in _STORE_SCHEMAS:
+            store[name].write.parquet(f"{stage}/{name}")
 
-def _swap_tokens(fs, jvm, path: str) -> tuple:
-    """Sorted tuple of ``_swap-*`` identity-token names directly under
-    ``path`` (empty if the path is missing). Every store published by
-    this machinery carries exactly one; the tuple is the store's
-    identity fingerprint across renames."""
-    jpath = jvm.org.apache.hadoop.fs.Path
-    p = jpath(path)
-    if not fs.exists(p):
-        return ()
-    names = [st.getPath().getName() for st in fs.listStatus(p)]
-    return tuple(sorted(n for n in names if n.startswith("_swap-")))
-
-
-def _swap_begin(spark: SparkSession, path: str, tag: str) -> tuple:
-    """First half of the swap: rename the live store out of the way
-    (verified — Hadoop rename returns false instead of throwing on
-    several failure shapes). Returns ``(old_path, prev_tokens)`` where
-    ``prev_tokens`` is the live store's identity-token fingerprint
-    captured immediately before the rename — _swap_finish uses it to
-    prove that a re-created live path really is OUR rolled-back
-    previous state and not another writer's committed store (ADVICE
-    r11: with the .old name consumed by a reader rollback, the two
-    worlds are otherwise indistinguishable, and re-asiding the wrong
-    one ends in fs.delete destroying committed data)."""
-    from ..sources.snapshots import _fs
-
-    fs, p, jvm = _fs(spark, path)
-    jpath = jvm.org.apache.hadoop.fs.Path
-    old = f"{path}.old-{tag}"
-    prev_tokens = _swap_tokens(fs, jvm, path)
-    if fs.exists(p) and not fs.rename(p, jpath(old)):
-        raise IOError(
-            f"neardup store swap: rename {path} -> {old} failed "
-            "(leftover .old dir or concurrent drain?) — state not "
-            f"updated; staging left at {path}.staging-{tag}"
-        )
-    return old, prev_tokens
-
-
-# Bound on reader-rollback ping-pong rounds in _swap_finish. Each
-# retry is only needed when a reader's _recover_orphan_store fires
-# inside the microsecond rename window, and every rollback CONSUMES
-# the .old name (the reader renames it to live), so sustained
-# ping-pong requires a fresh reader load landing in every successive
-# window — vanishingly unlikely; 5 rounds is already generous.
-_SWAP_RETRIES = 5
-
-
-def _swap_finish(
-    spark: SparkSession,
-    path: str,
-    tag: str,
-    old: str,
-    prev_tokens: tuple = (),
-) -> None:
-    """Second half of the swap: publish staging at the live path and
-    verify THIS WRITE'S identity landed there — retrying until the
-    publish sticks (VERDICT r10 #5: prevention, not just detection).
-
-    The race: between our two renames, a reader's
-    _recover_orphan_store (or a concurrent writer) re-creates the live
-    path, so our rename(staging -> path) NESTS staging one level
-    inside that store while still returning true. A bare 'does
-    path/hashes exist' check passes in that world — the restored store
-    has a hashes table of its own — which is exactly how the drain's
-    state update used to be lost. The ``_swap-<tag>`` token is unique
-    to this write, so finding it directly under the live path proves
-    OUR staging is what is being served.
-
-    Since r11 the token check is the CONVERGENCE predicate of a retry
-    loop rather than a terminal error: when the token is missing but
-    our staging sits nested under the live path (the reader-rollback
-    signature), we un-nest it back to the staging sibling, move the
-    re-created live store aside (the rollback consumed the .old name,
-    so the same name is free again — at most one .old-<tag> ever
-    exists), and publish again. Each reader load rolls back at most
-    once, so the loop converges; _SWAP_RETRIES bounds the pathological
-    case and the loud IOError remains as the backstop. A missing token
-    WITHOUT our nested staging still raises immediately — that live
-    store is some OTHER writer's data and no automatic choice is safe.
-
-    The re-aside itself is gated on ``prev_tokens`` (ADVICE r11): the
-    re-created live store must carry exactly the identity tokens the
-    previous live store carried at _swap_begin. A concurrent writer
-    that completed a FULL begin/publish cycle after a reader rollback
-    consumed our .old leaves the live path with its own fresh token
-    and our .old absent — without the fingerprint check that world is
-    indistinguishable from a bare rollback, and re-asiding it would
-    end with fs.delete(old) destroying that writer's committed data."""
-    from ..sources.snapshots import _fs
-
-    staging = f"{path}.staging-{tag}"
-    fs, p, jvm = _fs(spark, path)
-    jpath = jvm.org.apache.hadoop.fs.Path
-    nested = f"{path}/{staging.rsplit('/', 1)[-1]}"
-    published = False
-    for _attempt in range(_SWAP_RETRIES):
-        if fs.exists(p):
-            # A reader rollback re-created the live path from .old
-            # between our renames (or between retry rounds). Its
-            # rollback consumed the .old name, so renaming the
-            # restored store back aside under the SAME name is safe
-            # and keeps the single-.old invariant the reader relies
-            # on. If .old STILL exists alongside a re-created live
-            # path, the live store cannot be our rolled-back state —
-            # it is another writer's — and re-asiding it would nest it
-            # under .old and later delete it: raise instead, keeping
-            # both states on disk for the operator.
-            if fs.exists(jpath(old)):
-                raise IOError(
-                    f"neardup store swap: {path} was re-created while "
-                    f"{old} still exists — a concurrent writer, not a "
-                    "reader rollback; manual recovery needed (staging "
-                    f"preserved at {staging})"
-                )
-            # .old absent alone does NOT prove a reader rollback: a
-            # concurrent writer whose full begin/publish cycle ran
-            # after the rollback consumed our .old leaves the same
-            # shape (ADVICE r11). Demand the live store carry EXACTLY
-            # the identity tokens captured at _swap_begin — only our
-            # rolled-back previous state can — before re-asiding it
-            # into a name the final fs.delete will destroy.
-            live_tokens = _swap_tokens(fs, jvm, path)
-            if not prev_tokens or live_tokens != prev_tokens:
-                raise IOError(
-                    f"neardup store swap: {path} was re-created with "
-                    f"identity tokens {list(live_tokens)} != the "
-                    f"pre-swap fingerprint {list(prev_tokens)} — a "
-                    "concurrent writer's committed store, not our "
-                    "reader-rolled-back state; manual recovery needed "
-                    f"(staging preserved at {staging})"
-                )
-            if not fs.rename(p, jpath(old)):
-                raise IOError(
-                    f"neardup store swap: re-aside rename {path} -> "
-                    f"{old} failed mid-retry — staging preserved at "
-                    f"{staging}; state not updated"
-                )
-        if not fs.rename(jpath(staging), p):
-            raise IOError(
-                f"neardup store swap: rename {staging} -> {path} failed — "
-                f"previous state preserved at {old}"
-            )
-        if fs.exists(jpath(f"{path}/_swap-{tag}")):
-            published = True
-            break
-        if fs.exists(jpath(nested)):
-            # Reader-rollback signature: the live path was re-created
-            # after our exists() check and the publish rename nested
-            # staging inside it. Un-nest and go around again.
-            if not fs.rename(jpath(nested), jpath(staging)):
-                raise IOError(
-                    f"neardup store swap: un-nest rename {nested} -> "
-                    f"{staging} failed — manual recovery needed"
-                )
-            continue
-        raise IOError(
-            f"neardup store swap: {path} exists but carries neither this "
-            f"write's identity token _swap-{tag} nor its nested staging "
-            "dir — a DIFFERENT writer's store landed at the live path "
-            "mid-swap; the drain's state update was NOT published "
-            f"(staging consumed; previous state at {old})"
-        )
-    if not published:
-        raise IOError(
-            f"neardup store swap: publish did not converge after "
-            f"{_SWAP_RETRIES} rounds of reader-rollback ping-pong — "
-            f"staging preserved at {staging}, previous state at {old}"
-        )
-    if fs.exists(jpath(nested)):
-        raise IOError(
-            f"neardup store swap: {path} contains a nested staging dir "
-            f"{nested} — two writers interleaved; manual recovery needed"
-        )
-    if not fs.exists(jpath(f"{path}/hashes")):
-        raise IOError(
-            f"neardup store swap: {path} exists but holds no 'hashes' "
-            "table after the swap — staging incomplete; state update lost"
-        )
-    if fs.exists(jpath(old)):
-        fs.delete(jpath(old), True)
-
-
-def write_neardup_store(store: dict[str, DataFrame], path: str) -> None:
-    """Persist the accumulated state tables with a STAGE-AND-SWAP so a
-    crash can never leave the four tables internally inconsistent
-    (review r8: sequential in-place overwrites could persist 'hashes'
-    without 'sigs'/'shingles' — a doc marked seen whose signatures are
-    gone can never match a future near-duplicate). All four tables are
-    written to a staging sibling first; the live store is then swapped
-    in two renames. The crash window is between the two renames and
-    yields a MISSING store whose previous state survives at
-    <path>.old-*; load_neardup_store detects that shape and ROLLS the
-    .old dir back into place (ADVICE r8 — never a silent fresh start,
-    never a half-updated store). The post-swap check verifies this
-    write's own staging IDENTITY landed at the live path (ADVICE r9 —
-    see _swap_finish for the reader-rollback race it closes). Safe to
-    call after a drain: every store frame has been
-    localCheckpoint-materialized by the last micro-batch, so the
-    staging write never reads its own output."""
-    import uuid as _uuid
-
-    spark = next(iter(store.values())).sparkSession
-    tag = _uuid.uuid4().hex[:8]
-    _stage_tables(store, f"{path}.staging-{tag}", tag)
-    old, prev_tokens = _swap_begin(spark, path, tag)
-    _swap_finish(spark, path, tag, old, prev_tokens)
+    version = _commit(spark, path, stage_tables, loaded + 1)
+    vacuum_snapshots(spark, path, keep_last=1)
+    return version
 
 
 def neardup_stream_pairs(
@@ -385,24 +136,18 @@ def neardup_stream_pairs(
     WRITTEN back after the drain — so a nightly crawl ingest resumes
     against everything previously ingested instead of rescanning it
     (the restart pytest pins two-delivery == one-shot == batch)."""
-    store: dict[str, DataFrame] = load_neardup_store(spark, store_path)
+    store, loaded = load_neardup_store(spark, store_path)
     # Fresh-store fast path (r16, guide §1 measured): on the FIRST
-    # delivery every state table is an empty LocalRelation, and
-    # union-with-empty followed by localCheckpoint re-materialized a
-    # full second copy of the just-checkpointed sh_new/sigs_new/new
-    # frames — three redundant eager job waves per batch 0 (the only
-    # batch the single-drain bench path ever runs). Track emptiness
-    # per table and adopt the already-checkpointed new frames
-    # directly; rows are identical (U with empty is identity), and the
-    # multi-delivery pytests still exercise the union path on every
-    # non-fresh batch.
-    fresh = {name: store_path is None for name in store}
-    if store_path is not None:
-        from ..sources.snapshots import _fs
-
-        for name in store:
-            fs, p, _ = _fs(spark, f"{store_path}/{name}")
-            fresh[name] = not fs.exists(p)
+    # delivery (no published version) every state table is an empty
+    # LocalRelation, and union-with-empty followed by localCheckpoint
+    # re-materialized a full second copy of the just-checkpointed
+    # sh_new/sigs_new/new frames — three redundant eager job waves per
+    # batch 0 (the only batch the single-drain bench path ever runs).
+    # Track emptiness per table and adopt the already-checkpointed new
+    # frames directly; rows are identical (U with empty is identity),
+    # and the multi-delivery pytests still exercise the union path on
+    # every non-fresh batch.
+    fresh = dict.fromkeys(store, loaded == 0)
 
     def process(batch: DataFrame, batch_id: int) -> None:
         hashed = batch.select(
@@ -507,9 +252,8 @@ def neardup_stream_pairs(
     )
     q.awaitTermination()
     if store_path and n_batches["n"] > 0:
-        # no-batch drains skip the write: the store frames would still
-        # be lazy readers of the very parquet the overwrite truncates
-        write_neardup_store(store, store_path)
+        # a drain with no batches changed nothing, so it commits nothing
+        write_neardup_store(store, store_path, loaded)
     return store["pairs"]
 
 

@@ -410,3 +410,56 @@ def test_cdc_apply_stream_reconstructs_table(spark, tmp_path):
             for r in read_snapshot(spark, src, v).collect()
         }
         assert got == want, f"replica v{v} diverged"
+
+
+@pytest.mark.parametrize("failure", ["returns_false", "raises"])
+def test_publish_stage_failed_rename_raises_not_spins(
+    spark, tmp_path, monkeypatch, failure
+):
+    """A publish rename that keeps failing while the stage stays intact
+    and the version stays absent (permissions, quota) must raise
+    IOError naming the stage after one attempt, not retry forever. The
+    stub stops a spinning loop with a BaseException past a bound, which
+    a retry's ``except Exception`` cannot swallow, so a regression
+    fails instead of hanging."""
+    import os
+    import re
+
+    import cs686_big_data_p1_spark.sources.snapshots as snap
+
+    class Spun(BaseException):
+        pass
+
+    calls = {"n": 0}
+
+    class FailingFS:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            calls["n"] += 1
+            if calls["n"] > 50:
+                raise Spun
+            if failure == "raises":
+                raise RuntimeError("quota exceeded")
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    real_fs_fn = snap._fs
+    tbl = str(tmp_path / "tbl")
+    token = "refused01"
+    stage = f"{tbl}/.stage-{token}"
+    spark.range(3).write.parquet(stage)
+    open(os.path.join(stage, f"_commit-{token}"), "w").close()
+    def failing_fs(s, path):
+        fs, p, jvm = real_fs_fn(s, path)
+        return FailingFS(fs), p, jvm
+
+    monkeypatch.setattr(snap, "_fs", failing_fs)
+    with pytest.raises(IOError, match=re.escape(f"stage {stage} ")):
+        snap._publish_stage(spark, tbl, token)
+    assert calls["n"] == 1
+    assert os.path.isdir(stage)
+    assert snapshot_versions(spark, tbl) == []

@@ -465,7 +465,9 @@ def test_stream_dedup_near_resumes_from_persisted_store(
     }
     assert got == want
     assert (910001, 910002) in got  # found ACROSS deliveries via the store
-    assert os.path.isdir(f"{store}/shingles")
+    # one version per delivery, the superseded one vacuumed
+    assert sorted(os.listdir(store)) == ["v=00000002"]
+    assert os.path.isdir(f"{store}/v=00000002/shingles")
 
 
 def test_stream_dedup_ttl_suppresses_inwindow_evicts_after(spark, tmp_path):
@@ -815,16 +817,19 @@ def test_stream_attribution_outer_finalization(spark, tmp_path):
     assert oracle_rows == want
 
 
-def test_neardup_store_crash_between_renames_rolls_back(spark, tmp_path):
-    """ADVICE r8: a crash between write_neardup_store's two renames
-    leaves the live store MISSING with the whole previous state at
-    <path>.old-<tag>. load_neardup_store must roll the .old dir back
-    into place (not silently start fresh — that would permanently
-    reset the dedup history on the next write); two .old siblings
-    (interleaved crashed writers) must raise instead of guessing."""
+def test_neardup_store_crash_before_publish_serves_previous(
+    spark, tmp_path, monkeypatch
+):
+    """A write that stages all four tables but dies before the publish
+    rename leaves the previous version serving: a load while the stage
+    exists and after the crash both read it, and the dot-prefixed stage
+    never surfaces. A path holding only such a stage (a crashed first
+    write) loads as a fresh store."""
     import os
 
-    from cs686_big_data_p1_spark.sources.snapshots import _fs
+    import pytest as _pytest
+
+    import cs686_big_data_p1_spark.sources.snapshots as snap
     from cs686_big_data_p1_spark.streaming.neardup import (
         _STORE_SCHEMAS,
         load_neardup_store,
@@ -832,47 +837,54 @@ def test_neardup_store_crash_between_renames_rolls_back(spark, tmp_path):
     )
 
     store_path = str(tmp_path / "store")
-    store = load_neardup_store(spark, None)
+    store, loaded = load_neardup_store(spark, None)
+    assert loaded == 0
     store["hashes"] = spark.createDataFrame(
         [("aaa",), ("bbb",)], _STORE_SCHEMAS["hashes"]
     )
-    write_neardup_store(store, store_path)
+    assert write_neardup_store(store, store_path, loaded) == 1
 
-    # simulate the crash window: live store renamed away, second rename
-    # never happened
-    fs, p, jvm = _fs(spark, store_path)
-    jpath = jvm.org.apache.hadoop.fs.Path
-    assert fs.rename(p, jpath(f"{store_path}.old-crash1"))
-    assert not os.path.isdir(store_path)
+    class Crash(Exception):
+        pass
 
-    loaded = load_neardup_store(spark, store_path)
-    assert {r.th for r in loaded["hashes"].collect()} == {"aaa", "bbb"}
-    assert os.path.isdir(store_path)  # rolled back into place
-    assert not os.path.isdir(f"{store_path}.old-crash1")
+    mid_write = []
 
-    # two interleaved crash leftovers: no safe automatic choice
-    assert fs.rename(p, jpath(f"{store_path}.old-crash2"))
-    os.makedirs(f"{store_path}.old-crash3/hashes")
+    def crash_before_publish(s, table_path, token, version=None):
+        mid_write.append(load_neardup_store(s, table_path))
+        raise Crash
+
+    store2, loaded = load_neardup_store(spark, store_path)
+    store2["hashes"] = spark.createDataFrame([("new",)], _STORE_SCHEMAS["hashes"])
+    first = str(tmp_path / "first")
+    monkeypatch.setattr(snap, "_publish_stage", crash_before_publish)
+    with _pytest.raises(Crash):
+        write_neardup_store(store2, store_path, loaded)
+    with _pytest.raises(Crash):
+        write_neardup_store(store2, first, 0)
+    monkeypatch.undo()
+
+    served, v = mid_write[0]
+    assert v == 1
+    assert {r.th for r in served["hashes"].collect()} == {"aaa", "bbb"}
+    stages = [n for n in os.listdir(store_path) if n.startswith(".stage-")]
+    assert len(stages) == 1
+    assert os.path.isdir(f"{store_path}/{stages[0]}/shingles")
+    served, v = load_neardup_store(spark, store_path)
+    assert v == 1
+    assert {r.th for r in served["hashes"].collect()} == {"aaa", "bbb"}
+    assert mid_write[1][1] == 0
+    fresh, v = load_neardup_store(spark, first)
+    assert v == 0 and fresh["hashes"].count() == 0
+
+
+def test_neardup_store_write_verifies_swap(spark, tmp_path, monkeypatch):
+    """A stage-to-version rename that reports false (Hadoop's failure
+    shape, e.g. permissions) must make the write raise, naming the kept
+    stage, rather than report success or retry forever; the previous
+    version keeps serving."""
     import pytest as _pytest
 
-    with _pytest.raises(IOError):
-        load_neardup_store(spark, store_path)
-
-    # orphan .staging with NO .old and store missing = crashed FIRST
-    # write (prior state was empty): fresh store is correct
-    for leftover in (f"{store_path}.old-crash2", f"{store_path}.old-crash3"):
-        fs.delete(jpath(leftover), True)
-    os.makedirs(f"{store_path}.staging-x/hashes")
-    fresh = load_neardup_store(spark, store_path)
-    assert fresh["hashes"].count() == 0
-
-
-def test_neardup_store_write_verifies_swap(spark, tmp_path):
-    """ADVICE r8: write_neardup_store must check both rename results —
-    an unchecked false on the first rename would nest the staging dir
-    INSIDE the still-live store ('success' with the update lost). With
-    a live store whose rename-away is forced to fail, the write must
-    raise, and the live store must keep serving its old tables."""
+    import cs686_big_data_p1_spark.sources.snapshots as snap
     from cs686_big_data_p1_spark.streaming.neardup import (
         _STORE_SCHEMAS,
         load_neardup_store,
@@ -880,30 +892,21 @@ def test_neardup_store_write_verifies_swap(spark, tmp_path):
     )
 
     store_path = str(tmp_path / "store")
-    store = load_neardup_store(spark, None)
+    store, loaded = load_neardup_store(spark, None)
     store["hashes"] = spark.createDataFrame([("old1",)], _STORE_SCHEMAS["hashes"])
-    write_neardup_store(store, store_path)
-
-    # Force the first rename to report false (Hadoop-style failure)
-    import cs686_big_data_p1_spark.streaming.neardup as nd
-
-    real_fs = __import__(
-        "cs686_big_data_p1_spark.sources.snapshots", fromlist=["_fs"]
-    )._fs
+    write_neardup_store(store, store_path, loaded)
 
     class StubbornFS:
         def __init__(self, fs):
             self._fs = fs
 
         def rename(self, src, dst):
-            if src.getName() == "store" and ".old-" in dst.getName():
-                return False  # live store refuses to move
+            if dst.getName().startswith("v="):
+                return False  # the publish rename refuses
             return self._fs.rename(src, dst)
 
         def __getattr__(self, name):
             return getattr(self._fs, name)
-
-    import cs686_big_data_p1_spark.sources.snapshots as snap
 
     orig = snap._fs
 
@@ -911,197 +914,60 @@ def test_neardup_store_write_verifies_swap(spark, tmp_path):
         fs, p, jvm = orig(s, path)
         return StubbornFS(fs), p, jvm
 
-    snap._fs = stubborn
-    try:
-        store2 = load_neardup_store(spark, store_path)
-        store2["hashes"] = spark.createDataFrame(
-            [("new1",)], _STORE_SCHEMAS["hashes"]
-        )
-        import pytest as _pytest
+    store2, loaded = load_neardup_store(spark, store_path)
+    store2["hashes"] = spark.createDataFrame([("new1",)], _STORE_SCHEMAS["hashes"])
+    monkeypatch.setattr(snap, "_fs", stubborn)
+    with _pytest.raises(IOError, match=r"stage .*\.stage-"):
+        write_neardup_store(store2, store_path, loaded)
+    monkeypatch.undo()
 
-        with _pytest.raises(IOError):
-            write_neardup_store(store2, store_path)
-    finally:
-        snap._fs = orig
-
-    # live store unharmed, still serving the OLD state, not nested-into
-    survived = load_neardup_store(spark, store_path)
+    survived, v = load_neardup_store(spark, store_path)
+    assert v == 1
     assert {r.th for r in survived["hashes"].collect()} == {"old1"}
 
 
-def test_neardup_store_reader_rollback_race_converges(spark, tmp_path):
-    """VERDICT r10 #5 (upgrading ADVICE r9 from detection to
-    PREVENTION): reader-side orphan rollback racing a live writer's
-    stage-and-swap must no longer lose the drain's update. Injected
-    interleaving: writer renames live -> .old, a READER loads, sees the
-    store missing, and rolls .old back into place; the writer's publish
-    must then re-aside the restored store (the rollback consumed the
-    .old name) and land its staging with the identity token at the live
-    path — converging, not raising. Post-conditions: the live store
-    serves the DRAINED state, carries this write's token, and no .old /
-    .staging / nested leftovers remain."""
-    import os
-
-    from cs686_big_data_p1_spark.streaming.neardup import (
-        _STORE_SCHEMAS,
-        _recover_orphan_store,
-        _stage_tables,
-        _swap_begin,
-        _swap_finish,
-        load_neardup_store,
-        write_neardup_store,
-    )
-
-    store_path = str(tmp_path / "store")
-    store = load_neardup_store(spark, None)
-    store["hashes"] = spark.createDataFrame(
-        [("prior",)], _STORE_SCHEMAS["hashes"]
-    )
-    write_neardup_store(store, store_path)
-
-    # Writer: stage the drain's update and complete the FIRST rename.
-    store2 = load_neardup_store(spark, store_path)
-    store2["hashes"] = spark.createDataFrame(
-        [("prior",), ("drained",)], _STORE_SCHEMAS["hashes"]
-    )
-    tag = "racetag1"
-    _stage_tables(store2, f"{store_path}.staging-{tag}", tag)
-    old, prev_tokens = _swap_begin(spark, store_path, tag)
-    assert not os.path.isdir(store_path)  # mid-swap crash window
-
-    # Reader races in: sees the store missing, rolls .old back.
-    _recover_orphan_store(spark, store_path)
-    assert os.path.isdir(store_path)
-
-    # Writer resumes: the publish must converge despite the rollback
-    # (the rolled-back store carries the pre-swap identity tokens, so
-    # the ADVICE-r11 fingerprint gate lets the re-aside through).
-    _swap_finish(spark, store_path, tag, old, prev_tokens)
-
-    served = load_neardup_store(spark, store_path)
-    assert {r.th for r in served["hashes"].collect()} == {"prior", "drained"}
-    assert os.path.exists(f"{store_path}/_swap-{tag}")  # our write won
-    assert not os.path.exists(old)
-    assert not os.path.exists(f"{store_path}.staging-{tag}")
-    assert not os.path.isdir(f"{store_path}/store.staging-{tag}")
-
-
 def test_neardup_store_concurrent_writer_still_raises(spark, tmp_path):
-    """The retry loop must NOT paper over a genuine two-writer
-    interleaving: if the live path is re-created while OUR .old still
-    exists, the live store cannot be our rolled-back state (a reader
-    rollback would have consumed the .old name) — re-asiding it would
-    nest a different writer's data under .old and later delete it.
-    _swap_finish must raise and preserve all three states on disk."""
+    """Expected-version commit: two writers load the same version v and
+    A commits v + 1. B's commit must raise and publish nothing — not
+    land as v + 2 over A's state — so A's state is what loads."""
     import os
 
     import pytest as _pytest
 
     from cs686_big_data_p1_spark.streaming.neardup import (
         _STORE_SCHEMAS,
-        _stage_tables,
-        _swap_begin,
-        _swap_finish,
         load_neardup_store,
         write_neardup_store,
     )
 
     store_path = str(tmp_path / "store")
-    store = load_neardup_store(spark, None)
+    store, loaded = load_neardup_store(spark, None)
     store["hashes"] = spark.createDataFrame(
         [("prior",)], _STORE_SCHEMAS["hashes"]
     )
-    write_neardup_store(store, store_path)
+    write_neardup_store(store, store_path, loaded)
 
-    store2 = load_neardup_store(spark, store_path)
-    store2["hashes"] = spark.createDataFrame(
-        [("prior",), ("drained",)], _STORE_SCHEMAS["hashes"]
-    )
-    tag = "racetag2"
-    _stage_tables(store2, f"{store_path}.staging-{tag}", tag)
-    old, prev_tokens = _swap_begin(spark, store_path, tag)
+    def drained(extra):
+        # a drain leaves every store frame localCheckpointed, so none
+        # still reads the version a concurrent commit vacuums
+        st, v = load_neardup_store(spark, store_path)
+        st = {n: df.localCheckpoint(eager=True) for n, df in st.items()}
+        st["hashes"] = spark.createDataFrame(
+            [("prior",), (extra,)], _STORE_SCHEMAS["hashes"]
+        )
+        return st, v
 
-    # A concurrent writer publishes its own store at the live path
-    # while our .old-<tag> still exists.
-    foreign = load_neardup_store(spark, None)
-    foreign["hashes"] = spark.createDataFrame(
-        [("foreign",)], _STORE_SCHEMAS["hashes"]
-    )
-    write_neardup_store(foreign, store_path)
+    a, va = drained("from_a")
+    b, vb = drained("from_b")
+    assert va == vb == 1
+    assert write_neardup_store(a, store_path, va) == 2
+    with _pytest.raises(IOError, match="already published"):
+        write_neardup_store(b, store_path, vb)
 
-    with _pytest.raises(IOError, match="concurrent writer"):
-        _swap_finish(spark, store_path, tag, old, prev_tokens)
-
-    # All three states preserved for the operator: the foreign live
-    # store, our pre-drain .old, and our staged update.
-    served = load_neardup_store(spark, store_path)
-    assert {r.th for r in served["hashes"].collect()} == {"foreign"}
-    assert os.path.isdir(old)
-    assert os.path.isdir(f"{store_path}.staging-{tag}")
-
-
-def test_neardup_store_rollback_then_foreign_writer_raises(
-    spark, tmp_path
-):
-    """ADVICE r11 (medium): a reader rollback CONSUMES our .old, and a
-    concurrent writer then completes a FULL begin/publish cycle before
-    our retry — the live path now holds the OTHER writer's committed
-    store with our .old absent, byte-for-byte indistinguishable from a
-    bare rollback by directory shape alone. Pre-fix, _swap_finish
-    re-asided that store, published over it, and the terminal
-    fs.delete(old) destroyed the other writer's committed data. The
-    identity-token fingerprint captured at _swap_begin must make this
-    raise instead, preserving the foreign store."""
-    import os
-
-    import pytest as _pytest
-
-    from cs686_big_data_p1_spark.streaming.neardup import (
-        _STORE_SCHEMAS,
-        _recover_orphan_store,
-        _stage_tables,
-        _swap_begin,
-        _swap_finish,
-        load_neardup_store,
-        write_neardup_store,
-    )
-
-    store_path = str(tmp_path / "store")
-    store = load_neardup_store(spark, None)
-    store["hashes"] = spark.createDataFrame(
-        [("prior",)], _STORE_SCHEMAS["hashes"]
-    )
-    write_neardup_store(store, store_path)
-
-    store2 = load_neardup_store(spark, store_path)
-    store2["hashes"] = spark.createDataFrame(
-        [("prior",), ("drained",)], _STORE_SCHEMAS["hashes"]
-    )
-    tag = "racetag3"
-    _stage_tables(store2, f"{store_path}.staging-{tag}", tag)
-    old, prev_tokens = _swap_begin(spark, store_path, tag)
-
-    # Reader rollback consumes our .old name...
-    _recover_orphan_store(spark, store_path)
-    assert not os.path.isdir(old)
-
-    # ...then a concurrent writer runs a COMPLETE cycle: its own
-    # begin (live -> its .old), publish, verify, delete-its-old. The
-    # live path now carries a fresh foreign token and our .old is gone.
-    foreign = load_neardup_store(spark, None)
-    foreign["hashes"] = spark.createDataFrame(
-        [("foreign",)], _STORE_SCHEMAS["hashes"]
-    )
-    write_neardup_store(foreign, store_path)
-
-    with _pytest.raises(IOError, match="identity tokens"):
-        _swap_finish(spark, store_path, tag, old, prev_tokens)
-
-    # The foreign writer's committed store survives, and our staged
-    # update is preserved for the operator.
-    served = load_neardup_store(spark, store_path)
-    assert {r.th for r in served["hashes"].collect()} == {"foreign"}
-    assert os.path.isdir(f"{store_path}.staging-{tag}")
+    served, v = load_neardup_store(spark, store_path)
+    assert v == 2
+    assert {r.th for r in served["hashes"].collect()} == {"prior", "from_a"}
+    assert sorted(os.listdir(store_path)) == ["v=00000002"]
 
 
 def test_stream_ivf_assign_matches_batch_append(spark):

@@ -47,6 +47,7 @@ def main() -> int:
     from pyspark.sql import SparkSession
 
     from cs686_big_data_p1_spark import registry, views
+    from cs686_big_data_p1_spark.session import default_driver_memory
 
     registry.load_all()
     names = args or sorted(registry.QUERIES)
@@ -64,7 +65,8 @@ def main() -> int:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g")
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM", default_driver_memory()),
         )
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedJobs", "20000")
