@@ -33,6 +33,7 @@ in expectation and AQE skew-join covers pathological keys.
 from __future__ import annotations
 
 import hashlib
+import json
 from functools import reduce
 
 import numpy as np
@@ -55,6 +56,15 @@ from ..functions.vector import (
     top_k,
 )
 from ..registry import query, track_cache
+from ..sources.snapshots import (
+    _commit,
+    _fs,
+    _read_text,
+    _version_dir,
+    _version_name,
+    _write_text,
+    snapshot_versions,
+)
 from ..tables import fixture_memo, fixture_store, load_table
 from .llm import KNN_K, KNN_N_QUERIES, KNN_ORACLE, knn_bruteforce
 from .splits import SPLIT_BOUNDS
@@ -694,34 +704,197 @@ def _bucket_mates(e: DataFrame, directed: bool = False) -> DataFrame:
     return pair_cosine(cand, vecs, "vec_a", "vec_b")
 
 
+# --- the IVF store: one snapshot table of incremental versions ------------
+#
+# The physical store is a snapshot table (sources/snapshots.py) whose
+# versions are incremental. Version N holds only the files mutation N
+# wrote: data under v=N/cid=<c>/ and tombstones under
+# v=N/_tombstones/cell=<c>/ (cid stays a column inside tombstone files:
+# the tombstone dirs of two versions cannot share one partition-
+# discovering read). Its v=N/_manifest.json maps each cell to its live
+# data and tombstone files across all versions. A mutation loads the
+# latest manifest (version v), stages its new files and the next
+# manifest, and publishes both as exactly v + 1 through
+# snapshots._commit's verified rename: a reader sees a whole mutation
+# or none of it, a crash leaves v serving, and a concurrent writer's
+# commit raises instead of being shadowed. Files of older versions that
+# the new manifest no longer names are deleted after the publish. Each
+# mutation writes files only into the cells it touches; every read goes
+# through read_ivf_store, which reads exactly the manifest's files of
+# the cells asked for (no directory listing, no schema inference job).
+
+_IVF_DATA = "vec_id bigint, embedding array<float>"  # cid: from the path
+_IVF_TOMBS = "vec_id bigint, cid bigint"
+
+
+def _ivf_manifest(spark: SparkSession, path: str) -> tuple[dict, int]:
+    """The store's latest manifest and its version; empty at version 0
+    before the first publish."""
+    vs = snapshot_versions(spark, path)
+    if not vs:
+        return {"data": {}, "tombs": {}}, 0
+    text = _read_text(spark, f"{_version_dir(path, vs[-1])}/_manifest.json")
+    return json.loads(text), vs[-1]
+
+
+def _ivf_files(path: str, man: dict, kind: str, cids) -> list[str]:
+    want = None if cids is None else {int(c) for c in cids}
+    return [
+        f"{path}/{f}"
+        for c, files in sorted(man[kind].items())
+        if want is None or int(c) in want
+        for f in files
+    ]
+
+
+def read_ivf_store(
+    spark: SparkSession,
+    path: str,
+    cids=None,
+    rows: str = "live",
+    man: dict | None = None,
+) -> DataFrame:
+    """The store's rows in cells `cids` (every cell when None) as of
+    its latest version (or of manifest `man`): "all" stored rows
+    (vec_id, embedding, cid), "dead" tombstones (vec_id, cid), or
+    "live" stored rows no tombstone names. Only the named cells' files
+    are read, and an empty selection is a typed empty frame."""
+    if man is None:
+        man = _ivf_manifest(spark, path)[0]
+    tombs = _ivf_files(path, man, "tombs", cids)
+    if rows == "dead":
+        if not tombs:
+            return spark.createDataFrame([], _IVF_TOMBS)
+        reader = spark.read.schema(_IVF_TOMBS)
+        return reader.option("recursiveFileLookup", "true").parquet(*tombs)
+    data = _ivf_files(path, man, "data", cids)
+    if not data:
+        stored = spark.createDataFrame([], f"{_IVF_DATA}, cid int")
+    else:
+        stored = (
+            spark.read.schema(_IVF_DATA)
+            .option("basePath", path)
+            .parquet(*data)
+            .select("vec_id", "embedding", "cid")
+        )
+    if rows == "all" or not tombs:
+        return stored
+    dead = read_ivf_store(spark, path, cids, "dead", man).select("vec_id")
+    return stored.join(dead, "vec_id", "left_anti")
+
+
+probe_ivf_store_live = read_ivf_store  # the name perfbench calls
+
+
+def _commit_ivf(
+    spark: SparkSession,
+    path: str,
+    man: dict,
+    version: int,
+    rows: DataFrame,
+    tombs: bool = False,
+    drop=(),
+) -> None:
+    """Publish version + 1 of the store: manifest `man` (read at
+    `version`) without the cells in `drop`, plus `rows` written as new
+    files in per-cell directories: data rows (vec_id, embedding, cid),
+    or tombstones (vec_id, cid, cell) when `tombs`. Publishes nothing when
+    that adds and drops nothing; raises IOError if another writer
+    published version + 1 first."""
+    nxt = {
+        kind: {c: list(f) for c, f in cells.items() if int(c) not in drop}
+        for kind, cells in man.items()
+    }
+    vname = _version_name(version + 1)
+    sub, part = ("/_tombstones", "cell") if tombs else ("", "cid")
+    cells = nxt["tombs" if tombs else "data"]
+
+    def write_stage(stage: str) -> bool:
+        rows.write.partitionBy(part).parquet(stage + sub)
+        fs, root, _ = _fs(spark, stage + sub)
+        it = fs.listFiles(root, True)
+        while it.hasNext():
+            f = it.next().getPath()
+            cell = f.getParent().getName()
+            if f.getName().endswith(".parquet") and cell.startswith(f"{part}="):
+                rel = f"{vname}{sub}/{cell}/{f.getName()}"
+                cells.setdefault(cell.split("=", 1)[1], []).append(rel)
+        if nxt == man:
+            return False
+        _write_text(spark, f"{stage}/_manifest.json", json.dumps(nxt))
+        return True
+
+    if _commit(spark, path, write_stage, version + 1) is None:
+        return
+    # the publish landed: delete each older version no live file is
+    # left in (versions after ours are a newer writer's), and in the
+    # others the cell dirs `man` named that `nxt` drops
+    live = _ivf_dirs(nxt)
+    held = {d.split("/", 1)[0] for d in live}
+    vs = snapshot_versions(spark, path)
+    stale = {_version_name(u) for u in vs if u <= version} - held
+    stale |= {d for d in _ivf_dirs(man) - live if d.split("/", 1)[0] in held}
+    fs, _, jvm = _fs(spark, path)
+    for d in stale:
+        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"), True)
+
+
+def _ivf_dirs(man: dict) -> set[str]:
+    """The cell directories (store-relative) manifest `man` names."""
+    return {
+        f.rsplit("/", 1)[0]
+        for cells in man.values()
+        for files in cells.values()
+        for f in files
+    }
+
+
+def _build_ivf_store(spark: SparkSession, path: str, rows: DataFrame) -> None:
+    """(Re)build the store as exactly `rows` (vec_id, embedding, cid):
+    a version whose manifest names only its own new files."""
+    man, v = _ivf_manifest(spark, path)
+    cells = {int(c) for kind in man.values() for c in kind}
+    _commit_ivf(spark, path, man, v, rows, drop=cells)
+
+
+def _fold_ivf_store(
+    spark: SparkSession, path: str, keys: DataFrame, vecs: DataFrame | None = None
+) -> None:
+    """The one idempotent add: fold `keys` (vec_id, cid) into the store
+    as data rows, each embedding joined from `vecs`, or as tombstones
+    when `vecs` is None. Ids their cell already holds are skipped, so
+    a replayed fold publishes nothing (at-least-once delivery +
+    this fold = exactly-once contents). The frozen codebook puts a
+    replayed id in the same cell, so the existing-id read covers only
+    the keys' cells: a fold costs O(touched cells), not O(store)."""
+    keys = keys.select("vec_id", F.col("cid").cast("bigint"))
+    # Eager: the cell list and the write both read `keys`; lazy, each
+    # re-ran the assignment (sf0.1 A/B: +6 jobs per delete fold).
+    keys = keys.localCheckpoint(eager=True)
+    # Bounded control flow: <= nlist distinct cells.
+    cids = [r.cid for r in keys.select("cid").distinct().collect()]
+    man, v = _ivf_manifest(spark, path)
+    fresh = keys
+    if _ivf_files(path, man, "tombs" if vecs is None else "data", cids):
+        kind = "dead" if vecs is None else "all"
+        have = read_ivf_store(spark, path, cids, kind, man)
+        fresh = keys.join(have.select("vec_id"), "vec_id", "left_anti")
+    if vecs is None:
+        fresh = fresh.withColumn("cell", F.col("cid"))
+    else:
+        fresh = vecs.join(fresh, "vec_id").select("vec_id", "embedding", "cid")
+    _commit_ivf(spark, path, man, v, fresh, tombs=vecs is None)
+
+
 def write_ivf_store(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Persist the IVF index as a cell-partitioned parquet store:
-    embeddings written `partitionBy(cid)`, one directory per inverted
-    list. This is the physical layout the knn_ivf docstring promises at
-    100 TB — probing IVF_NPROBE cells becomes a partition-pruned scan
-    that never touches the other nlist - nprobe directories."""
+    """Persist the IVF index as the cell-partitioned store, one
+    directory per inverted list: the physical layout the knn_ivf
+    docstring promises at 100 TB — probing IVF_NPROBE cells reads those
+    cells' files and never touches the other nlist - nprobe."""
     e = load_table(spark, sf_dir, "embeddings")
     _, _, assigned, _ = _coarse_cells(e, n=_corpus_n(spark, sf_dir))
-    (
-        e.join(assigned, e.vec_id == assigned.neighbor_id)
-        .select("vec_id", "embedding", "cid")
-        .write.mode("overwrite")
-        # static explicitly (ADVICE r13): a rebuild must wipe the WHOLE
-        # dir even if some earlier query left the session conf dynamic,
-        # else delta-only cells would survive the "fresh retrain" write
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cid")
-        .parquet(path)
-    )
-
-
-def probe_ivf_store(
-    spark: SparkSession, path: str, cids: list[int]
-) -> DataFrame:
-    """Read only the probed cells' inverted lists. The cid IN (...)
-    filter must show up as a PartitionFilter (asserted by pytest), so
-    at scale the scan IO is nprobe/nlist of the corpus."""
-    return spark.read.parquet(path).where(F.col("cid").isin(cids))
+    rows = e.join(assigned, e.vec_id == assigned.neighbor_id)
+    _build_ivf_store(spark, path, rows.select("vec_id", "embedding", "cid"))
 
 
 def dedup_embedding_skipped_buckets(
@@ -2567,96 +2740,54 @@ def embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def write_ivf_base_store(spark: SparkSession, sf_dir: str, path: str) -> None:
     """The "index built yesterday": ONLY the base corpus (delta residue
-    class excluded), assigned to the frozen codebook and written
-    partitionBy(cid) — the store append_ivf_store later folds arriving
+    class excluded), assigned to the frozen codebook and built as the
+    cell-partitioned store that append_ivf_store later folds arriving
     deltas into. write_ivf_store remains the full-corpus/fresh-retrain
     form."""
     e = load_table(spark, sf_dir, "embeddings")
     _vecs, base, _delta, cents, _merged, _probes = _append_parts(
         spark, sf_dir
     )
-    assigned_base = (
-        _cos_rank(base, cents, 1)
-        .select(F.col("vec_id").alias("bv"), "cid")
-    )
-    (
-        e.join(assigned_base, e.vec_id == F.col("bv"))
-        .select("vec_id", "embedding", "cid")
-        .write.mode("overwrite")
-        # static explicitly (ADVICE r13): rebuild-repairs must wipe the
-        # whole dir regardless of any leaked dynamic session conf
-        .option("partitionOverwriteMode", "static")
-        .partitionBy("cid")
-        .parquet(path)
-    )
+    assigned = _cos_rank(base, cents, 1).select("vec_id", "cid")
+    rows = e.join(assigned, "vec_id").select("vec_id", "embedding", "cid")
+    _build_ivf_store(spark, path, rows)
 
 
 def append_ivf_store(spark: SparkSession, sf_dir: str, path: str) -> None:
-    """Physically fold the delta batch into an EXISTING cid-partitioned
-    IVF store (the storage half of knn_ivf_append): assign the delta
-    residue class against the FROZEN codebook and APPEND its rows into
-    the store's per-cell directories — dynamic partition append, so
-    only the cells the delta actually lands in gain files and the base
-    corpus's files are never rewritten. After the fold,
-    probe_ivf_store serves base ∪ delta from the same partition-pruned
-    layout, and ivf_imbalance over the merged assignment decides when
-    the codebook has drifted enough to rebuild (write_ivf_store from
-    scratch)."""
+    """Physically fold the delta batch into an EXISTING IVF store (the
+    storage half of knn_ivf_append): assign the delta residue class
+    against the FROZEN codebook and add its rows through the store's
+    idempotent fold — only the cells the delta lands in gain files,
+    the base corpus's files are never rewritten, and a retried fold
+    (driver restart, an orchestrator re-running the step) adds nothing.
+    After the fold, read_ivf_store serves base ∪ delta from the same
+    cell layout, and ivf_imbalance over the merged assignment decides
+    when the codebook has drifted enough to rebuild (write_ivf_store
+    from scratch)."""
     e = load_table(spark, sf_dir, "embeddings")
     _vecs, _base, delta, cents, _merged, _probes = _append_parts(
         spark, sf_dir
     )
-    assigned_delta = (
-        _cos_rank(delta, cents, 1)
-        .select(F.col("vec_id").alias("dv"), "cid")
-    )
-    # Idempotence guard: a RETRIED fold (driver restart between the
-    # assignment job and the write, an orchestrator re-running the
-    # step) must not duplicate delta rows in the store — duplicates
-    # would silently inflate probe results and ivf_imbalance
-    # occupancies. Anti-join on the store's existing vec_ids BEFORE
-    # appending; assignment is deterministic, so a delta row already
-    # present is exactly this fold's prior attempt. The existing-id
-    # scan reads only the vec_id column (column-pruned parquet
-    # footprint), and at deployment it would be partition-pruned to
-    # the delta's target cells. The id set is MATERIALIZED
-    # (localCheckpoint) before the append write starts: a lazy read of
-    # the same path the job appends to would depend on the read-time
-    # file-index snapshot surviving task retries and
-    # eventually-consistent object-store listings (ADVICE r12) —
-    # pinning the ids into block storage makes the guard's view of
-    # "existing" a fixed set no matter when tasks re-execute.
-    existing = (
-        spark.read.parquet(path)
-        .select(F.col("vec_id").alias("dv"))
-        .localCheckpoint(eager=True)
-    )
-    fresh = assigned_delta.join(existing, "dv", "left_anti")
-    (
-        e.join(fresh, e.vec_id == F.col("dv"))
-        .select("vec_id", "embedding", "cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(path)
-    )
+    _fold_ivf_store(spark, path, _cos_rank(delta, cents, 1), e)
 
 
 # --- ivf_store_prune: the physical store's pruning payoff, oracle-checked --
 
-def _write_full_store(spark: SparkSession, sf_dir: str, path: str) -> None:
-    write_ivf_base_store(spark, sf_dir, path)
-    append_ivf_store(spark, sf_dir, path)
+def _ivf_store_ready(
+    spark: SparkSession, sf_dir: str, tag: str = "ivf_store"
+) -> str:
+    """The physical store (base build + delta fold), built once per
+    fixture and tag (tables.fixture_store). The default tag is the
+    store ivf_store_prune / stream_ivf_maintenance / ivf_store_delete
+    share, whose row set must stay the full assignment (delete only
+    adds tombstones); vacuum REMOVES rows, so it works on its own tag
+    — sharing would corrupt the others' oracle denominators."""
 
+    def write(path: str) -> None:
+        write_ivf_base_store(spark, sf_dir, path)
+        append_ivf_store(spark, sf_dir, path)
 
-def _ivf_store_ready(spark: SparkSession, sf_dir: str) -> str:
-    """The shared physical store (base build + delta fold), built once
-    per fixture (tables.fixture_store)."""
-    return fixture_store(
-        spark,
-        sf_dir,
-        "ivf_store",
-        lambda path: _write_full_store(spark, sf_dir, path),
-    )
+    return fixture_store(spark, sf_dir, tag, write)
 
 
 IVF_STORE_PRUNE_ORACLE = f"""
@@ -2752,8 +2883,8 @@ GROUP BY p.query_id, t.cells_total, t.rows_total
 @query("ivf_store_prune", oracle=IVF_STORE_PRUNE_ORACLE)
 def ivf_store_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The round-12 store trio (write_ivf_base_store / append_ivf_store
-    / probe_ivf_store) as a first-class oracle-checked query (VERDICT
-    r12 #1): physically build the cid-partitioned store, fold the delta
+    / read_ivf_store) as a first-class oracle-checked query (VERDICT
+    r12 #1): physically build the cell-partitioned store, fold the delta
     batch in, then MEASURE what each query's probe pass reads from the
     on-disk layout — cells touched vs cells total, rows scanned vs
     rows total, and how many of the scanned rows arrived via the
@@ -2764,14 +2895,12 @@ def ivf_store_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment — fold idempotence and append visibility become
     oracle-checked instead of pytest-only.
 
-    Scale: the probe scan reads ONLY the probed cells' directories —
-    the cid IN (...) predicate is a PartitionFilter (pytest-pinned on
-    this query's plan), with the probed-cid list bounded by
-    n_queries x nprobe (control metadata, the probe_ivf_store contract;
-    a dimension-side filter would ride dynamic partition pruning
-    instead). The denominator pass reads the vec_id column only
-    (column-pruned footprint; at deployment row counts come from
-    partition metadata). Report is O(n_queries) rows."""
+    Scale: the probe scan reads ONLY the probed cells' files, which
+    read_ivf_store names from the store manifest (pytest pins the
+    scan's inputFiles), with the probed-cid list bounded by
+    n_queries x nprobe (control metadata). The denominator pass reads
+    the vec_id column only (column-pruned footprint; at deployment row
+    counts come from file metadata). Report is O(n_queries) rows."""
     path = _ivf_store_ready(spark, sf_dir)
     _v, _b, _d, cents, _m, probes = _append_parts(spark, sf_dir)
     probes = track_cache(probes)
@@ -2779,17 +2908,16 @@ def ivf_store_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     probed = sorted(
         r[0] for r in probes.select("cid").distinct().collect()
     )
-    store = spark.read.parquet(path).select("vec_id", "cid")
     is_delta = (F.col("vec_id") % DELTA_MOD) == DELTA_RES
     occ = (
-        store.where(F.col("cid").isin(probed))
+        read_ivf_store(spark, path, probed, "all")
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.sum(is_delta.cast("int")).cast("long").alias("n_delta"),
         )
     )
-    tot = store.groupBy().agg(
+    tot = read_ivf_store(spark, path, rows="all").groupBy().agg(
         F.count(F.lit(1)).alias("rows_total")
     )
     cells = cents.groupBy().agg(F.count(F.lit(1)).alias("cells_total"))
@@ -3965,94 +4093,40 @@ def ivf_retrain(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Curation DROPS documents (dedup keepers, domain caps,
 # decontamination), but the physical store only ever appended — the
-# FAISS remove_ids gap (VERDICT r13 #5). Deletes follow the store's
-# own append discipline: a TOMBSTONE fold into <store>/_tombstones,
-# cid-partitioned like the data it masks, idempotent by anti-join
-# (retry-safe, the append_ivf_store contract), partition-pruned to the
-# affected cells on both the guard read and the write. The underscore
-# prefix keeps the tombstone directory INVISIBLE to every plain
-# spark.read.parquet(store) (Hadoop's hidden-path listing rule — the
-# same convention that hides _metadata/_SUCCESS), so existing
-# consumers (ivf_store_prune, the maintenance fold's existing-id
-# guard) are untouched; live readers opt in via probe_ivf_store_live.
-# Base files of unaffected cells are never rewritten (pytest pins
-# byte-identity). The reference analog: FileTable's set-semantics
-# remove cascading from corruption reports (FileTable.java:107-122)
-# applied at file-store granularity.
+# FAISS remove_ids gap (VERDICT r13 #5). A delete is the store's
+# idempotent fold (_fold_ivf_store) into TOMBSTONES: new tombstone
+# files for the affected cells, ids already tombstoned skipped, both
+# the guard read and the write limited to those cells. The manifest
+# keeps tombstone files apart from data files, so "all" reads
+# (ivf_store_prune, the maintenance fold's existing-id guard) see the
+# full row set while "live" reads subtract the tombstones. Data files
+# are never rewritten (pytest pins byte-identity). The reference
+# analog: FileTable's set-semantics remove cascading from corruption
+# reports (FileTable.java:107-122) applied at file-store granularity.
 
-def _tombstones_present(path: str) -> bool:
-    """True iff the store's tombstone directory exists AND holds at
-    least one data file. The explicit check replaces the earlier broad
-    try/except around the tombstone read: a missing directory is the
-    expected never-deleted state, but any OTHER read failure
-    (transient IO, corrupt footer, permissions) must PROPAGATE — a
-    live probe that silently treats a failed read as "no tombstones"
-    would return curation-dropped rows, and a delete fold would
-    re-append duplicate tombstone pairs (ADVICE r14)."""
-    import os
-
-    if not os.path.isdir(path):
-        return False
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _curation_drops(
+    spark: SparkSession, sf_dir: str, cents: DataFrame, dropped=None
+) -> DataFrame:
+    """(vec_id, cid): the semantic-decontamination drop set (or the
+    doc_id frame `dropped`) assigned to its frozen cells — the set the
+    store queries tombstone."""
+    if dropped is None:
+        dropped = decontaminate_semantic(spark, sf_dir).select("doc_id")
+    e = load_table(spark, sf_dir, "embeddings")
+    vecs = e.join(dropped, e.vec_id == dropped.doc_id).select(
+        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
+    )
+    return _cos_rank(vecs, cents, 1).select("vec_id", "cid")
 
 
 def delete_ivf_store(
     spark: SparkSession, path: str, drops: DataFrame
 ) -> None:
     """Fold a batch of (vec_id, cid) deletions into the store's
-    tombstone set. `drops` carries each dropped vector's cell (the
-    frozen codebook makes that deterministic — callers use
-    _cos_rank, never a store scan); the existing-tombstone guard
-    read and the append are both pruned to the batch's cells, so a
-    delete costs O(affected cells), not O(store)."""
-    import os
-
-    tomb = os.path.join(path, "_tombstones")
-    drops = drops.select("vec_id", "cid").localCheckpoint(eager=True)
-    # Bounded control flow: <= nlist distinct cells per batch.
-    cids = [r.cid for r in drops.select("cid").distinct().collect()]
-    if _tombstones_present(tomb):
-        existing = (
-            spark.read.parquet(tomb)
-            .where(F.col("cid").isin(cids))
-            .select(F.col("vec_id").alias("tv"))
-            .localCheckpoint(eager=True)
-        )
-        fresh = drops.join(
-            existing, drops.vec_id == F.col("tv"), "left_anti"
-        )
-    else:  # first delete: no tombstone dir yet
-        fresh = drops
-    (
-        fresh.write.mode("append")
-        .partitionBy("cid")
-        .parquet(tomb)
-    )
-
-
-def probe_ivf_store_live(
-    spark: SparkSession, path: str, cids: list[int]
-) -> DataFrame:
-    """probe_ivf_store minus tombstoned rows: both the data read and
-    the tombstone read are partition-pruned to the probed cells, and
-    the exclusion is an int-key anti-join bounded by the probed
-    cells' tombstone counts. A failed tombstone READ raises (never
-    "no tombstones") — see _tombstones_present."""
-    import os
-
-    live = spark.read.parquet(path).where(F.col("cid").isin(cids))
-    tomb = os.path.join(path, "_tombstones")
-    if not _tombstones_present(tomb):  # nothing ever deleted
-        return live
-    dead = (
-        spark.read.parquet(tomb)
-        .where(F.col("cid").isin(cids))
-        .select("vec_id")
-    )
-    return live.join(dead, "vec_id", "left_anti")
+    tombstones. `drops` carries each dropped vector's cell (the frozen
+    codebook makes that deterministic — callers use _cos_rank, never a
+    store scan), so a delete costs O(affected cells), not O(store)."""
+    _fold_ivf_store(spark, path, drops)
 
 
 IVF_STORE_DELETE_ORACLE = (
@@ -4092,14 +4166,12 @@ def ivf_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     nothing (anti-join fold) and reports identically.
 
     Scale: the drop set's cells come from the broadcast codebook (no
-    store scan); tombstone guard + write are partition-pruned to
-    affected cells; the report is one groupBy(cid) over the store's
-    two int metadata columns (column-pruned scan) + an int anti-ish
-    left join against the bounded tombstone set. Live probes
-    (probe_ivf_store_live) pay one pruned anti-join over probed cells
-    only."""
-    import os
-
+    store scan); tombstone guard + write read and write only the
+    affected cells' files; the report is one groupBy(cid) over the
+    store's two int metadata columns (column-pruned scan) + an int
+    anti-ish left join against the bounded tombstone set. Live probes
+    (read_ivf_store) pay one anti-join over the probed cells'
+    tombstones only."""
     # Store build (memoized), frozen-codebook parts, and the semantic
     # drop set are independent pipelines: build concurrently (§2.6).
     path, parts, dropped = parallel_legs(
@@ -4108,28 +4180,17 @@ def ivf_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda: decontaminate_semantic(spark, sf_dir).select("doc_id"),
     )
     _v, _b, _d, cents, _m, _p = parts
-    e = load_table(spark, sf_dir, "embeddings")
-    drop_vecs = e.join(
-        dropped, e.vec_id == dropped.doc_id
-    ).select(
-        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
+    delete_ivf_store(spark, path, _curation_drops(spark, sf_dir, cents, dropped))
+    man = _ivf_manifest(spark, path)[0]
+    store = read_ivf_store(spark, path, rows="all", man=man)
+    tomb = read_ivf_store(spark, path, rows="dead", man=man).select(
+        "vec_id", F.lit(1).alias("t")
     )
-    drops = _cos_rank(drop_vecs, cents, 1).select("vec_id", "cid")
-    delete_ivf_store(spark, path, drops)
-    store = spark.read.parquet(path).select("vec_id", "cid")
-    tomb_path = os.path.join(path, "_tombstones")
-    if _tombstones_present(tomb_path):
-        tomb = (
-            spark.read.parquet(tomb_path)
-            .select("vec_id")
-            .withColumn("t", F.lit(1))
-        )
-    else:  # empty drop set at this fixture
-        tomb = spark.createDataFrame([], "vec_id bigint, t int")
     rep = (
         # tombstones are bounded by the drop set — broadcast them so
         # the report join never shuffles the store side
-        store.join(F.broadcast(tomb), "vec_id", "left")
+        store.select("vec_id", "cid")
+        .join(F.broadcast(tomb), "vec_id", "left")
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).cast("long").alias("rows_total"),
@@ -4154,86 +4215,35 @@ def ivf_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 # index eventually wants the space and the probe-time anti-join cost
 # back. Vacuum is the lakehouse compaction discipline applied to the
 # vector store: rewrite ONLY cells whose dead fraction exceeds
-# VACUUM_NUM/VACUUM_DEN (exact integer cross-multiply), via dynamic
-# partition overwrite of exactly those cids — untouched cells' base
-# files stay byte-identical (pytest) — then drop the rewritten cells'
-# tombstone partitions (they are applied). Cells below the threshold
-# keep their tombstones: a rewrite there would cost more IO than the
-# anti-join it saves. A cell vacuumed to EMPTY (every row dead) has no
-# rows to dynamic-overwrite with, so its directory is removed directly
-# — on a real table format that is the commit's drop-partition
-# metadata op. The reference analog: storage reclaim after FileTable's
-# corruption-cascade removes (FileTable.java:107-122).
+# VACUUM_NUM/VACUUM_DEN (exact integer cross-multiply). The vacuumed
+# cells' live rows are written as new files, and the version that
+# publishes them drops those cells' old data AND tombstone files from
+# the manifest in the same rename — there is no state in between in
+# which data and tombstones disagree — while untouched cells' files
+# stay byte-identical (pytest). A cell vacuumed to EMPTY simply has no
+# files. Cells below the threshold keep their tombstones: a rewrite
+# there would cost more IO than the anti-join it saves. The reference
+# analog: storage reclaim after FileTable's corruption-cascade removes
+# (FileTable.java:107-122).
 
 VACUUM_NUM, VACUUM_DEN = 1, 20  # vacuum a cell when >5 % of it is dead
 
 
 def vacuum_ivf_store(spark: SparkSession, path: str) -> list[int]:
     """Apply tombstones to every cell whose dead fraction exceeds
-    VACUUM_NUM/VACUUM_DEN; returns the vacuumed cids (sorted). All
-    reads and writes are partition-pruned to tombstoned cells; the
-    live frame is localCheckpoint'ed BEFORE the overwrite (Spark must
-    not lazily read the files it is replacing — the
-    upsert_parquet_partitioned contract). Idempotent: vacuumed cells
-    lose their tombstones, so a re-run finds nothing above threshold."""
-    import os
-    import shutil
-
-    tomb_path = os.path.join(path, "_tombstones")
-    if not _tombstones_present(tomb_path):  # nothing ever deleted
-        return []
-    tomb = (
-        spark.read.parquet(tomb_path)
-        .select("vec_id", "cid")
-        .localCheckpoint(eager=True)
-    )
-    # Bounded control flow: tombstoned cells only.
-    tcids = [r.cid for r in tomb.select("cid").distinct().collect()]
+    VACUUM_NUM/VACUUM_DEN; returns the vacuumed cids (sorted). Reads
+    only tombstoned cells' files and writes only vacuumed cells' live
+    rows. Idempotent: vacuumed cells lose their tombstones, so a re-run
+    finds nothing above threshold and publishes nothing."""
+    man, v = _ivf_manifest(spark, path)
+    # Bounded control flow: tombstoned cells only, from the manifest.
+    tcids = sorted(int(c) for c in man["tombs"])
     if not tcids:
         return []
-    store = spark.read.parquet(path).where(F.col("cid").isin(tcids))
-    # Self-heal the crash window between a prior vacuum's data
-    # overwrite and its tombstone cleanup (ADVICE r14): a tombstone
-    # whose vec_id is no longer stored in its cell is already APPLIED
-    # — keeping it makes the cell's dead fraction read 0 forever, so
-    # a re-run would never clear it and tombs_remaining would diverge
-    # from the relational truth. Drop orphans per cell: rewrite a
-    # partially-orphaned cell's tombstone partition with only its
-    # still-live rows, remove a fully-orphaned cell's partition.
-    valid = tomb.join(
-        store.select("vec_id"), "vec_id", "left_semi"
-    ).localCheckpoint(eager=True)
-    n_tomb = {r.cid: r.n for r in tomb.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    n_valid = {r.cid: r.n for r in valid.groupBy("cid").agg(
-        F.count(F.lit(1)).alias("n")).collect()}
-    orphan_cids = sorted(
-        c for c in n_tomb if n_valid.get(c, 0) < n_tomb[c]
-    )
-    if orphan_cids:
-        partial = [c for c in orphan_cids if n_valid.get(c, 0) > 0]
-        if partial:
-            (
-                valid.where(F.col("cid").isin(partial))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("cid")
-                .parquet(tomb_path)
-            )
-        for cid in orphan_cids:
-            if n_valid.get(cid, 0) == 0:
-                shutil.rmtree(
-                    os.path.join(tomb_path, f"cid={cid}"), True
-                )
-        tomb = valid
-        tcids = sorted(n_valid)
-        if not tcids:
-            return []
-        store = spark.read.parquet(path).where(
-            F.col("cid").isin(tcids)
-        )
+    store = read_ivf_store(spark, path, tcids, "all", man)
+    tomb = read_ivf_store(spark, path, tcids, "dead", man).select("vec_id")
     dead = (
-        store.join(tomb.select("vec_id"), "vec_id", "left_semi")
+        store.join(tomb, "vec_id", "left_semi")
         .groupBy("cid")
         .agg(F.count(F.lit(1)).alias("dead"))
     )
@@ -4247,44 +4257,10 @@ def vacuum_ivf_store(spark: SparkSession, path: str) -> list[int]:
         )
         .collect()
     )
-    if not vac:
-        return []
-    live = (
-        store.where(F.col("cid").isin(vac))
-        .join(tomb.select("vec_id"), "vec_id", "left_anti")
-        .localCheckpoint(eager=True)
-    )
-    live_cids = {r.cid for r in live.select("cid").distinct().collect()}
-    (
-        live.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid")
-        .parquet(path)
-    )
-    for cid in vac:
-        if cid not in live_cids:
-            # vacuumed to empty: dynamic overwrite wrote no partition
-            # for it — drop the directory (a metadata op on a real
-            # table format)
-            shutil.rmtree(os.path.join(path, f"cid={cid}"), True)
-        # applied tombstones: drop exactly the vacuumed cells'
-        # tombstone partitions; other cells' files stay byte-identical
-        shutil.rmtree(os.path.join(tomb_path, f"cid={cid}"), True)
+    if vac:
+        live = read_ivf_store(spark, path, vac, "live", man)
+        _commit_ivf(spark, path, man, v, live, drop=set(vac))
     return vac
-
-
-def _vacuum_store_ready(spark: SparkSession, sf_dir: str) -> str:
-    """Vacuum works on its OWN store — ivf_store_prune /
-    stream_ivf_maintenance / ivf_store_delete share _ivf_store_ready's
-    store whose row set must stay the full assignment (delete only adds
-    hidden tombstones; vacuum REMOVES rows, which would corrupt their
-    oracles' denominators mid-process)."""
-    return fixture_store(
-        spark,
-        sf_dir,
-        "ivf_vacuum_store",
-        lambda path: _write_full_store(spark, sf_dir, path),
-    )
 
 
 IVF_STORE_VACUUM_ORACLE = (
@@ -4332,33 +4308,16 @@ def ivf_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ivf_store_ready store's row set must stay the full assignment for
     ivf_store_prune's denominators (deletes there stay mask-only).
 
-    Scale: the fold and the vacuum are both partition-pruned to
-    tombstoned cells; the rewrite touches only above-threshold cells
-    (the IO-vs-anti-join break-even the threshold encodes); the report
-    is one groupBy(cid) over two int columns plus a broadcast join of
-    the bounded disk tombstone set."""
-    import os
-
-    path = _vacuum_store_ready(spark, sf_dir)
+    Scale: the fold and the vacuum both read only tombstoned cells'
+    files; the rewrite touches only above-threshold cells (the
+    IO-vs-anti-join break-even the threshold encodes); the report is
+    one groupBy(cid) over two int columns plus a broadcast join of the
+    bounded disk tombstone set."""
+    path = _ivf_store_ready(spark, sf_dir, "ivf_vacuum_store")
     _v, _b, _d, cents, merged, _p = _append_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    dropped = decontaminate_semantic(spark, sf_dir).select("doc_id")
-    drop_vecs = e.join(
-        dropped, e.vec_id == dropped.doc_id
-    ).select(
-        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-    )
-    drops = (
-        _cos_rank(drop_vecs, cents, 1)
-        .select("vec_id", "cid")
-        .localCheckpoint(eager=True)
-    )
+    drops = _curation_drops(spark, sf_dir, cents).localCheckpoint(eager=True)
     dcids = [r.cid for r in drops.select("cid").distinct().collect()]
-    present = (
-        spark.read.parquet(path)
-        .where(F.col("cid").isin(dcids))
-        .select("vec_id")
-    )
+    present = read_ivf_store(spark, path, dcids, "all").select("vec_id")
     drops_present = drops.join(present, "vec_id", "left_semi")
     delete_ivf_store(spark, path, drops_present)
     vacuum_ivf_store(spark, path)
@@ -4381,20 +4340,17 @@ def ivf_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ...beside the disk-measured after-state.
+    man = _ivf_manifest(spark, path)[0]
     stored = (
-        spark.read.parquet(path)
+        read_ivf_store(spark, path, rows="all", man=man)
         .groupBy("cid")
         .agg(F.count(F.lit(1)).cast("long").alias("n_stored"))
     )
-    tomb_path = os.path.join(path, "_tombstones")
-    if _tombstones_present(tomb_path):
-        tombs = (
-            spark.read.parquet(tomb_path)
-            .groupBy("cid")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_tombs"))
-        )
-    else:  # every tombstone applied
-        tombs = spark.createDataFrame([], "cid bigint, n_tombs bigint")
+    tombs = (
+        read_ivf_store(spark, path, rows="dead", man=man)
+        .groupBy("cid")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_tombs"))
+    )
     vac_flag = (
         F.col("rows_dropped") * F.lit(VACUUM_DEN)
         > F.col("rows_before") * F.lit(VACUUM_NUM)
@@ -4471,38 +4427,30 @@ WHERE rank <= {ANN_K}
 def knn_ivf_store_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The user-visible semantics of remove_ids, end to end: top-k
     search whose candidates AND vectors come off the PHYSICAL
-    cid-partitioned store through probe_ivf_store_live — partition-
-    pruned to the probed cells, tombstoned rows anti-joined out — so a
+    cell-partitioned store through read_ivf_store — only the probed
+    cells' files, tombstoned rows anti-joined out — so a
     curation-dropped document can never be returned. The drop set is
     folded first (idempotent, same set as ivf_store_delete); the
     oracle replays assignment, probes, the drop exclusion, and exact
     fixed-point cosine ranking relationally, so a hash match proves
     disk-served search == the post-delete relational truth.
 
-    Scale: the probe reads nprobe cells' directories (PartitionFilter,
-    the ivf_store_prune pin) and one pruned tombstone anti-join; the
+    Scale: the probe reads nprobe cells' files (the ivf_store_prune
+    pin) and one anti-join against those cells' tombstones; the
     query side is a broadcast O(n_queries) slice; scoring touches only
     probed-cell rows (the knn_ivf bound)."""
     path = _ivf_store_ready(spark, sf_dir)
     _v, _b, _d, cents, _m, probes = _append_parts(spark, sf_dir)
-    e = load_table(spark, sf_dir, "embeddings")
-    dropped = decontaminate_semantic(spark, sf_dir).select("doc_id")
-    drop_vecs = e.join(
-        dropped, e.vec_id == dropped.doc_id
-    ).select(
-        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-    )
-    drops = _cos_rank(drop_vecs, cents, 1).select("vec_id", "cid")
-    delete_ivf_store(spark, path, drops)
+    delete_ivf_store(spark, path, _curation_drops(spark, sf_dir, cents))
     probes = track_cache(probes)
     # Bounded control flow: <= n_queries x nprobe probed cells.
     probed = sorted(
         r[0] for r in probes.select("cid").distinct().collect()
     )
-    live = probe_ivf_store_live(spark, path, probed).select(
+    live = read_ivf_store(spark, path, probed).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"), "cid"
     )
-    qv = _queries(e).select(
+    qv = _queries(load_table(spark, sf_dir, "embeddings")).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
     scored = exact_cosine(qv, live, F.broadcast(probes), on="cid")

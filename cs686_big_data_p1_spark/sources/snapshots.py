@@ -6,14 +6,15 @@ lakehouse formats generalize that to versioned table snapshots. This
 module provides the same contract with nothing but parquet and one
 atomic filesystem rename per commit — no table-format dependency:
 
-  * every commit writes a full snapshot under ``<table>/v=NNNNNNNN/``,
-    staged in a hidden temp dir and RENAMED into place (rename is the
+  * every commit writes a version under ``<table>/v=NNNNNNNN/`` (a
+    full snapshot, or an incremental one: see below), staged in a
+    hidden temp dir and RENAMED into place (rename is the
     atomic primitive on HDFS-compatible stores and POSIX alike), so a
     reader can never observe a half-written version. A version may hold
     several tables, one subdirectory each (the near-dup stream store,
     streaming/neardup.py); they publish together in that one rename;
   * the current version is simply the highest published directory —
-    no manifest file to corrupt. Hadoop's ``FileSystem.rename`` is NOT
+    no pointer file to corrupt. Hadoop's ``FileSystem.rename`` is NOT
     a CAS when the destination directory exists (it moves the source
     INTO it and reports success), so the publish is a *verified* CAS:
     each committer stages under a uuid-unique dir carrying a unique
@@ -28,12 +29,23 @@ atomic filesystem rename per commit — no table-format dependency:
     holding version N is unaffected by later commits or by vacuum of
     OTHER versions (immutable snapshot isolation).
 
+A version need not be a full copy. An INCREMENTAL table (the IVF
+store, operators/ann.py) writes into version N only the files mutation
+N added, plus a ``_manifest.json`` naming every live file of the table
+across versions; the manifest is the version's content, so it
+publishes in the same rename as the new files, and the files older
+versions hold that it no longer names are deleted after the publish —
+so an incremental table serves its latest version only (no pinning).
+Small text files such as the manifest and the commit marker go through
+the Hadoop FileSystem on the driver (``_write_text``/``_read_text``),
+never through a Spark job.
+
 Scale: a commit's cost is the snapshot write itself (parallel across
 executors); version discovery is one driver-side directory listing of
 O(#versions) names — the same metadata cost any table format pays.
 For mostly-unchanged data, pair with ``upsert_parquet_partitioned``
 (partition-scoped rewrites) and snapshot the partition directories
-instead; this module keeps whole-table semantics deliberately simple.
+instead, or keep an incremental manifest as above.
 """
 
 from __future__ import annotations
@@ -54,8 +66,30 @@ def _fs(spark: SparkSession, path: str):
     ), p, jvm
 
 
+def _version_name(v: int) -> str:
+    return f"v={v:0{_WIDTH}d}"
+
+
 def _version_dir(table_path: str, v: int) -> str:
-    return f"{table_path}/v={v:0{_WIDTH}d}"
+    return f"{table_path}/{_version_name(v)}"
+
+
+def _write_text(spark: SparkSession, path: str, text: str) -> None:
+    fs, p, _ = _fs(spark, path)
+    out = fs.create(p)
+    try:
+        out.write(bytearray(text.encode()))
+    finally:
+        out.close()
+
+
+def _read_text(spark: SparkSession, path: str) -> str:
+    fs, p, jvm = _fs(spark, path)
+    stream = fs.open(p)
+    try:
+        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+    finally:
+        stream.close()
 
 
 def snapshot_versions(spark: SparkSession, table_path: str) -> list[int]:
@@ -84,12 +118,14 @@ def _publish_stage(
     ``version=None`` takes the next free number, retrying past any
     committer that wins it. An int is an EXPECTED-VERSION commit: the
     stage publishes as exactly that number or not at all — if it is
-    taken, the stage is deleted and IOError raised, because the staged
-    state was derived from an older version and publishing it under a
-    later number would shadow the winner's commit. A rename that fails
-    (returns false or throws) while the stage stays put and the version
-    stays absent — permissions, quota — raises IOError naming the
-    stage: retrying cannot change that outcome.
+    taken (or passed: an incremental table may since have deleted a
+    version below its latest), the stage is deleted and IOError
+    raised, because the staged state was derived from an older version
+    and publishing it under a later number would shadow the winner's
+    commit. A rename that fails (returns false or throws) while the
+    stage stays put and the version stays absent — permissions, quota —
+    raises IOError naming the stage: retrying cannot change that
+    outcome.
 
     CRASH WINDOW (ADVICE r7): if this process dies after losing a race
     (its stage renamed INTO the winner's version) but before the
@@ -141,19 +177,18 @@ def _publish_stage(
                 "version nor any nested stage — the stage was "
                 "deleted, not adopted"
             )
-        if version is None:
-            vs = snapshot_versions(spark, table_path)
-            v = (vs[-1] if vs else 0) + 1
-        else:
-            v = version
+        vs = snapshot_versions(spark, table_path)
+        v = (vs[-1] if vs else 0) + 1 if version is None else version
         final = _version_dir(table_path, v)
-        if fs.exists(jpath(final)):
+        # an incremental table deletes superseded versions, so "taken"
+        # means reached: any published version >= v
+        if fs.exists(jpath(final)) or (vs and vs[-1] >= v):
             if version is None:
                 continue  # published between listing and here; re-list
             fs.delete(jpath(stage), True)
             raise IOError(
                 f"snapshot commit: version {v} of {table_path} is already "
-                f"published; expected-version stage {stage} dropped"
+                f"reached; expected-version stage {stage} dropped"
             )
         try:
             renamed, err = fs.rename(jpath(stage), jpath(final)), None
@@ -185,15 +220,21 @@ def _commit(
     table_path: str,
     write_stage: Callable[[str], object],
     version: int | None = None,
-) -> int:
+) -> int | None:
     """Stage one version through ``write_stage(stage_dir)``, add its
     commit marker (written last, so a marker proves the data complete)
-    and publish it with _publish_stage; return the version number."""
+    and publish it with _publish_stage; return the version number. The
+    marker holds the expected version (empty for "next free"), so
+    recover_stranded_stages never publishes the stage under another
+    number. A ``write_stage`` that returns False had nothing to commit:
+    its stage is deleted and None returned."""
     token = uuid.uuid4().hex
     stage = f"{table_path}/.stage-{token}"
-    write_stage(stage)
-    fs, _, jvm = _fs(spark, table_path)
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{stage}/_commit-{token}")).close()
+    if write_stage(stage) is False:
+        fs, _, jvm = _fs(spark, table_path)
+        fs.delete(jvm.org.apache.hadoop.fs.Path(stage), True)
+        return None
+    _write_text(spark, f"{stage}/_commit-{token}", str(version or ""))
     return _publish_stage(spark, table_path, token, version)
 
 
@@ -299,9 +340,13 @@ def recover_stranded_stages(
     pulled back to the table root and re-driven through the same
     verified-CAS publish, so the crashed commit finally lands as a real
     version — upholding "no commit is silently dropped" across process
-    death. INCOMPLETE root stages (no marker: the parquet write itself
-    died) are deleted. Returns {stage_path: new_version | None
-    (deleted)}; untouched young stages are simply absent."""
+    death. An EXPECTED-VERSION stage (its marker names the version) is
+    published only as exactly that version, and deleted once the table
+    has reached that version: its state was derived from the version
+    before, and publishing it later would shadow the newer commit.
+    INCOMPLETE root stages (no marker: the parquet write itself died)
+    are deleted. Returns {stage_path: new_version | None (deleted)};
+    untouched young stages are simply absent."""
     fs, _, jvm = _fs(spark, table_path)
     jpath = jvm.org.apache.hadoop.fs.Path
     now_ms = jvm.java.lang.System.currentTimeMillis()
@@ -309,7 +354,10 @@ def recover_stranded_stages(
     for s in find_stranded_stages(spark, table_path):
         if now_ms - s["mtime_ms"] < min_age_ms:
             continue
-        if not s["complete"]:
+        marker = f"{s['path']}/_commit-{s['token']}"
+        expected = int(_read_text(spark, marker) or 0) if s["complete"] else 0
+        latest = max(snapshot_versions(spark, table_path), default=0)
+        if not s["complete"] or 0 < expected <= latest:
             fs.delete(jpath(s["path"]), True)
             out[s["path"]] = None
             continue
@@ -318,7 +366,9 @@ def recover_stranded_stages(
             jpath(s["path"]), jpath(root_stage)
         ):
             raise IOError(f"could not un-nest stranded stage {s['path']}")
-        out[s["path"]] = _publish_stage(spark, table_path, s["token"])
+        out[s["path"]] = _publish_stage(
+            spark, table_path, s["token"], expected or None
+        )
     return out
 
 

@@ -326,52 +326,30 @@ FROM occ o CROSS JOIN tot t CROSS JOIN dd d
 """
 
 
+def _codebook(spark: SparkSession, cent_rows) -> DataFrame:
+    """The broadcast codebook frame rebuilt from driver-pinned rows."""
+    schema = "cid bigint, cent_emb array<float>, cent_norm double"
+    return spark.createDataFrame(cent_rows, schema)
+
+
 def fold_ivf_batch(batch: DataFrame, store_path: str, cent_rows) -> None:
     """Fold ONE micro-batch of arriving embeddings into the physical
-    cid-partitioned store: assign against the frozen codebook
-    (reconstructed from the driver-collected cent_rows — bounded
-    O(nlist x d), so the closure never captures a foreign-session
-    DataFrame), anti-join the store's existing vec_ids (materialized
-    before the write — the append_ivf_store retry contract), and
-    dynamic-partition-append only the fresh rows. At-least-once
-    delivery + this idempotent fold = exactly-once store contents: a
-    replayed batch's rows are all "existing" and append nothing."""
-    from ..operators.ann import _cos_rank
+    IVF store: assign against the frozen codebook (reconstructed from
+    the driver-collected cent_rows — bounded O(nlist x d), so the
+    closure never captures a foreign-session DataFrame) and add the
+    rows through the store's idempotent fold (the append_ivf_store
+    one). At-least-once delivery + that fold = exactly-once store
+    contents: a replayed batch's rows are all present and publish
+    nothing."""
+    from ..operators.ann import _cos_rank, _fold_ivf_store
 
     if batch.isEmpty():
         return
-    spark_b = batch.sparkSession
-    cents = spark_b.createDataFrame(
-        cent_rows, "cid bigint, cent_emb array<float>, cent_norm double"
-    )
     b = batch.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    assigned = (
-        _cos_rank(b, cents, 1)
-        .select(F.col("vec_id").alias("dv"), "cid")
-        .localCheckpoint(eager=True)
-    )
-    # The frozen codebook makes a replayed row land in the SAME cid,
-    # so the exactly-once guard only needs the batch's target cells:
-    # partition-prune the existing-id read to those cids (ADVICE r13 —
-    # per-fold cost is O(batch cells), not O(store)). The cid list is
-    # a bounded driver collect (<= nlist rows).
-    batch_cids = [r.cid for r in assigned.select("cid").distinct().collect()]
-    existing = (
-        spark_b.read.parquet(store_path)
-        .where(F.col("cid").isin(batch_cids))
-        .select(F.col("vec_id").alias("dv"))
-        .localCheckpoint(eager=True)
-    )
-    fresh = assigned.join(existing, "dv", "left_anti")
-    (
-        batch.join(fresh, batch.vec_id == F.col("dv"))
-        .select("vec_id", "embedding", "cid")
-        .write.mode("append")
-        .partitionBy("cid")
-        .parquet(store_path)
-    )
+    keys = _cos_rank(b, _codebook(batch.sparkSession, cent_rows), 1)
+    _fold_ivf_store(batch.sparkSession, store_path, keys, batch)
 
 
 @query("stream_ivf_maintenance", oracle=_maint_oracle())
@@ -390,10 +368,10 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     the STREAMED folds landed exactly once — batch sizing, replays,
     and arrival order cannot change the report.
 
-    Scale: each fold touches only its batch's target cells (dynamic
-    partition append over the bounded O(nlist x d) broadcast
-    codebook); the post-drain report is one groupBy(cid) over store
-    metadata columns + d rows of drift sufficient statistics. In
+    Scale: each fold reads and writes only its batch's target cells
+    (over the bounded O(nlist x d) broadcast codebook); the post-drain
+    report is one groupBy(cid) over store metadata columns + d rows of
+    drift sufficient statistics. In
     production this job runs forever beside stream_ivf_assign; the
     report rows with retrain = true page the rebuild
     (write_ivf_store)."""
@@ -401,6 +379,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         IMBALANCE_DEN,
         IMBALANCE_NUM,
         _append_parts,
+        read_ivf_store,
         write_ivf_base_store,
     )
     from ..tables import fixture_store
@@ -442,7 +421,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
 
     # Drained control-plane report, measured off the PHYSICAL store.
-    store = spark.read.parquet(path)
+    store = read_ivf_store(spark, path, rows="all")
     is_delta = (F.col("vec_id") % DELTA_MOD) == DELTA_RES
     occ = (
         cents.select("cid")
@@ -553,9 +532,7 @@ def fold_sem_decon_batch(
     tr = batch.where(b_tag < train_bound).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    cents = sb.createDataFrame(
-        cent_rows, "cid bigint, cent_emb array<float>, cent_norm double"
-    )
+    cents = _codebook(sb, cent_rows)
     assigned = (
         _cos_rank(tr, cents, 1, keep=("embedding", "norm"))
         .select(
@@ -618,8 +595,6 @@ def stream_decontaminate_semantic(
     eval side, one cid-pruned anti-join for idempotence; no unbounded
     stream state (a doc's verdict is final once its own cell is
     scored). The report is one groupBy over int-pair hit rows."""
-    import os
-
     from ..operators.ann import (
         _corpus_n,
         _nlist,
@@ -655,16 +630,10 @@ def stream_decontaminate_semantic(
                 F.col("norm").alias("b_norm"),
             )
         )
-        (
-            ev.write.mode("overwrite")
-            .option("partitionOverwriteMode", "static")
-            .partitionBy("cid")
-            .parquet(os.path.join(store, "eval"))
-        )
+        ev.write.partitionBy("cid").parquet(f"{store}/eval")
 
     store = fixture_store(spark, sf_dir, "sem_decon_store", write_eval)
-    eval_path = os.path.join(store, "eval")
-    hits_path = os.path.join(store, "hits")
+    eval_path, hits_path = f"{store}/eval", f"{store}/hits"
     # Driver-pinned SemDeDup codebook rows: ncells = ceil(sqrt(n)),
     # bounded O(ncells x d) — the fold_ivf_batch closure convention.
     e = load_table(spark, sf_dir, "embeddings")
@@ -721,7 +690,7 @@ def stream_decontaminate_semantic(
 # embeddings_arrivals dual-shape source), each micro-batch computes
 # its probes against the broadcast frozen codebook (zero join state —
 # the stream_ivf_assign idiom), reads ONLY the probed cells through
-# probe_ivf_store_live (partition-pruned, tombstone anti-join), scores
+# read_ivf_store (those cells' files, tombstone anti-join), scores
 # with the engine's fixed-point cosine fold, and appends its top-k to
 # a results relation under the fold_ivf_batch idempotence contract
 # (a replayed batch's queries are already served and write nothing).
@@ -734,34 +703,28 @@ def serve_knn_batch(
 ) -> None:
     """Serve ONE micro-batch of arriving queries against the live
     store. Per batch: O(nlist) broadcast probe assignment, one
-    partition-pruned live read of the batch's probed cells (tombstones
-    anti-joined inside probe_ivf_store_live), exact top-k over those
+    live read of the batch's probed cells' files (tombstones
+    anti-joined inside read_ivf_store), exact top-k over those
     cells' rows, one idempotent append. The already-served guard read
     is the results relation's query_id column only (top-k rows per
     served query — bounded)."""
-    from ..operators.ann import (
-        ANN_K,
-        IVF_NPROBE,
-        _cos_rank,
-        _tombstones_present,
-        probe_ivf_store_live,
-    )
+    from ..operators.ann import ANN_K, IVF_NPROBE, _cos_rank, read_ivf_store
+    from ..sources.snapshots import _fs
 
     if batch.isEmpty():
         return
     spark_b = batch.sparkSession
-    cents = spark_b.createDataFrame(
-        cent_rows, "cid bigint, cent_emb array<float>, cent_norm double"
-    )
+    cents = _codebook(spark_b, cent_rows)
     qb = batch.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
     # Exactly-once results under at-least-once delivery: a query that
     # already has rows in the results relation is dropped before any
-    # store IO. (_tombstones_present is the generic "parquet data
-    # under this dir" probe — a missing dir is the first-batch state,
-    # any other read failure must raise.)
-    if _tombstones_present(results_path):
+    # store IO. No parquet file yet is the first-batch state; any other
+    # read failure must raise.
+    fs, _, jvm = _fs(spark_b, results_path)
+    parts = jvm.org.apache.hadoop.fs.Path(f"{results_path}/*.parquet")
+    if fs.globStatus(parts):
         served = (
             spark_b.read.parquet(results_path)
             .select(F.col("query_id").alias("vec_id"))
@@ -778,7 +741,7 @@ def serve_knn_batch(
     )
     # Bounded control flow: <= batch_queries x nprobe cells, <= nlist.
     cids = sorted({r.cid for r in probes.select("cid").distinct().collect()})
-    live = probe_ivf_store_live(spark_b, store_path, cids).select(
+    live = read_ivf_store(spark_b, store_path, cids).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"), "cid"
     )
     scored = exact_cosine(qb, live, F.broadcast(probes), on="cid")
@@ -798,28 +761,27 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the curation drop set's tombstones honored — the serving path
     of knn_ivf_store_live as a standing stream. The drop set is folded
     first (idempotent, the same set ivf_store_delete folds); each
-    batch then pays one broadcast probe assignment, one
-    partition-pruned live-cell read, and one bounded top-k. The oracle
-    is knn_ivf_store_live's — DuckDB replays assignment, probes, the
+    batch then pays one broadcast probe assignment, one live read of
+    the probed cells' files, and one bounded top-k. The oracle is
+    knn_ivf_store_live's — DuckDB replays assignment, probes, the
     drop exclusion, and exact fixed-point ranking relationally, so a
     hash match proves the STREAMED serving path can never return a
     curation-dropped vector, regardless of batch sizing or replays.
 
     Scale: zero stream state (no watermark, no join state — per-batch
     closures are the O(nlist x d) codebook and the batch's own rows);
-    store IO is partition-pruned to probed cells; results append under
+    store IO reads only probed cells' files; results append under
     the anti-join idempotence contract. In production this job is the
     online serving tier over the store stream_ivf_maintenance keeps
     fresh."""
     from ..operators.ann import (
         ANN_N_QUERIES,
         _append_parts,
-        _cos_rank,
+        _curation_drops,
         _ivf_store_ready,
-        decontaminate_semantic,
         delete_ivf_store,
     )
-    from ..tables import fixture_store, load_table
+    from ..tables import fixture_store
 
     # heavy-fold drain: batch-plan width, not state width (liveness.py)
     spark = stream_clone(spark, batch_fold_partitions(spark))
@@ -827,13 +789,7 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     _v, _b, _d, cents, _m, _p = _append_parts(spark, sf_dir)
     # Fold the curation drop set as tombstones (idempotent — the
     # ivf_store_delete fold; on a shared store deletes stay mask-only).
-    e = load_table(spark, sf_dir, "embeddings")
-    dropped = decontaminate_semantic(spark, sf_dir).select("doc_id")
-    drop_vecs = e.join(dropped, e.vec_id == dropped.doc_id).select(
-        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-    )
-    drops = _cos_rank(drop_vecs, cents, 1).select("vec_id", "cid")
-    delete_ivf_store(spark, path, drops)
+    delete_ivf_store(spark, path, _curation_drops(spark, sf_dir, cents))
     cent_rows = [
         (int(r.cid), [float(x) for x in r.cent_emb], float(r.cent_norm))
         for r in cents.collect()

@@ -236,33 +236,36 @@ def test_dedup_embedding_contract(spark, registry):
 
 def test_ivf_store_partition_pruning(spark, tmp_path):
     """The IVF store's physical layout must deliver the promised scale
-    property: probing nprobe cells compiles to a partition-pruned scan
-    (cid arrives as a PartitionFilter, and only the probed cells'
-    directories are listed in the files actually read)."""
-    import io
-    from contextlib import redirect_stdout
-
+    property: probing nprobe cells reads exactly those cells' files
+    (the scan's inputFiles are the manifest's files of the probed
+    cells, nothing else)."""
     from cs686_big_data_p1_spark.operators.ann import (
-        probe_ivf_store,
+        read_ivf_store,
         write_ivf_store,
     )
 
     store = str(tmp_path / "ivf")
     write_ivf_store(spark, SF_SMALL, store)
-    probed = probe_ivf_store(spark, store, [7, 9])
-
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probed.explain(mode="formatted")
-    plan = buf.getvalue()
-    # the cid predicate must reach the scan as a PARTITION filter (not
-    # a post-scan data filter): that line is what makes the probe read
-    # nprobe directories instead of the whole store
-    pf_lines = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf_lines and any("cid" in ln for ln in pf_lines), plan
+    probed = read_ivf_store(spark, store, [7, 9], "all")
+    assert _input_files(probed, store) == _cell_files(spark, store, [7, 9])
     # row-level check: only the probed cells come back
     cells = {r.cid for r in probed.select("cid").distinct().collect()}
     assert cells <= {7, 9} and cells
+
+
+def _input_files(df, store):
+    """The store-relative paths of the files `df` scans."""
+    return {f[f.index(store) + len(store) + 1:] for f in df.inputFiles()}
+
+
+def _cell_files(spark, store, cids):
+    """The latest manifest's data files of cells `cids` (nonempty)."""
+    from cs686_big_data_p1_spark.operators.ann import _ivf_manifest
+
+    data = _ivf_manifest(spark, store)[0]["data"]
+    files = {f for c in cids for f in data.get(str(c), [])}
+    assert files
+    return files
 
 
 def test_kmeans_cells_deterministic_and_better_than_seed(spark, registry):
@@ -902,16 +905,15 @@ def test_append_ivf_store_folds_delta_without_rewriting_base(
     equals knn_ivf_append's merged assignment exactly, (2) the base
     corpus's parquet files are byte-identical after the fold (dynamic
     partition APPEND adds files, never rewrites), and (3)
-    probe_ivf_store still partition-prunes the merged store."""
-    import io
+    a probe of the merged store still reads only the probed cells'
+    files."""
     import os
-    from contextlib import redirect_stdout
 
     from cs686_big_data_p1_spark import registry
     from cs686_big_data_p1_spark.operators.ann import (
         _append_parts,
         append_ivf_store,
-        probe_ivf_store,
+        read_ivf_store,
         write_ivf_base_store,
     )
 
@@ -939,45 +941,39 @@ def test_append_ivf_store_folds_delta_without_rewriting_base(
     assert len(after) > len(before)
 
     merged_store = {
-        (r.vec_id, r.cid) for r in spark.read.parquet(store).collect()
+        (r.vec_id, r.cid)
+        for r in read_ivf_store(spark, store, rows="all").collect()
     }
     _v, _b, _d, _c, merged, _p = _append_parts(spark, SF_SMALL)
     want = {(r.neighbor_id, r.cid) for r in merged.collect()}
     registry.clear_caches()
     assert merged_store == want
 
-    probed = probe_ivf_store(spark, store, [7, 9])
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        probed.explain(mode="formatted")
-    pf = [ln for ln in buf.getvalue().splitlines() if "PartitionFilters" in ln]
-    assert pf and any("cid" in ln for ln in pf)
+    probed = read_ivf_store(spark, store, [7, 9], "all")
+    assert _input_files(probed, store) == _cell_files(spark, store, [7, 9])
 
     # Idempotence: a RETRIED fold (orchestrator re-run) must be a
     # no-op — the anti-join on existing vec_ids keeps the store free
     # of duplicate delta rows.
     append_ivf_store(spark, SF_SMALL, store)
     registry.clear_caches()
-    again = {
-        (r.vec_id, r.cid) for r in spark.read.parquet(store).collect()
-    }
-    assert again == want
-    assert spark.read.parquet(store).count() == len(want)
+    again = read_ivf_store(spark, store, rows="all")
+    assert {(r.vec_id, r.cid) for r in again.collect()} == want
+    assert again.count() == len(want)
 
 
 def test_ivf_store_prune_scan_is_partition_pruned(spark, registry):
     """ivf_store_prune's docstring promise (VERDICT r12 #1): the
-    measured probe pass reads the PHYSICAL store partition-pruned —
-    the probed-cid isin predicate must reach the store scan as a
-    PartitionFilter, and the report's totals must be internally
+    measured probe pass reads only the probed cells' files of the
+    PHYSICAL store, and the report's totals must be internally
     consistent (nonempty <= probed <= total cells; scanned rows
     between 0 and the store total; every probe list nprobe-wide)."""
     from cs686_big_data_p1_spark.operators.ann import (
         ANN_N_QUERIES,
         IVF_NPROBE,
         _ivf_store_ready,
+        read_ivf_store,
     )
-    from cs686_big_data_p1_spark.plans import formatted_plan
 
     df = registry.QUERIES["ivf_store_prune"](spark, SF_SMALL)
     rows = df.collect()
@@ -994,17 +990,11 @@ def test_ivf_store_prune_scan_is_partition_pruned(spark, registry):
         if r.cells_total > IVF_NPROBE:
             assert r.rows_scanned < r.rows_total
 
-    # The partition filter reaches the store scan: re-derive the probe
-    # scan the query builds and pin its plan.
-    from pyspark.sql import functions as F
-
+    # Re-derive the probe scan the query builds: it reads exactly the
+    # probed cells' files.
     path = _ivf_store_ready(spark, SF_SMALL)
-    probed = (
-        spark.read.parquet(path).where(F.col("cid").isin([7, 9]))
-    )
-    plan = formatted_plan(probed)
-    pf = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert pf and any("cid" in ln for ln in pf)
+    probed = read_ivf_store(spark, path, [7, 9], "all")
+    assert _input_files(probed, path) == _cell_files(spark, path, [7, 9])
 
 
 def test_ivf_nprobe_sweep_monotone_and_agrees_with_full_probe(

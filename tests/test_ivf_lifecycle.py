@@ -92,19 +92,33 @@ def test_ivf_retrain_report_is_consistent(spark, registry):
         assert abs(r.recall - r.n_hits / r.n_true) < 1e-12
 
 
-def _store_snapshot(path):
-    """(relpath, size, mtime_ns) of every data file OUTSIDE the
-    tombstone dir — the delete path must never rewrite them."""
+def _store_snapshot(spark, path, cids=None):
+    """(relpath, size, mtime_ns) of every data file the store's latest
+    manifest names (of cells `cids`, all when None) — the delete path
+    must never rewrite them."""
+    from cs686_big_data_p1_spark.operators.ann import _ivf_manifest
+
     snap = set()
-    for root, dirs, files in os.walk(path):
-        if "_tombstones" in root:
-            continue
-        dirs[:] = [d for d in dirs if d != "_tombstones"]
-        for f in files:
-            p = os.path.join(root, f)
-            st = os.stat(p)
-            snap.add((os.path.relpath(p, path), st.st_size, st.st_mtime_ns))
+    for cid, files in _ivf_manifest(spark, path)[0]["data"].items():
+        if cids is None or int(cid) in cids:
+            for f in files:
+                st = os.stat(os.path.join(path, f))
+                snap.add((f, st.st_size, st.st_mtime_ns))
     return snap
+
+
+def _disk_cells(path, part):
+    """Cells with a `part`=<c> directory under any version on disk."""
+    import glob
+
+    return {
+        int(d.rsplit("=", 1)[1])
+        for d in glob.glob(f"{path}/v=*/**/{part}=*", recursive=True)
+    }
+
+
+def _ids(df):
+    return {r.vec_id for r in df.select("vec_id").collect()}
 
 
 def test_ivf_store_delete_idempotent_invisible_and_pruned(
@@ -112,13 +126,12 @@ def test_ivf_store_delete_idempotent_invisible_and_pruned(
 ):
     from cs686_big_data_p1_spark.operators.ann import (
         _ivf_store_ready,
-        probe_ivf_store_live,
+        read_ivf_store,
     )
-    from pyspark.sql import functions as F
 
     path = _ivf_store_ready(spark, SF_SMALL)
-    rows_before = spark.read.parquet(path).count()
-    snap0 = _store_snapshot(path)
+    rows_before = read_ivf_store(spark, path, rows="all").count()
+    snap0 = _store_snapshot(spark, path)
 
     first = sorted(
         map(tuple, registry.QUERIES["ivf_store_delete"](
@@ -133,26 +146,21 @@ def test_ivf_store_delete_idempotent_invisible_and_pruned(
     )
     assert first == second
 
-    # tombstones are INVISIBLE to plain store reads (underscore rule):
-    # every existing consumer sees the exact pre-delete row set
-    assert spark.read.parquet(path).count() == rows_before
+    # tombstones are INVISIBLE to "all" reads: every existing consumer
+    # sees the exact pre-delete row set
+    assert read_ivf_store(spark, path, rows="all").count() == rows_before
     # base files of every cell are untouched — deletes rewrite nothing
-    assert _store_snapshot(path) == snap0
+    assert _store_snapshot(spark, path) == snap0
 
     # the report actually tombstoned something on this fixture
     total_tomb = sum(r[2] for r in first)
     assert total_tomb > 0
-    dead = {
-        r.vec_id
-        for r in spark.read.parquet(
-            os.path.join(path, "_tombstones")
-        ).collect()
-    }
+    dead = _ids(read_ivf_store(spark, path, rows="dead"))
     # live probe of an affected cell: exactly rows_live rows remain
     # and none of them is tombstoned
     cell = next(r for r in first if r[2] > 0)
     cid, _total, _tomb, live_n = cell
-    live = probe_ivf_store_live(spark, path, [cid]).collect()
+    live = read_ivf_store(spark, path, [cid]).collect()
     assert len(live) == live_n
     assert not ({r.vec_id for r in live} & dead)
 
@@ -285,94 +293,160 @@ def test_ivf_store_vacuum_applies_and_preserves(spark, registry):
     files, physical absence of vacuumed cells' tombstone partitions,
     and that vacuumed cells' stored rows contain none of the dropped
     ids."""
-    from cs686_big_data_p1_spark.operators.ann import _vacuum_store_ready
+    from cs686_big_data_p1_spark.operators.ann import _ivf_store_ready
 
     first = sorted(
         map(tuple, registry.QUERIES["ivf_store_vacuum"](
             spark, SF_SMALL
         ).collect())
     )
-    path = _vacuum_store_ready(spark, SF_SMALL)
-    snap = {
-        (p, sz, mt)
-        for p, sz, mt in _store_snapshot(path)
-    }
+    path = _ivf_store_ready(spark, SF_SMALL, "ivf_vacuum_store")
+    snap = _store_snapshot(spark, path)
     second = sorted(
         map(tuple, registry.QUERIES["ivf_store_vacuum"](
             spark, SF_SMALL
         ).collect())
     )
     assert first == second  # replayed fold + vacuum are no-ops
-    assert _store_snapshot(path) == snap  # second run rewrote nothing
+    assert _store_snapshot(spark, path) == snap  # second run rewrote nothing
 
     rows = {r[0]: r for r in first}
     vacuumed = [r for r in first if r[3]]
     kept = [r for r in first if not r[3] and r[2] > 0]
     assert vacuumed, "fixture should vacuum at least one cell"
     assert kept, "fixture should leave at least one tombstoned cell"
-    import os
+    from cs686_big_data_p1_spark.operators.ann import read_ivf_store
 
-    from pyspark.sql import functions as F
-
+    tomb_cells = _disk_cells(path, "cell")
     for cid, before, dropped, _vac, stored, tombs, live in vacuumed:
         assert stored == live == before - dropped
         assert tombs == 0
-        assert not os.path.exists(
-            os.path.join(path, "_tombstones", f"cid={cid}")
-        )
+        assert cid not in tomb_cells  # no tombstone file left on disk
     for cid, before, dropped, _vac, stored, tombs, live in kept:
         assert stored == before and tombs == dropped
     # disk content of a vacuumed cell: exactly the live ids
     cid = vacuumed[0][0]
-    disk_ids = {
-        r.vec_id
-        for r in spark.read.parquet(path)
-        .where(F.col("cid") == cid)
-        .collect()
-    }
+    disk_ids = _ids(read_ivf_store(spark, path, [cid], "all"))
     assert len(disk_ids) == vacuumed[0][4]
+    assert not disk_ids & _ids(read_ivf_store(spark, path, rows="dead"))
 
 
-def test_vacuum_empties_fully_dead_cell(spark):
-    """A cell whose every row is tombstoned vacuums to a REMOVED
-    directory (the drop-partition metadata op), and other cells'
-    files stay byte-identical."""
-    import os
-    import tempfile
-
+def test_vacuum_empties_fully_dead_cell(spark, tmp_path):
+    """A cell whose every row is tombstoned vacuums to NO files (its
+    cell drops out of the manifest and off disk), other cells' files
+    stay byte-identical, and a store vacuumed to empty everywhere still
+    probes: a typed empty frame, not a schema-inference error."""
     from pyspark.sql import functions as F
 
     from cs686_big_data_p1_spark.operators.ann import (
+        _build_ivf_store,
+        _ivf_manifest,
         delete_ivf_store,
+        probe_ivf_store_live,
+        read_ivf_store,
         vacuum_ivf_store,
     )
 
-    path = os.path.join(tempfile.mkdtemp(), "vacstore")
+    path = str(tmp_path / "vacstore")
     rows = [(i, [float(i)] * 4, i % 3) for i in range(30)]
     df = spark.createDataFrame(
         rows, "vec_id bigint, embedding array<float>, cid bigint"
     )
-    df.write.partitionBy("cid").parquet(path)
+    _build_ivf_store(spark, path, df)
     # kill ALL of cell 1, one row of cell 2 (1/10 = 10% > 5%),
     # nothing of cell 0
     drops = df.where(
         (F.col("cid") == 1) | ((F.col("cid") == 2) & (F.col("vec_id") == 2))
     ).select("vec_id", "cid")
     delete_ivf_store(spark, path, drops)
-    snap_cell0 = {
-        s for s in _store_snapshot(path) if s[0].startswith("cid=0")
-    }
+    snap_cell0 = _store_snapshot(spark, path, {0})
     vac = vacuum_ivf_store(spark, path)
     assert set(vac) == {1, 2}
-    assert not os.path.exists(os.path.join(path, "cid=1"))
-    assert {
-        s for s in _store_snapshot(path) if s[0].startswith("cid=0")
-    } == snap_cell0
-    left = spark.read.parquet(path)
+    man = _ivf_manifest(spark, path)[0]
+    assert "1" not in man["data"] and not man["tombs"]
+    assert 1 not in _disk_cells(path, "cid")
+    assert _store_snapshot(spark, path, {0}) == snap_cell0
+    left = read_ivf_store(spark, path, rows="all")
     assert left.where(F.col("cid") == 2).count() == 9
     assert left.where(F.col("cid") == 0).count() == 10
     # re-vacuum: nothing above threshold remains
     assert vacuum_ivf_store(spark, path) == []
+
+    # every remaining row dead: the whole store vacuums to empty
+    delete_ivf_store(spark, path, left.select("vec_id", "cid"))
+    assert set(vacuum_ivf_store(spark, path)) == {0, 2}
+    assert _ivf_manifest(spark, path)[0] == {"data": {}, "tombs": {}}
+    for rows_ in ("live", "all", "dead"):
+        empty = read_ivf_store(spark, path, rows=rows_)
+        assert empty.count() == 0
+    probed = probe_ivf_store_live(spark, path, [0, 1, 2])
+    assert probed.collect() == []
+    assert probed.columns == ["vec_id", "embedding", "cid"]
+
+
+def test_ivf_store_crash_before_publish_keeps_previous_version(
+    spark, tmp_path, monkeypatch
+):
+    """A delete or a vacuum that dies after staging its files but
+    before the publish leaves the previous version serving the same
+    live rows, its stage invisible to every read, and a re-run reaches
+    exactly the state a clean run reaches; the stale stages are then
+    deleted by recover_stranded_stages, never published over the newer
+    versions."""
+    import pytest
+    from pyspark.sql import functions as F
+
+    import cs686_big_data_p1_spark.sources.snapshots as snap
+    from cs686_big_data_p1_spark.operators.ann import (
+        _build_ivf_store,
+        _ivf_manifest,
+        delete_ivf_store,
+        read_ivf_store,
+        vacuum_ivf_store,
+    )
+
+    rows = [(i, [float(i)] * 4, i % 3) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, cid bigint"
+    )
+    drops = df.where((F.col("cid") == 1) & (F.col("vec_id") < 12))
+    clean, crashed = str(tmp_path / "clean"), str(tmp_path / "crashed")
+    for path in (clean, crashed):
+        _build_ivf_store(spark, path, df)
+    delete_ivf_store(spark, clean, drops)
+    vac_clean = vacuum_ivf_store(spark, clean)
+
+    def state(path):
+        return (
+            sorted(_ids(read_ivf_store(spark, path))),
+            spark.read.parquet(path).count(),  # raw: stages stay hidden
+            snap.snapshot_versions(spark, path),
+        )
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crashed after staging")
+
+    for mutate in (
+        lambda: delete_ivf_store(spark, crashed, drops),
+        lambda: vacuum_ivf_store(spark, crashed),
+    ):
+        before = state(crashed)
+        with monkeypatch.context() as m:
+            m.setattr(snap, "_publish_stage", crash)
+            with pytest.raises(RuntimeError):
+                mutate()
+        assert state(crashed) == before
+        result = mutate()  # the re-run
+    assert result == vac_clean
+    assert state(crashed)[:2] == state(clean)[:2]
+    cells = {k: sorted(v) for k, v in _ivf_manifest(spark, crashed)[0].items()}
+    assert cells == {
+        k: sorted(v) for k, v in _ivf_manifest(spark, clean)[0].items()
+    }
+    versions = snap.snapshot_versions(spark, crashed)
+    out = snap.recover_stranded_stages(spark, crashed, min_age_ms=0)
+    assert len(out) == 2 and set(out.values()) == {None}
+    assert snap.snapshot_versions(spark, crashed) == versions
 
 
 def test_store_live_search_never_returns_dropped(spark, registry):
@@ -380,30 +454,20 @@ def test_store_live_search_never_returns_dropped(spark, registry):
     exists in the store, NONE is tombstoned, and the result is exactly
     knn_ivf_append's ranking with the dropped candidates removed
     (k refills from the live remainder)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from cs686_big_data_p1_spark.operators.ann import (
         ANN_K,
         _ivf_store_ready,
+        read_ivf_store,
     )
 
     rows = registry.QUERIES["knn_ivf_store_live"](spark, SF_SMALL).collect()
     assert len(rows) == 5 * ANN_K
     path = _ivf_store_ready(spark, SF_SMALL)
-    dead = {
-        r.vec_id
-        for r in spark.read.parquet(
-            os.path.join(path, "_tombstones")
-        ).collect()
-    }
+    dead = _ids(read_ivf_store(spark, path, rows="dead"))
     assert dead, "decontamination drop set should be nonempty here"
     returned = {r.neighbor_id for r in rows}
     assert not (returned & dead)
-    stored = {
-        r.vec_id for r in spark.read.parquet(path).select("vec_id").collect()
-    }
+    stored = _ids(read_ivf_store(spark, path, rows="all"))
     assert returned <= stored
     # equals the mask-free search minus dropped candidates, re-ranked
     dropped_ids = {

@@ -168,6 +168,45 @@ def test_stranded_stage_janitor_recovers_lost_commit(spark, tmp_path):
     assert vacuum_snapshots(spark, tbl, keep_last=2) == [1, 2]
 
 
+def test_janitor_keeps_expected_version_stage_to_its_version(
+    spark, tmp_path, monkeypatch
+):
+    """A crashed EXPECTED-VERSION commit (a read-modify-write of the
+    version before) is recovered only as exactly the version it
+    expected: deleted once a newer writer holds that version — never
+    republished as the next free number over the newer commit — and
+    published as that version while it is still free."""
+    import cs686_big_data_p1_spark.sources.snapshots as snap
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crashed after staging")
+
+    tbl = str(tmp_path / "tbl")
+    write_snapshot(spark, spark.range(1), tbl)  # v1
+    with monkeypatch.context() as m:
+        m.setattr(snap, "_publish_stage", crash)
+        for rows in (spark.range(10, 12), spark.range(20, 23)):
+            with pytest.raises(RuntimeError):
+                snap._commit(spark, tbl, rows.write.parquet, version=2)
+    stages = [s["path"] for s in snap.find_stranded_stages(spark, tbl)]
+    assert len(stages) == 2
+    write_snapshot(spark, spark.range(5), tbl)  # the newer writer's v2
+    out = snap.recover_stranded_stages(spark, tbl, min_age_ms=0)
+    assert out == {p: None for p in stages}
+    assert snapshot_versions(spark, tbl) == [1, 2]
+    assert read_snapshot(spark, tbl).count() == 5
+
+    with monkeypatch.context() as m:
+        m.setattr(snap, "_publish_stage", crash)
+        with pytest.raises(RuntimeError):
+            snap._commit(spark, tbl, spark.range(30, 34).write.parquet, 3)
+    out = snap.recover_stranded_stages(spark, tbl, min_age_ms=0)
+    assert list(out.values()) == [3]
+    assert {r.id for r in read_snapshot(spark, tbl, 3).collect()} == {
+        30, 31, 32, 33
+    }
+
+
 def test_janitor_spares_live_slow_write(spark, tmp_path):
     """Review r8: a parquet write running longer than min_age_ms keeps
     its stage dir's TOP mtime at write start while fresh task files

@@ -961,7 +961,7 @@ def test_neardup_store_concurrent_writer_still_raises(spark, tmp_path):
     b, vb = drained("from_b")
     assert va == vb == 1
     assert write_neardup_store(a, store_path, va) == 2
-    with _pytest.raises(IOError, match="already published"):
+    with _pytest.raises(IOError, match="version 2 .* already reached"):
         write_neardup_store(b, store_path, vb)
 
     served, v = load_neardup_store(spark, store_path)
@@ -1046,6 +1046,7 @@ def test_ivf_maintenance_fold_is_exactly_once_and_stream_equals_batch(
         DELTA_MOD,
         DELTA_RES,
         _append_parts,
+        read_ivf_store,
         write_ivf_base_store,
     )
     from cs686_big_data_p1_spark.streaming.vectors import fold_ivf_batch
@@ -1071,12 +1072,17 @@ def test_ivf_maintenance_fold_is_exactly_once_and_stream_equals_batch(
 
     fold_ivf_batch(half_a, store, cent_rows)
     fold_ivf_batch(half_b, store, cent_rows)
-    got = {(r.vec_id, r.cid) for r in spark.read.parquet(store).collect()}
+    stored = read_ivf_store(spark, store, rows="all")
+    got = {(r.vec_id, r.cid) for r in stored.collect()}
     assert got == want  # (1) stream == batch under an arbitrary split
 
-    n_before = spark.read.parquet(store).count()
+    from cs686_big_data_p1_spark.sources.snapshots import snapshot_versions
+
+    n_before, versions = stored.count(), snapshot_versions(spark, store)
     fold_ivf_batch(half_a, store, cent_rows)  # replayed delivery
-    assert spark.read.parquet(store).count() == n_before  # (2)
+    # (2): nothing appended, and nothing published either
+    assert read_ivf_store(spark, store, rows="all").count() == n_before
+    assert snapshot_versions(spark, store) == versions
 
     # (3) the registry query's report == the composed batch monitors
     report = {

@@ -596,8 +596,9 @@ AUDITS: dict[str, dict] = {
         "max_waived": 16,
     },
     "ivf_store_vacuum": {
-        # store reads are the temp cid-partitioned store (not a fixture
-        # fact table); the only broadcasts are bounded metadata sides
+        # store reads are the temp IVF store's manifest-named files
+        # (not a fixture fact table); the only broadcasts are bounded
+        # metadata sides
         # (tombstone counts, drop-set assignment) — no fact-table
         # exchange may appear at all.
         "broadcast": True,
@@ -606,8 +607,8 @@ AUDITS: dict[str, dict] = {
         "broadcast": True,
         "bounded_broadcast": "query slice bounded by the vec_id < "
         "ANN_N_QUERIES Filter; probes by the frozen-codebook aggregate; "
-        "candidates come off the partition-pruned store, not a fixture "
-        "fact scan",
+        "candidates come off the probed cells' store files, not a "
+        "fixture fact scan",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
         "max_waived": 2,
     },
