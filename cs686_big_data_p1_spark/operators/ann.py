@@ -33,7 +33,6 @@ in expectation and AQE skew-join covers pathological keys.
 from __future__ import annotations
 
 import hashlib
-import json
 from functools import reduce
 
 import numpy as np
@@ -56,15 +55,7 @@ from ..functions.vector import (
     top_k,
 )
 from ..registry import query, track_cache
-from ..sources.snapshots import (
-    _commit,
-    _fs,
-    _read_text,
-    _version_dir,
-    _version_name,
-    _write_text,
-    snapshot_versions,
-)
+from ..sources.snapshots import commit_increment, read_manifest, subdirs
 from ..tables import fixture_memo, fixture_store, load_table
 from .llm import KNN_K, KNN_N_QUERIES, KNN_ORACLE, knn_bruteforce
 from .splits import SPLIT_BOUNDS
@@ -712,38 +703,29 @@ def _bucket_mates(e: DataFrame, directed: bool = False) -> DataFrame:
 # v=N/_tombstones/cell=<c>/ (cid stays a column inside tombstone files:
 # the tombstone dirs of two versions cannot share one partition-
 # discovering read). Its v=N/_manifest.json maps each cell to its live
-# data and tombstone files across all versions. A mutation loads the
-# latest manifest (version v), stages its new files and the next
+# data and tombstone directories across all versions. A mutation loads
+# the latest manifest (version v), stages its new files and the next
 # manifest, and publishes both as exactly v + 1 through
-# snapshots._commit's verified rename: a reader sees a whole mutation
-# or none of it, a crash leaves v serving, and a concurrent writer's
-# commit raises instead of being shadowed. Files of older versions that
-# the new manifest no longer names are deleted after the publish. Each
-# mutation writes files only into the cells it touches; every read goes
-# through read_ivf_store, which reads exactly the manifest's files of
-# the cells asked for (no directory listing, no schema inference job).
+# snapshots.commit_increment's verified rename: a reader sees a whole
+# mutation or none of it, a crash leaves v serving, and a concurrent
+# writer's commit raises instead of being shadowed. Directories of
+# older versions that the new manifest no longer names are deleted
+# after the publish. Each mutation writes files only into the cells it
+# touches; every read goes through read_ivf_store, which reads exactly
+# the manifest's directories of the cells asked for (no schema
+# inference job).
 
-_IVF_DATA = "vec_id bigint, embedding array<float>"  # cid: from the path
+_IVF_DATA = "vec_id bigint, embedding array<float>, v int, cid int"  # v, cid: path
 _IVF_TOMBS = "vec_id bigint, cid bigint"
 
 
-def _ivf_manifest(spark: SparkSession, path: str) -> tuple[dict, int]:
-    """The store's latest manifest and its version; empty at version 0
-    before the first publish."""
-    vs = snapshot_versions(spark, path)
-    if not vs:
-        return {"data": {}, "tombs": {}}, 0
-    text = _read_text(spark, f"{_version_dir(path, vs[-1])}/_manifest.json")
-    return json.loads(text), vs[-1]
-
-
-def _ivf_files(path: str, man: dict, kind: str, cids) -> list[str]:
+def _ivf_dirs(path: str, man: dict, kind: str, cids) -> list[str]:
     want = None if cids is None else {int(c) for c in cids}
     return [
-        f"{path}/{f}"
-        for c, files in sorted(man[kind].items())
+        f"{path}/{d}"
+        for c, dirs in sorted(man.get(kind, {}).items())
         if want is None or int(c) in want
-        for f in files
+        for d in dirs
     ]
 
 
@@ -757,26 +739,23 @@ def read_ivf_store(
     """The store's rows in cells `cids` (every cell when None) as of
     its latest version (or of manifest `man`): "all" stored rows
     (vec_id, embedding, cid), "dead" tombstones (vec_id, cid), or
-    "live" stored rows no tombstone names. Only the named cells' files
-    are read, and an empty selection is a typed empty frame."""
+    "live" stored rows no tombstone names. Only the named cells'
+    directories are read, and an empty selection is a typed empty
+    frame."""
     if man is None:
-        man = _ivf_manifest(spark, path)[0]
-    tombs = _ivf_files(path, man, "tombs", cids)
+        man = read_manifest(spark, path)[0]
+    tombs = _ivf_dirs(path, man, "tombs", cids)
     if rows == "dead":
         if not tombs:
             return spark.createDataFrame([], _IVF_TOMBS)
         reader = spark.read.schema(_IVF_TOMBS)
         return reader.option("recursiveFileLookup", "true").parquet(*tombs)
-    data = _ivf_files(path, man, "data", cids)
-    if not data:
-        stored = spark.createDataFrame([], f"{_IVF_DATA}, cid int")
-    else:
-        stored = (
-            spark.read.schema(_IVF_DATA)
-            .option("basePath", path)
-            .parquet(*data)
-            .select("vec_id", "embedding", "cid")
-        )
+    data = _ivf_dirs(path, man, "data", cids)
+    stored = (
+        spark.read.schema(_IVF_DATA).option("basePath", path).parquet(*data)
+        if data
+        else spark.createDataFrame([], _IVF_DATA)
+    ).select("vec_id", "embedding", "cid")
     if rows == "all" or not tombs:
         return stored
     dead = read_ivf_store(spark, path, cids, "dead", man).select("vec_id")
@@ -797,62 +776,31 @@ def _commit_ivf(
 ) -> None:
     """Publish version + 1 of the store: manifest `man` (read at
     `version`) without the cells in `drop`, plus `rows` written as new
-    files in per-cell directories: data rows (vec_id, embedding, cid),
-    or tombstones (vec_id, cid, cell) when `tombs`. Publishes nothing when
+    per-cell directories: data rows (vec_id, embedding, cid), or
+    tombstones (vec_id, cid, cell) when `tombs`. Publishes nothing when
     that adds and drops nothing; raises IOError if another writer
     published version + 1 first."""
     nxt = {
-        kind: {c: list(f) for c, f in cells.items() if int(c) not in drop}
-        for kind, cells in man.items()
+        kind: {c: list(d) for c, d in man.get(kind, {}).items() if int(c) not in drop}
+        for kind in ("data", "tombs")
     }
-    vname = _version_name(version + 1)
     sub, part = ("/_tombstones", "cell") if tombs else ("", "cid")
     cells = nxt["tombs" if tombs else "data"]
 
-    def write_stage(stage: str) -> bool:
+    def write_stage(stage: str, name: str) -> dict | None:
         rows.write.partitionBy(part).parquet(stage + sub)
-        fs, root, _ = _fs(spark, stage + sub)
-        it = fs.listFiles(root, True)
-        while it.hasNext():
-            f = it.next().getPath()
-            cell = f.getParent().getName()
-            if f.getName().endswith(".parquet") and cell.startswith(f"{part}="):
-                rel = f"{vname}{sub}/{cell}/{f.getName()}"
-                cells.setdefault(cell.split("=", 1)[1], []).append(rel)
-        if nxt == man:
-            return False
-        _write_text(spark, f"{stage}/_manifest.json", json.dumps(nxt))
-        return True
+        for d in subdirs(spark, stage + sub):
+            if d.startswith(f"{part}="):
+                cells.setdefault(d.split("=", 1)[1], []).append(f"{name}{sub}/{d}")
+        return None if nxt == man else nxt
 
-    if _commit(spark, path, write_stage, version + 1) is None:
-        return
-    # the publish landed: delete each older version no live file is
-    # left in (versions after ours are a newer writer's), and in the
-    # others the cell dirs `man` named that `nxt` drops
-    live = _ivf_dirs(nxt)
-    held = {d.split("/", 1)[0] for d in live}
-    vs = snapshot_versions(spark, path)
-    stale = {_version_name(u) for u in vs if u <= version} - held
-    stale |= {d for d in _ivf_dirs(man) - live if d.split("/", 1)[0] in held}
-    fs, _, jvm = _fs(spark, path)
-    for d in stale:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{d}"), True)
-
-
-def _ivf_dirs(man: dict) -> set[str]:
-    """The cell directories (store-relative) manifest `man` names."""
-    return {
-        f.rsplit("/", 1)[0]
-        for cells in man.values()
-        for files in cells.values()
-        for f in files
-    }
+    commit_increment(spark, path, version, write_stage)
 
 
 def _build_ivf_store(spark: SparkSession, path: str, rows: DataFrame) -> None:
     """(Re)build the store as exactly `rows` (vec_id, embedding, cid):
-    a version whose manifest names only its own new files."""
-    man, v = _ivf_manifest(spark, path)
+    a version whose manifest names only its own new directories."""
+    man, v = read_manifest(spark, path)
     cells = {int(c) for kind in man.values() for c in kind}
     _commit_ivf(spark, path, man, v, rows, drop=cells)
 
@@ -868,21 +816,22 @@ def _fold_ivf_store(
     replayed id in the same cell, so the existing-id read covers only
     the keys' cells: a fold costs O(touched cells), not O(store)."""
     keys = keys.select("vec_id", F.col("cid").cast("bigint"))
-    # Eager: the cell list and the write both read `keys`; lazy, each
-    # re-ran the assignment (sf0.1 A/B: +6 jobs per delete fold).
-    keys = keys.localCheckpoint(eager=True)
-    # Bounded control flow: <= nlist distinct cells.
-    cids = [r.cid for r in keys.select("cid").distinct().collect()]
-    man, v = _ivf_manifest(spark, path)
-    fresh = keys
-    if _ivf_files(path, man, "tombs" if vecs is None else "data", cids):
-        kind = "dead" if vecs is None else "all"
-        have = read_ivf_store(spark, path, cids, kind, man)
-        fresh = keys.join(have.select("vec_id"), "vec_id", "left_anti")
+    man, v = read_manifest(spark, path)
+    kind = "tombs" if vecs is None else "data"
+    if man.get(kind):  # else the store holds no id to skip: no cell list
+        # Eager: the cell list and the write both read `keys`; lazy, each
+        # re-ran the assignment (sf0.1 A/B: +6 jobs per delete fold).
+        keys = keys.localCheckpoint(eager=True)
+        # Bounded control flow: <= nlist distinct cells.
+        cids = [r.cid for r in keys.select("cid").distinct().collect()]
+        if _ivf_dirs(path, man, kind, cids):
+            rows = "dead" if vecs is None else "all"
+            have = read_ivf_store(spark, path, cids, rows, man)
+            keys = keys.join(have.select("vec_id"), "vec_id", "left_anti")
     if vecs is None:
-        fresh = fresh.withColumn("cell", F.col("cid"))
+        fresh = keys.withColumn("cell", F.col("cid"))
     else:
-        fresh = vecs.join(fresh, "vec_id").select("vec_id", "embedding", "cid")
+        fresh = vecs.join(keys, "vec_id").select("vec_id", "embedding", "cid")
     _commit_ivf(spark, path, man, v, fresh, tombs=vecs is None)
 
 
@@ -4181,7 +4130,7 @@ def ivf_store_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     _v, _b, _d, cents, _m, _p = parts
     delete_ivf_store(spark, path, _curation_drops(spark, sf_dir, cents, dropped))
-    man = _ivf_manifest(spark, path)[0]
+    man = read_manifest(spark, path)[0]
     store = read_ivf_store(spark, path, rows="all", man=man)
     tomb = read_ivf_store(spark, path, rows="dead", man=man).select(
         "vec_id", F.lit(1).alias("t")
@@ -4235,9 +4184,9 @@ def vacuum_ivf_store(spark: SparkSession, path: str) -> list[int]:
     only tombstoned cells' files and writes only vacuumed cells' live
     rows. Idempotent: vacuumed cells lose their tombstones, so a re-run
     finds nothing above threshold and publishes nothing."""
-    man, v = _ivf_manifest(spark, path)
+    man, v = read_manifest(spark, path)
     # Bounded control flow: tombstoned cells only, from the manifest.
-    tcids = sorted(int(c) for c in man["tombs"])
+    tcids = sorted(int(c) for c in man.get("tombs", {}))
     if not tcids:
         return []
     store = read_ivf_store(spark, path, tcids, "all", man)
@@ -4340,7 +4289,7 @@ def ivf_store_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # ...beside the disk-measured after-state.
-    man = _ivf_manifest(spark, path)[0]
+    man = read_manifest(spark, path)[0]
     stored = (
         read_ivf_store(spark, path, rows="all", man=man)
         .groupBy("cid")

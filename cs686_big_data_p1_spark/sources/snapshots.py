@@ -30,12 +30,14 @@ atomic filesystem rename per commit — no table-format dependency:
     OTHER versions (immutable snapshot isolation).
 
 A version need not be a full copy. An INCREMENTAL table (the IVF
-store, operators/ann.py) writes into version N only the files mutation
-N added, plus a ``_manifest.json`` naming every live file of the table
-across versions; the manifest is the version's content, so it
-publishes in the same rename as the new files, and the files older
-versions hold that it no longer names are deleted after the publish —
-so an incremental table serves its latest version only (no pinning).
+store, operators/ann.py; commit_increment / read_manifest) writes into
+version N only the files mutation N added, plus a ``_manifest.json``
+naming every live directory of the table across versions; the
+manifest is the version's content, so it publishes in the same rename
+as the new files. After the publish, whatever older versions hold
+beyond the named directories is deleted, found on disk, so what a
+crash before that step left goes at the next commit. An incremental
+table therefore serves its latest version only (no pinning).
 Small text files such as the manifest and the commit marker go through
 the Hadoop FileSystem on the driver (``_write_text``/``_read_text``),
 never through a Spark job.
@@ -50,20 +52,30 @@ instead, or keep an incremental manifest as above.
 
 from __future__ import annotations
 
+import json
 import uuid
 from collections.abc import Callable
+from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 
 _WIDTH = 8  # zero-padded version directory suffix
 
 
+_HANDLES: dict = {}  # (SparkContext, scheme, authority) -> (FileSystem, Path)
+
+
 def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    return p.getFileSystem(
-        spark.sparkContext._jsc.hadoopConfiguration()
-    ), p, jvm
+    """(FileSystem, Path(path), the Path class) for `path`. The class
+    and each filesystem are looked up once per SparkContext: through
+    Py4J a class lookup alone takes ~2 ms."""
+    sc = spark.sparkContext
+    key = (sc, *urlsplit(path)[:2])
+    if key not in _HANDLES:
+        jpath = sc._jvm.org.apache.hadoop.fs.Path
+        _HANDLES[key] = jpath(path).getFileSystem(sc._jsc.hadoopConfiguration()), jpath
+    fs, jpath = _HANDLES[key]
+    return fs, jpath(path), jpath
 
 
 def _version_name(v: int) -> str:
@@ -84,26 +96,28 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
 
 
 def _read_text(spark: SparkSession, path: str) -> str:
-    fs, p, jvm = _fs(spark, path)
+    fs, p, _ = _fs(spark, path)
     stream = fs.open(p)
     try:
-        return jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        return bytes(stream.readAllBytes()).decode()
     finally:
         stream.close()
+
+
+def subdirs(spark: SparkSession, path: str) -> list[str]:
+    """The names of `path`'s subdirectories; [] if it does not exist.
+    One driver-side listing through the Hadoop FileSystem."""
+    fs, p, _ = _fs(spark, path)
+    if not fs.exists(p):
+        return []
+    return [st.getPath().getName() for st in fs.listStatus(p) if st.isDirectory()]
 
 
 def snapshot_versions(spark: SparkSession, table_path: str) -> list[int]:
     """Published versions, ascending. Hidden staging dirs are invisible
     (dot-prefixed names are filtered, and Spark ignores them anyway)."""
-    fs, p, _ = _fs(spark, table_path)
-    if not fs.exists(p):
-        return []
-    out = []
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v=") and name[2:].isdigit():
-            out.append(int(name[2:]))
-    return sorted(out)
+    names = subdirs(spark, table_path)
+    return sorted(int(n[2:]) for n in names if n[:2] == "v=" and n[2:].isdigit())
 
 
 def _publish_stage(
@@ -118,11 +132,14 @@ def _publish_stage(
     ``version=None`` takes the next free number, retrying past any
     committer that wins it. An int is an EXPECTED-VERSION commit: the
     stage publishes as exactly that number or not at all — if it is
-    taken (or passed: an incremental table may since have deleted a
-    version below its latest), the stage is deleted and IOError
-    raised, because the staged state was derived from an older version
-    and publishing it under a later number would shadow the winner's
-    commit. A rename that fails (returns false or throws) while the
+    taken or passed, the stage is deleted and IOError raised, because
+    the staged state was derived from an older version and publishing
+    it under a later number would shadow the winner's commit. An
+    incremental table prunes versions below its latest, so a rename
+    can still land on a passed number: the versions are listed again
+    after it, and a newer one raises IOError before the caller prunes
+    (the stale version stays below it and is pruned by later commits).
+    A rename that fails (returns false or throws) while the
     stage stays put and the version stays absent — permissions, quota —
     raises IOError naming the stage: retrying cannot change that
     outcome.
@@ -134,8 +151,7 @@ def _publish_stage(
     snapshot_versions. The commit is not silently lost forever, but it
     needs recover_stranded_stages() to surface/republish it; vacuum
     also reports such dirs instead of deleting them blind."""
-    fs, root, jvm = _fs(spark, table_path)
-    jpath = jvm.org.apache.hadoop.fs.Path
+    fs, root, jpath = _fs(spark, table_path)
     stage = f"{table_path}/.stage-{token}"
     marker = f"_commit-{token}"
     fs.mkdirs(root)  # rename needs an existing destination parent
@@ -163,13 +179,13 @@ def _publish_stage(
             # recovery the race loser below performs) and keep
             # driving the CAS; a failed pull-back means the janitor
             # moved it concurrently — re-enter the loop and re-look.
-            nested_stage = None
-            for s in find_stranded_stages(spark, table_path):
-                if s["token"] == token and s["nested_in"] is not None:
-                    nested_stage = s["path"]
-                    break
-            if nested_stage is not None:
-                fs.rename(jpath(nested_stage), jpath(stage))
+            nested = [
+                s["path"]
+                for s in find_stranded_stages(spark, table_path)
+                if s["token"] == token and s["nested_in"] is not None
+            ]
+            if nested:
+                fs.rename(jpath(nested[0]), jpath(stage))
                 continue
             raise IOError(
                 f"snapshot commit: stage dir {stage} disappeared "
@@ -195,7 +211,16 @@ def _publish_stage(
         except Exception as e:  # noqa: BLE001 — e.g. source vanished in the race
             renamed, err = False, e
         if renamed and fs.exists(jpath(f"{final}/{marker}")):
-            return v  # marker directly under final ⇒ we own this version
+            # marker directly under final ⇒ we own this version; but an
+            # expected version may have landed on a number that a newer
+            # commit reached and then pruned away
+            if version is not None and snapshot_versions(spark, table_path)[-1] > v:
+                raise IOError(
+                    f"snapshot commit: version {v} of {table_path} was "
+                    "already passed; the stale version is left below the "
+                    "newer one, for its prune"
+                )
+            return v
         if renamed:
             # Lost: rename moved the stage dir INTO the winner's
             # version. Pull it back out, intact, and retry.
@@ -231,11 +256,86 @@ def _commit(
     token = uuid.uuid4().hex
     stage = f"{table_path}/.stage-{token}"
     if write_stage(stage) is False:
-        fs, _, jvm = _fs(spark, table_path)
-        fs.delete(jvm.org.apache.hadoop.fs.Path(stage), True)
+        fs, _, jpath = _fs(spark, table_path)
+        fs.delete(jpath(stage), True)
         return None
     _write_text(spark, f"{stage}/_commit-{token}", str(version or ""))
     return _publish_stage(spark, table_path, token, version)
+
+
+def read_manifest(spark: SparkSession, table_path: str) -> tuple[dict, int]:
+    """An incremental table's latest manifest and its version; ({}, 0)
+    before the first publish."""
+    vs = snapshot_versions(spark, table_path)
+    if not vs:
+        return {}, 0
+    text = _read_text(spark, f"{_version_dir(table_path, vs[-1])}/_manifest.json")
+    return json.loads(text), vs[-1]
+
+
+def commit_increment(
+    spark: SparkSession,
+    table_path: str,
+    version: int,
+    write_stage: Callable[[str, str], dict | None],
+) -> None:
+    """Publish version + 1 of an incremental table, whose manifest was
+    read at `version`. ``write_stage(stage, name)`` writes the new
+    files into `stage` (they publish under ``<table>/<name>/``) and
+    returns the next manifest, or None when nothing changed (then
+    nothing is published). A manifest maps each part of the table
+    to a map from keys to the table-relative directories live under
+    them (the IVF store: {"data" | "tombs": {cid: [dir, ...]}}).
+    Raises IOError if another writer published version + 1 first.
+    After the publish, the directories of older versions that the
+    manifest no longer names are deleted."""
+    nxt: dict = {}
+
+    def stage_files(stage: str) -> bool:
+        man = write_stage(stage, _version_name(version + 1))
+        if man is None:
+            return False
+        nxt.update(man)
+        _write_text(spark, f"{stage}/_manifest.json", json.dumps(man))
+        return True
+
+    if _commit(spark, table_path, stage_files, version + 1) is not None:
+        _prune_increments(spark, table_path, version, nxt)
+
+
+def _prune_increments(
+    spark: SparkSession, table_path: str, version: int, man: dict
+) -> None:
+    """Delete what versions <= `version` hold beyond the directories
+    manifest `man` names: a version holding none of them goes whole;
+    the others lose every directory that is neither named nor on the
+    way to a named one (hidden stage dirs stay, for
+    recover_stranded_stages). It reads the disk, not the previous
+    manifest, so it also clears what a crash between an earlier publish
+    and its prune left, or what a republished stage dropped. One
+    directory count per version skips the listing when nothing is
+    stale."""
+    live = {d for part in man.values() for dirs in part.values() for d in dirs}
+    keep = {d.rsplit("/", i)[0] for d in live for i in range(d.count("/") + 1)}
+    fs, _, jpath = _fs(spark, table_path)
+
+    def drop_stale(rel: str) -> None:
+        for name in subdirs(spark, f"{table_path}/{rel}"):
+            sub = f"{rel}/{name}"
+            if sub not in keep and name[0] != ".":
+                fs.delete(jpath(f"{table_path}/{sub}"), True)
+            elif sub in keep and sub not in live:
+                drop_stale(sub)
+
+    for u in snapshot_versions(spark, table_path):
+        if u > version:
+            break
+        rel, vdir = _version_name(u), jpath(_version_dir(table_path, u))
+        held = sum(k.split("/", 1)[0] == rel for k in keep)
+        if not held:
+            fs.delete(vdir, True)
+        elif fs.getContentSummary(vdir).getDirectoryCount() != held:
+            drop_stale(rel)
 
 
 def write_snapshot(spark: SparkSession, df: DataFrame, table_path: str) -> int:
@@ -278,8 +378,7 @@ def find_stranded_stages(
     under _temporary/ while the top dir's mtime stays at write start,
     and an age check on the top dir alone would misread a slow live
     write (> min_age) as a crashed stage and destroy it."""
-    fs, p, jvm = _fs(spark, table_path)
-    jpath = jvm.org.apache.hadoop.fs.Path
+    fs, p, jpath = _fs(spark, table_path)
 
     def tree_mtime(path: str, top_ms: int) -> int | None:
         """Newest mtime in the tree, or None if the tree vanished
@@ -347,9 +446,8 @@ def recover_stranded_stages(
     INCOMPLETE root stages (no marker: the parquet write itself died)
     are deleted. Returns {stage_path: new_version | None (deleted)};
     untouched young stages are simply absent."""
-    fs, _, jvm = _fs(spark, table_path)
-    jpath = jvm.org.apache.hadoop.fs.Path
-    now_ms = jvm.java.lang.System.currentTimeMillis()
+    fs, _, jpath = _fs(spark, table_path)
+    now_ms = spark.sparkContext._jvm.java.lang.System.currentTimeMillis()
     out: dict[str, int | None] = {}
     for s in find_stranded_stages(spark, table_path):
         if now_ms - s["mtime_ms"] < min_age_ms:
@@ -377,12 +475,9 @@ def read_snapshot(
 ) -> DataFrame:
     """The table as of `version` (latest when None)."""
     vs = snapshot_versions(spark, table_path)
-    if not vs:
-        raise FileNotFoundError(f"no published versions under {table_path}")
-    if version is None:
-        version = vs[-1]
+    version = vs[-1] if version is None and vs else version
     if version not in vs:
-        raise FileNotFoundError(f"version {version} not in {vs}")
+        raise FileNotFoundError(f"version {version} not in {vs} of {table_path}")
     return spark.read.parquet(_version_dir(table_path, version))
 
 
@@ -395,7 +490,7 @@ def vacuum_snapshots(
     latest."""
     if keep_last < 1:
         raise ValueError("keep_last must be >= 1")
-    fs, _, jvm = _fs(spark, table_path)
+    fs, _, jpath = _fs(spark, table_path)
     vs = snapshot_versions(spark, table_path)
     drop = vs[:-keep_last]
     # Janitor guard (ADVICE r7 low): a version slated for deletion may
@@ -414,7 +509,7 @@ def vacuum_snapshots(
             "recover_stranded_stages() first"
         )
     for v in drop:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(_version_dir(table_path, v)), True)
+        fs.delete(jpath(_version_dir(table_path, v)), True)
     return drop
 
 

@@ -722,9 +722,8 @@ def serve_knn_batch(
     # already has rows in the results relation is dropped before any
     # store IO. No parquet file yet is the first-batch state; any other
     # read failure must raise.
-    fs, _, jvm = _fs(spark_b, results_path)
-    parts = jvm.org.apache.hadoop.fs.Path(f"{results_path}/*.parquet")
-    if fs.globStatus(parts):
+    fs, _, jpath = _fs(spark_b, results_path)
+    if fs.globStatus(jpath(f"{results_path}/*.parquet")):
         served = (
             spark_b.read.parquet(results_path)
             .select(F.col("query_id").alias("vec_id"))

@@ -237,8 +237,8 @@ def test_dedup_embedding_contract(spark, registry):
 def test_ivf_store_partition_pruning(spark, tmp_path):
     """The IVF store's physical layout must deliver the promised scale
     property: probing nprobe cells reads exactly those cells' files
-    (the scan's inputFiles are the manifest's files of the probed
-    cells, nothing else)."""
+    (the scan's inputFiles are the files in the manifest's directories
+    of the probed cells, nothing else)."""
     from cs686_big_data_p1_spark.operators.ann import (
         read_ivf_store,
         write_ivf_store,
@@ -259,11 +259,20 @@ def _input_files(df, store):
 
 
 def _cell_files(spark, store, cids):
-    """The latest manifest's data files of cells `cids` (nonempty)."""
-    from cs686_big_data_p1_spark.operators.ann import _ivf_manifest
+    """The data files in the latest manifest's directories of cells
+    `cids` (nonempty)."""
+    import os
 
-    data = _ivf_manifest(spark, store)[0]["data"]
-    files = {f for c in cids for f in data.get(str(c), [])}
+    from cs686_big_data_p1_spark.sources.snapshots import read_manifest
+
+    data = read_manifest(spark, store)[0]["data"]
+    files = {
+        f"{d}/{f}"
+        for c in cids
+        for d in data.get(str(c), [])
+        for f in os.listdir(os.path.join(store, d))
+        if f.endswith(".parquet")
+    }
     assert files
     return files
 

@@ -93,17 +93,18 @@ def test_ivf_retrain_report_is_consistent(spark, registry):
 
 
 def _store_snapshot(spark, path, cids=None):
-    """(relpath, size, mtime_ns) of every data file the store's latest
-    manifest names (of cells `cids`, all when None) — the delete path
-    must never rewrite them."""
-    from cs686_big_data_p1_spark.operators.ann import _ivf_manifest
+    """(relpath, size, mtime_ns) of every data file in the directories
+    the store's latest manifest names (of cells `cids`, all when None)
+    — the delete path must never rewrite them."""
+    from cs686_big_data_p1_spark.sources.snapshots import read_manifest
 
     snap = set()
-    for cid, files in _ivf_manifest(spark, path)[0]["data"].items():
+    for cid, dirs in read_manifest(spark, path)[0]["data"].items():
         if cids is None or int(cid) in cids:
-            for f in files:
-                st = os.stat(os.path.join(path, f))
-                snap.add((f, st.st_size, st.st_mtime_ns))
+            for d in dirs:
+                for f in os.listdir(os.path.join(path, d)):
+                    st = os.stat(os.path.join(path, d, f))
+                    snap.add((f"{d}/{f}", st.st_size, st.st_mtime_ns))
     return snap
 
 
@@ -340,7 +341,7 @@ def test_vacuum_empties_fully_dead_cell(spark, tmp_path):
 
     from cs686_big_data_p1_spark.operators.ann import (
         _build_ivf_store,
-        _ivf_manifest,
+        read_manifest,
         delete_ivf_store,
         probe_ivf_store_live,
         read_ivf_store,
@@ -362,7 +363,7 @@ def test_vacuum_empties_fully_dead_cell(spark, tmp_path):
     snap_cell0 = _store_snapshot(spark, path, {0})
     vac = vacuum_ivf_store(spark, path)
     assert set(vac) == {1, 2}
-    man = _ivf_manifest(spark, path)[0]
+    man = read_manifest(spark, path)[0]
     assert "1" not in man["data"] and not man["tombs"]
     assert 1 not in _disk_cells(path, "cid")
     assert _store_snapshot(spark, path, {0}) == snap_cell0
@@ -375,7 +376,7 @@ def test_vacuum_empties_fully_dead_cell(spark, tmp_path):
     # every remaining row dead: the whole store vacuums to empty
     delete_ivf_store(spark, path, left.select("vec_id", "cid"))
     assert set(vacuum_ivf_store(spark, path)) == {0, 2}
-    assert _ivf_manifest(spark, path)[0] == {"data": {}, "tombs": {}}
+    assert read_manifest(spark, path)[0] == {"data": {}, "tombs": {}}
     for rows_ in ("live", "all", "dead"):
         empty = read_ivf_store(spark, path, rows=rows_)
         assert empty.count() == 0
@@ -399,7 +400,7 @@ def test_ivf_store_crash_before_publish_keeps_previous_version(
     import cs686_big_data_p1_spark.sources.snapshots as snap
     from cs686_big_data_p1_spark.operators.ann import (
         _build_ivf_store,
-        _ivf_manifest,
+        read_manifest,
         delete_ivf_store,
         read_ivf_store,
         vacuum_ivf_store,
@@ -439,14 +440,66 @@ def test_ivf_store_crash_before_publish_keeps_previous_version(
         result = mutate()  # the re-run
     assert result == vac_clean
     assert state(crashed)[:2] == state(clean)[:2]
-    cells = {k: sorted(v) for k, v in _ivf_manifest(spark, crashed)[0].items()}
+    cells = {k: sorted(v) for k, v in read_manifest(spark, crashed)[0].items()}
     assert cells == {
-        k: sorted(v) for k, v in _ivf_manifest(spark, clean)[0].items()
+        k: sorted(v) for k, v in read_manifest(spark, clean)[0].items()
     }
     versions = snap.snapshot_versions(spark, crashed)
     out = snap.recover_stranded_stages(spark, crashed, min_age_ms=0)
     assert len(out) == 2 and set(out.values()) == {None}
     assert snap.snapshot_versions(spark, crashed) == versions
+
+
+def test_ivf_store_crash_after_publish_heals_at_next_commit(
+    spark, tmp_path, monkeypatch
+):
+    """A vacuum that dies after its publish but before deleting what
+    the new manifest dropped leaves the dropped directories on disk
+    (a raw read then sees dead and duplicate rows). The next commit
+    finds them on disk, not through its own manifest, and deletes
+    them: afterwards the disk holds exactly the directories the
+    manifest names, and a raw read equals the store's rows."""
+    import glob
+
+    import pytest
+    from pyspark.sql import functions as F
+
+    import cs686_big_data_p1_spark.sources.snapshots as snap
+    from cs686_big_data_p1_spark.operators.ann import (
+        _build_ivf_store,
+        read_manifest,
+        delete_ivf_store,
+        read_ivf_store,
+        vacuum_ivf_store,
+    )
+
+    rows = [(i, [float(i)] * 4, i % 3) for i in range(30)]
+    df = spark.createDataFrame(
+        rows, "vec_id bigint, embedding array<float>, cid bigint"
+    )
+    path = str(tmp_path / "store")
+    _build_ivf_store(spark, path, df)
+    delete_ivf_store(spark, path, df.where((F.col("cid") == 1) & (F.col("vec_id") < 12)))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("crashed after the publish")
+
+    with monkeypatch.context() as m:
+        m.setattr(snap, "_prune_increments", crash)
+        with pytest.raises(RuntimeError):
+            vacuum_ivf_store(spark, path)
+    assert spark.read.parquet(path).count() > read_ivf_store(spark, path, rows="all").count()
+
+    delete_ivf_store(spark, path, df.where(F.col("vec_id") == 2))  # the next commit
+
+    def on_disk():
+        found = glob.glob(f"{path}/v=*/cid=*") + glob.glob(f"{path}/v=*/_tombstones/cell=*")
+        return {d[len(path) + 1:] for d in found}
+
+    man = read_manifest(spark, path)[0]
+    assert on_disk() == {d for cells in man.values() for ds in cells.values() for d in ds}
+    assert spark.read.parquet(path).count() == read_ivf_store(spark, path, rows="all").count() == 26
+    assert _ids(read_ivf_store(spark, path)) == set(range(30)) - {1, 4, 7, 10, 2}
 
 
 def test_store_live_search_never_returns_dropped(spark, registry):

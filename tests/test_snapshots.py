@@ -207,6 +207,36 @@ def test_janitor_keeps_expected_version_stage_to_its_version(
     }
 
 
+def test_expected_version_onto_pruned_number_raises(
+    spark, tmp_path, monkeypatch
+):
+    """An incremental table prunes versions below its latest, so a
+    stale expected-version writer can find its number free again: it
+    listed v1, then v2 was published and, after v3, pruned away. Its
+    rename onto v2 succeeds, but the commit must still raise — before
+    the caller prunes from its stale manifest — and v3 stays the
+    latest."""
+    import cs686_big_data_p1_spark.sources.snapshots as snap
+
+    tbl = str(tmp_path / "tbl")
+    for rows in (spark.range(1), spark.range(2), spark.range(3)):
+        write_snapshot(spark, rows, tbl)
+    fs, _, jpath = snap._fs(spark, tbl)
+    fs.delete(jpath(f"{tbl}/v=00000002"), True)  # pruned after v3
+    real_sv, listed = snap.snapshot_versions, []
+
+    def stale_once(s, path):
+        listed.append(path)
+        return [1] if len(listed) == 1 else real_sv(s, path)
+
+    monkeypatch.setattr(snap, "snapshot_versions", stale_once)
+    with pytest.raises(IOError, match="already passed"):
+        snap._commit(spark, tbl, spark.range(10, 12).write.parquet, 2)
+    monkeypatch.undo()
+    assert snapshot_versions(spark, tbl) == [1, 2, 3]
+    assert read_snapshot(spark, tbl).count() == 3
+
+
 def test_janitor_spares_live_slow_write(spark, tmp_path):
     """Review r8: a parquet write running longer than min_age_ms keeps
     its stage dir's TOP mtime at write start while fresh task files

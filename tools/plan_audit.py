@@ -596,7 +596,7 @@ AUDITS: dict[str, dict] = {
         "max_waived": 16,
     },
     "ivf_store_vacuum": {
-        # store reads are the temp IVF store's manifest-named files
+        # store reads are the temp IVF store's manifest-named directories
         # (not a fixture fact table); the only broadcasts are bounded
         # metadata sides
         # (tombstone counts, drop-set assignment) — no fact-table
