@@ -1,15 +1,13 @@
 """Streaming vector-index maintenance: the Structured-Streaming half of
 operators/ann.py's knn_ivf_append. New embeddings arrive as a stream
 and are folded into the EXISTING frozen IVF index — per-row assignment
-against a broadcast codebook, the canonical write path of a 100 TB
+against a driver-held codebook, the canonical write path of a 100 TB
 vector store (FAISS IndexIVF.add called from the ingest stream).
 
 Assignment is embarrassingly map-side: each vector's nearest frozen
 centroid depends only on (row, codebook), so the stream needs no
-watermark and keeps no join state — the only stateful piece is the
-per-vector argmax over its nlist candidate scores, bounded by the
-micro-batch's own rows. The scoring kernel is the SAME fixed-point
-pair_dot_pd fold the batch side uses, so stream and batch assignments
+watermark, no join and no state store. The scoring kernel is the SAME
+_cos_rank kernel the batch side uses, so stream and batch assignments
 are bit-identical and the query is sweep-exact against the batch
 oracle."""
 
@@ -19,12 +17,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import norm as v_norm
-from ..functions.vector import exact_cosine, pair_cos, pair_dot_pd, top_k
+from ..functions.vector import exact_cosine, pair_cos, top_k
 from ..operators.ann import (
     ANN_N_QUERIES,
     DELTA_MOD,
     DELTA_RES,
-    _append_parts,
+    _cos_rank,
+    _frozen_book,
 )
 from ..registry import query
 from ..tables import SCHEMAS
@@ -110,20 +109,18 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Live IVF append: the delta residue class (the vectors that
     "arrive after the index was built") streams in and each is
     assigned to its nearest FROZEN centroid — knn_ivf_append's
-    assignment pass as a stream-static join against the broadcast
-    codebook, scored by the same fixed-point cosine fold, ties broken
-    on ascending cid via max_by over (cscore, -cid).
+    assignment pass, the same _cos_rank kernel against the same
+    driver-held codebook rows, ties broken on ascending cid.
 
-    Scale: zero join state and no watermark — assignment is per-row
-    against an O(nlist) broadcast closure; the only state is the
-    per-new-vector argmax (one row per in-flight vector, emitted in
-    complete mode for the drain; a production sink would write each
-    micro-batch's assignments straight into the cid-partitioned store,
-    write_ivf_store's layout, and feed ivf_imbalance for the retrain
-    decision)."""
+    Scale: a stateless append-mode map — no join, no shuffle, no
+    watermark and no state store; each row's cell depends only on the
+    row and the O(nlist x d) codebook in the kernel's closure. A
+    production sink would write each micro-batch's assignments
+    straight into the cid-partitioned store, write_ivf_store's layout,
+    and feed ivf_imbalance for the retrain decision."""
     spark = stream_clone(spark)
     # Frozen codebook: the batch-side index that already exists.
-    _v, _b, _d, cents, _m, _p = _append_parts(spark, sf_dir)
+    cents = _frozen_book(spark, sf_dir)
     arrivals = (
         embeddings_arrivals(spark, sf_dir)
         .where(
@@ -134,18 +131,7 @@ def stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
         )
     )
-    scored = arrivals.crossJoin(F.broadcast(cents)).select(
-        "vec_id",
-        "cid",
-        (
-            pair_dot_pd(F.col("embedding"), F.col("cent_emb"))
-            / (F.col("norm") * F.col("cent_norm"))
-        ).alias("cscore"),
-    )
-    best = scored.groupBy("vec_id").agg(
-        F.expr("max_by(cid, struct(cscore, -cid))").alias("cid")
-    )
-    out = _run_to_memory(best, "complete")
+    out = _run_to_memory(_cos_rank(arrivals, cents, 1), "append")
     return out.select(F.col("vec_id").alias("new_vec"), "cid")
 
 
@@ -326,29 +312,22 @@ FROM occ o CROSS JOIN tot t CROSS JOIN dd d
 """
 
 
-def _codebook(spark: SparkSession, cent_rows) -> DataFrame:
-    """The broadcast codebook frame rebuilt from driver-pinned rows."""
-    schema = "cid bigint, cent_emb array<float>, cent_norm double"
-    return spark.createDataFrame(cent_rows, schema)
-
-
 def fold_ivf_batch(batch: DataFrame, store_path: str, cent_rows) -> None:
     """Fold ONE micro-batch of arriving embeddings into the physical
-    IVF store: assign against the frozen codebook (reconstructed from
-    the driver-collected cent_rows — bounded O(nlist x d), so the
-    closure never captures a foreign-session DataFrame) and add the
-    rows through the store's idempotent fold (the append_ivf_store
-    one). At-least-once delivery + that fold = exactly-once store
-    contents: a replayed batch's rows are all present and publish
-    nothing."""
-    from ..operators.ann import _cos_rank, _fold_ivf_store
+    IVF store: assign against the frozen codebook's driver rows
+    cent_rows (bounded O(nlist x d), so the closure never captures a
+    foreign-session DataFrame) and add the rows through the store's
+    idempotent fold (the append_ivf_store one). At-least-once delivery
+    + that fold = exactly-once store contents: a replayed batch's rows
+    are all present and publish nothing."""
+    from ..operators.ann import _fold_ivf_store
 
     if batch.isEmpty():
         return
     b = batch.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    keys = _cos_rank(b, _codebook(batch.sparkSession, cent_rows), 1)
+    keys = _cos_rank(b, cent_rows, 1)
     _fold_ivf_store(batch.sparkSession, store_path, keys, batch)
 
 
@@ -369,7 +348,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     and arrival order cannot change the report.
 
     Scale: each fold reads and writes only its batch's target cells
-    (over the bounded O(nlist x d) broadcast codebook); the post-drain
+    (against the bounded O(nlist x d) codebook rows); the post-drain
     report is one groupBy(cid) over store metadata columns + d rows of
     drift sufficient statistics. In
     production this job runs forever beside stream_ivf_assign; the
@@ -378,7 +357,6 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.ann import (
         IMBALANCE_DEN,
         IMBALANCE_NUM,
-        _append_parts,
         read_ivf_store,
         write_ivf_base_store,
     )
@@ -397,11 +375,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ivf_maint_store",
         lambda p: write_ivf_base_store(spark, sf_dir, p),
     )
-    _v, _b, _d, cents, _m, _p = _append_parts(spark, sf_dir)
-    cent_rows = [
-        (int(r.cid), [float(x) for x in r.cent_emb], float(r.cent_norm))
-        for r in cents.collect()
-    ]  # bounded: nlist rows — the broadcast codebook, driver-pinned
+    cent_rows = _frozen_book(spark, sf_dir)
 
     arrivals = (
         embeddings_arrivals(spark, sf_dir)
@@ -424,7 +398,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     store = read_ivf_store(spark, path, rows="all")
     is_delta = (F.col("vec_id") % DELTA_MOD) == DELTA_RES
     occ = (
-        cents.select("cid")
+        spark.createDataFrame([(c.cid,) for c in cent_rows], "cid bigint")
         .join(
             store.select(
                 "cid", "vec_id", is_delta.cast("int").alias("d")
@@ -495,7 +469,7 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream_decontaminate closes the verbatim-overlap class at ingest;
 # this closes the PARAPHRASE class the same way (VERDICT r13 #6):
 # arriving train-split embeddings are cell-assigned against the
-# broadcast SemDeDup codebook and scored — fixed-point cosine — only
+# driver-held SemDeDup codebook and scored — fixed-point cosine — only
 # against the STATIC eval-split vectors of the same cell, the
 # decontaminate_semantic co-bucketing applied as a stream-static join.
 # The eval side is a published table in production (rebuilt only when
@@ -521,7 +495,7 @@ def fold_sem_decon_batch(
     driver-pinned codebook rows, cosine vs the persisted eval side of
     the batch's cells only, anti-join against already-recorded pairs
     (pruned to the same cells), append only the fresh hits."""
-    from ..operators.ann import DECON_SEM_TAU, _cos_rank
+    from ..operators.ann import DECON_SEM_TAU
 
     if batch.isEmpty():
         return
@@ -532,9 +506,8 @@ def fold_sem_decon_batch(
     tr = batch.where(b_tag < train_bound).select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
-    cents = _codebook(sb, cent_rows)
     assigned = (
-        _cos_rank(tr, cents, 1, keep=("embedding", "norm"))
+        _cos_rank(tr, cent_rows, 1, keep=("embedding", "norm"))
         .select(
             F.col("vec_id").alias("train_doc"),
             F.col("embedding").alias("a_emb"),
@@ -590,17 +563,12 @@ def stream_decontaminate_semantic(
     the verdict (batch parity additionally pinned by pytest vs
     decontaminate_semantic).
 
-    Scale: per batch — one broadcast-codebook assignment
+    Scale: per batch — one _cos_rank kernel assignment
     (O(batch x ncells)), one cid-pruned join against the ~5 %-of-corpus
     eval side, one cid-pruned anti-join for idempotence; no unbounded
     stream state (a doc's verdict is final once its own cell is
     scored). The report is one groupBy over int-pair hit rows."""
-    from ..operators.ann import (
-        _corpus_n,
-        _nlist,
-        _seed_cells,
-        sem_assignment,
-    )
+    from ..operators.ann import _seeded, sem_assignment
     from ..operators.splits import SPLIT_BOUNDS
     from ..tables import fixture_store, load_table
 
@@ -636,17 +604,7 @@ def stream_decontaminate_semantic(
     eval_path, hits_path = f"{store}/eval", f"{store}/hits"
     # Driver-pinned SemDeDup codebook rows: ncells = ceil(sqrt(n)),
     # bounded O(ncells x d) — the fold_ivf_batch closure convention.
-    e = load_table(spark, sf_dir, "embeddings")
-    ncells = _nlist(_corpus_n(spark, sf_dir))
-    cent_rows = [
-        (int(r.vec_id), [float(x) for x in r.embedding], float(r.norm))
-        for r in _seed_cells(
-            e.select(
-                "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-            ),
-            ncells,
-        ).collect()
-    ]
+    cent_rows = _seeded(spark, sf_dir)
     # heavy-fold drain: batch-plan width, not state width (liveness.py)
     spark = stream_clone(spark, batch_fold_partitions(spark))
     arrivals = (
@@ -688,7 +646,7 @@ def stream_decontaminate_semantic(
 # curation-dropped vector can never be returned. This is the same
 # serving path as a standing stream: queries ARRIVE (the
 # embeddings_arrivals dual-shape source), each micro-batch computes
-# its probes against the broadcast frozen codebook (zero join state —
+# its probes against the frozen codebook's rows (zero join state —
 # the stream_ivf_assign idiom), reads ONLY the probed cells through
 # read_ivf_store (those cells' files, tombstone anti-join), scores
 # with the engine's fixed-point cosine fold, and appends its top-k to
@@ -702,19 +660,18 @@ def serve_knn_batch(
     batch: DataFrame, store_path: str, cent_rows, results_path: str
 ) -> None:
     """Serve ONE micro-batch of arriving queries against the live
-    store. Per batch: O(nlist) broadcast probe assignment, one
+    store. Per batch: O(nlist) kernel probe assignment, one
     live read of the batch's probed cells' files (tombstones
     anti-joined inside read_ivf_store), exact top-k over those
     cells' rows, one idempotent append. The already-served guard read
     is the results relation's query_id column only (top-k rows per
     served query — bounded)."""
-    from ..operators.ann import ANN_K, IVF_NPROBE, _cos_rank, read_ivf_store
+    from ..operators.ann import ANN_K, IVF_NPROBE, read_ivf_store
     from ..sources.snapshots import _fs
 
     if batch.isEmpty():
         return
     spark_b = batch.sparkSession
-    cents = _codebook(spark_b, cent_rows)
     qb = batch.select(
         "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
     )
@@ -734,7 +691,7 @@ def serve_knn_batch(
     if qb.isEmpty():
         return
     probes = (
-        _cos_rank(qb, cents, IVF_NPROBE)
+        _cos_rank(qb, cent_rows, IVF_NPROBE)
         .select(F.col("vec_id").alias("query_id"), "cid")
         .localCheckpoint(eager=True)
     )
@@ -760,7 +717,7 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the curation drop set's tombstones honored — the serving path
     of knn_ivf_store_live as a standing stream. The drop set is folded
     first (idempotent, the same set ivf_store_delete folds); each
-    batch then pays one broadcast probe assignment, one live read of
+    batch then pays one kernel probe assignment, one live read of
     the probed cells' files, and one bounded top-k. The oracle is
     knn_ivf_store_live's — DuckDB replays assignment, probes, the
     drop exclusion, and exact fixed-point ranking relationally, so a
@@ -775,7 +732,6 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     fresh."""
     from ..operators.ann import (
         ANN_N_QUERIES,
-        _append_parts,
         _curation_drops,
         _ivf_store_ready,
         delete_ivf_store,
@@ -785,14 +741,10 @@ def stream_knn_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     # heavy-fold drain: batch-plan width, not state width (liveness.py)
     spark = stream_clone(spark, batch_fold_partitions(spark))
     path = _ivf_store_ready(spark, sf_dir)
-    _v, _b, _d, cents, _m, _p = _append_parts(spark, sf_dir)
+    cent_rows = _frozen_book(spark, sf_dir)
     # Fold the curation drop set as tombstones (idempotent — the
     # ivf_store_delete fold; on a shared store deletes stay mask-only).
-    delete_ivf_store(spark, path, _curation_drops(spark, sf_dir, cents))
-    cent_rows = [
-        (int(r.cid), [float(x) for x in r.cent_emb], float(r.cent_norm))
-        for r in cents.collect()
-    ]  # bounded: nlist rows — the broadcast codebook, driver-pinned
+    delete_ivf_store(spark, path, _curation_drops(spark, sf_dir, cent_rows))
 
     # served results accumulate per fixture under the anti-join
     # idempotence contract, so a re-invocation serves nothing new

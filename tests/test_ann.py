@@ -841,7 +841,7 @@ def test_ivf_imbalance_flags_exact_integer_hot(spark):
     registry.clear_caches()
     _v, base, delta, cents, merged, _p = _append_parts(spark, SF_SMALL)
     n_cand = base.count() + delta.count()
-    n_cents = cents.count()
+    n_cents = len(cents)
     n_delta_total = delta.count()
     m = [(r.neighbor_id, r.cid) for r in merged.collect()]
     registry.clear_caches()
@@ -1047,3 +1047,91 @@ def test_ivf_nprobe_sweep_monotone_and_agrees_with_full_probe(
     }
     registry.clear_caches()
     assert rows[-1].n_hits == len(ivf & truth)
+
+
+def _cos_rank_reference(vecs, book, k):
+    """The relational form _cos_rank replaced, kept here as its
+    reference: crossJoin with the codebook, fixed-point cosine, and a
+    row_number window per vec_id ordered by (cscore DESC, cid ASC)."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    from cs686_big_data_p1_spark.functions.vector import pair_dot_pd
+
+    cents = vecs.sparkSession.createDataFrame(
+        book, "cid bigint, cent_emb array<float>, cent_norm double"
+    )
+    cscore = (
+        pair_dot_pd(F.col("embedding"), F.col("cent_emb"))
+        / (F.col("norm") * F.col("cent_norm"))
+    ).alias("cscore")
+    w = Window.partitionBy("vec_id").orderBy(F.desc("cscore"), F.asc("cid"))
+    return (
+        vecs.crossJoin(cents)
+        .select("vec_id", "cid", cscore)
+        .withColumn("rk", F.row_number().over(w))
+        .where(F.col("rk") <= k)
+    )
+
+
+def _rank_rows(df):
+    return sorted((r.vec_id, r.cid, r.cscore.hex(), r.rk) for r in df.collect())
+
+
+def test_cos_rank_kernel_equals_relational_reference(spark):
+    """The _cos_rank Arrow kernel returns exactly the rows of the
+    crossJoin + window form it replaced — (vec_id, cid, cscore bits,
+    rk) — at two scale factors and for k = 1, IVF_NPROBE and more
+    cells than the codebook holds; an exact tie (a duplicated
+    centroid) resolves to the lower cid; empty input and an empty
+    codebook give typed empty frames; a zero-norm row still raises
+    ANSI DIVIDE_BY_ZERO."""
+    import pytest
+
+    from cs686_big_data_p1_spark.operators.ann import (
+        IVF_NPROBE,
+        _cos_rank,
+        _nlist,
+        _seed_book,
+        _with_norm,
+    )
+    from cs686_big_data_p1_spark.tables import load_table
+
+    for sf in (SF_SMALL, "/root/testdata/sf0.01"):
+        e = load_table(spark, sf, "embeddings")
+        vecs = _with_norm(e)
+        nlist = _nlist(e.count())
+        book = _seed_book(e, nlist)
+        assert len(book) == nlist
+        for k in (1, IVF_NPROBE, nlist + 1):
+            got = _cos_rank(vecs, book, k)
+            want = _cos_rank_reference(vecs, book, k)
+            assert got.schema == want.schema
+            assert _rank_rows(got) == _rank_rows(want), (sf, k)
+
+    # An exact tie: cid -1 duplicates the last centroid, so every row
+    # scores the two equally and must rank -1 first.
+    e = load_table(spark, SF_SMALL, "embeddings")
+    vecs = _with_norm(e)
+    book = _seed_book(e, _nlist(e.count()))
+    twin = book[-1]
+    tied = [(-1, list(twin.cent_emb), twin.cent_norm)] + list(book)
+    k = len(tied)
+    got = _cos_rank(vecs, tied, k)
+    assert _rank_rows(got) == _rank_rows(_cos_rank_reference(vecs, tied, k))
+    rk = {(r.vec_id, r.cid): r.rk for r in got.collect()}
+    for v in {v for v, _ in rk}:
+        assert rk[(v, -1)] + 1 == rk[(v, twin.cid)], v
+
+    # Typed empty frames: no input rows, or no cells.
+    want_schema = _cos_rank_reference(vecs, book, 1).schema
+    for empty in (_cos_rank(vecs.limit(0), book, 3), _cos_rank(vecs, [], 3)):
+        assert empty.schema == want_schema
+        assert empty.collect() == []
+
+    # A zero-norm row divides by zero, as the relational form did.
+    zero = spark.createDataFrame(
+        [(0, [0.0] * len(twin.cent_emb))], "vec_id bigint, embedding array<float>"
+    )
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        _cos_rank(_with_norm(zero), book, 1).collect()

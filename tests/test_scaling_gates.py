@@ -20,8 +20,8 @@ SCALING = Path(__file__).resolve().parent.parent / "SCALING.md"
 # path"). When adding a collect site: justify its bound in the SCALING.md
 # row, then bump the count here — both, or this test fails.
 EXPECTED_COLLECT_SITES = {
-    "operators/ann.py": 7,
-    "streaming/vectors.py": 5,
+    "operators/ann.py": 9,
+    "streaming/vectors.py": 2,
     "operators/search.py": 2,
     "operators/linalg.py": 3,
     "operators/analytics.py": 1,

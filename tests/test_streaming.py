@@ -1002,6 +1002,74 @@ def test_stream_ivf_assign_matches_batch_append(spark):
     assert all(v % DELTA_MOD == DELTA_RES for v, _ in got)
 
 
+
+def test_stream_ivf_assign_is_stateless(spark, tmp_path):
+    """stream_ivf_assign is an append-mode map over the arrivals: the
+    drained query's progress reports no state operator, and a fixture
+    whose arrival set is empty (no delta residue-class rows) drains to
+    a typed empty (new_vec, cid) frame."""
+    import os
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from cs686_big_data_p1_spark import registry
+    from cs686_big_data_p1_spark.operators.ann import DELTA_MOD, DELTA_RES
+    from cs686_big_data_p1_spark.streaming.liveness import stream_clone
+    from cs686_big_data_p1_spark.streaming.vectors import stream_ivf_assign
+    from cs686_big_data_p1_spark.tables import TABLE_NAMES, load_table
+
+    class Progress(StreamingQueryListener):
+        def __init__(self):
+            self.events = []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.events.append(event.progress)
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    probe = Progress()
+    clone = stream_clone(spark)
+    clone.streams.addListener(probe)
+    try:
+        rows = stream_ivf_assign(spark, SF_SMALL).collect()
+        for _ in range(100):  # listener events arrive asynchronously
+            if probe.events:
+                break
+            time.sleep(0.1)
+    finally:
+        clone.streams.removeListener(probe)
+        registry.clear_caches()
+    assert rows
+    assert probe.events
+    assert all(not p.stateOperators for p in probe.events)
+
+    # Zero arrivals: the fixture without its delta residue class.
+    sf = str(tmp_path / "no_delta")
+    os.makedirs(sf)
+    for name in TABLE_NAMES:
+        if name != "embeddings":
+            src = os.path.join(SF_SMALL, f"{name}.parquet")
+            os.symlink(src, os.path.join(sf, f"{name}.parquet"))
+    e = load_table(spark, SF_SMALL, "embeddings")
+    e.where((F.col("vec_id") % DELTA_MOD) != DELTA_RES).write.parquet(
+        os.path.join(sf, "embeddings.parquet")
+    )
+    empty = stream_ivf_assign(spark, sf)
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("new_vec", "bigint"),
+        ("cid", "bigint"),
+    ]
+    assert empty.collect() == []
+    registry.clear_caches()
+
 def test_stream_embedding_drift_state_is_order_invariant(spark):
     """stream_embedding_drift's state is the mergeable sufficient
     statistic (per-dim, per-split sums + counts), so the drained
@@ -1054,11 +1122,7 @@ def test_ivf_maintenance_fold_is_exactly_once_and_stream_equals_batch(
 
     store = str(tmp_path / "maint")
     write_ivf_base_store(spark, SF_SMALL, store)
-    _v, _b, _d, cents, merged, _p = _append_parts(spark, SF_SMALL)
-    cent_rows = [
-        (int(r.cid), [float(x) for x in r.cent_emb], float(r.cent_norm))
-        for r in cents.collect()
-    ]
+    _v, _b, _d, cent_rows, merged, _p = _append_parts(spark, SF_SMALL)
     want = {(r.neighbor_id, r.cid) for r in merged.collect()}
     registry.clear_caches()
 

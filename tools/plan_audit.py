@@ -171,7 +171,7 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "query side bounded by vec_id < ANN_N_QUERIES "
         "predicate (a Filter, not a Limit node)",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 4,  # centroids, probes, probe-join reuse, query side
+        "max_waived": 2,  # probes + query side (the codebook rides in the kernel)
     },
     "ivf_range_search": {
         # knn_ivf's candidate generation with a radius Filter instead
@@ -181,18 +181,15 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "query/centroid sides bounded by vec_id "
         "predicates (Filters); radius cut is a Filter, not a window",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 4,
+        "max_waived": 2,
     },
     "sq_reconstruct_error": {
         # one corpus pass fuses encode+decode+error into the scan
-        # projection; broadcasts are the Filter-bounded centroid slice
-        # and the sample-cap trainer aggregate; output is an O(nlist)
-        # groupBy rollup.
-        "broadcast": True,
-        "bounded_broadcast": "centroid slice (Filter) + sample-cap "
-        "(vmin,vmax) trainer aggregate; rollup output O(nlist)",
-        "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 4,
+        # projection; the cell assignment is the _cos_rank kernel (its
+        # codebook in the UDF closure) and the trained bounds are
+        # literals, so no side is broadcast — and with no waiver, a
+        # fact broadcast fails; output is an O(nlist) groupBy rollup.
+        "codegen": True,
     },
     "knn_ivf_binary": {
         # sign-bit codec: no trainer at all; broadcasts are the
@@ -202,7 +199,7 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "query/centroid sides bounded by vec_id "
         "predicates (Filters); codec is data-independent (no trainer)",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 5,
+        "max_waived": 3,
     },
     "knn_mrl": {
         # prefix-renormalized shortlist: first stage reads only the
@@ -418,7 +415,7 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "query side bounded by vec_id < ANN_N_QUERIES "
         "predicate (a Filter, not a Limit node)",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 5,  # centroids, probes, ADC dtable side, refine query side
+        "max_waived": 3,  # probes, ADC dtable side, refine query side
     },
     # r14 additions
     "knn_ivfpq_residual": {
@@ -429,8 +426,8 @@ AUDITS: dict[str, dict] = {
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
         # cents slices (assign + residual + query-residual), probes,
         # assigned, per-cell ADC tables, refine query side — every one
-        # Filter/Aggregate-bounded (measured: 10 exchanges at sf0.01)
-        "max_waived": 10,
+        # Filter/Aggregate-bounded (measured: 6 exchanges at sf0.001)
+        "max_waived": 6,
     },
     "ivf_store_delete": {
         "broadcast": True,
@@ -568,7 +565,7 @@ AUDITS: dict[str, dict] = {
         "sides bounded by the vec_id < ANN_N_QUERIES Filter, centroid "
         "slices by the O(nlist) id Filter, probes/top-k by aggregates",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 9,
+        "max_waived": 7,
     },
     "ann_recall_all": {
         "broadcast": True,
@@ -576,7 +573,7 @@ AUDITS: dict[str, dict] = {
         "(the cost IS the feature): every exchange is a Filter-bounded "
         "query/centroid slice or a cap-bounded training/probe aggregate",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 17,
+        "max_waived": 13,
     },
     "pq_recall_compare": {
         "broadcast": True,
@@ -585,7 +582,7 @@ AUDITS: dict[str, dict] = {
         "and centroid slices, cap-bounded codebooks and distance "
         "tables; the binary leg has no trainer, only slice broadcasts",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 28,
+        "max_waived": 18,
     },
     "ivf_retrain": {
         "broadcast": True,
@@ -618,7 +615,7 @@ AUDITS: dict[str, dict] = {
         "slices, sample-cap (vmin,vmax) trainer aggregate, ADC "
         "shortlist aggregates",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 5,
+        "max_waived": 3,
     },
     "ivf_release_versions": {
         # reads the published snapshot versions (temp table, not a
@@ -716,22 +713,6 @@ GLOBAL_WINDOW_WAIVERS: dict[str, dict] = {
         "max": 1,
         "reason": "the composed knn_ivfpq leg's md5-order rank over "
         "its post-LIMIT PQ_TRAIN_CAP training sample (cap-bounded)",
-    },
-    "knn_ivf_append": {
-        "max": 1,
-        "reason": "seed row_number over the bounded O(nlist) base-id "
-        "slice (vec_id < ANN_N_QUERIES + span filter), never the corpus",
-    },
-    "ivf_imbalance": {
-        "max": 1,
-        "reason": "the composed _append_parts seed row_number over the "
-        "bounded O(nlist) base-id slice, never the corpus",
-    },
-    "ivf_store_prune": {
-        "max": 1,
-        "reason": "the composed _append_parts seed row_number over the "
-        "bounded O(nlist) base-id slice, never the corpus (the store "
-        "build itself runs at construction time)",
     },
 }
 
