@@ -425,6 +425,17 @@ def _seeded(spark: SparkSession, sf_dir: str) -> list:
     )
 
 
+def _on_fixture(core, spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A seeded-IVF core(e, n, cells) bound to the fixture: its
+    embeddings table, its memoized corpus count and seeded codebook —
+    the one body of every seeded-IVF query wrapper."""
+    return core(
+        load_table(spark, sf_dir, "embeddings"),
+        n=_corpus_n(spark, sf_dir),
+        cells=_seeded(spark, sf_dir),
+    )
+
+
 def _with_norm(e: DataFrame) -> DataFrame:
     return e.select("vec_id", "embedding", v_norm(F.col("embedding")).alias("norm"))
 
@@ -1190,6 +1201,29 @@ def _quant_vecs(e: DataFrame) -> DataFrame:
     )
 
 
+def _unit_q(
+    e: DataFrame, dims: int = EMB_DIM, keep: tuple = ()
+) -> DataFrame:
+    """(vec_id, *keep, uq): the unit quantizer every codec of the
+    family encodes from — the first `dims` components normalized by
+    their own fixed-point-fold norm, q_i = floor(x_i / norm * 1e6)
+    (the oracles' uqd/puq convention). SQ8 and binary encode all
+    EMB_DIM of them, the MRL funnel a prefix, unit PQ slices them into
+    subspaces. One array<bigint> column, no component fan-out: the
+    norm is a column first, so the transform reads it once per row."""
+    p = e.select("vec_id", *keep, F.slice("embedding", 1, dims).alias("p"))
+    return p.withColumn("pn", v_norm(F.col("p"))).select(
+        "vec_id",
+        *keep,
+        F.transform(
+            "p",
+            lambda x: F.floor(
+                x.cast("double") / F.col("pn") * F.lit(float(_LQ))
+            ).cast("long"),
+        ).alias("uq"),
+    )
+
+
 def _sq_rank(
     pts: DataFrame, cents: DataFrame, k: int, by: tuple = ()
 ) -> DataFrame:
@@ -1615,19 +1649,11 @@ def pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: training shuffles are O(PQ_TRAIN_CAP x EMB_DIM); the encode
     is one broadcast join + map-side-combinable bigint rollup; codes
-    shuffle as PQ_M small ints (16x compression of a 64-dim vector)."""
+    shuffle as PQ_M small ints (16x compression of a 64-dim vector).
+    The codec alone: _pq_train over the raw subspaces, _pq_codes."""
     e = load_table(spark, sf_dir, "embeddings")
-    sq = track_cache(_pq_subspaces(e))
-    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
-    encoded, _ = _lloyd(sq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
-    return encoded.groupBy("vec_id").agg(
-        *[
-            F.max(F.when(F.col("s") == m, F.col("cid")))
-            .cast("int")
-            .alias(f"code_{m}")
-            for m in range(PQ_M)
-        ]
-    )
+    encoded, _ = _pq_train(e, track_cache(_pq_subspaces(e)))
+    return _pq_codes(encoded)
 
 
 # --- Oracle-exact PQ: fixed-point per-subspace Lloyd train/encode/search --
@@ -1742,30 +1768,93 @@ WHERE rank <= {ANN_K}
 
 
 def _pq_subspaces(e: DataFrame, unit: bool = False) -> DataFrame:
-    """(vec_id, s, sub_q array<bigint>): per-subspace quantized slices
-    of each embedding — the n x PQ_M row form every PQ stage scores
-    from (the long (vec_id, s, j, q) form derives from it map-side via
-    posexplode when recentering needs components). unit=True
-    normalizes by the fixed-point-fold norm first (knn_ivfpq's
-    replayable unit quantization)."""
-    emb = F.col("embedding").cast("array<double>")
-    if unit:
-        nrm = v_norm(F.col("embedding"))
-        quant = lambda m: F.transform(  # noqa: E731
-            F.slice(emb, m * PQ_SUB + 1, PQ_SUB),
-            lambda x: F.floor(x / nrm * _LQ).cast("bigint"),
-        )
-    else:
-        quant = lambda m: F.transform(  # noqa: E731
-            F.slice(emb, m * PQ_SUB + 1, PQ_SUB),
-            lambda x: F.floor(x * _LQ).cast("bigint"),
-        )
-    return e.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[quant(m) for m in range(PQ_M)])
-        ).alias("s", "sub_q"),
+    """(vec_id, s, sub_q array<bigint>): PQ_M slices of each quantized
+    embedding — the n x PQ_M row form every PQ stage scores from (the
+    long (vec_id, s, j, q) form derives from it map-side via
+    posexplode when recentering needs components). unit=False slices
+    _quant_vecs' floor(x * 1e6); unit=True slices _unit_q's quantized
+    unit vector (knn_ivfpq's replayable unit quantization)."""
+    q = _unit_q(e).withColumnRenamed("uq", "sub_q") if unit else _quant_vecs(e)
+    subs = [F.slice("sub_q", m * PQ_SUB + 1, PQ_SUB) for m in range(PQ_M)]
+    return q.select(
+        "vec_id", F.posexplode(F.array(*subs)).alias("s", "sub_q")
     )
+
+
+def _pq_train(e: DataFrame, rows: DataFrame):
+    """Codec: the sample-capped PQ trainer shared by pq_encode, raw PQ
+    and residual PQ — LLOYD_ITERS + 1 fixed-point Lloyd rounds over
+    the (vec_id, s, sub_q) `rows` of e's md5 bottom-k sample, then one
+    encode pass over all of `rows`. Returns _lloyd's (encoded,
+    codebook)."""
+    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
+    return _lloyd(rows, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
+
+
+def _pq_codes(encoded: DataFrame) -> DataFrame:
+    """(vec_id, code_0 .. code_{PQ_M-1}): one row of PQ codes per
+    vector, pivoted from an encoded (vec_id, s, cid) frame."""
+    return encoded.groupBy("vec_id").agg(
+        *[
+            F.max(F.when(F.col("s") == m, F.col("cid")))
+            .cast("int")
+            .alias(f"code_{m}")
+            for m in range(PQ_M)
+        ]
+    )
+
+
+def _adc(
+    qsub: DataFrame,
+    codebook: DataFrame,
+    encoded: DataFrame,
+    cand: DataFrame | None = None,
+) -> DataFrame:
+    """Search: the PQ asymmetric-distance join (FAISS IndexPQ ADC,
+    Jegou et al. 2011) shared by raw PQ, residual PQ and knn_pq_adc.
+    `qsub` = (query_id, [cid,] s, sub_q) query sub-vectors, per query
+    or per (query, probed cell); each builds its PQ_M x PQ_K table of
+    exact integer squared distances to the (s, cid, cq_arr)
+    `codebook` once, BROADCAST. The candidates' stored codes (vec_id
+    >= ANN_N_QUERIES rows of the (vec_id, s, cid) `encoded` frame,
+    restricted to the (query_id, [cid,] neighbor_id) `cand` pairs if
+    given, else paired with every query) join it on the keys they
+    share and sum to (query_id, neighbor_id, adc_q) — code-width ints
+    only, never a candidate's raw floats."""
+    keys = [c for c in qsub.columns if c != "sub_q"]
+    dt = qsub.join(
+        F.broadcast(codebook.withColumnRenamed("cid", "kcid")), "s"
+    ).select(
+        *keys,
+        "kcid",
+        pair_sqdist_q_pd(F.col("sub_q"), F.col("cq_arr")).alias("d"),
+    )
+    codes = encoded.where(F.col("vec_id") >= ANN_N_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"),
+        "s",
+        F.col("cid").alias("kcid"),
+    )
+    pairs = codes if cand is None else cand.join(codes, "neighbor_id")
+    on = [c for c in dt.columns if c in pairs.columns]
+    return (
+        pairs.join(F.broadcast(dt), on)
+        .groupBy("query_id", "neighbor_id")
+        .agg(F.sum("d").alias("adc_q"))
+    )
+
+
+def _query_subspaces(e: DataFrame, unit: bool = False) -> DataFrame:
+    """(query_id, s, sub_q): the query rows' _pq_subspaces, from a
+    FILTERED scan. ADC tables live inside broadcast subtrees, which
+    Spark runs as concurrent jobs at action start; derived from a
+    shared lazily-cached corpus frame, that job recomputed the FULL
+    corpus projection before filtering to the handful of query rows
+    (a 32-task 6.3 core-s duplicate stage). The vec_id < ANN_N_QUERIES
+    filter pushes down to parquet instead, and _pq_subspaces is
+    per-row, so filter-then-project is bit-identical."""
+    return _pq_subspaces(
+        e.where(F.col("vec_id") < ANN_N_QUERIES), unit
+    ).withColumnRenamed("vec_id", "query_id")
 
 
 @query("pq_encode_lloyd", oracle=_pq_encode_lloyd_oracle())
@@ -1785,14 +1874,7 @@ def pq_encode_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     sq = track_cache(_pq_subspaces(e))
     assigned, _ = _lloyd(sq, PQ_K, LLOYD_ITERS, ("s",))
-    return assigned.groupBy("vec_id").agg(
-        *[
-            F.max(F.when(F.col("s") == m, F.col("cid")))
-            .cast("int")
-            .alias(f"code_{m}")
-            for m in range(PQ_M)
-        ]
-    )
+    return _pq_codes(assigned)
 
 
 @query("knn_pq_adc", oracle=_knn_pq_adc_oracle())
@@ -1809,28 +1891,13 @@ def knn_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the distance table is O(n_queries x PQ_M x PQ_K) rows and
     BROADCAST; candidates flow as (vec_id, s, code) ints, so the
     scoring join + rollup shuffles only code-width data. The final
-    top-k window partitions by query_id."""
+    top-k window partitions by query_id. No coarse quantizer; codec:
+    full-corpus fixed-point Lloyd PQ; search: the _adc join over every
+    candidate."""
     e = load_table(spark, sf_dir, "embeddings")
     sq = track_cache(_pq_subspaces(e))
     assigned, codebook = _lloyd(sq, PQ_K, LLOYD_ITERS, ("s",))
-    qex = (
-        _pq_subspaces(e.where(F.col("vec_id") < ANN_N_QUERIES))
-        .withColumnRenamed("vec_id", "query_id")
-    )
-    dt = qex.join(F.broadcast(codebook), "s").select(
-        "query_id",
-        "s",
-        "cid",
-        pair_sqdist_q_pd(F.col("sub_q"), F.col("cq_arr")).alias("d"),
-    )
-    codes = assigned.where(F.col("vec_id") >= ANN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), "s", "cid"
-    )
-    adc = (
-        codes.join(F.broadcast(dt), ["s", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc_q"))
-    )
+    adc = _adc(_query_subspaces(e), codebook, assigned)
     return top_k(adc, "adc_q", ANN_K, asc=True)
 
 
@@ -2033,11 +2100,7 @@ def knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-pruned scan of ints and the refine stage is a pointwise
     fetch of shortlist rows.
     """
-    return ivfpq_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        n=_corpus_n(spark, sf_dir),
-        cells=_seeded(spark, sf_dir),
-    )
+    return _on_fixture(ivfpq_topk, spark, sf_dir)
 
 
 def ivfpq_topk(
@@ -2046,45 +2109,18 @@ def ivfpq_topk(
     """Core of knn_ivfpq over any (vec_id, embedding) frame (the query
     wrapper binds it to the fixture table; tests feed synthetic corpora
     with planted exact duplicates). `n` = known corpus count
-    (ADVICE r10), else counted inside _coarse_cells off its cache."""
+    (ADVICE r10), else counted inside _coarse_cells off its cache.
+    Quantizer: _coarse_cells' seeded cells; codec: _pq_train over the
+    unit subspaces; search: the _adc join over probed-cell candidates,
+    IVFPQ_SHORTLIST survivors exactly re-ranked."""
     # Unit-normalized quantization is oracle-replayable without a
     # float UDF: norm is the shared fixed-point fold and
     # q = floor(x / norm * 1e6) is two exactly-rounded IEEE ops.
     usq = track_cache(_pq_subspaces(e, unit=True))
-    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
-    encoded, codebook = _lloyd(usq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
+    encoded, codebook = _pq_train(e, usq)
     _, probes, assigned, _ = _coarse_cells(e, n=n, cells=cells)
-    cand = _probed(probes, assigned)
-    # The ADC-table subtree lives inside broadcast(dt), and Spark runs
-    # broadcast exchanges as concurrent jobs at action start — derived
-    # from the shared lazily-cached `usq`, that job recomputed the FULL
-    # corpus subspace projection before filtering to the handful of
-    # query rows (r16 probe: a 32-task 6.3 core-s duplicate stage).
-    # Deriving the query slices from a FILTERED scan instead pushes
-    # vec_id < ANN_N_QUERIES down to parquet; _pq_subspaces is per-row,
-    # so filter-then-project is bit-identical to project-then-filter.
-    qsq = _pq_subspaces(
-        e.where(F.col("vec_id") < ANN_N_QUERIES), unit=True
-    )
-    dt = (
-        qsq.withColumnRenamed("vec_id", "query_id")
-        .join(F.broadcast(codebook), "s")
-        .select(
-            "query_id",
-            "s",
-            "cid",
-            pair_sqdist_q_pd(F.col("sub_q"), F.col("cq_arr")).alias("d"),
-        )
-    )
-    codes = encoded.where(F.col("vec_id") >= ANN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), "s", "cid"
-    )
-    adc = (
-        cand.join(codes, "neighbor_id")
-        .join(F.broadcast(dt), ["query_id", "s", "cid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc_q"))
-    )
+    qsub = _query_subspaces(e, unit=True)
+    adc = _adc(qsub, codebook, encoded, _probed(probes, assigned))
     return _exact_refine(e, top_k(adc, "adc_q", IVFPQ_SHORTLIST, asc=True))
 
 
@@ -2094,10 +2130,40 @@ def _exact_refine(e: DataFrame, shortlist: DataFrame) -> DataFrame:
     shortlisting codec (PQ, residual PQ, SQ8, binary, MRL prefix); the
     shortlist's other columns are dropped. Raw floats are read for
     SHORTLIST rows per query only."""
-    vecs = e.select(
-        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-    )
+    vecs = _with_norm(e)
     return top_k(exact_cosine(_queries(vecs), vecs, shortlist), "cosine", ANN_K)
+
+
+def _dot_shortlist(
+    e: DataFrame, uq: DataFrame, code, cand: DataFrame | None = None
+) -> DataFrame:
+    """Search: the int-dot shortlist shared by SQ8, binary and the MRL
+    prefix. Queries (vec_id < ANN_N_QUERIES rows of the (vec_id, uq)
+    frame, BROADCAST) keep their quantized unit components; candidates
+    carry `code`, their decoded codes as an integer-array column over
+    uq. Each (query, candidate) pair — the (query_id, neighbor_id)
+    `cand` pairs (IVF probed cells) if given, else every candidate
+    crossed with the broadcast queries — scores the asymmetric int64
+    dot (pair_doti_q_pd, one Arrow kernel call per pair); the top
+    IVFPQ_SHORTLIST per query are exactly re-ranked (_exact_refine)."""
+    qside = uq.where(F.col("vec_id") < ANN_N_QUERIES).select(
+        F.col("vec_id").alias("query_id"), F.col("uq").alias("q_arr")
+    )
+    nside = uq.where(F.col("vec_id") >= ANN_N_QUERIES).select(
+        F.col("vec_id").alias("neighbor_id"), code.alias("code")
+    )
+    if cand is None:
+        pairs = nside.join(F.broadcast(qside))
+    else:
+        pairs = cand.join(nside, "neighbor_id").join(
+            F.broadcast(qside), "query_id"
+        )
+    adc = pairs.select(
+        "query_id",
+        "neighbor_id",
+        pair_doti_q_pd(F.col("q_arr"), F.col("code")).alias("dot2"),
+    )
+    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
 
 
 EMB_STATS_ORACLE = """
@@ -3319,26 +3385,24 @@ def ivfpq_residual_topk(
     e: DataFrame, n: int | None = None, cells: list | None = None
 ) -> DataFrame:
     """Core of knn_ivfpq_residual over any (vec_id, embedding) frame.
-    Same IVF candidate generation and exact-refine tail as ivfpq_topk;
-    only the PQ training/encode input (residuals, not raw unit
+    Same quantizer, trainer, _adc search and exact-refine tail as
+    ivfpq_topk; only the codec's input (residuals, not raw unit
     vectors) and the ADC tables (per probed cell) differ."""
     usq = track_cache(_pq_subspaces(e, unit=True))
-    samp = track_cache(_md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
     _, probes, assigned, nlist = _coarse_cells(e, n=n, cells=cells)
     # Coarse-centroid sub-vectors: bounded nlist x PQ_M rows, broadcast
     # everywhere below (the codebook-closure shape). Derived from a
-    # FILTERED scan, not the shared `usq` cache: this subtree runs as a
-    # concurrent broadcast job at action start, and off the cold cache
-    # it recomputed the full corpus projection (r16 probe — the
-    # ivfpq_topk dt rationale); the vec_id range pushes down to
-    # parquet and _pq_subspaces is per-row, so rows are bit-identical.
+    # FILTERED scan, not the shared `usq` cache — the _query_subspaces
+    # rationale: this subtree runs as a concurrent broadcast job at
+    # action start; the vec_id range pushes down to parquet.
     cent_sq = _pq_subspaces(_seed_cells(e, nlist), unit=True).select(
         F.col("vec_id").alias("cid"),
         "s",
         F.col("sub_q").alias("cent_sub_q"),
     )
-    # Residual frame for the corpus: one broadcast join against the
-    # assignment + one against the centroid slices, exact bigint
+    res = F.zip_with("sub_q", "cent_sub_q", lambda a, b: a - b)
+    # Residual frame for the corpus: one join against the assignment +
+    # one broadcast join against the centroid slices, exact bigint
     # componentwise subtraction — raw floats never enter PQ.
     rsq = (
         usq.where(F.col("vec_id") >= ANN_N_QUERIES)
@@ -3349,61 +3413,24 @@ def ivfpq_residual_topk(
             "vec_id",
         )
         .join(F.broadcast(cent_sq), ["cid", "s"])
-        .select(
-            "vec_id",
-            "s",
-            F.zip_with(
-                "sub_q", "cent_sub_q", lambda a, b: a - b
-            ).alias("sub_q"),
-        )
+        .select("vec_id", "s", res.alias("sub_q"))
     )
-    encoded, codebook = _lloyd(rsq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
-    cb = codebook.select("s", F.col("cid").alias("kcid"), "cq_arr")
+    encoded, codebook = _pq_train(e, rsq)
     # Per-probed-cell query ADC tables: residual of the QUERY against
-    # each probed cell's centroid, scored against every codeword —
-    # n_queries x nprobe x PQ_M x PQ_K integer rows, broadcast.
-    # Query slices from a filtered scan too (same broadcast-subtree
-    # rationale as cent_sq above; ~ANN_N_QUERIES x PQ_M rows).
-    qsq = _pq_subspaces(
-        e.where(F.col("vec_id") < ANN_N_QUERIES), unit=True
-    ).select(F.col("vec_id").alias("query_id"), "s", "sub_q")
-    dt = (
+    # each probed cell's centroid — n_queries x nprobe x PQ_M x PQ_K
+    # integer rows, broadcast.
+    qres = (
         F.broadcast(probes)
-        .join(qsq, "query_id")
+        .join(_query_subspaces(e, unit=True), "query_id")
         .join(F.broadcast(cent_sq), ["cid", "s"])
-        .select(
-            "query_id",
-            "cid",
-            "s",
-            F.zip_with(
-                "sub_q", "cent_sub_q", lambda a, b: a - b
-            ).alias("res_q"),
-        )
-        .join(F.broadcast(cb), "s")
-        .select(
-            "query_id",
-            "cid",
-            "s",
-            "kcid",
-            pair_sqdist_q_pd(F.col("res_q"), F.col("cq_arr")).alias("d"),
-        )
-    )
-    codes = encoded.select(
-        F.col("vec_id").alias("neighbor_id"),
-        "s",
-        F.col("cid").alias("kcid"),
+        .select("query_id", "cid", "s", res.alias("sub_q"))
     )
     candc = (
         F.broadcast(probes)
         .join(assigned, "cid")
         .select("query_id", "cid", "neighbor_id")
     )
-    adc = (
-        candc.join(codes, "neighbor_id")
-        .join(F.broadcast(dt), ["query_id", "cid", "s", "kcid"])
-        .groupBy("query_id", "neighbor_id")
-        .agg(F.sum("d").alias("adc_q"))
-    )
+    adc = _adc(qres, codebook, encoded, candc)
     return _exact_refine(e, top_k(adc, "adc_q", IVFPQ_SHORTLIST, asc=True))
 
 
@@ -3483,11 +3510,7 @@ def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     (broadcast — a few MB at production nprobe/K). The corpus-scale
     passes are unchanged: one assignment, one encode, ADC over probed
     cells only."""
-    return ivfpq_residual_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        n=_corpus_n(spark, sf_dir),
-        cells=_seeded(spark, sf_dir),
-    )
+    return _on_fixture(ivfpq_residual_topk, spark, sf_dir)
 
 
 # --- knn_ivf_sq: IVF + 8-bit scalar quantization (VERDICT r14 #4) --------
@@ -3516,55 +3539,40 @@ def knn_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQ_CODE_MAX = 255  # 8-bit codes: one byte per dimension
 
 
-def _unit_q(e: DataFrame) -> DataFrame:
-    """(vec_id, uq): per-dimension quantized UNIT components,
-    q_i = floor(x_i / norm * 1e6) — the uex convention as one
-    array<bigint> column (no component fan-out; the transform is
-    whole-stage codegen over the row's own norm)."""
-    vecs = e.select(
-        "vec_id", "embedding", v_norm(F.col("embedding")).alias("norm")
-    )
-    return vecs.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(
-                x.cast("double") / F.col("norm") * F.lit(float(_LQ))
-            ).cast("long"),
-        ).alias("uq"),
-    )
+def _sq_codec(e: DataFrame):
+    """Codec: SQ8 over the unit quantizer, shared by sq_topk,
+    sq_reconstruct_error and the tests. Returns (uq, xhat2): the cached
+    _unit_q frame of e and the scaled int decode of its 8-bit codes, a
+    column over uq.
 
-
-def _sq_train(uq: DataFrame, samp: DataFrame) -> tuple[list, list]:
-    """Per-dimension (vmin, vmax) bounds over the md5 bottom-k train
-    sample — the ScalarQuantizer RS_minmax train pass. The explode is
-    SAMPLE-bounded (<= PQ_TRAIN_CAP x EMB_DIM rows) and the collect is
-    EMB_DIM rows of two ints: control flow, never data."""
-    rows = (
-        uq.join(F.broadcast(samp.select("vec_id")), "vec_id")
-        .select(F.posexplode("uq").alias("i", "q"))
-        .groupBy("i")
-        .agg(F.min("q").alias("vmin"), F.max("q").alias("vmax"))
-        .collect()
-    )
-    vmin = [0] * EMB_DIM
-    vmax = [0] * EMB_DIM
-    for r in rows:
-        vmin[r.i] = int(r.vmin)
-        vmax[r.i] = int(r.vmax)
-    return vmin, vmax
-
-
-def _sq_xhat2(uqcol, vmin_c, vmax_c):
-    """Scaled int decode of the 8-bit SQ encode of a quantized-unit
-    array column: per dim, code = (clamp(q) - vmin) * 255 // span
-    (operands non-negative, so truncation == floor in Spark and
+    Train: per-dimension (vmin, vmax) over the md5 bottom-k sample —
+    the ScalarQuantizer RS_minmax pass. The explode is SAMPLE-bounded
+    (<= PQ_TRAIN_CAP x EMB_DIM rows) and the collect is EMB_DIM rows of
+    two ints: control flow, never data; the bounds ride as literal
+    arrays. Encode/decode per dim: code = (clamp(q) - vmin) * 255 //
+    span (operands non-negative, so truncation == floor in Spark and
     DuckDB alike; Spark's floor(a / b) over these magnitudes is exact
     — a <= ~5.1e8 is integer-exact in double and the rounding error
     ~a * 2^-53 is far below the 1/span >= 5e-7 gap to the next
     integer), then xhat2 = 510*vmin + (2*code + 1)*span. Constant
     dims (span = 0) encode as code 0 and decode to 510*vmin (exactly
     2*255*q: the dim contributes its true value)."""
+    uq = track_cache(_unit_q(e))
+    samp = _md5_sample(e, "pqtrain", PQ_TRAIN_CAP).select("vec_id")
+    rows = (
+        uq.join(F.broadcast(samp), "vec_id")
+        .select(F.posexplode("uq").alias("i", "q"))
+        .groupBy("i")
+        .agg(F.min("q").alias("vmin"), F.max("q").alias("vmax"))
+        .collect()
+    )
+    vmins = [0] * EMB_DIM
+    vmaxs = [0] * EMB_DIM
+    for r in rows:
+        vmins[r.i] = int(r.vmin)
+        vmaxs[r.i] = int(r.vmax)
+    vmin_c = F.array(*[F.lit(v) for v in vmins])
+    vmax_c = F.array(*[F.lit(v) for v in vmaxs])
 
     def per_dim(q, i):
         lo = F.element_at(vmin_c, i + 1)
@@ -3582,7 +3590,7 @@ def _sq_xhat2(uqcol, vmin_c, vmax_c):
             + (F.lit(2) * code + F.lit(1)) * span
         )
 
-    return F.transform(uqcol, per_dim)
+    return uq, F.transform("uq", per_dim)
 
 
 KNN_IVF_SQ_ORACLE = (
@@ -3662,11 +3670,7 @@ def knn_ivf_sq(spark: SparkSession, sf_dir: str) -> DataFrame:
     the encode projection (whole-stage codegen, no fan-out, raw
     floats never move past it). ADC touches probed-cell candidates
     only; exact scoring touches SHORTLIST rows per query."""
-    return sq_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        n=_corpus_n(spark, sf_dir),
-        cells=_seeded(spark, sf_dir),
-    )
+    return _on_fixture(sq_topk, spark, sf_dir)
 
 
 def sq_topk(
@@ -3675,30 +3679,12 @@ def sq_topk(
     """Core of knn_ivf_sq over any (vec_id, embedding) frame (the
     query wrapper binds it to the fixture table; tests feed synthetic
     corpora with planted exact duplicates). `n` = known corpus count,
-    else counted inside _coarse_cells off its cache."""
-    uq = track_cache(_unit_q(e))
-    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
-    vmin_c = F.array(*[F.lit(v) for v in vmins])
-    vmax_c = F.array(*[F.lit(v) for v in vmaxs])
+    else counted inside _coarse_cells off its cache. Quantizer:
+    _coarse_cells' seeded cells; codec: _sq_codec; search: the
+    int-dot shortlist over probed-cell candidates."""
+    uq, xhat2 = _sq_codec(e)
     _, probes, assigned, _ = _coarse_cells(e, n=n, cells=cells)
-    cand = _probed(probes, assigned)
-    nside = uq.where(F.col("vec_id") >= ANN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        _sq_xhat2(F.col("uq"), vmin_c, vmax_c).alias("xh"),
-    )
-    qside = uq.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("uq").alias("q_arr")
-    )
-    adc = (
-        cand.join(nside, "neighbor_id")
-        .join(F.broadcast(qside), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_doti_q_pd(F.col("q_arr"), F.col("xh")).alias("dot2"),
-        )
-    )
-    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
+    return _dot_shortlist(e, uq, xhat2, _probed(probes, assigned))
 
 
 # PQ stores PQ_M codes of log2(PQ_K) bits; SQ8 stores one byte per
@@ -3772,42 +3758,24 @@ def knn_ivf_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes (digest volume); exact scoring touches SHORTLIST rows per
     query. At 100 TB the binary store is the first-stage filter a
     multi-stage funnel reads before SQ8/PQ/float tiers."""
-    return binary_topk(
-        load_table(spark, sf_dir, "embeddings"),
-        n=_corpus_n(spark, sf_dir),
-        cells=_seeded(spark, sf_dir),
-    )
+    return _on_fixture(binary_topk, spark, sf_dir)
 
 
 def binary_topk(
     e: DataFrame, n: int | None = None, cells: list | None = None
 ) -> DataFrame:
-    """Core of knn_ivf_binary over any (vec_id, embedding) frame."""
+    """Core of knn_ivf_binary over any (vec_id, embedding) frame. The
+    codec is the SIGN of each unit-quantized component, decoded to
+    {-1, +1}; the search is the int-dot shortlist over IVF candidates."""
     uq = track_cache(_unit_q(e))
+    sign = F.transform(
+        "uq",
+        lambda q: F.when(q >= F.lit(0), F.lit(1))
+        .otherwise(F.lit(-1))
+        .cast("long"),
+    )
     _, probes, assigned, _ = _coarse_cells(e, n=n, cells=cells)
-    cand = _probed(probes, assigned)
-    nside = uq.where(F.col("vec_id") >= ANN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.transform(
-            "uq",
-            lambda q: F.when(q >= F.lit(0), F.lit(1))
-            .otherwise(F.lit(-1))
-            .cast("long"),
-        ).alias("s"),
-    )
-    qside = uq.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("uq").alias("q_arr")
-    )
-    adc = (
-        cand.join(nside, "neighbor_id")
-        .join(F.broadcast(qside), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            pair_doti_q_pd(F.col("q_arr"), F.col("s")).alias("dot2"),
-        )
-    )
-    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
+    return _dot_shortlist(e, uq, sign, _probed(probes, assigned))
 
 
 PQ_RECALL_COMPARE_ORACLE = f"""
@@ -3866,8 +3834,8 @@ def pq_recall_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivf_lifecycle.py pins with a planted-cluster corpus
     (residual total PQ distortion ~3.1x lower at the same budget).
 
-    Scale: two audited bounded index pipelines + int-pair joins over
-    two top-k lists and a 2-row aggregate. Legs are constructed
+    Scale: four audited bounded index pipelines + int-pair joins over
+    their top-k lists and a 4-row aggregate. Legs are constructed
     concurrently (functions/legs.py, guide §2.6): their eager
     training/checkpoint jobs overlap instead of serializing the
     driver thread."""
@@ -4718,11 +4686,7 @@ def ivf_range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius selectivity (~2% of candidate mass at this radius on
     near-isotropic fixtures), not by corpus size. No window, so the
     only shuffle is the candidate join's."""
-    return ivf_range(
-        load_table(spark, sf_dir, "embeddings"),
-        n=_corpus_n(spark, sf_dir),
-        cells=_seeded(spark, sf_dir),
-    )
+    return _on_fixture(ivf_range, spark, sf_dir)
 
 
 def ivf_range(
@@ -4800,36 +4764,32 @@ def sq_reconstruct_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     Everything is int64 arithmetic, so DuckDB replays train, encode,
     decode, and the error fold bit for bit.
 
-    Scale shape: one corpus pass computes the error array fused with
-    the encode projection (whole-stage codegen, no fan-out); the
-    trained bounds are 2 x EMB_DIM broadcast literals; the cell
-    rollup shuffles O(n) pre-aggregated (vec_id, err2) longs — digest
-    volume, not vectors — and outputs O(nlist) rows."""
+    Scale shape: one corpus pass computes the error fused with the
+    encode projection (whole-stage codegen, no fan-out) and carries
+    it through the _cos_rank cell assignment of the same rows, so no
+    join pairs errors with cells; the trained bounds are 2 x EMB_DIM
+    literals; the cell rollup shuffles O(n) pre-aggregated
+    (cid, err2) longs — digest volume, not vectors — and outputs
+    O(nlist) rows."""
     e = load_table(spark, sf_dir, "embeddings")
-    n = _corpus_n(spark, sf_dir)
-    uq = track_cache(_unit_q(e))
-    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
-    vmin_c = F.array(*[F.lit(v) for v in vmins])
-    vmax_c = F.array(*[F.lit(v) for v in vmaxs])
+    _, xhat2 = _sq_codec(e)
     two = F.lit(2 * SQ_CODE_MAX)
-    xh = _sq_xhat2(F.col("uq"), vmin_c, vmax_c)
     err_arr = F.zip_with(
-        F.col("uq"), xh, lambda q, x: (two * q - x) * (two * q - x)
+        F.col("uq"), xhat2, lambda q, x: (two * q - x) * (two * q - x)
     )
-    verr = uq.where(F.col("vec_id") >= ANN_N_QUERIES).select(
+    v = _unit_q(
+        _with_norm(e).where(F.col("vec_id") >= ANN_N_QUERIES),
+        keep=("embedding", "norm"),
+    ).select(
         "vec_id",
+        "embedding",
+        "norm",
         F.aggregate(
             err_arr, F.lit(0).cast("long"), lambda acc, x: acc + x
         ).alias("err2"),
     )
-    _, _, assigned, _ = _coarse_cells(e, n=n, cells=_seeded(spark, sf_dir))
     return (
-        verr.join(
-            assigned.select(
-                F.col("neighbor_id").alias("vec_id"), "cid"
-            ),
-            "vec_id",
-        )
+        _cos_rank(v, _seeded(spark, sf_dir), 1, keep=("err2",))
         .groupBy("cid")
         .agg(
             F.count(F.lit(1)).alias("n_vecs"),
@@ -4899,35 +4859,12 @@ KNN_MRL_ORACLE = _mrl_oracle(MRL_DIM)
 
 
 def mrl_topk(e: DataFrame, dims: int) -> DataFrame:
-    """Core of knn_mrl at any prefix width: prefix-renormalized
-    integer shortlist, exact full-dim refine."""
-    pre = e.select(
-        "vec_id",
-        F.slice("embedding", 1, dims).alias("p"),
-    )
-    pre = pre.select(
-        "vec_id", "p", v_norm(F.col("p")).alias("pn")
-    ).select(
-        "vec_id",
-        F.transform(
-            "p",
-            lambda x: F.floor(
-                x.cast("double") / F.col("pn") * F.lit(float(_LQ))
-            ).cast("long"),
-        ).alias("pq"),
-    )
-    qside = pre.where(F.col("vec_id") < ANN_N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("pq").alias("q_arr")
-    )
-    cside = pre.where(F.col("vec_id") >= ANN_N_QUERIES).select(
-        F.col("vec_id").alias("neighbor_id"), F.col("pq").alias("c_arr")
-    )
-    adc = cside.join(F.broadcast(qside)).select(
-        "query_id",
-        "neighbor_id",
-        pair_doti_q_pd(F.col("q_arr"), F.col("c_arr")).alias("dot2"),
-    )
-    return _exact_refine(e, top_k(adc, "dot2", IVFPQ_SHORTLIST))
+    """Core of knn_mrl at any prefix width: the unit quantizer over the
+    first `dims` components is both the query side and the codec (the
+    prefix renormalized), searched by the int-dot shortlist over every
+    candidate — no coarse quantizer — with exact full-dim refine."""
+    uq = _unit_q(e, dims)
+    return _dot_shortlist(e, uq, F.col("uq"))
 
 
 @query("knn_mrl", oracle=KNN_MRL_ORACLE)

@@ -496,6 +496,7 @@ def fold_sem_decon_batch(
     the batch's cells only, anti-join against already-recorded pairs
     (pruned to the same cells), append only the fresh hits."""
     from ..operators.ann import DECON_SEM_TAU
+    from ..sources.snapshots import _fs
 
     if batch.isEmpty():
         return
@@ -524,20 +525,19 @@ def fold_sem_decon_batch(
         .select("train_doc", "eval_doc", "cid", pair_cos())
         .where(F.col("cosine") >= DECON_SEM_TAU)
     )
-    try:
+    # No hit file yet is the first fold; any read failure of an
+    # existing hit store must raise.
+    fs, _, jpath = _fs(sb, hits_path)
+    if fs.globStatus(jpath(f"{hits_path}/cid=*/*.parquet")):
         existing = (
             sb.read.parquet(hits_path)
             .where(F.col("cid").isin(cids))
             .select("train_doc", "eval_doc")
             .localCheckpoint(eager=True)
         )
-        fresh = hits.join(
-            existing, ["train_doc", "eval_doc"], "left_anti"
-        )
-    except Exception:  # first fold: no hit store yet
-        fresh = hits
+        hits = hits.join(existing, ["train_doc", "eval_doc"], "left_anti")
     (
-        fresh.select("train_doc", "eval_doc", "cosine", "cid")
+        hits.select("train_doc", "eval_doc", "cosine", "cid")
         .write.mode("append")
         .partitionBy("cid")
         .parquet(hits_path)

@@ -180,6 +180,36 @@ def test_stream_sem_decon_matches_batch(spark, registry):
     assert streamed == batch
 
 
+def test_sem_decon_fold_raises_on_unreadable_hit_store(spark, tmp_path):
+    """Only a hit store with no hit file is a first fold: a store
+    holding a file the fold cannot read must fail the fold, not be
+    appended to as if no hit had been recorded."""
+    import pytest
+
+    from cs686_big_data_p1_spark.streaming.vectors import (
+        fold_sem_decon_batch,
+    )
+
+    emb = [1.0] + [0.0] * 63
+    batch = spark.createDataFrame(
+        [(1000, emb)], "vec_id long, embedding array<float>"
+    )
+    eval_path, hits_path = str(tmp_path / "eval"), str(tmp_path / "hits")
+    spark.createDataFrame(
+        [(7, 0, emb, 1.0)],
+        "eval_doc bigint, cid bigint, b_emb array<float>, b_norm double",
+    ).write.partitionBy("cid").parquet(eval_path)
+    cell = tmp_path / "hits" / "cid=0"
+    cell.mkdir(parents=True)
+    (cell / "part-00000.parquet").write_bytes(b"not a parquet file")
+    # train bound "zz" tags every md5 split prefix as train
+    with pytest.raises(Exception, match="CANNOT_READ_FILE_FOOTER"):
+        fold_sem_decon_batch(
+            batch, eval_path, hits_path, [(0, emb, 1.0)], "zz"
+        )
+    assert os.listdir(cell) == ["part-00000.parquet"]
+
+
 def _clustered_corpus(spark, seed=7, K=33, per=31, spread=0.25, noise=0.12):
     """Planted-cluster corpus where the coarse quantizer explains most
     variance — the geometry by_residual is designed for. The first K
@@ -229,22 +259,17 @@ def test_residual_encoding_cuts_distortion_on_clustered_corpus(spark):
 
     from cs686_big_data_p1_spark.operators.ann import (
         ANN_N_QUERIES,
-        LLOYD_ITERS,
-        PQ_K,
-        PQ_TRAIN_CAP,
         _coarse_cells,
-        _lloyd,
-        _md5_sample,
         _nlist,
         _pq_subspaces,
+        _pq_train,
         ivfpq_residual_topk,
         ivfpq_topk,
     )
 
     df = _clustered_corpus(spark)
     usq = _pq_subspaces(df, unit=True).cache()
-    samp = _md5_sample(df, "pqtrain", PQ_TRAIN_CAP)
-    enc_raw, _ = _lloyd(usq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
+    enc_raw, _ = _pq_train(df, usq)
     raw_err = (
         enc_raw.where(F.col("vec_id") >= ANN_N_QUERIES)
         .agg(F.sum("dist"))
@@ -273,7 +298,7 @@ def test_residual_encoding_cuts_distortion_on_clustered_corpus(spark):
             ),
         )
     )
-    enc_res, _ = _lloyd(rsq, PQ_K, LLOYD_ITERS + 1, ("s",), samp)
+    enc_res, _ = _pq_train(df, rsq)
     res_err = enc_res.agg(F.sum("dist")).collect()[0][0]
     assert res_err * 2 < raw_err, (
         f"residual distortion {res_err} not well below raw {raw_err}"

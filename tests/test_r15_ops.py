@@ -75,10 +75,7 @@ def test_sq_codes_respect_8bit_bounds(spark):
     from cs686_big_data_p1_spark.operators.ann import (
         PQ_TRAIN_CAP,
         SQ_CODE_MAX,
-        _md5_sample,
-        _sq_train,
-        _sq_xhat2,
-        _unit_q,
+        _sq_codec,
     )
 
     rows = [
@@ -88,13 +85,13 @@ def test_sq_codes_respect_8bit_bounds(spark):
     ]  # dim 0 is CONSTANT pre-normalization (exercises span-0 guard
     #    only if it stays constant post-norm; bounds hold regardless)
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    uq = _unit_q(e)
-    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
-    vmin_c = F.array(*[F.lit(v) for v in vmins])
-    vmax_c = F.array(*[F.lit(v) for v in vmaxs])
-    xh = uq.select(
-        "uq", _sq_xhat2(F.col("uq"), vmin_c, vmax_c).alias("xh")
-    ).collect()
+    uq, xhat2 = _sq_codec(e)
+    xh = uq.select("uq", xhat2.alias("xh")).collect()
+    # fewer rows than PQ_TRAIN_CAP: the train sample is the whole
+    # frame, so the trained bounds are the per-dim min/max of uq
+    assert len(xh) < PQ_TRAIN_CAP
+    vmins = [min(r.uq[i] for r in xh) for i in range(len(xh[0].uq))]
+    vmaxs = [max(r.uq[i] for r in xh) for i in range(len(xh[0].uq))]
     for r in xh:
         for i, x in enumerate(r.xh):
             lo, hi = vmins[i], vmaxs[i]
@@ -334,22 +331,11 @@ def test_sq_reconstruct_error_zero_for_two_point_dims(spark):
         rows[vid] = (vid, base)
     e = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
 
-    from cs686_big_data_p1_spark.operators.ann import (
-        PQ_TRAIN_CAP,
-        _md5_sample,
-        _sq_train,
-        _sq_xhat2,
-        _unit_q,
-    )
+    from cs686_big_data_p1_spark.operators.ann import _sq_codec
     from pyspark.sql import functions as F2
-    from cs686_big_data_p1_spark.registry import track_cache
 
-    uq = track_cache(_unit_q(e))
-    vmins, vmaxs = _sq_train(uq, _md5_sample(e, "pqtrain", PQ_TRAIN_CAP))
-    vmin_c = F2.array(*[F2.lit(v) for v in vmins])
-    vmax_c = F2.array(*[F2.lit(v) for v in vmaxs])
+    uq, xh = _sq_codec(e)
     two = F2.lit(510)
-    xh = _sq_xhat2(F2.col("uq"), vmin_c, vmax_c)
     err_arr = F2.zip_with(
         F2.col("uq"), xh, lambda q, x: (two * q - x) * (two * q - x)
     )
@@ -366,6 +352,24 @@ def test_sq_reconstruct_error_zero_for_two_point_dims(spark):
     }
     dup_errs = {errs[vid] for vid in range(40, 50)}
     assert len(dup_errs) == 1, "identical vectors must decode identically"
+
+
+def test_sq_reconstruct_error_assigns_without_a_join(spark, registry):
+    """The per-vector error rides through the cell assignment of the
+    same rows (_cos_rank keep=("err2",)), so with auto-broadcast off
+    the plan pairs errors with cells by no SortMergeJoin."""
+    from cs686_big_data_p1_spark.plans import formatted_plan
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        plan = formatted_plan(
+            registry.QUERIES["sq_reconstruct_error"](spark, SF_SMALL)
+        )
+    finally:
+        spark.conf.set(key, old)
+    assert "SortMergeJoin" not in plan
 
 
 # --- knn_ivf_binary / knn_mrl / mrl_recall_compare (round 15c) ------------

@@ -68,7 +68,7 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "distance table = Aggregate over the "
         "vec_id < ANN_N_QUERIES slice, O(n_queries x PQ_M x PQ_K)",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 2,
+        "max_waived": 1,
     },
     # HLL sketch: the only broadcast is the exact-distinct CONTRAST leg
     # (an O(#event_types) aggregate); the sketch itself is a groupBy
@@ -210,7 +210,7 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "query side bounded by vec_id predicate "
         "(Filter); prefix slice fused into the scan projection",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 4,
+        "max_waived": 2,  # shortlist query side + refine query side
     },
     "mrl_recall_compare": {
         # composes two audited knn_mrl funnels + the brute-force
@@ -219,7 +219,7 @@ AUDITS: dict[str, dict] = {
         "bounded_broadcast": "legs are the audited funnel pipelines; "
         "hit joins are int pairs; 2-row method table + 1-row count",
         "waiver_bound_nodes": ("Filter", "Aggregate", "Limit", "TakeOrdered"),
-        "max_waived": 8,
+        "max_waived": 7,
     },
     "knn_ivf_append": {
         "broadcast": True,
