@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType
 from pyspark.sql.window import Window
 
+from ..functions.iterate import iterate
 from ..functions.legs import parallel_legs
 from ..functions.pairs import bucket_pairs
 from ..functions.vector import SCALE
@@ -1283,10 +1284,12 @@ def _lloyd(
     PQ subspace at once.
 
     samp=None, distributed (kmeans_lloyd, pq_encode_lloyd): seeds are
-    the first k candidates (cid = vec_id - ANN_N_QUERIES); each round
-    is one corpus pass with the codebook broadcast, shuffling only the
-    argmin window and the recenter rollup, and a localCheckpoint per
-    assignment and per recentered codebook cuts lineage.
+    the first k candidates (cid = vec_id - ANN_N_QUERIES); the state
+    of functions/iterate.py's iterate is the codebook, and each of the
+    iters - 1 recenter rounds is one corpus pass (assignment with the
+    codebook broadcast, then the recenter rollup), shuffling only the
+    argmin window and the rollup. iterate cuts the seed and every
+    recentered codebook; the final assignment is cut once more.
 
     samp = an _md5_sample (vec_id, rk) frame, sampled (the FAISS
     train() convention, VERDICT r12 #3): seeds are the first k sample
@@ -1300,29 +1303,32 @@ def _lloyd(
     codebooks and assignments on the same points and seeds
     (tests/test_ann.py pins this)."""
     if samp is None:
-        cents = _seed_cells(pts, k).select(
+
+        def recenter(cents: DataFrame, _: int) -> DataFrame:
+            return (
+                _sq_rank(pts, cents, 1, by)
+                .join(pts, ["vec_id", *by])
+                .select(*by, "cid", F.posexplode("sub_q").alias("j", "q"))
+                .groupBy(*by, "cid", "j")
+                .agg(F.expr("sum(q) div count(*)").alias("cq"))
+                .groupBy(*by, "cid")
+                .agg(
+                    F.transform(
+                        F.array_sort(F.collect_list(F.struct("j", "cq"))),
+                        lambda c: c["cq"],
+                    ).alias("cq_arr")
+                )
+            )
+
+        seed = _seed_cells(pts, k).select(
             *by,
             (F.col("vec_id") - ANN_N_QUERIES).alias("cid"),
             F.col("sub_q").alias("cq_arr"),
         )
-        for it in range(iters):
-            if it:
-                cents = (
-                    assigned.join(pts, ["vec_id", *by])
-                    .select(*by, "cid", F.posexplode("sub_q").alias("j", "q"))
-                    .groupBy(*by, "cid", "j")
-                    .agg(F.expr("sum(q) div count(*)").alias("cq"))
-                    .groupBy(*by, "cid")
-                    .agg(
-                        F.transform(
-                            F.array_sort(F.collect_list(F.struct("j", "cq"))),
-                            lambda c: c["cq"],
-                        ).alias("cq_arr")
-                    )
-                    .localCheckpoint(eager=True)
-                )
-            assigned = _sq_rank(pts, cents, 1, by).localCheckpoint(eager=True)
-        return assigned, cents
+        cents, _ = iterate(seed, recenter, iters - 1)
+        # the one assignment callers read is cut too, so their plans
+        # scan a materialized table, not the argmin window
+        return _sq_rank(pts, cents, 1, by).localCheckpoint(eager=True), cents
     rows = (
         pts.join(F.broadcast(samp), "vec_id")
         .select(*by, "rk", "sub_q")
@@ -3541,9 +3547,10 @@ SQ_CODE_MAX = 255  # 8-bit codes: one byte per dimension
 
 def _sq_codec(e: DataFrame):
     """Codec: SQ8 over the unit quantizer, shared by sq_topk,
-    sq_reconstruct_error and the tests. Returns (uq, xhat2): the cached
-    _unit_q frame of e and the scaled int decode of its 8-bit codes, a
-    column over uq.
+    sq_reconstruct_error and the tests. Returns (uq, xhat2): the
+    _unit_q frame of e (uncached: only a caller that reads it twice
+    caches it) and the scaled int decode of its 8-bit codes, a column
+    over uq.
 
     Train: per-dimension (vmin, vmax) over the md5 bottom-k sample —
     the ScalarQuantizer RS_minmax pass. The explode is SAMPLE-bounded
@@ -3557,10 +3564,9 @@ def _sq_codec(e: DataFrame):
     integer), then xhat2 = 510*vmin + (2*code + 1)*span. Constant
     dims (span = 0) encode as code 0 and decode to 510*vmin (exactly
     2*255*q: the dim contributes its true value)."""
-    uq = track_cache(_unit_q(e))
     samp = _md5_sample(e, "pqtrain", PQ_TRAIN_CAP).select("vec_id")
     rows = (
-        uq.join(F.broadcast(samp), "vec_id")
+        _unit_q(e.join(F.broadcast(samp), "vec_id"))
         .select(F.posexplode("uq").alias("i", "q"))
         .groupBy("i")
         .agg(F.min("q").alias("vmin"), F.max("q").alias("vmax"))
@@ -3590,7 +3596,7 @@ def _sq_codec(e: DataFrame):
             + (F.lit(2) * code + F.lit(1)) * span
         )
 
-    return uq, F.transform("uq", per_dim)
+    return _unit_q(e), F.transform("uq", per_dim)
 
 
 KNN_IVF_SQ_ORACLE = (
@@ -3684,7 +3690,8 @@ def sq_topk(
     int-dot shortlist over probed-cell candidates."""
     uq, xhat2 = _sq_codec(e)
     _, probes, assigned, _ = _coarse_cells(e, n=n, cells=cells)
-    return _dot_shortlist(e, uq, xhat2, _probed(probes, assigned))
+    # the query and candidate sides of the shortlist both read uq
+    return _dot_shortlist(e, track_cache(uq), xhat2, _probed(probes, assigned))
 
 
 # PQ stores PQ_M codes of log2(PQ_K) bits; SQ8 stores one byte per

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.iterate import iterate
 from ..registry import query, track_cache
 from ..tables import load_table
 
@@ -125,50 +126,44 @@ def pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     a left join folds the damping base back over the full vertex set.
     Ranks are 1e-12 fixed-point bigints and every step floor-divides
     nonnegative int64s (`div` here == DuckDB `//`), so the result is
-    bit-identical to the oracle's unrolled-CTE replay. Iterations
-    localCheckpoint like dedup_clusters: lineage stays depth-1, each
-    round is planned against a materialized table instead of
-    re-optimizing the whole co-purchase DAG. The co-purchase graph is
-    symmetric, so no dangling-mass term is needed (every vertex has
-    out-degree >= 1; the coalesce(0) guard still covers isolated-in-
-    iteration vertices)."""
+    bit-identical to the oracle's unrolled-CTE replay. The seed and
+    every round are cut by functions/iterate.py's iterate (one eager
+    localCheckpoint each, no convergence probe: the oracle replays
+    exactly PR_ITERS rounds): lineage stays depth-1, each round is
+    planned against a materialized table instead of re-optimizing the
+    whole co-purchase DAG. The co-purchase graph is symmetric, so no
+    dangling-mass term is needed (every vertex has out-degree >= 1;
+    the coalesce(0) guard still covers isolated-in-iteration
+    vertices)."""
     edges = _copurchase_edges(spark, sf_dir)
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     outdeg = track_cache(outdeg)
     verts = edges.select(F.col("src").alias("v")).distinct()
     verts = track_cache(verts)
     n = verts.agg(F.count(F.lit(1)).alias("n_verts"))
-    base_expr = f"((CAST({PR_SCALE} AS BIGINT) div n_verts) * 15) div 100"
-    ranks = (
-        verts.crossJoin(F.broadcast(n))
-        .select(
-            "v",
-            F.expr(f"CAST({PR_SCALE} AS BIGINT) div n_verts").alias("r"),
-        )
-        .localCheckpoint(eager=True)
+    seed = verts.crossJoin(F.broadcast(n)).select(
+        "v", F.expr(f"CAST({PR_SCALE} AS BIGINT) div n_verts").alias("r")
     )
-    for _ in range(PR_ITERS):
+    update = F.expr(
+        f"((CAST({PR_SCALE} AS BIGINT) div n_verts) * 15) div 100"
+        " + (85 * coalesce(s, 0)) div 100"
+    ).alias("r")
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         contrib = (
             ranks.join(edges, ranks.v == edges.src)
             .join(outdeg, "src")
-            .select(
-                F.col("dst").alias("cv"),
-                F.expr("r div deg").alias("c"),
-            )
+            .select(F.col("dst").alias("cv"), F.expr("r div deg").alias("c"))
             .groupBy("cv")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
+        return (
             verts.crossJoin(F.broadcast(n))
             .join(contrib, verts.v == F.col("cv"), "left")
-            .select(
-                "v",
-                F.expr(
-                    f"{base_expr} + (85 * coalesce(s, 0)) div 100"
-                ).alias("r"),
-            )
-            .localCheckpoint(eager=True)
+            .select("v", update)
         )
+
+    ranks, _ = iterate(seed, step, PR_ITERS)
     return ranks.select(
         F.col("v").alias("part_id"),
         F.col("r").alias("rank_e12"),
@@ -353,42 +348,36 @@ def bfs_distances(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the edge list localCheckpoints once (same cut as
     pagerank; the edge materialization, not the waves, dominates the
-    measured cost at fixture scale); each round shuffles
-    O(|frontier| x avg-degree) dst keys plus the anti-join against
-    the settled set — on small-world graphs the frontier saturates
-    by round 2-3, and an empty wave short-circuits the remaining
-    rounds (a control-flow-only driver boolean, the dedup_clusters
-    contract). Only frontiers checkpoint: the settled set is a union
-    of checkpointed waves, depth-1 by construction.
+    measured cost at fixture scale). The loop is functions/iterate.py's
+    iterate over the settled set (v, d): round i expands the d = i - 1
+    wave, shuffling O(|frontier| x avg-degree) dst keys plus the
+    anti-join against the settled set, and each round's checkpoint job
+    also observes the settled count. On small-world graphs the
+    frontier saturates by round 2-3; the first round whose count does
+    not grow (an empty wave) ends the loop with no probe job of its
+    own, and running out of rounds is the oracle's depth cap.
     """
     edges = _copurchase_edges(spark, sf_dir)
     s0 = edges.agg(F.min("src").alias("s"))
-    frontier = (
+    seed = (
         edges.select(F.col("src").alias("v"))
         .distinct()
         .crossJoin(F.broadcast(s0))
         .where(F.col("v") == F.col("s"))
         .select("v", F.lit(0).alias("d"))
-        .localCheckpoint(eager=True)
     )
-    dist = frontier
-    for i in range(1, BFS_ITERS + 1):
-        frontier = (
+
+    def wave(dist: DataFrame, i: int) -> DataFrame:
+        frontier = dist.where(F.col("d") == i - 1)
+        return dist.unionAll(
             frontier.join(edges, frontier.v == edges.src)
             .select(F.col("dst").alias("v"))
             .distinct()
             .join(dist, "v", "left_anti")
             .select("v", F.lit(i).alias("d"))
-            .localCheckpoint(eager=True)
         )
-        # dist needs NO checkpoint of its own: it is a union of
-        # already-checkpointed frontiers, i.e. depth-1 by construction.
-        dist = dist.unionAll(frontier)
-        # Control-flow-only driver read (the dedup_clusters contract):
-        # once a wave comes back empty every later wave is empty too,
-        # so stop instead of paying (K - diameter) no-op rounds.
-        if frontier.isEmpty():  # JVM-side take(1) on the checkpointed
-            break  # frame — no RDD conversion (guide §1.4)
+
+    dist, _ = iterate(seed, wave, BFS_ITERS, F.count(F.lit(1)))
     return dist.select(
         F.col("v").alias("part_id"), F.col("d").cast("int").alias("dist")
     )

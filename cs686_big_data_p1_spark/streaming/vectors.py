@@ -481,6 +481,17 @@ def stream_ivf_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # drained report equals batch decontaminate_semantic's — same oracle,
 # sweep-exact.
 
+def _hits_recorded(spark: SparkSession, hits_path: str) -> bool:
+    """Whether the hit store holds any hit file. None yet means no
+    fold has recorded a hit (the first fold, or a clean corpus); a
+    store that holds files must read, and any failure to read it
+    raises."""
+    from ..sources.snapshots import _fs
+
+    fs, _, jpath = _fs(spark, hits_path)
+    return bool(fs.globStatus(jpath(f"{hits_path}/cid=*/*.parquet")))
+
+
 def fold_sem_decon_batch(
     batch: DataFrame,
     eval_path: str,
@@ -496,7 +507,6 @@ def fold_sem_decon_batch(
     the batch's cells only, anti-join against already-recorded pairs
     (pruned to the same cells), append only the fresh hits."""
     from ..operators.ann import DECON_SEM_TAU
-    from ..sources.snapshots import _fs
 
     if batch.isEmpty():
         return
@@ -525,10 +535,7 @@ def fold_sem_decon_batch(
         .select("train_doc", "eval_doc", "cid", pair_cos())
         .where(F.col("cosine") >= DECON_SEM_TAU)
     )
-    # No hit file yet is the first fold; any read failure of an
-    # existing hit store must raise.
-    fs, _, jpath = _fs(sb, hits_path)
-    if fs.globStatus(jpath(f"{hits_path}/cid=*/*.parquet")):
+    if _hits_recorded(sb, hits_path):
         existing = (
             sb.read.parquet(hits_path)
             .where(F.col("cid").isin(cids))
@@ -622,14 +629,13 @@ def stream_decontaminate_semantic(
         .start()
     )
     q.awaitTermination()
-    try:
-        hitsdf = spark.read.parquet(hits_path)
-    except Exception:  # clean corpus: no hits recorded at all
+    if not _hits_recorded(spark, hits_path):  # a clean corpus
         return spark.createDataFrame(
             [],
             "doc_id bigint, n_eval_hits bigint, "
             "top_eval_doc bigint, top_cosine double",
         )
+    hitsdf = spark.read.parquet(hits_path)
     return hitsdf.groupBy(F.col("train_doc").alias("doc_id")).agg(
         F.count(F.lit(1)).alias("n_eval_hits"),
         F.expr("max_by(eval_doc, struct(cosine, -eval_doc))")

@@ -255,15 +255,18 @@ def test_cluster_rounds_logarithmic_on_chain(spark):
     (O(diameter) rounds — O(n) on a crawl corpus whose near-dup chains
     run long). _cluster_round's pointer-jumping half composes the
     label map with itself each round, so reach grows r -> 2r + 2 and
-    the measured round count must stay logarithmic: a 512-vertex path
-    (diameter 511) must hit the fixpoint within ceil(log2(n)) = 9
-    rounds, not ~511 — the large-star/small-star asymptotics with the
-    oracle-checked min-label semantics untouched."""
+    the round count must stay logarithmic: dedup_clusters' own loop
+    (label_components) must hit the fixpoint on a 512-vertex path
+    (diameter 511) within ceil(log2(n)) = 9 rounds, not ~511 — the
+    large-star/small-star asymptotics with the oracle-checked
+    min-label semantics untouched. With a 3-round budget the same
+    chain cannot converge, and the loop must raise rather than return
+    stale labels."""
     import math
 
     from pyspark.sql import functions as F
 
-    from cs686_big_data_p1_spark.operators.llm import _cluster_round
+    from cs686_big_data_p1_spark.operators.llm import label_components
 
     n = 512
     fwd = spark.range(n - 1).select(
@@ -275,26 +278,8 @@ def test_cluster_rounds_logarithmic_on_chain(spark):
         )
     ).localCheckpoint(eager=True)
 
-    # Same seed + convergence loop as _cluster_labels_uncached.
-    labels = (
-        edges.groupBy(F.col("doc_a").alias("v"))
-        .agg(F.min("doc_b").alias("mb"))
-        .select("v", F.least(F.col("v"), F.col("mb")).alias("label"))
-        .localCheckpoint(eager=True)
-    )
-    prev = labels.agg(F.sum("label")).first()[0]
-    rounds = 0
-    for _ in range(64):
-        labels = _cluster_round(edges, labels).localCheckpoint(eager=True)
-        rounds += 1
-        cur = labels.agg(F.sum("label")).first()[0]
-        if cur == prev:
-            break
-        prev = cur
-
-    assert rounds <= math.ceil(math.log2(n)), (
-        f"chain of {n} took {rounds} rounds — pointer jumping regressed "
-        "to O(diameter) propagation"
-    )
+    labels = label_components(edges, math.ceil(math.log2(n)))
     got = {(r.v, r.label) for r in labels.collect()}
     assert got == {(v, 0) for v in range(n)}  # one component, min label
+    with pytest.raises(RuntimeError, match="within 3 rounds"):
+        label_components(edges, 3)

@@ -180,6 +180,35 @@ def test_stream_sem_decon_matches_batch(spark, registry):
     assert streamed == batch
 
 
+def test_stream_sem_decon_clean_corpus_reports_empty(
+    spark, registry, tmp_path, monkeypatch
+):
+    """A corpus with no eval hit (no cosine reaches a tau above 1)
+    records no hit file, and the drained report is an empty frame of
+    the declared schema, decided by the hit-file test rather than by
+    a failed read."""
+    import shutil
+
+    from cs686_big_data_p1_spark.operators import ann
+
+    monkeypatch.setattr(ann, "DECON_SEM_TAU", 1.5)
+    fixture = tmp_path / "clean"
+    fixture.mkdir()
+    for t in ("documents", "embeddings"):
+        src = f"{SF_SMALL}/{t}.parquet"
+        copy = shutil.copytree if os.path.isdir(src) else shutil.copy
+        copy(src, fixture / f"{t}.parquet")
+    out = registry.QUERIES["stream_decontaminate_semantic"](
+        spark, str(fixture)
+    )
+    assert out.schema.simpleString() == (
+        "struct<doc_id:bigint,n_eval_hits:bigint,"
+        "top_eval_doc:bigint,top_cosine:double>"
+    )
+    assert out.count() == 0
+    registry.clear_caches()
+
+
 def test_sem_decon_fold_raises_on_unreadable_hit_store(spark, tmp_path):
     """Only a hit store with no hit file is a first fold: a store
     holding a file the fold cannot read must fail the fold, not be

@@ -372,6 +372,21 @@ def test_sq_reconstruct_error_assigns_without_a_join(spark, registry):
     assert "SortMergeJoin" not in plan
 
 
+def test_sq_reconstruct_error_caches_no_unit_q_frame(spark, registry):
+    """Only the training collect reads _sq_codec's uq frame in
+    sq_reconstruct_error (its error pass re-derives uq beside the
+    cell assignment), so building the query must register no tracked
+    cache over _unit_q's output: one would materialize a corpus-size
+    cache that nothing reuses."""
+    registry.clear_caches()
+    registry.QUERIES["sq_reconstruct_error"](spark, SF_SMALL)
+    leaked = [
+        df.columns for df in registry.TRACKED_CACHES if "uq" in df.columns
+    ]
+    registry.clear_caches()
+    assert not leaked
+
+
 # --- knn_ivf_binary / knn_mrl / mrl_recall_compare (round 15c) ------------
 
 def test_binary_planted_duplicate_and_probed_candidates(spark, registry):
